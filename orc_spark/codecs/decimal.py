@@ -90,6 +90,25 @@ def _decode_one(seg: bytes) -> int:
     return (z >> 1) if not z & 1 else -((z + 1) >> 1)
 
 
+def exact_mantissa(v, scale: int) -> int:
+    """Unscaled integer of Decimal ``v`` at ``scale``, exact at any
+    precision: integer math on ``as_tuple()`` (``Decimal.scaleb`` under
+    the default 28-digit context silently rounds decimal(38) values).
+    Raises ValueError when ``v`` has more fractional digits than
+    ``scale`` holds."""
+    sign, digits, exp = v.as_tuple()
+    m = int("".join(map(str, digits)))
+    shift = exp + scale
+    if shift >= 0:
+        m *= 10 ** shift
+    else:
+        q, r = divmod(m, 10 ** (-shift))
+        if r:
+            raise ValueError(f"decimal {v} does not fit scale {scale}")
+        m = q
+    return -m if sign else m
+
+
 def encode_decimals(mantissas: list[int], scales) -> dict[str, bytes]:
     return {
         "DATA": encode_mantissas(mantissas),

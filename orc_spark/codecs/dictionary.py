@@ -1,4 +1,10 @@
-"""String column encoding: sorted dictionary vs direct, auto-selected.
+"""String column codec: sorted dictionary vs direct, auto-selected.
+
+The one owner of the string-column encoding decision and of the Arrow
+string build on decode; the stripe table (stripe.py), the ``.orc``
+writer (sources/orcwriter.py) and the ``.orc`` fast read path
+(sources/orcscan.py) all go through here.  RLE of the integer parts,
+FSST, stride slicing and statistics stay with the callers.
 
 Behavioral reference: scritchley/orc treewriter.go:543-720 (string tree
 writer), dictionary_v2.go:14-59 (distinct keys sorted lexicographically
@@ -6,28 +12,44 @@ before index assignment), DictionaryEncodingThreshold = 0.49
 (treewriter.go:537): a stripe's string column is dictionary-encoded when
 ``distinct/total <= 0.49``.
 
-Streams:
+Streams (the caller RLE-encodes the integer parts):
 * DICTIONARY_V2: DATA = row-order dictionary indexes (unsigned RLE v2),
   DICTIONARY_DATA = concatenated sorted keys, LENGTH = key byte lengths
   (unsigned RLE v2).
 * DIRECT_V2: DATA = concatenated values, LENGTH = per-value byte
   lengths (unsigned RLE v2).
 
-``np.unique(return_inverse=True)`` is the vectorized equivalent of
-DictionaryV2.prepare(): UTF-8 byte order equals codepoint order, so
-numpy's string sort matches Go's sort.Strings byte-wise ordering.
+Keys sort bytewise (Arrow's binary/utf8 comparison is unsigned
+lexicographic, the same order as Go's sort.Strings): UTF-8 byte order
+equals codepoint order.
 """
 
 from __future__ import annotations
 
-import numpy as np
+from typing import NamedTuple
 
-from . import rle2
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 DICTIONARY_THRESHOLD = 0.49
 
 DICT_V2 = "DICTIONARY_V2"
 DIRECT_V2 = "DIRECT_V2"
+
+
+class StringParts(NamedTuple):
+    """A string column's streams before RLE.  ``indexes`` is None for
+    a direct column; otherwise it holds each row's sorted-key index and
+    ``lengths``/``blob`` describe the keys instead of the values."""
+
+    indexes: np.ndarray | None
+    lengths: np.ndarray
+    blob: bytes
+
+    @property
+    def encoding(self) -> str:
+        return DIRECT_V2 if self.indexes is None else DICT_V2
 
 
 def dictionary_v1(values) -> tuple[np.ndarray, list]:
@@ -48,83 +70,81 @@ def dictionary_v1(values) -> tuple[np.ndarray, list]:
     return idx, keys
 
 
-def _to_bytes_array(values) -> np.ndarray:
-    """Normalize a sequence of str/bytes to an object array of bytes.
-    Per-ELEMENT conversion (deciding from element [0] mis-encoded
-    mixed input); None is rejected explicitly — null handling belongs
-    to the PRESENT layer above this codec."""
-    out = np.empty(len(values), dtype=object)
-    for i, v in enumerate(values):
-        if isinstance(v, str):
-            out[i] = v.encode("utf-8")
-        elif isinstance(v, (bytes, bytearray)):
-            out[i] = bytes(v)
-        else:
-            raise ValueError(
-                f"dictionary codec takes str/bytes, got {type(v).__name__}"
-                f" at index {i} (drop nulls before encoding)")
-    return out
-
-
-def encode_strings(values) -> dict:
-    """Encode a string column buffer (one stripe's worth).
-
-    Returns {"encoding", "streams": {name: bytes}, "dict_size"}.
-    """
-    arr = _to_bytes_array(values)
+def _lengths_and_blob(arr: pa.Array) -> tuple[np.ndarray, bytes]:
+    """Zero-copy per-value byte lengths (int64) and the concatenated
+    value bytes of a null-free string/binary array."""
     n = len(arr)
-    if n == 0:
-        return {"encoding": DIRECT_V2,
-                "streams": {"DATA": b"", "LENGTH": b""}, "dict_size": 0}
-    keys, inverse = np.unique(arr, return_inverse=True)
-    n_distinct = len(keys)
-    if float(n_distinct) / float(n) <= DICTIONARY_THRESHOLD:
-        dict_blob = b"".join(keys.tolist())
-        key_lengths = np.array([len(k) for k in keys.tolist()], dtype=np.int64)
-        return {
-            "encoding": DICT_V2,
-            "streams": {
-                "DATA": rle2.encode(inverse.astype(np.int64), signed=False),
-                "DICTIONARY_DATA": dict_blob,
-                "LENGTH": rle2.encode(key_lengths, signed=False),
-            },
-            "dict_size": n_distinct,
-        }
-    data_blob = b"".join(arr.tolist())
-    lengths = np.array([len(s) for s in arr.tolist()], dtype=np.int64)
-    return {
-        "encoding": DIRECT_V2,
-        "streams": {
-            "DATA": data_blob,
-            "LENGTH": rle2.encode(lengths, signed=False),
-        },
-        "dict_size": 0,
-    }
+    buffers = arr.buffers()
+    offsets = np.frombuffer(buffers[1], dtype=np.int32, count=n + 1,
+                            offset=arr.offset * 4)
+    lengths = np.diff(offsets).astype(np.int64)
+    lo, hi = int(offsets[0]), int(offsets[-1])
+    blob = buffers[2].slice(lo, hi - lo).to_pybytes() if hi > lo else b""
+    return lengths, blob
 
 
-def decode_strings(encoding: str, streams: dict, n: int) -> np.ndarray:
-    """Decode a string column stripe back to an object array of bytes."""
-    if n == 0:
-        return np.empty(0, dtype=object)
-    if encoding == DICT_V2:
-        indexes = rle2.decode(streams["DATA"], n, signed=False)
-        blob = streams["DICTIONARY_DATA"]
-        # key count = max referenced index + 1: valid because
-        # encode_strings builds the dictionary with np.unique over the
-        # stripe, so every key is referenced at least once (callers
-        # with externally-built dictionaries pass n_keys explicitly
-        # via the stripe layer, which tracks dict_size)
-        n_keys = int(indexes.max()) + 1 if n else 0
-        lengths = rle2.decode(streams["LENGTH"], n_keys, signed=False)
-        offsets = np.zeros(n_keys + 1, dtype=np.int64)
-        np.cumsum(lengths, out=offsets[1:])
-        keys = np.array(
-            [blob[offsets[i]:offsets[i + 1]] for i in range(n_keys)],
-            dtype=object)
-        return keys[indexes]
-    lengths = rle2.decode(streams["LENGTH"], n, signed=False)
-    blob = streams["DATA"]
-    offsets = np.zeros(n + 1, dtype=np.int64)
+def encode(data: pa.Array, allow_dictionary: bool = True) -> StringParts:
+    """Choose sorted dictionary or direct for one stripe (or stride) of
+    a null-free ``string``/``binary`` array and return its parts.
+    ``allow_dictionary=False`` forces direct (ORC ``binary`` columns
+    never ask for a dictionary)."""
+    n = len(data)
+    if allow_dictionary and n:
+        enc = pc.dictionary_encode(data)
+        keys = enc.dictionary
+        n_distinct = len(keys)
+        if float(n_distinct) / float(n) <= DICTIONARY_THRESHOLD:
+            order = pc.sort_indices(keys)
+            remap = np.empty(n_distinct, dtype=np.int64)
+            remap[np.asarray(order)] = np.arange(n_distinct)
+            indexes = remap[np.asarray(enc.indices)]
+            lengths, blob = _lengths_and_blob(keys.take(order))
+            return StringParts(indexes, lengths, blob)
+    lengths, blob = _lengths_and_blob(data)
+    return StringParts(None, lengths, blob)
+
+
+def _scatter(vals: np.ndarray, valid: np.ndarray) -> np.ndarray:
+    """Spread the non-null entries over the rows (zeros at nulls)."""
+    full = np.zeros(len(valid), dtype=vals.dtype)
+    full[valid] = vals
+    return full
+
+
+def to_arrow(lengths, blob, indexes=None, valid=None,
+             binary: bool = False) -> pa.Array:
+    """Build a ``string`` (or ``binary``) Arrow array from decoded
+    parts: ``lengths``/``blob`` of the values (direct) or of the keys
+    (``indexes`` given, one per non-null row), plus an optional PRESENT
+    ``valid`` mask over the rows.  Zero-copy over ``blob`` and
+    validated in C++: malformed UTF-8, a short blob or a column past
+    int32 offsets raise ValueError (``pyarrow.ArrowInvalid`` is one)."""
+    lengths = np.asarray(lengths, dtype=np.int64)
+    if indexes is not None:
+        indexes = np.asarray(indexes, dtype=np.int64)
+        n_bytes = int(lengths[indexes].sum())
+    else:
+        if valid is not None:
+            lengths = _scatter(lengths, valid)
+        n_bytes = int(lengths.sum())
+    if n_bytes > np.iinfo(np.int32).max:
+        raise ValueError("string column exceeds int32 Arrow offsets")
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int32)
     np.cumsum(lengths, out=offsets[1:])
-    return np.array(
-        [blob[offsets[i]:offsets[i + 1]] for i in range(n)], dtype=object)
+    if len(blob) < int(offsets[-1]):
+        raise ValueError("string blob shorter than its lengths")
+    validity, nulls = None, 0
+    if indexes is None and valid is not None:
+        validity = pa.py_buffer(np.packbits(valid, bitorder="little"))
+        nulls = len(valid) - int(np.count_nonzero(valid))
+    arr = pa.Array.from_buffers(
+        pa.binary() if binary else pa.string(), len(lengths),
+        [validity, pa.py_buffer(offsets), pa.py_buffer(blob)],
+        null_count=nulls)
+    arr.validate(full=True)
+    if indexes is None:
+        return arr
+    if valid is None:
+        return arr.take(pa.array(indexes))
+    # null rows take index 0 under a null mask
+    return arr.take(pa.array(_scatter(indexes, valid), mask=~valid))

@@ -382,10 +382,12 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
     Returns None when any part of the subtree is unsupported
     (timestamp: writer-tz wall-clock math; decimal: per-value
     mantissa varints; union) — the caller then takes the generic
-    row path for THIS root column only."""
+    row path for THIS root column only.  String branches raise
+    ValueError on malformed UTF-8 or past int32 offsets; callers
+    then take the row path, which replace-decodes."""
     import numpy as np
     import pyarrow as pa
-    from ..codecs import byterle
+    from ..codecs import byterle, dictionary
     t = f.types[cid]
     k = t.kind
     valid, n_valid = f._present(cid, n)
@@ -420,35 +422,18 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
         # evolve widening: a float file read under a double union
         # schema casts exactly (every float32 is a float64)
         return arr if arr.type == ft else arr.cast(ft)
-    if k in ("string", "varchar", "char"):
-        enc = f.encodings[cid]
-        if enc.startswith("DICTIONARY"):
-            n_keys = f.dict_sizes[cid]
-            key_lengths = f._ints(cid, "LENGTH", n_keys, signed=False)
+    if k in ("string", "varchar", "char", "binary"):
+        indexes = None
+        if f.encodings[cid].startswith("DICTIONARY"):
+            indexes = f._ints(cid, "DATA", n_valid, signed=False)
+            lengths = f._ints(cid, "LENGTH", f.dict_sizes[cid],
+                              signed=False)
             blob = f._stream(cid, "DICTIONARY_DATA") or b""
-            idxs = f._ints(cid, "DATA", n_valid, signed=False)
-            keys = _str_from_buffers(key_lengths, blob)
-            if valid is None:
-                return keys.take(pa.array(idxs.astype(np.int64)))
-            # null rows carry index 0, masked off by take's null
-            # propagation through a null index
-            full = _scatter(idxs.astype(np.int64), valid)
-            return keys.take(pa.array(full, mask=~valid))
-        lengths = f._ints(cid, "LENGTH", n_valid, signed=False)
-        if int(lengths.sum()) > 2**31 - 1:
-            return None
-        blob = f._stream(cid, "DATA") or b""
-        if valid is not None:
-            lengths = _scatter(np.asarray(lengths), valid)
-        return _str_from_buffers(lengths, blob, valid)
-    if k == "binary":
-        lengths = f._ints(cid, "LENGTH", n_valid, signed=False)
-        if int(lengths.sum()) > 2**31 - 1:
-            return None
-        blob = f._stream(cid, "DATA") or b""
-        if valid is not None:
-            lengths = _scatter(np.asarray(lengths), valid)
-        return _str_from_buffers(lengths, blob, valid, binary=True)
+        else:
+            lengths = f._ints(cid, "LENGTH", n_valid, signed=False)
+            blob = f._stream(cid, "DATA") or b""
+        return dictionary.to_arrow(lengths, blob, indexes, valid,
+                                   binary=k == "binary")
     if k == "list":
         lengths = f._ints(cid, "LENGTH", n_valid, signed=False)
         total = int(lengths.sum())
@@ -665,28 +650,6 @@ def _scatter(vals, valid):
     return full
 
 
-def _str_from_buffers(lengths, blob, valid=None, binary=False):
-    """Zero-copy utf8/binary array straight from LENGTH + concatenated
-    DATA, with an optional PRESENT validity bitmap (null slots carry
-    length 0 -> equal consecutive offsets).  Validated in C++; raises
-    on malformed bytes — caller falls back to the replace-decoding
-    list path."""
-    import numpy as np
-    import pyarrow as pa
-    n = len(lengths)
-    offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int32)
-    if len(blob) < int(offsets[-1]):
-        raise ValueError("string DATA stream shorter than lengths")
-    vb = None if valid is None else _validity(valid)
-    nulls = 0 if valid is None else int(n - valid.sum())
-    arr = pa.Array.from_buffers(
-        pa.binary() if binary else pa.utf8(), n,
-        [vb, pa.py_buffer(offsets.tobytes()), pa.py_buffer(blob)],
-        null_count=nulls)
-    arr.validate(full=True)
-    return arr
-
-
 def stride_keep(f: ORCFile, si: int, preds: list[tuple],
                 col_ids: dict[str, int]
                 ) -> tuple[list[int], int] | None:
@@ -899,7 +862,7 @@ class _ScanContext:
                         valids, cnt = f.path_present_chain(ids, n_rows)
                         try:
                             fast = _fast_arrow(f, ids[-1], cnt, ft)
-                        except Exception:
+                        except ValueError:  # malformed UTF-8
                             fast = None
                         if fast is not None:
                             arrays.append(_ancestor_expand(fast,
@@ -916,8 +879,9 @@ class _ScanContext:
                         continue
                     try:
                         fast = _fast_arrow(f, cids[fn], n_rows, ft)
-                    except Exception:
-                        # e.g. malformed UTF-8: the list path
+                    except ValueError:
+                        # malformed UTF-8 (ArrowInvalid) or a string
+                        # column past int32 offsets: the list path
                         # replace-decodes instead
                         fast = None
                     if fast is not None:

@@ -362,7 +362,7 @@ def _stripe_disposition(f: ORCFile, si: int, preds: list[tuple],
         valids, cnt = f.path_present_chain(ids, nr)
         try:
             arr = _fast_arrow(f, cid, cnt, ft)
-        except Exception:
+        except ValueError:  # malformed UTF-8: row path replace-decodes
             arr = None
         if arr is None:
             vals = f._read_column(cid, cnt)

@@ -53,7 +53,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .. import stripe as stripe_mod
-from ..codecs import byterle, compression, rle2
+from ..codecs import byterle, compression, dictionary, rle2
 from ..codecs.bits import write_vulong
 from .orcfile import KINDS, STREAM_KINDS, ENCODINGS, TIMESTAMP_BASE_SECONDS
 
@@ -408,7 +408,7 @@ def _slice_pieces(encode_fn, vals, bounds) -> list[bytes]:
 
 
 def _encode_node(node: _TypeNode, arr: pa.Array, bounds: np.ndarray,
-                 sink: dict, use_fsst: bool = False) -> None:
+                 sink: dict) -> None:
     """Encode one column's stripe data, restarting codecs at the given
     stride boundaries (``bounds``: row offsets in THIS node's row
     space, len = n_strides+1)."""
@@ -521,7 +521,7 @@ def _encode_node(node: _TypeNode, arr: pa.Array, bounds: np.ndarray,
             carr = arr.field(i)
             if validity is not None:
                 carr = carr.filter(pa.array(validity))
-            _encode_node(child, carr, data_bounds, sink, use_fsst)
+            _encode_node(child, carr, data_bounds, sink)
     elif k in ("list", "map"):
         nn = len(data)
         off_buf = data.offsets if hasattr(data, "offsets") else None
@@ -545,15 +545,12 @@ def _encode_node(node: _TypeNode, arr: pa.Array, bounds: np.ndarray,
         last = int(offsets[-1]) if nn else 0
         if k == "list":
             child_vals = data.values.slice(first, last - first)
-            _encode_node(node.children[0], child_vals, child_bounds, sink,
-                         use_fsst)
+            _encode_node(node.children[0], child_vals, child_bounds, sink)
         else:
             keys = data.keys.slice(first, last - first)
             items = data.items.slice(first, last - first)
-            _encode_node(node.children[0], keys, child_bounds, sink,
-                         use_fsst)
-            _encode_node(node.children[1], items, child_bounds, sink,
-                         use_fsst)
+            _encode_node(node.children[0], keys, child_bounds, sink)
+            _encode_node(node.children[1], items, child_bounds, sink)
     elif k == "union":
         buffers = arr.buffers()
         tags = np.frombuffer(buffers[1], dtype=np.int8, count=n,
@@ -579,34 +576,17 @@ def _encode_node(node: _TypeNode, arr: pa.Array, bounds: np.ndarray,
                 cvals = arr.field(vi).take(pa.array(take_idx))
             else:
                 cvals = arr.field(vi).filter(pa.array(mask))
-            _encode_node(child, cvals, child_bounds, sink, use_fsst)
+            _encode_node(child, cvals, child_bounds, sink)
     else:
         raise ValueError(f"unsupported ORC column kind: {k}")
 
 
 def _encode_string_node(co, kind, data, data_bounds, bounds,
                         null_per_stride) -> None:
-    nn = len(data)
     n_strides = len(bounds) - 1
-    if nn and data.type not in (pa.string(), pa.binary()):
+    if data.type not in (pa.string(), pa.binary()):
         data = data.cast(pa.string() if kind != "binary" else pa.binary())
-    if nn == 0:
-        co.add_value_stream("DATA", [b""] * n_strides, 0)
-        co.add_value_stream("LENGTH", [b""] * n_strides, 1)
-        co.encoding = "DIRECT_V2"
-        for t in range(n_strides):
-            st = _new_stats(kind)
-            st["has_null"] = null_per_stride[t]
-            co.stride_stats.append(st)
-            _merge_stats(co.stripe_stats, st)
-        return
-    bufs = data.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=np.int32, count=nn + 1,
-                            offset=data.offset * 4).astype(np.int64)
-    lengths = np.diff(offsets)
-    blob = bufs[2]
-    blob_view = memoryview(blob)[offsets[0]:offsets[-1]]
-    base = int(offsets[0])
+    value_lengths = np.asarray(pc.binary_length(data), dtype=np.int64)
 
     # per-stride stats (min/max bytes + total length)
     for t in range(n_strides):
@@ -620,46 +600,36 @@ def _encode_string_node(co, kind, data, data_bounds, bounds,
             mn, mx = mm["min"].as_py(), mm["max"].as_py()
             st["min"] = mn.encode() if isinstance(mn, str) else mn
             st["max"] = mx.encode() if isinstance(mx, str) else mx
-            st["sum"] = int(lengths[lo:hi].sum())
+            st["sum"] = int(value_lengths[lo:hi].sum())
         if kind == "binary":
             st.pop("min", None)
             st.pop("max", None)
         co.stride_stats.append(st)
         _merge_stats(co.stripe_stats, st)
 
-    if kind != "binary":
-        enc = pc.dictionary_encode(data)
-        n_distinct = len(enc.dictionary)
-        if n_distinct / nn <= 0.49:  # treewriter.go:694-707 threshold
-            keys = enc.dictionary
-            key_bytes = [kv.as_py().encode() if isinstance(kv.as_py(), str)
-                         else kv.as_py() for kv in keys]
-            order = np.argsort(np.array(key_bytes, dtype=object))
-            remap = np.empty(n_distinct, dtype=np.int64)
-            remap[order] = np.arange(n_distinct)
-            indices = remap[np.asarray(enc.indices).astype(np.int64)]
-            co.add_value_stream("DATA", _slice_pieces(
-                lambda v: rle2.encode(v, signed=False), indices,
-                data_bounds), 1)
-            dict_blob = b"".join(key_bytes[int(i)] for i in order)
-            key_lengths = np.array(
-                [len(key_bytes[int(i)]) for i in order], dtype=np.int64)
-            co.add_value_stream("DICTIONARY_DATA", [dict_blob], 0,
-                                indexed=False)
-            co.add_value_stream("LENGTH",
-                                [rle2.encode(key_lengths, signed=False)],
-                                1, indexed=False)
-            co.encoding = "DICTIONARY_V2"
-            co.dict_size = n_distinct
-            return
+    parts = dictionary.encode(data, allow_dictionary=kind != "binary")
+    co.encoding = parts.encoding
+    if parts.indexes is not None:
+        co.add_value_stream("DATA", _slice_pieces(
+            lambda v: rle2.encode(v, signed=False), parts.indexes,
+            data_bounds), 1)
+        co.add_value_stream("DICTIONARY_DATA", [parts.blob], 0,
+                            indexed=False)
+        co.add_value_stream("LENGTH",
+                            [rle2.encode(parts.lengths, signed=False)],
+                            1, indexed=False)
+        co.dict_size = len(parts.lengths)
+        return
     # direct: raw bytes restart trivially at any boundary
-    byte_bounds = offsets[data_bounds] - base
+    offsets = np.zeros(len(parts.lengths) + 1, dtype=np.int64)
+    np.cumsum(parts.lengths, out=offsets[1:])
+    byte_bounds = offsets[data_bounds]
     co.add_value_stream("DATA", [
-        bytes(blob_view[byte_bounds[t]:byte_bounds[t + 1]])
+        parts.blob[byte_bounds[t]:byte_bounds[t + 1]]
         for t in range(n_strides)], 0)
     co.add_value_stream("LENGTH", _slice_pieces(
-        lambda v: rle2.encode(v, signed=False), lengths, data_bounds), 1)
-    co.encoding = "DIRECT_V2"
+        lambda v: rle2.encode(v, signed=False), parts.lengths,
+        data_bounds), 1)
 
 
 def _encode_decimal_node(co, node, data, data_bounds, bounds,
@@ -668,12 +638,7 @@ def _encode_decimal_node(co, node, data, data_bounds, bounds,
     from ..codecs import decimal as dec_codec
     scale = node.scale
     vals = data.to_pylist()
-    # default Decimal context is 28 significant digits — scaleb (and
-    # the stats sums below) would silently ROUND >28-digit decimal128
-    # values; 80 digits covers any decimal(38) and its per-stride sums
-    with localcontext() as _ctx:
-        _ctx.prec = 80
-        mants = [int(v.scaleb(scale)) for v in vals]
+    mants = [dec_codec.exact_mantissa(v, scale) for v in vals]
     n_strides = len(bounds) - 1
     data_pieces, sec_pieces = [], []
     for t in range(n_strides):
@@ -688,7 +653,9 @@ def _encode_decimal_node(co, node, data, data_bounds, bounds,
             st["min"] = min(vals[lo:hi])
             st["max"] = max(vals[lo:hi])
             with localcontext() as _ctx:
-                _ctx.prec = 80  # exact per-stride sums (see above)
+                # the default 28-digit context would ROUND sums of
+                # decimal(38) values; 80 digits keeps them exact
+                _ctx.prec = 80
                 st["sum"] = sum(vals[lo:hi])
         co.stride_stats.append(st)
         _merge_stats(co.stripe_stats, st)
@@ -716,21 +683,11 @@ class ORCFileWriter:
     def __init__(self, path: str, codec: str = "zlib",
                  stripe_rows: int = 1 << 20,
                  row_index_stride: int = DEFAULT_ROW_INDEX_STRIDE,
-                 use_fsst: bool = False,
                  orc_types: dict | None = None,
                  bloom_columns: list[str] | None = None,
                  bloom_fpp: float = 0.05):
         if row_index_stride % 8:
             raise ValueError("row_index_stride must be a multiple of 8")
-        if use_fsst:
-            # FSST is a STRIPE-TABLE extension: a spec .orc file with
-            # FSST-coded streams would be unreadable by every other
-            # ORC implementation.  Silently ignoring the flag (the r2
-            # behavior) let users believe the codec was active.
-            raise ValueError(
-                "use_fsst is not supported for .orc output (it would "
-                "break spec compatibility); FSST lives in the stripe "
-                "table (operators/encode.encode(use_fsst=True))")
         self.orc_types = orc_types or {}
         # BLOOM_FILTER_UTF8 index streams for these top-level
         # string-family columns (beyond the reference, which only
@@ -746,7 +703,6 @@ class ORCFileWriter:
                           "lzo": 3, "lz4": 4, "zstd": 5}[codec]
         self.stripe_rows = stripe_rows
         self.stride = row_index_stride
-        self.use_fsst = use_fsst
         # the file is created lazily at the first stripe flush: an
         # encode error (or a no-data close) must not leave a truncated
         # magic-only .orc in the output directory for spark.read.orc
@@ -866,7 +822,7 @@ class ORCFileWriter:
             arr = table.column(i)
             if isinstance(arr, pa.ChunkedArray):
                 arr = arr.combine_chunks()
-            _encode_node(child, arr, bounds, sink, self.use_fsst)
+            _encode_node(child, arr, bounds, sink)
 
         # compress stream pieces, compute positions
         framed: dict[tuple[int, int], bytes] = {}

@@ -425,7 +425,7 @@ def _encode_int_stream(vals: np.ndarray) -> tuple[str, dict[str, bytes]]:
             index_bits = bits.get_closest_aligned_fixed_bits(
                 max((n_distinct - 1).bit_length(), 1))
             dict_overhead = n_distinct * 3  # keys stream estimate
-            if float(n_distinct) / n <= 0.49 and \
+            if float(n_distinct) / n <= dictionary.DICTIONARY_THRESHOLD and \
                     index_bits < direct_bits and \
                     (direct_bits - index_bits) * n // 8 > dict_overhead:
                 remap = np.zeros(rng + 1, dtype=np.int64)
@@ -455,63 +455,33 @@ def _decode_int_stream(streams: dict, encoding_suffix: str,
 
 def _encode_string_like(arr: pa.Array, use_fsst: bool) -> tuple[str, dict, dict]:
     data = arr.drop_null() if arr.null_count else arr
-    n = len(data)
-    if n == 0:
-        return "DIRECT_V2", {"DATA": b"", "LENGTH": b""}, {
-            "count": 0, "sum_len": 0}
-    # zero-copy offsets/values from Arrow
-    combined = data.combine_chunks() if isinstance(data, pa.ChunkedArray) else data
-    buffers = combined.buffers()
-    offsets = np.frombuffer(buffers[1], dtype=np.int32, count=n + 1,
-                            offset=combined.offset * 4)
-    lengths = np.diff(offsets).astype(np.int64)
-    blob = buffers[2].slice(offsets[0], offsets[-1] - offsets[0]).to_pybytes()
-
-    # dictionary decision per stripe (treewriter.go:694-707, threshold .49)
-    enc = pc.dictionary_encode(combined)
-    keys = enc.dictionary
-    n_distinct = len(keys)
-    streams: dict[str, bytes] = {}
-    stats = {"count": n, "sum_len": int(lengths.sum())}
-    if not pa.types.is_binary(combined.type):
+    parts = dictionary.encode(data)
+    stats = {"count": len(data),
+             "sum_len": int(pc.sum(pc.binary_length(data)).as_py() or 0)}
+    if len(data) and not pa.types.is_binary(data.type):
         # min/max only for STRING columns: a bytes min/max would be
         # JSON-serialized as its Python repr ("b'...'"), whose ordering
         # differs from bytes ordering — pruning against it could drop
         # live rows.  Binary columns keep count/sum_len only (pruning
         # conservatively keeps their stripes).
-        mm = pc.min_max(combined)
+        mm = pc.min_max(data)
         stats.update({"min": str(mm["min"].as_py()),
                       "max": str(mm["max"].as_py())})
-    if float(n_distinct) / float(n) <= dictionary.DICTIONARY_THRESHOLD:
-        # sorted dictionary (DictionaryV2 semantics)
-        key_bytes = [k.as_py() if isinstance(k.as_py(), bytes)
-                     else k.as_py().encode() for k in keys]
-        order = np.argsort(np.array(key_bytes, dtype=object))
-        remap = np.empty(n_distinct, dtype=np.int64)
-        remap[order] = np.arange(n_distinct)
-        indices = remap[np.asarray(enc.indices).astype(np.int64)]
-        dict_blob = b"".join(key_bytes[int(i)] for i in order)
-        key_lengths = np.array([len(key_bytes[int(i)]) for i in order],
-                               dtype=np.int64)
-        encoding = "DICTIONARY_V2"
-        if use_fsst and len(dict_blob) > 1024:
-            fsst_blob = fsst.encode_blob(dict_blob)
-            if len(fsst_blob) < 0.9 * len(dict_blob):
-                dict_blob = fsst_blob
-                encoding = "DICTIONARY_V2_FSST"
-        streams["DATA"] = rle2.encode(indices, signed=False)
-        streams["DICTIONARY_DATA"] = dict_blob
-        streams["LENGTH"] = rle2.encode(key_lengths, signed=False)
-        stats["dict_size"] = n_distinct
-        return encoding, streams, stats
-    encoding = "DIRECT_V2"
-    if use_fsst and len(blob) > 4096:
+    encoding, blob = parts.encoding, parts.blob
+    # FSST on the blob when it pays (DICTIONARY_V2_FSST / DIRECT_V2_FSST)
+    min_blob = 4096 if parts.indexes is None else 1024
+    if use_fsst and len(blob) > min_blob:
         fsst_blob = fsst.encode_blob(blob)
         if len(fsst_blob) < 0.9 * len(blob):
             blob = fsst_blob
-            encoding = "DIRECT_V2_FSST"
-    streams["DATA"] = blob
-    streams["LENGTH"] = rle2.encode(lengths, signed=False)
+            encoding += "_FSST"
+    streams = {"LENGTH": rle2.encode(parts.lengths, signed=False)}
+    if parts.indexes is None:
+        streams["DATA"] = blob
+    else:
+        streams["DATA"] = rle2.encode(parts.indexes, signed=False)
+        streams["DICTIONARY_DATA"] = blob
+        stats["dict_size"] = len(parts.lengths)
     return encoding, streams, stats
 
 
@@ -582,10 +552,8 @@ def encode_column(arr: pa.Array, spec: ColumnSpec,
         from .codecs import decimal as dec_codec
         data = arr.drop_null() if arr.null_count else arr
         _, scale = spec.decimal_params()
-        # EXACT mantissa via integer math on as_tuple(): Decimal.scaleb
-        # under the default 28-digit context silently ROUNDS values
-        # with more significant digits (decimal(38,s) holds up to 38)
-        mants = [_exact_mantissa(v, scale) for v in data.to_pylist()]
+        mants = [dec_codec.exact_mantissa(v, scale)
+                 for v in data.to_pylist()]
         streams.update(dec_codec.encode_decimals(mants, [scale] * len(mants)))
         return "DIRECT_V2", streams, {"count": n_valid}
     if spec.is_list:
@@ -614,22 +582,6 @@ def encode_column(arr: pa.Array, spec: ColumnSpec,
         enc_name = "DICTIONARY_INT_V2" if suffix == "DICT_INT" else "DIRECT_V2"
         return enc_name, streams, stats
     raise ValueError(f"unsupported column type: {typ}")
-
-
-def _exact_mantissa(v, scale: int) -> int:
-    """Unscaled integer of ``v`` at ``scale``, exact at any precision
-    (no Decimal-context rounding)."""
-    sign, digits, exp = v.as_tuple()
-    m = int("".join(map(str, digits)))
-    shift = exp + scale
-    if shift >= 0:
-        m *= 10 ** shift
-    else:
-        q, r = divmod(m, 10 ** (-shift))
-        if r:
-            raise ValueError(f"decimal {v} does not fit scale {scale}")
-        m = q
-    return -m if sign else m
 
 
 def _format_nanos(nanos: np.ndarray) -> np.ndarray:
@@ -701,8 +653,7 @@ def decode_column(streams: dict, encoding: str, spec: ColumnSpec,
         us = secs * 1_000_000 + nanos // 1000
         return _with_nulls(us, valid, pa.timestamp("us"))
     if typ in ("string", "binary"):
-        return _decode_string_like(streams, encoding, typ, n_valid, valid,
-                                   n_rows)
+        return _decode_string_like(streams, encoding, typ, n_valid, valid)
     if spec.is_decimal:
         from decimal import Decimal
         from .codecs import decimal as dec_codec
@@ -746,40 +697,21 @@ def decode_column(streams: dict, encoding: str, spec: ColumnSpec,
     raise ValueError(f"unsupported column type: {typ}")
 
 
-def _decode_string_like(streams, encoding, typ, n_valid, valid, n_rows):
-    out_type = pa.binary() if typ == "binary" else pa.string()
-    if n_valid == 0:
-        vals = pa.array([], out_type)
-        return _expand_nulls_generic(vals, valid, n_rows, out_type)
-    if encoding.startswith("DICTIONARY_V2"):
-        indices = rle2.decode(streams["DATA"], n_valid, signed=False)
-        dict_blob = streams["DICTIONARY_DATA"]
-        if encoding.endswith("_FSST"):
-            dict_blob = fsst.decode_blob(dict_blob)
-        n_keys = int(indices.max()) + 1
-        key_lengths = rle2.decode(streams["LENGTH"], n_keys, signed=False)
-        koff = np.zeros(n_keys + 1, dtype=np.int32)
-        np.cumsum(key_lengths, out=koff[1:])
-        keys = pa.Array.from_buffers(
-            pa.binary(), n_keys,
-            [None, pa.py_buffer(koff.tobytes()),
-             pa.py_buffer(bytes(dict_blob))])
-        vals = pa.DictionaryArray.from_arrays(
-            pa.array(indices.astype(np.int32)), keys).cast(pa.binary())
-    else:
-        blob = streams["DATA"]
-        if encoding.endswith("_FSST"):
-            blob = fsst.decode_blob(blob)
-        lengths = rle2.decode(streams.get("LENGTH", b""), n_valid,
-                              signed=False)
-        offsets = np.zeros(n_valid + 1, dtype=np.int32)
-        np.cumsum(lengths, out=offsets[1:])
-        vals = pa.Array.from_buffers(
-            pa.binary(), n_valid,
-            [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(bytes(blob))])
-    if out_type == pa.string():
-        vals = vals.cast(pa.string())
-    return _expand_nulls_generic(vals, valid, n_rows, out_type)
+def _decode_string_like(streams, encoding, typ, n_valid, valid):
+    dict_enc = encoding.startswith("DICTIONARY_V2")
+    blob = streams.get("DICTIONARY_DATA" if dict_enc else "DATA", b"")
+    if encoding.endswith("_FSST"):
+        blob = fsst.decode_blob(blob)
+    indexes = None
+    n_lengths = n_valid
+    if dict_enc:
+        indexes = rle2.decode(streams["DATA"], n_valid, signed=False)
+        # every key of a stripe dictionary is referenced
+        n_lengths = int(indexes.max()) + 1
+    lengths = rle2.decode(streams.get("LENGTH", b""), n_lengths,
+                          signed=False)
+    return dictionary.to_arrow(lengths, blob, indexes, valid,
+                               binary=typ == "binary")
 
 
 def _with_nulls(vals: np.ndarray, valid, cast_to):
@@ -792,16 +724,6 @@ def _with_nulls(vals: np.ndarray, valid, cast_to):
     if cast_to is not None and arr.type != cast_to:
         arr = arr.cast(cast_to)
     return arr
-
-
-def _expand_nulls_generic(vals: pa.Array, valid, n_rows, out_type):
-    if valid is None:
-        return vals
-    # scatter valid values into a full-length array with nulls
-    indices = np.full(n_rows, -1, dtype=np.int64)
-    indices[valid] = np.arange(len(vals))
-    return vals.take(pa.array(
-        np.where(indices < 0, None, indices), type=pa.int64()))
 
 
 # ---------------------------------------------------------------------------

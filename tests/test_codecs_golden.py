@@ -6,6 +6,7 @@ Sources cited per-case (scritchley/orc test files).
 """
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from orc_spark.codecs import bits, byterle, compression, dictionary, rle1, rle2
@@ -154,31 +155,33 @@ def test_compression_roundtrip():
     assert len(framed) == len(rnd) + 3  # single original chunk + header
 
 
+def _dictionary_roundtrip(vals):
+    parts = dictionary.encode(pa.array(vals))
+    back = dictionary.to_arrow(parts.lengths, parts.blob, parts.indexes)
+    assert back.to_pylist() == vals
+    return parts
+
+
 def test_dictionary_sorted_order():
     # dictionary_v2.go:24-33: distinct keys sorted lexicographically
     vals = ["owen", "ashutosh", "owen", "alan", "alan", "owen", "owen", "alan"]
-    enc = dictionary.encode_strings(vals)  # 3 distinct / 8 = 0.375 <= 0.49
-    assert enc["encoding"] == dictionary.DICT_V2
-    assert enc["streams"]["DICTIONARY_DATA"] == b"alanashutoshowen"
-    dec = dictionary.decode_strings(
-        enc["encoding"], enc["streams"], len(vals))
-    assert [v.decode() for v in dec] == vals
+    parts = _dictionary_roundtrip(vals)  # 3 distinct / 8 = 0.375 <= 0.49
+    assert parts.encoding == dictionary.DICT_V2
+    assert parts.blob == b"alanashutoshowen"
+    assert parts.indexes.tolist() == [2, 1, 2, 0, 0, 2, 2, 0]
 
 
 def test_dictionary_threshold():
     # distinct/total <= 0.49 chooses dictionary (treewriter.go:537,701-707)
     vals_dict = ["a", "b"] * 50  # 2/100
-    assert dictionary.encode_strings(vals_dict)["encoding"] == dictionary.DICT_V2
+    assert _dictionary_roundtrip(vals_dict).encoding == dictionary.DICT_V2
     vals_direct = [f"v{i}" for i in range(100)]  # 100/100
-    enc = dictionary.encode_strings(vals_direct)
-    assert enc["encoding"] == dictionary.DIRECT_V2
-    dec = dictionary.decode_strings(enc["encoding"], enc["streams"], 100)
-    assert [v.decode() for v in dec] == vals_direct
+    assert _dictionary_roundtrip(vals_direct).encoding == dictionary.DIRECT_V2
     # boundary: exactly 0.49 -> dictionary; just above -> direct
     vals49 = [f"k{i}" for i in range(49)] + ["k0"] * 51
-    assert dictionary.encode_strings(vals49)["encoding"] == dictionary.DICT_V2
+    assert _dictionary_roundtrip(vals49).encoding == dictionary.DICT_V2
     vals50 = [f"k{i}" for i in range(50)] + ["k0"] * 50
-    assert dictionary.encode_strings(vals50)["encoding"] == dictionary.DIRECT_V2
+    assert _dictionary_roundtrip(vals50).encoding == dictionary.DIRECT_V2
 
 
 def test_varints():

@@ -1259,3 +1259,60 @@ def test_orc_scan_evolve_cross_family_fail_loud(spark, tmp_path):
         w.close()
     with pytest.raises(Exception, match="no lossless"):
         orcscan.orc_scan(spark, str(d), evolve=True).count()
+
+
+def _planted_utf8_orc(path):
+    """Uncompressed .orc whose direct ``doc_id`` and dictionary
+    ``source`` streams each carry one 0xff byte (row 7 / key "wiki")."""
+    n = 40
+    orcwriter.write_orc(pa.table({
+        "doc_id": [f"doc-{i:04d}" for i in range(n)],
+        "source": [["cc", "wiki", "books"][i % 3] for i in range(n)],
+    }), path, codec="none")
+    with open(path, "rb") as fh:
+        data = bytearray(fh.read())
+    for blob, planted in ((b"doc-0006doc-0007", b"doc-0006doc-000\xff"),
+                          (b"booksccwiki", b"booksccwik\xff")):
+        at = data.find(blob)
+        assert at > 0 and data.find(blob, at + 1) < 0
+        data[at:at + len(blob)] = planted
+    with open(path, "wb") as fh:
+        fh.write(bytes(data))
+
+
+def _scan_first_stripe(path):
+    from orc_spark import orctypes
+    ctx = orcscan._ScanContext(orctypes.type_from_file(path), [], None,
+                               ts_nanos=False)
+    return ctx.decode_stripe(ctx.open(path), 0)
+
+
+def test_malformed_utf8_reads_through_row_path(tmp_path):
+    path = str(tmp_path / "bad.orc")
+    _planted_utf8_orc(path)
+    f = ORCFile(path)
+    nr = f._load_stripe_directory(0)
+    for cid in (1, 2):
+        with pytest.raises(ValueError):
+            orcscan._fast_arrow(f, cid, nr, pa.string())
+    batch = _scan_first_stripe(path)
+    assert batch.column(0)[7].as_py() == "doc-000\ufffd"
+    assert batch.column(0)[8].as_py() == "doc-0008"
+    assert batch.column(1).to_pylist()[:3] == ["cc", "wik\ufffd", "books"]
+
+
+def test_fast_path_bug_propagates(tmp_path, monkeypatch):
+    # only ValueError (malformed bytes) may send a column to the row
+    # path; any other error from the fast path is a bug and surfaces
+    from orc_spark.codecs import dictionary
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("builder bug")
+
+    path = str(tmp_path / "good.orc")
+    orcwriter.write_orc(pa.table({"s": ["a", "b", "c"]}), path,
+                        codec="none")
+    assert _scan_first_stripe(path).column(0).to_pylist() == ["a", "b", "c"]
+    monkeypatch.setattr(dictionary, "to_arrow", broken)
+    with pytest.raises(RuntimeError, match="builder bug"):
+        _scan_first_stripe(path)

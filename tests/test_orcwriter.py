@@ -42,6 +42,27 @@ def test_write_read_own_reader(token_table, tmp_path, codec):
         assert rows[i]["doc_id"] == f"doc-{i:012d}"
 
 
+@pytest.mark.parametrize("values", [
+    pytest.param([["cc", "wiki", "books"][i % 3] for i in range(3000)],
+                 id="dictionary"),
+    pytest.param([f"doc-{i:012d}" for i in range(3000)], id="direct"),
+])
+def test_string_streams_match_stripe_table(tmp_path, values):
+    # one string codec: the stripe table and a one-stride .orc file
+    # carry byte-identical uncompressed string streams
+    arr = pa.array([None if i % 13 == 0 else v
+                    for i, v in enumerate(values)])
+    encoding, streams, _ = stripe.encode_column(
+        arr, stripe.ColumnSpec("s", "string"))
+    path = str(tmp_path / "s.orc")
+    orcwriter.write_orc(pa.table({"s": arr}), path, codec="none")
+    f = orcfile.ORCFile(path)
+    f._load_stripe_directory(0)
+    assert f.encodings[1] == encoding
+    for kind in ("PRESENT", "DATA", "LENGTH", "DICTIONARY_DATA"):
+        assert f._stream(1, kind) == streams.get(kind), kind
+
+
 def test_pyarrow_cpp_reader_reads_our_file(token_table, tmp_path):
     from pyarrow import orc as pa_orc
     path = str(tmp_path / "t.orc")

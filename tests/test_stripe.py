@@ -2,6 +2,8 @@
 the writer_test.go edge patterns (FIXTURES.md §3) adapted to the token
 schema: nulls, empty arrays, all-null rows, alternating patterns."""
 
+import json
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -21,22 +23,64 @@ def _token_batch(n=1000, with_nulls=False, with_empties=False):
     if with_nulls:
         tokens = [None if i % 11 == 0 else t for i, t in enumerate(tokens)]
     n_tok = [len(t) if t is not None else None for t in tokens]
+    doc_id = [f"doc-{i:012d}" for i in range(n)]
+    source = [["cc", "wiki", "books", "code"][i % 4] for i in range(n)]
+    if with_nulls:
+        doc_id = [None if i % 13 == 0 else v for i, v in enumerate(doc_id)]
+        source = [None if i % 13 == 0 else v for i, v in enumerate(source)]
     return pa.table({
-        "doc_id": [f"doc-{i:012d}" for i in range(n)],
+        "doc_id": pa.array(doc_id, pa.string()),
         "tokens": pa.array(tokens, pa.list_(pa.int32())),
         "n_tok": pa.array(n_tok, pa.int32()),
-        "source": pa.array([["cc", "wiki", "books", "code"][i % 4]
-                            for i in range(n)]),
+        "source": pa.array(source, pa.string()),
     })
 
 
+BINARY_SCHEMA = stripe.parse_schema([
+    ("doc_id", "binary"), ("tokens", "list<int>"), ("n_tok", "int"),
+    ("source", "binary"),
+])
+
+
 @pytest.mark.parametrize("codec", ["none", "zlib"])
-@pytest.mark.parametrize("nulls,empties", [(False, False), (True, True)])
-def test_token_stripe_roundtrip(codec, nulls, empties):
+@pytest.mark.parametrize("nulls,empties,variant", [
+    pytest.param(False, False, None, id="False-False"),
+    pytest.param(True, True, None, id="True-True"),
+    # binary columns take the sorted dictionary in the stripe table
+    pytest.param(True, False, "binary", id="binary-dictionary"),
+    pytest.param(True, False, "fsst", id="fsst-nulls"),
+    pytest.param(True, True, "strides", id="stride_rows"),
+])
+def test_token_stripe_roundtrip(codec, nulls, empties, variant):
     batch = _token_batch(1000, with_nulls=nulls, with_empties=empties)
-    row = stripe.encode_stripe(batch, stripe.TOKEN_SCHEMA, codec=codec)
+    specs = stripe.TOKEN_SCHEMA
+    kwargs = {}
+    if variant == "binary":
+        specs = BINARY_SCHEMA
+        batch = pa.table({c: batch[c].cast(pa.binary())
+                          if c in ("doc_id", "source") else batch[c]
+                          for c in batch.column_names})
+    elif variant == "fsst":
+        # 97 long keys: a dictionary blob big enough for FSST to pay
+        urls = [None if i % 13 == 0 else f"https://example.org/corpus/{i % 97}"
+                for i in range(1000)]
+        batch = batch.set_column(3, "source", pa.array(urls, pa.string()))
+        kwargs["use_fsst"] = True
+    elif variant == "strides":
+        kwargs["stride_rows"] = 128
+    row = stripe.encode_stripe(batch, specs, codec=codec, **kwargs)
     assert row["n_rows"] == 1000
-    out = stripe.decode_stripe(row, stripe.TOKEN_SCHEMA, codec=codec)
+    encodings = json.loads(row["encodings"])
+    if variant == "binary":
+        assert encodings["source"] == "DICTIONARY_V2"
+    elif variant == "fsst":
+        assert encodings["doc_id"] == "DIRECT_V2_FSST"
+        assert encodings["source"] == "DICTIONARY_V2_FSST"
+    if variant == "strides":
+        assert len(stripe.stride_index(row)["rows"]) == 8
+        out = stripe.decode_stripe_strides(row, specs, codec=codec)
+    else:
+        out = stripe.decode_stripe(row, specs, codec=codec)
     assert out.num_rows == 1000
     for col in ("doc_id", "tokens", "n_tok", "source"):
         assert out.column(col).to_pylist() == batch.column(col).to_pylist(), col
@@ -45,7 +89,6 @@ def test_token_stripe_roundtrip(codec, nulls, empties):
 def test_source_uses_dictionary_doc_id_direct():
     batch = _token_batch(500)
     row = stripe.encode_stripe(batch, stripe.TOKEN_SCHEMA, codec="none")
-    import json
     encodings = json.loads(row["encodings"])
     assert encodings["source"].startswith("DICTIONARY_V2")  # 4 distinct / 500
     assert encodings["doc_id"].startswith("DIRECT_V2")  # all distinct

@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..stripe import DEFAULT_CODEC as stripe_DEFAULT_CODEC,  TOKEN_SCHEMA
@@ -36,14 +37,26 @@ def assign_part_ids(df: DataFrame, n_parts: int,
         .cast("int"))
 
 
-def completed_parts(spark: SparkSession, out_dir: str) -> set[int]:
-    audit_path = os.path.join(out_dir, "audit")
+def read_parquet_if_exists(spark: SparkSession,
+                           path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None when the path does not
+    exist (nothing recorded yet).  Any other failure — a corrupt or
+    unreadable audit file — raises: reading it as "nothing done"
+    would silently redo every completed unit."""
     try:
-        rows = spark.read.parquet(audit_path).select("part_id").distinct() \
-            .collect()
-        return {r["part_id"] for r in rows}
-    except Exception:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return None
+
+
+def completed_parts(spark: SparkSession, out_dir: str) -> set[int]:
+    audit = read_parquet_if_exists(spark, os.path.join(out_dir, "audit"))
+    if audit is None:
         return set()
+    rows = audit.select("part_id").distinct().collect()
+    return {r["part_id"] for r in rows}
 
 
 def encode_dataset(spark: SparkSession, df: DataFrame, out_dir: str,
@@ -54,7 +67,6 @@ def encode_dataset(spark: SparkSession, df: DataFrame, out_dir: str,
                    batch_parts: int | None = None) -> dict:
     """Encode ``df`` into ``out_dir`` (stripes/ + audit/), resuming any
     previously completed partitions.  Returns a summary dict."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     stripes_path = os.path.join(out_dir, "stripes")
     audit_path = os.path.join(out_dir, "audit")
 
@@ -77,8 +89,11 @@ def encode_dataset(spark: SparkSession, df: DataFrame, out_dir: str,
         repartitioned, specs, stripe_rows=stripe_rows,
         stripe_tokens=stripe_tokens, codec=codec, use_fsst=use_fsst,
         group_col="part_id")
-    encoded.write.mode("overwrite").partitionBy("part_id") \
-        .parquet(stripes_path)
+    # per-write dynamic overwrite: replaces only the pending parts'
+    # directories, and leaves the caller's session conf alone
+    encoded.write.mode("overwrite") \
+        .option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("part_id").parquet(stripes_path)
     wall = time.time() - t0
 
     # APPEND one audit row per partition completed in THIS invocation,

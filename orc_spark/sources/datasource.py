@@ -282,7 +282,7 @@ class OrcReader(DataSourceReader):
 
     def read(self, partition: StripesPartition):
         yield from _scan_partition(partition, self.pushed or None,
-                                   bool(self.columns), self.ts_nanos)
+                                   self.ts_nanos)
 
 
 def _coalesce_parts(tasks, root_str: str) -> list[StripesPartition]:
@@ -305,26 +305,23 @@ def _coalesce_parts(tasks, root_str: str) -> list[StripesPartition]:
 
 
 def _scan_partition(partition: StripesPartition, pushed,
-                    has_projection: bool, ts_nanos: bool):
+                    ts_nanos: bool):
     """Executor-side stripe decode shared by the batch and stream
     readers.  Metadata-clean: no directory listing, no foreign
     footer — the projected root was resolved once at planning time
     and rides along on the partition as a type string (r5)."""
     from orc_spark._alloc import tune_worker
+    from .orcfile import ORCFile
     from .orcscan import _BATCH_ROWS, _ScanContext, _pred_list
     tune_worker()
     if not partition.stripes:
         return
+    # the projected root carries predicate columns (Spark's residual
+    # filter runs post-scan on OUR output schema, which is exactly
+    # the projected schema — predicates outside it were never pushed)
     root = orctypes.parse_orc_type(partition.root_str)
-    # internal projection carries predicate columns (Spark's
-    # residual filter runs post-scan on OUR output schema, which
-    # is exactly the projected schema — predicates outside it
-    # were never pushed)
-    sel = list(dict.fromkeys(
-        c.split(".")[0] for c in root.field_names)) \
-        if has_projection else None
-    ctx = _ScanContext(root, _pred_list(pushed), sel, ts_nanos)
-    f = ctx.open(partition.path)
+    ctx = _ScanContext(root, _pred_list(pushed), ts_nanos)
+    f = ORCFile(partition.path)
     for si in partition.stripes:
         batch = ctx.decode_stripe(f, si)
         if batch is None:
@@ -447,8 +444,7 @@ class OrcStreamReader(DataSourceStreamReader):
         return parts or [StripesPartition("", [], root_str)]
 
     def read(self, partition: StripesPartition):
-        yield from _scan_partition(partition, None,
-                                   bool(self.columns), self.ts_nanos)
+        yield from _scan_partition(partition, None, self.ts_nanos)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in Spark's checkpoint; files are immutable

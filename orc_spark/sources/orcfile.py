@@ -41,6 +41,8 @@ STREAM_KINDS = ["PRESENT", "DATA", "LENGTH", "DICTIONARY_DATA",
                 "BLOOM_FILTER", "BLOOM_FILTER_UTF8"]
 ENCODINGS = ["DIRECT", "DICTIONARY", "DIRECT_V2", "DICTIONARY_V2"]
 COMPRESSIONS = ["none", "zlib", "snappy", "lzo", "lz4", "zstd"]
+# index streams: parsed on demand, never part of a stripe's data streams
+_INDEX_KINDS = ("ROW_INDEX", "BLOOM_FILTER", "BLOOM_FILTER_UTF8")
 
 TIMESTAMP_BASE_SECONDS = 1420070400
 
@@ -167,7 +169,7 @@ class TypeNode:
 class ORCFile:
     def __init__(self, path: str):
         # mmap, not read(): tail/footer parsing touches only the last
-        # pages, and read_rows/read_stripe_strides seeks fault in only
+        # pages, and read_rows/load_strides seeks fault in only
         # the stripes/strides they actually decode
         import mmap
         self.path = path
@@ -286,10 +288,10 @@ class ORCFile:
     def read_stripe_columns(self, si: int) -> tuple[dict, int]:
         """Column-major stripe decode: ({root field -> value list},
         n_rows), honoring ``select()``.  Skips the per-row dict
-        assembly of ``read_stripe`` — the fast path for columnar
-        consumers (orc_scan builds Arrow arrays straight from these
-        lists).  Falls back to the row path if the root struct itself
-        carries nulls (pathological; never written by our sink)."""
+        assembly of ``read_stripe``; the row-path reference that
+        orc_scan's whole-array stripe decode is tested against.
+        Falls back to the row path if the root struct itself carries
+        nulls (pathological; never written by our sink)."""
         n_rows = self._load_stripe_directory(si)
         root = self.types[0]
         if root.kind != "struct":
@@ -312,39 +314,53 @@ class ORCFile:
             out[fn] = self._read_column(c, n_rows)
         return out, n_rows
 
-    def _load_stripe_directory(self, si: int) -> int:
-        """Parse stripe si's footer: set encodings/dict sizes/writer
-        tz and the stream directory; returns the stripe row count."""
+    def _stripe_footer(self, si: int) -> tuple:
+        """(encodings, dict sizes, writer tz, stream directory
+        ``[(kind, col, offset, length)]``) of stripe si — the ONE
+        stripe-footer parse.  The LAST stripe's result is memoized
+        (like ``_row_indexes``): a scan task consults it several
+        times per stripe (stride_keep, bloom_strides, the load)."""
+        cached = getattr(self, "_sf_cache", None)
+        if cached is not None and cached[0] == si:
+            return cached[1]
         info = self.stripes[si]
         offset = info.get(1, [0])[0]
-        index_len = info.get(2, [0])[0]
-        data_len = info.get(3, [0])[0]
-        footer_len = info.get(4, [0])[0]
-        n_rows = info.get(5, [0])[0]
-        sf_start = offset + index_len + data_len
+        sf_start = offset + info.get(2, [0])[0] + info.get(3, [0])[0]
         sfooter = parse_message(self._decomp(
-            self.data[sf_start:sf_start + footer_len]))
-        self.encodings = [
-            ENCODINGS[parse_message(c).get(1, [0])[0]]
-            for c in sfooter.get(2, [])]
-        self.dict_sizes = [
-            parse_message(c).get(2, [0])[0] for c in sfooter.get(2, [])]
+            self.data[sf_start:sf_start + info.get(4, [0])[0]]))
+        encs = [parse_message(c) for c in sfooter.get(2, [])]
         wtz = sfooter.get(3, [b""])[0]
-        self.writer_tz = wtz.decode() if wtz else ""
-        # stream directory: blobs are laid out in order from the stripe
-        # offset (index streams first)
-        streams: dict[tuple[int, str], bytes] = {}
+        # blobs are laid out in directory order from the stripe offset
+        # (index streams first)
+        directory = []
         pos = offset
         for s in sfooter.get(1, []):
             sm = parse_message(s)
-            kind = STREAM_KINDS[sm.get(1, [0])[0]]
-            col = sm.get(2, [0])[0]
             ln = sm.get(3, [0])[0]
-            if kind not in ("ROW_INDEX", "BLOOM_FILTER", "BLOOM_FILTER_UTF8"):
-                streams[(col, kind)] = self.data[pos:pos + ln]
+            directory.append((STREAM_KINDS[sm.get(1, [0])[0]],
+                              sm.get(2, [0])[0], pos, ln))
             pos += ln
+        out = ([ENCODINGS[e.get(1, [0])[0]] for e in encs],
+               [e.get(2, [0])[0] for e in encs],
+               wtz.decode() if wtz else "", directory)
+        self._sf_cache = (si, out)
+        return out
+
+    def _install(self, si: int, streams: dict) -> None:
+        """Make ``streams`` stripe si's current streams, with its
+        encodings, dictionary sizes and writer timezone."""
+        self.encodings, self.dict_sizes, self.writer_tz, _ = \
+            self._stripe_footer(si)
         self._streams = streams
-        return n_rows
+
+    def _load_stripe_directory(self, si: int) -> int:
+        """Load stripe si whole: its encodings/dict sizes/writer tz
+        and data-stream directory; returns the stripe row count."""
+        directory = self._stripe_footer(si)[3]
+        self._install(si, {(col, kind): self.data[pos:pos + ln]
+                           for kind, col, pos, ln in directory
+                           if kind not in _INDEX_KINDS})
+        return self.stripes[si].get(5, [0])[0]
 
     # ------------------------------------------------------------------
     def _stream(self, col: int, kind: str) -> bytes | None:
@@ -507,14 +523,14 @@ class ORCFile:
             off += ln
         return out
 
-    def _position_layout(self, col: int, has_present: bool) -> list:
+    def _position_layout(self, col: int, enc: str,
+                         has_present: bool) -> list:
         """Seek-position layout for a column: [(stream kind, n_numbers)]
         in recorded order (mirrors the writer's recordPosition rules).
         n_numbers = codec seek (1 uncompressed / 2 compressed) + RLE
         state entries."""
         base = 1 if self.compression == "none" else 2
         k = self.types[col].kind
-        enc = self.encodings[col]
         out = []
         if has_present:
             out.append(("PRESENT", base + 2))
@@ -547,100 +563,65 @@ class ORCFile:
             out.append(("DATA", base + 1))
         return out
 
-    def read_stripe_strides(self, si: int, keep: list[int]) -> list:
-        """Row-group seek INSIDE a stripe: decode only the given stride
-        ids by slicing each stream at its ROW_INDEX positions.  Valid
-        for stride-restart files (our writer: every position's RLE
-        state is 0); raises ValueError when positions carry codec
-        state (e.g. Java-written files with runs spanning strides) —
-        callers fall back to read_stripe."""
+    def load_strides(self, si: int, keep) -> int:
+        """Row-group seek INSIDE a stripe: install, as stripe si's
+        current streams, only the kept stride ids' byte ranges (sliced
+        at ROW_INDEX positions, concatenated per (column, kind)) and
+        return their row count — one column-major decode then reads
+        exactly those strides.  The stripe-global dictionary blob and
+        dictionary LENGTH stay whole.  Valid for stride-restart files
+        (our writer: every position's codec/RLE/bit state is 0);
+        raises ValueError when positions carry such state (e.g.
+        Java-written files with runs spanning strides, unaligned bit
+        streams), leaving the current streams untouched — callers
+        then load the whole stripe."""
         if not self.row_index_stride:
             raise ValueError("file has no row index")
-        n_rows_total = self.stripes[si].get(5, [0])[0]
-        self._load_stripe_streams(si)
+        n_rows = self.stripes[si].get(5, [0])[0]
         stride = self.row_index_stride
-        n_strides = (n_rows_total + stride - 1) // stride
-        # all columns' positions in ONE footer parse
-        all_idx = self._row_indexes(si)
-        indexes = {c: all_idx.get(c, []) for c in range(len(self.types))}
-        whole_streams = dict(self._streams)
-        out_rows = []
-        try:
-            for t in sorted(keep):
-                if t >= n_strides:
+        n_strides = (n_rows + stride - 1) // stride
+        keep = sorted(t for t in set(keep) if t < n_strides)
+        encodings, _, _, directory = self._stripe_footer(si)
+        where = {(col, kind): (pos, ln)
+                 for kind, col, pos, ln in directory
+                 if kind not in _INDEX_KINDS}
+        indexes = self._row_indexes(si)
+        # positions read: each kept stride's start and its end (the
+        # next stride's start; the stream end for the last stride)
+        read = {u for t in keep for u in (t, t + 1) if u < n_strides}
+        sliced: dict[tuple[int, str], bytes] = {}
+        for col in range(len(self.types)):
+            layout = self._position_layout(
+                col, encodings[col], (col, "PRESENT") in where)
+            entries = indexes.get(col, [])
+            if layout and len(entries) != n_strides:
+                raise ValueError("column row index does not cover the "
+                                 "stripe's strides")
+            off = 0
+            for kind, n_nums in layout:
+                seg = [e["positions"][off:off + n_nums] for e in entries]
+                off += n_nums
+                if any(any(seg[u][1:]) for u in read):
+                    raise ValueError(
+                        "positions carry codec state; stride slice "
+                        "not possible — load the whole stripe")
+                if (col, kind) not in where:
                     continue
-                n_t = min(stride, n_rows_total - t * stride)
-                sliced = {}
-                for col in range(len(self.types)):
-                    has_present = (col, "PRESENT") in whole_streams
-                    layout = self._position_layout(col, has_present)
-                    entries = indexes[col]
-                    if not entries and layout:
-                        raise ValueError("column has no row index entries")
-                    pos_t = entries[t]["positions"] if entries else []
-                    pos_next = entries[t + 1]["positions"] \
-                        if entries and t + 1 < len(entries) else None
-                    off = 0
-                    for kind, n_nums in layout:
-                        seg = pos_t[off:off + n_nums]
-                        nxt = pos_next[off:off + n_nums] \
-                            if pos_next is not None else None
-                        if any(seg[1:]) or (nxt is not None and any(nxt[1:])):
-                            raise ValueError(
-                                "positions carry codec state; stride slice "
-                                "not possible — use read_stripe")
-                        lo = seg[0]
-                        hi = nxt[0] if nxt is not None else None
-                        raw = whole_streams.get((col, kind))
-                        if raw is not None:
-                            sliced[(col, kind)] = raw[lo:hi] if hi is not None \
-                                else raw[lo:]
-                        off += n_nums
-                    # stripe-global streams (dictionary blob + key lengths)
-                    for kind in ("DICTIONARY_DATA",):
-                        if (col, kind) in whole_streams:
-                            sliced[(col, kind)] = whole_streams[(col, kind)]
-                    if self.encodings[col].startswith("DICTIONARY") and \
-                            (col, "LENGTH") in whole_streams:
-                        sliced[(col, "LENGTH")] = whole_streams[(col, "LENGTH")]
-                self._streams = sliced
-                out_rows.extend(self._read_column(0, n_t))
-        finally:
-            # restore on EVERY exit: a ValueError mid-loop must not
-            # leave self._streams pointing at one stride's slices
-            self._streams = whole_streams
-        return out_rows
-
-    def _load_stripe_streams(self, si: int) -> None:
-        """Populate self._streams/encodings for stripe si without
-        decoding any rows (the stream-directory part of read_stripe)."""
-        info = self.stripes[si]
-        offset = info.get(1, [0])[0]
-        footer_len = info.get(4, [0])[0]
-        index_len = info.get(2, [0])[0]
-        data_len = info.get(3, [0])[0]
-        sf_start = offset + index_len + data_len
-        sfooter = parse_message(self._decomp(
-            self.data[sf_start:sf_start + footer_len]))
-        self.encodings = [
-            ENCODINGS[parse_message(c).get(1, [0])[0]]
-            for c in sfooter.get(2, [])]
-        self.dict_sizes = [
-            parse_message(c).get(2, [0])[0] for c in sfooter.get(2, [])]
-        wtz = sfooter.get(3, [b""])[0]
-        self.writer_tz = wtz.decode() if wtz else ""
-        streams = {}
-        pos = offset
-        for s in sfooter.get(1, []):
-            sm = parse_message(s)
-            kind = STREAM_KINDS[sm.get(1, [0])[0]]
-            c = sm.get(2, [0])[0]
-            ln = sm.get(3, [0])[0]
-            if kind not in ("ROW_INDEX", "BLOOM_FILTER",
-                            "BLOOM_FILTER_UTF8"):
-                streams[(c, kind)] = self.data[pos:pos + ln]
-            pos += ln
-        self._streams = streams
+                pos, ln = where[(col, kind)]
+                bounds = [p[0] for p in seg] + [ln]
+                sliced[(col, kind)] = b"".join(
+                    self.data[pos + bounds[t]:pos + bounds[t + 1]]
+                    for t in keep)
+            # stripe-global streams: dictionary blob + key lengths
+            globals_ = ["DICTIONARY_DATA"]
+            if encodings[col].startswith("DICTIONARY"):
+                globals_.append("LENGTH")
+            for kind in globals_:
+                if (col, kind) in where:
+                    pos, ln = where[(col, kind)]
+                    sliced[(col, kind)] = self.data[pos:pos + ln]
+        self._install(si, sliced)
+        return sum(min(stride, n_rows - t * stride) for t in keep)
 
     def read_rows(self, start: int, count: int) -> list:
         """Cursor seek (SelectStripe + RowIndex consumed): returns rows
@@ -649,6 +630,7 @@ class ORCFile:
         them."""
         out = []
         row0 = 0
+        stride = self.row_index_stride
         for si, info in enumerate(self.stripes):
             n = info.get(5, [0])[0]
             if row0 + n <= start:
@@ -658,21 +640,19 @@ class ORCFile:
                 break
             lo = max(0, start - row0)
             hi = min(n, start + count - row0)
-            stride = self.row_index_stride
+            row0 += n
+            n_load = None
             if stride:
-                t0, t1 = lo // stride, (hi - 1) // stride
                 try:
-                    rows = self.read_stripe_strides(
-                        si, list(range(t0, t1 + 1)))
-                    base = t0 * stride
-                    out.extend(rows[lo - base:hi - base])
-                    row0 += n
-                    continue
+                    n_load = self.load_strides(
+                        si, range(lo // stride, (hi - 1) // stride + 1))
+                    base = lo // stride * stride
+                    lo, hi = lo - base, hi - base
                 except ValueError:
                     pass
-            rows = self.read_stripe(si)
-            out.extend(rows[lo:hi])
-            row0 += n
+            if n_load is None:
+                n_load = self._load_stripe_directory(si)
+            out.extend(self._read_column(0, n_load)[lo:hi])
         return out
 
     def _row_indexes(self, si: int) -> dict[int, list[dict]]:
@@ -680,27 +660,14 @@ class ORCFile:
         one directory pass (per-column row_index() calls re-parsed the
         footer O(cols) times on wide schemas).  The LAST stripe's
         result is memoized: pruning + slicing consult the index
-        several times per stripe (stride_keep, read_stripe_strides),
+        several times per stripe (stride_keep, load_strides),
         and a one-entry cache bounds memory while a scan task walks
         stripes sequentially."""
         cached = getattr(self, "_ri_cache", None)
         if cached is not None and cached[0] == si:
             return cached[1]
-        info = self.stripes[si]
-        offset = info.get(1, [0])[0]
-        footer_len = info.get(4, [0])[0]
-        index_len = info.get(2, [0])[0]
-        data_len = info.get(3, [0])[0]
-        sf_start = offset + index_len + data_len
-        sfooter = parse_message(self._decomp(
-            self.data[sf_start:sf_start + footer_len]))
         out: dict[int, list[dict]] = {}
-        pos = offset
-        for s in sfooter.get(1, []):
-            sm = parse_message(s)
-            kind = STREAM_KINDS[sm.get(1, [0])[0]]
-            c = sm.get(2, [0])[0]
-            ln = sm.get(3, [0])[0]
+        for kind, c, pos, ln in self._stripe_footer(si)[3]:
             if kind == "ROW_INDEX":
                 ri = parse_message(self._decomp(self.data[pos:pos + ln]))
                 entries = []
@@ -712,7 +679,6 @@ class ORCFile:
                         {"positions": packed_varints(em.get(1, [])),
                          "stats": stats})
                 out[c] = entries
-            pos += ln
         self._ri_cache = (si, out)
         return out
 
@@ -732,20 +698,7 @@ class ORCFile:
         from ..codecs import bloom as bloom_codec
         if isinstance(value, str):
             value = value.encode()
-        info = self.stripes[si]
-        offset = info.get(1, [0])[0]
-        footer_len = info.get(4, [0])[0]
-        index_len = info.get(2, [0])[0]
-        data_len = info.get(3, [0])[0]
-        sf_start = offset + index_len + data_len
-        sfooter = parse_message(self._decomp(
-            self.data[sf_start:sf_start + footer_len]))
-        pos = offset
-        for s in sfooter.get(1, []):
-            sm = parse_message(s)
-            kind = STREAM_KINDS[sm.get(1, [0])[0]]
-            c = sm.get(2, [0])[0]
-            ln = sm.get(3, [0])[0]
+        for kind, c, pos, ln in self._stripe_footer(si)[3]:
             if kind == "BLOOM_FILTER_UTF8" and c == col:
                 idx = parse_message(self._decomp(self.data[pos:pos + ln]))
                 h64 = bloom_codec.hash64(value)
@@ -771,7 +724,6 @@ class ORCFile:
                            for p in bf._positions(h64)):
                         keep.append(t)
                 return keep
-            pos += ln
         return None
 
     def equality_lookup(self, column: str, value) -> list:
@@ -787,15 +739,18 @@ class ORCFile:
             keep = self.bloom_strides(si, col, value)
             if keep is not None and not keep:
                 continue
-            if keep is not None and self.row_index_stride:
+            n = None
+            if keep is not None:
                 try:
-                    rows = self.read_stripe_strides(si, keep)
+                    n = self.load_strides(si, keep)
                 except ValueError:
-                    # positions carry codec state (non-stride-restart
-                    # writer): documented fallback to a full scan
-                    rows = self.read_stripe(si)
-            else:
-                rows = self.read_stripe(si)
+                    # no row index, or positions carry codec state
+                    # (non-stride-restart writer): documented
+                    # fallback to a full scan
+                    pass
+            if n is None:
+                n = self._load_stripe_directory(si)
+            rows = self._read_column(0, n)
             out.extend(r for r in rows if r.get(column) == value)
         return out
 

@@ -18,8 +18,8 @@ Open/Select/Stripes/Next cursor loop, re-expressed as a Spark scan):
   (+ per-stride bloom filters for ``==``) and decompresses only
   strides that can match; Java-written files fall back to
   whole-stripe decode transparently.
-* **column projection** — ``columns=[...]`` maps to ``ORCFile.select``
-  (only those streams are decompressed).
+* **column projection** — ``columns=[...]`` (plain or dotted) decodes
+  only those columns' subtrees; other streams stay compressed.
 * reads files Spark's built-in reader rejects: ``uniontype`` columns
   surface as the standard sparse struct (``tag`` + one nullable field
   per branch).
@@ -29,9 +29,10 @@ row reader yields Decimal mantissas, matching reference
 decimal.go:53-79); timestamps surface as TIMESTAMP_NTZ (ORC stores
 writer-zone wall clock — no instant is implied) truncated to
 microseconds, or as lossless LONG wall-clock nanos-since-epoch under
-``timestamp_nanos=True``.  The scan is the COMPATIBILITY path
-(per-row Python by nature of row-major .orc streams); the columnar
-stripe table is the performance path.
+``timestamp_nanos=True``.  Whole and stride-pruned stripes decode
+column-major through ``_column_arrow``; per-row Python runs only for a
+column ``_fast_arrow`` declines.  The columnar stripe table remains the
+performance path.
 """
 
 from __future__ import annotations
@@ -345,15 +346,6 @@ def _offsets(lengths, valid):
                     mask=np.concatenate((~valid, [False])))
 
 
-def _dig(v, segs: list[str]):
-    """Nested row-dict lookup for a dotted path (None propagates)."""
-    for s in segs:
-        if v is None:
-            return None
-        v = v.get(s)
-    return v
-
-
 def _ancestor_expand(arr, valids):
     """Expand a decoded subtree Arrow array outward through its
     ancestor-struct validity chain (deepest first): take() with null
@@ -650,6 +642,30 @@ def _scatter(vals, valid):
     return full
 
 
+def _column_arrow(f: ORCFile, ids: list[int], n: int,
+                  node: orctypes.OrcType, ft, ts_nanos: bool = False):
+    """pa.Array of Arrow type ``ft`` for the column at the end of the
+    id chain ``ids`` over the ``n`` rows of the currently loaded
+    stripe (whole or stride-sliced): ancestor PRESENT chain (the root
+    struct's included), ``_fast_arrow`` at the surviving count, then
+    take-expansion back to ``n`` rows.  Only when ``_fast_arrow``
+    declines (None) or rejects malformed bytes (ValueError) does THIS
+    column take the generic row path (``read_path`` + ``_conv``),
+    which replace-decodes."""
+    import pyarrow as pa
+    valids, cnt = f.path_present_chain(ids, n)
+    try:
+        arr = _fast_arrow(f, ids[-1], cnt, ft)
+    except ValueError:
+        arr = None
+    if arr is not None:
+        return _ancestor_expand(arr, valids)
+    vals = f.read_path(ids, n)
+    if _needs_conv(node):
+        vals = [_conv(node, v, ts_nanos) for v in vals]
+    return pa.array(vals, type=ft)
+
+
 def stride_keep(f: ORCFile, si: int, preds: list[tuple],
                 col_ids: dict[str, int]
                 ) -> tuple[list[int], int] | None:
@@ -765,12 +781,10 @@ class _ScanContext:
     DataSource reader (sources/datasource.py)."""
 
     def __init__(self, root: orctypes.OrcType, preds: list[tuple],
-                 sel: list[str] | None, ts_nanos: bool):
+                 ts_nanos: bool):
         self.root_names = root.field_names
         self.root_children = root.children
-        self.conv_flags = [_needs_conv(c) for c in root.children]
         self.preds = preds
-        self.sel = sel
         self.ts_nanos = ts_nanos
         self._schema = None
 
@@ -788,17 +802,14 @@ class _ScanContext:
         st["_schema"] = None  # rebuilt lazily worker-side
         return st
 
-    def open(self, path: str) -> ORCFile:
-        f = ORCFile(path)
-        if self.sel:
-            have = set(_root_col_ids(f))
-            f.select(*[c for c in self.sel if c in have])
-        return f
-
     def decode_stripe(self, f: ORCFile, si: int):
-        """One stripe -> pa.RecordBatch (None = fully pruned)."""
+        """One stripe -> pa.RecordBatch (None = fully pruned).  Whole
+        and stride-pruned stripes decode alike: load the stripe's
+        streams (or only the kept strides' byte ranges), then one
+        ``_column_arrow`` per output name — only the named subtrees'
+        streams are decompressed."""
         import pyarrow as pa
-        cols = None
+        n_rows = None
         if self.preds:
             # row-group skip INSIDE the stripe: ROW_INDEX per-stride
             # stats (+ bloom for ==) decide which strides to
@@ -813,101 +824,26 @@ class _ScanContext:
                     return None  # no stride can match
                 if len(ks) < n_str:
                     try:
-                        rows = f.read_stripe_strides(si, ks)
-                        if f.types[0].kind != "struct":
-                            cols = {"value": rows}
-                        else:
-                            cols = {fn: [None if r is None
-                                         else _dig(r, fn.split("."))
-                                         for r in rows]
-                                    for fn in self.root_names}
+                        n_rows = f.load_strides(si, ks)
                     except ValueError:
-                        cols = None
-        arrays = []
-        if cols is None:
-            # column-major decode: supported type trees (incl.
-            # PRESENT-bearing and nested list/struct/map) build
-            # whole-array via _fast_arrow with zero per-row Python;
-            # timestamp/decimal/union subtrees take the generic
-            # row path with _conv skipped for identity types
+                        pass  # positions carry codec state
+        if n_rows is None:
             n_rows = f._load_stripe_directory(si)
-            v0, nv0 = f._present(0, n_rows)
-            if v0 is not None and nv0 != n_rows:
-                if any("." in fn for fn in self.root_names):
-                    # dotted projection under a null-bearing root
-                    # struct (pathological): extract from full rows
-                    rows = f._read_column(0, n_rows)
-                    cols = {fn: [None if r is None
-                                 else _dig(r, fn.split("."))
-                                 for r in rows]
-                            for fn in self.root_names}
-                else:
-                    cols, _ = f.read_stripe_columns(si)
-            else:
-                cids = _root_col_ids(f)
-                cols = {}
-                for fn in self.root_names:
-                    ft = self.arrow_schema.field(fn).type
-                    if "." in fn and fn not in cids:
-                        # dotted nested-field projection (r5): decode
-                        # ONLY the ancestor PRESENT chain + the
-                        # target subtree — sibling streams stay
-                        # compressed (reference cursor.go:29-45)
-                        try:
-                            ids = f.resolve_path(fn)
-                        except ValueError:
-                            # evolve mode: file predates the field
-                            arrays.append(pa.nulls(n_rows, ft))
-                            continue
-                        valids, cnt = f.path_present_chain(ids, n_rows)
-                        try:
-                            fast = _fast_arrow(f, ids[-1], cnt, ft)
-                        except ValueError:  # malformed UTF-8
-                            fast = None
-                        if fast is not None:
-                            arrays.append(_ancestor_expand(fast,
-                                                           valids))
-                        else:
-                            cols[fn] = f.read_path(ids, n_rows)
-                            arrays.append(None)
-                        continue
-                    if fn not in cids:
-                        # schema evolution: this file predates the
-                        # column — null-fill (name-based, the Spark
-                        # convention)
-                        arrays.append(pa.nulls(n_rows, ft))
-                        continue
-                    try:
-                        fast = _fast_arrow(f, cids[fn], n_rows, ft)
-                    except ValueError:
-                        # malformed UTF-8 (ArrowInvalid) or a string
-                        # column past int32 offsets: the list path
-                        # replace-decodes instead
-                        fast = None
-                    if fast is not None:
-                        arrays.append(fast)
-                    else:
-                        cols[fn] = f._read_column(cids[fn], n_rows)
-                        arrays.append(None)
-        if not arrays:
-            arrays = [None] * len(self.root_names)
-        for i, (fn, node, needs) in enumerate(
-                zip(self.root_names, self.root_children,
-                    self.conv_flags)):
-            if arrays[i] is not None:
+        cids = _root_col_ids(f)
+        arrays = []
+        for fn, node in zip(self.root_names, self.root_children):
+            ft = self.arrow_schema.field(fn).type
+            try:
+                # a dotted name is a nested-field projection (r5):
+                # only its ancestor PRESENT chain and its subtree load
+                ids = [cids[fn]] if fn in cids else f.resolve_path(fn)
+            except ValueError:
+                # schema evolution: this file predates the column —
+                # null-fill (name-based, the Spark convention)
+                arrays.append(pa.nulls(n_rows, ft))
                 continue
-            if fn not in cols:
-                # evolved-away column on a row-path branch
-                n_here = max((len(v) for v in cols.values()),
-                             default=0)
-                arrays[i] = pa.nulls(
-                    n_here, self.arrow_schema.field(fn).type)
-                continue
-            vals = cols[fn]
-            if needs:
-                vals = [_conv(node, v, self.ts_nanos) for v in vals]
-            arrays[i] = pa.array(
-                vals, type=self.arrow_schema.field(fn).type)
+            arrays.append(_column_arrow(f, ids, n_rows, node, ft,
+                                        self.ts_nanos))
         return pa.RecordBatch.from_arrays(arrays,
                                           schema=self.arrow_schema)
 
@@ -1007,7 +943,7 @@ def orc_scan(spark, path: str | list[str],
     expect_type = None if lax else full_root.orc_string()
     if full_root.kind != "struct":
         # bare non-struct root: surface as one column named "value"
-        # (mirrors read_stripe_columns / _root_col_ids)
+        # (mirrors _root_col_ids, which maps "value" to column 0)
         full_root = orctypes.OrcType("struct", [full_root], ["value"])
     preds = _pred_list(predicate)
     for col, _, _ in preds:
@@ -1043,13 +979,7 @@ def orc_scan(spark, path: str | list[str],
         root = orctypes.OrcType(
             "struct", [c for _, c in keep], [fn for fn, _ in keep])
     schema = _spark_of(root, timestamp_nanos)
-    # plain-dict closure state for the kernel (no Spark objects)
-    root_children = root.children
     root_names = root.field_names
-    # select() operates on ROOT fields: a dotted path contributes its
-    # top segment so row-path fallbacks still see the subtree
-    sel = list(dict.fromkeys(c.split(".")[0] for c in root_names)) \
-        if columns else None
 
     def n_parts(n_tasks: int, total_rows: int) -> int:
         # one task per stripe unless stripes are tiny: then group
@@ -1106,7 +1036,7 @@ def orc_scan(spark, path: str | list[str],
             "path string, stripe int") \
             .repartition(n_parts(len(tasks), total_rows))
 
-    ctx = _ScanContext(root, preds, sel, timestamp_nanos)
+    ctx = _ScanContext(root, preds, timestamp_nanos)
 
     skip_errors = on_error == "skip"
 
@@ -1122,8 +1052,7 @@ def orc_scan(spark, path: str | list[str],
                 try:
                     f = readers.get(p)
                     if f is None:
-                        f = ctx.open(p)
-                        readers[p] = f
+                        f = readers[p] = ORCFile(p)
                     batch = ctx.decode_stripe(f, si)
                 except Exception as e:
                     if not skip_errors:
@@ -1186,12 +1115,11 @@ def orc_scan_errors(spark, path: str,
             for p in pdf["path"]:
                 try:
                     f = ORCFile(p)
-                    root = orctypes.type_from_file(p)
+                    root = orctypes.type_from_types(f.types)
                     if root.kind != "struct":
                         root = orctypes.OrcType("struct", [root],
                                                 ["value"])
-                    ctx = _ScanContext(root, [], None, ts_nanos)
-                    fh = ctx.open(p)
+                    ctx = _ScanContext(root, [], ts_nanos)
                 except Exception as e:
                     paths.append(p)
                     stripes.append(-1)
@@ -1199,7 +1127,7 @@ def orc_scan_errors(spark, path: str,
                     continue
                 for si in range(len(f.stripes)):
                     try:
-                        ctx.decode_stripe(fh, si)
+                        ctx.decode_stripe(f, si)
                     except Exception as e:
                         paths.append(p)
                         stripes.append(si)

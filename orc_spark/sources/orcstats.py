@@ -347,8 +347,7 @@ def _stripe_disposition(f: ORCFile, si: int, preds: list[tuple],
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from .orcscan import (_ancestor_expand, _conv, _fast_arrow,
-                          _needs_conv, orc_arrow)
+    from .orcscan import _column_arrow, orc_arrow
     kind, n_rows = _stripe_stats_class(f, si, preds, paths)
     if kind != "boundary":
         return kind, n_rows
@@ -356,20 +355,9 @@ def _stripe_disposition(f: ORCFile, si: int, preds: list[tuple],
     nr = f._load_stripe_directory(si)
     combined = None
     for c, op, val in preds:
-        ids, node = paths[c], nodes[c]
-        cid = ids[-1]
+        node = nodes[c]
         ft = orc_arrow(node)
-        valids, cnt = f.path_present_chain(ids, nr)
-        try:
-            arr = _fast_arrow(f, cid, cnt, ft)
-        except ValueError:  # malformed UTF-8: row path replace-decodes
-            arr = None
-        if arr is None:
-            vals = f._read_column(cid, cnt)
-            if _needs_conv(node):
-                vals = [_conv(node, v) for v in vals]
-            arr = pa.array(vals, type=ft)
-        arr = _ancestor_expand(arr, valids)
+        arr = _column_arrow(f, paths[c], nr, node, ft)
         if op == "between":
             m = pc.and_kleene(
                 pc.greater_equal(arr, pa.scalar(val[0], ft)),

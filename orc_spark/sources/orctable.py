@@ -1422,7 +1422,7 @@ def _rewrite_delete_file(path: str, preds: list[tuple],
         raise ValueError(
             f"orc_table: delete rewrite requires struct-root files, "
             f"got {root.orc_string()!r} in {path}")
-    ctx = _ScanContext(root, [], None, ts_nanos=True)
+    ctx = _ScanContext(root, [], ts_nanos=True)
     name = f"delete-{job}-{idx:05d}.orc"
     new_path = os.path.join(data_dir, name)
     writer = None
@@ -1521,7 +1521,7 @@ def _rewrite_update_file(path: str, preds: list[tuple], set_spec,
         raise ValueError(
             f"orc_table: update rewrite requires struct-root files, "
             f"got {root.orc_string()!r} in {path}")
-    ctx = _ScanContext(root, [], None, ts_nanos=True)
+    ctx = _ScanContext(root, [], ts_nanos=True)
     # SET columns physically absent from this file's footer type (the
     # column was ADDed after the file was written): null-fill them
     # into every decoded batch under their DECLARED type before
@@ -1856,12 +1856,11 @@ def _rewrite_merge_file(path: str, key: str, keys, data_dir: str,
         return {"action": "keep"}  # evolved file without the key col
     ki = root.field_names.index(key)
     kroot = orctypes.OrcType("struct", [root.children[ki]], [key])
-    kctx = _ScanContext(kroot, [], [key], ts_nanos=True)
+    kctx = _ScanContext(kroot, [], ts_nanos=True)
     kast = pa.array(keys).cast(kctx.arrow_schema.field(0).type)
-    fk = kctx.open(path)
     masks, matched = [], 0
     for si in range(len(f.stripes)):
-        col = kctx.decode_stripe(fk, si).column(0)
+        col = kctx.decode_stripe(f, si).column(0)
         m = pc.fill_null(pc.is_in(col, value_set=kast), False)
         n = pc.sum(m).as_py() or 0
         masks.append(m if n else None)
@@ -1870,7 +1869,7 @@ def _rewrite_merge_file(path: str, key: str, keys, data_dir: str,
         return {"action": "keep"}
     if matched == f.n_rows:
         return {"action": "drop", "n_matched": matched}
-    ctx = _ScanContext(root, [], None, ts_nanos=True)
+    ctx = _ScanContext(root, [], ts_nanos=True)
     name = f"merge-cow-{job}-{idx:05d}.orc"
     new_path = os.path.join(data_dir, name)
     writer = ORCFileWriter(

@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import encode as enc_ops
+from ..operators.checkpoint import read_parquet_if_exists
 from ..stripe import DEFAULT_CODEC as stripe_DEFAULT_CODEC,  TOKEN_SCHEMA
 
 
@@ -44,12 +45,9 @@ def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
         # idempotency: a batch re-delivered after a crash-between-
         # commit-and-checkpoint must not append twice — the audit
         # table records completed batch ids and is consulted first
-        try:
-            done = (spark_s.read.parquet(audit_path)
-                    .where(F.col("batch_id") == batch_id).count() > 0)
-        except Exception:
-            done = False
-        if done:
+        audit = read_parquet_if_exists(spark_s, audit_path)
+        if audit is not None and \
+                audit.where(F.col("batch_id") == batch_id).count() > 0:
             return
         encoded = enc_ops.encode(batch_df, specs, stripe_rows=stripe_rows,
                                  codec=codec)
@@ -58,10 +56,10 @@ def encode_stream(spark: SparkSession, input_path: str, out_dir: str,
         # slipped past the audit check (crash between stripe write and
         # audit write) REPLACES its own output instead of appending a
         # duplicate — idempotence from the layout, not just the check
-        spark_s.conf.set("spark.sql.sources.partitionOverwriteMode",
-                         "dynamic")
-        encoded.write.mode("overwrite").partitionBy("batch_id") \
-            .parquet(stripes_path)
+        # (a per-write option: the caller's session conf is untouched)
+        encoded.write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("batch_id").parquet(stripes_path)
         # audit aggregates read back the WRITTEN files: one execution
         # of the encode kernel per batch, not two
         (spark_s.read.parquet(stripes_path)

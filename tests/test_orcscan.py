@@ -203,13 +203,55 @@ def test_orc_scan_schema_drift_fails_loudly(spark, tmp_path):
         orcscan.orc_scan(spark, str(tmp_path)).count()
 
 
-def test_stride_keep_and_scan_row_group_skip(spark, tmp_path):
+def _write_wide_strided(path, codec, n=6000, seed=0):
+    """Stride-restart .orc (3,000-row stripes, 512-row strides) over
+    every fast-path family: sorted ``v`` (so stride stats prune),
+    ints with nulls, dictionary and direct strings, list<int> with
+    null lists, a struct with nulls, decimal, timestamp, double and
+    boolean."""
+    import datetime
+    from decimal import Decimal
+    rng = np.random.default_rng(seed)
+    tbl = pa.table({
+        "v": pa.array(np.arange(n, dtype=np.int64)),
+        "i": pa.array([None if x % 5 == 0 else int(x) for x in
+                       rng.integers(-10**6, 10**6, n)], pa.int64()),
+        "ds": pa.array([f"k{x}" for x in rng.integers(0, 20, n)]),
+        "s": pa.array([None if x % 9 == 0 else f"w{x}" for x in
+                       rng.integers(0, 10**9, n)]),
+        "l": pa.array([None if i % 7 == 0 else
+                       rng.integers(0, 100, i % 4).tolist()
+                       for i in range(n)], pa.list_(pa.int32())),
+        "st": pa.array([None if i % 6 == 0 else
+                        {"a": i, "b": f"s{i % 13}"} for i in range(n)],
+                       pa.struct([("a", pa.int64()),
+                                  ("b", pa.string())])),
+        "dec": pa.array([Decimal(int(x)).scaleb(-2) for x in
+                         rng.integers(-10**6, 10**6, n)],
+                        pa.decimal128(10, 2)),
+        "ts": pa.array([datetime.datetime(2020, 1, 1) +
+                        datetime.timedelta(seconds=int(x))
+                        for x in rng.integers(0, 10**8, n)],
+                       pa.timestamp("us")),
+        "d": pa.array(rng.normal(size=n)),
+        "b": pa.array(rng.random(n) < 0.5),
+    })
+    w = orcwriter.ORCFileWriter(str(path), codec=codec, stripe_rows=3000,
+                                row_index_stride=512)
+    w.write_batch(tbl.combine_chunks().to_batches()[0])
+    w.close()
+    return str(path)
+
+
+@pytest.mark.parametrize("codec", ["none", "zlib", "zstd"])
+def test_stride_keep_and_scan_row_group_skip(spark, tmp_path, codec):
     """Inside a kept stripe, only ROW_INDEX strides whose stats can
-    match are decoded (stride-restart slicing); results stay exact."""
+    match are decoded (stride-restart slicing); results stay exact —
+    for every fast-path type family, each codec."""
     batch = pa.RecordBatch.from_arrays(
         [pa.array(np.arange(4000, dtype=np.int64))], names=["v"])
     p = str(tmp_path / "s.orc")
-    w = orcwriter.ORCFileWriter(p, codec="zlib", stripe_rows=2000,
+    w = orcwriter.ORCFileWriter(p, codec=codec, stripe_rows=2000,
                                 row_index_stride=512)
     w.write_batch(batch)
     w.close()
@@ -229,6 +271,84 @@ def test_stride_keep_and_scan_row_group_skip(spark, tmp_path):
     rows = orcscan.orc_scan(spark, p, predicate=("v", "==", 777)) \
         .collect()
     assert [r["v"] for r in rows] == [777]
+    # the wide schema: a stride-pruned predicated scan equals the
+    # unpredicated scan filtered by the same predicate
+    wide = _write_wide_strided(tmp_path / "wide.orc", codec)
+    f = ORCFile(wide)
+    cids = dict(zip(f.types[0].field_names, f.types[0].children))
+    whole = orcscan.orc_scan(spark, wide)
+    for si, pred, cond in ((0, ("v", "between", (700, 1300)),
+                            F.col("v").between(700, 1300)),
+                           (1, ("v", ">=", 5000), F.col("v") >= 5000)):
+        ks, n_str = orcscan.stride_keep(f, si, [pred], cids)
+        assert 0 < len(ks) < n_str  # strides really are pruned
+        assert f.load_strides(si, ks) < 3000  # ... and slice cleanly
+        got = orcscan.orc_scan(spark, wide, predicate=pred) \
+            .orderBy("v").collect()
+        want = whole.where(cond).orderBy("v").collect()
+        assert len(got) == len(want) > 0
+        assert [r.asDict(True) for r in got] == \
+            [r.asDict(True) for r in want]
+
+
+def test_stride_pruned_scan_never_takes_row_path(tmp_path, monkeypatch):
+    """A stride-pruned stripe decodes column-major like a whole one:
+    with the per-row reader disabled, the scan task still returns the
+    exact matching rows for every fast-path type family."""
+    import pyarrow.compute as pc
+
+    from orc_spark import orctypes
+    p = _write_wide_strided(tmp_path / "wide.orc", "zlib")
+    root = orctypes.type_from_file(p)
+    pred = ("v", "between", (700, 1300))
+    whole = orcscan._ScanContext(root, [], False).decode_stripe(
+        ORCFile(p), 0)
+    want = whole.filter(pc.and_(pc.greater_equal(whole["v"], 700),
+                                pc.less_equal(whole["v"], 1300)))
+
+    def no_rows(*a, **k):
+        raise AssertionError("per-row reader used")
+
+    monkeypatch.setattr(ORCFile, "_read_column", no_rows)
+    got = orcscan._ScanContext(root, [pred], False).decode_stripe(
+        ORCFile(p), 0)
+    assert got.num_rows == 1024  # strides 1-2 of 6: pruned, not whole
+    got = got.filter(pc.and_(pc.greater_equal(got["v"], 700),
+                             pc.less_equal(got["v"], 1300)))
+    assert got.equals(want)
+
+
+def test_decode_stripe_null_root_matches_row_reference(tmp_path,
+                                                       monkeypatch):
+    """A root struct with its own PRESENT stream (our writer never
+    emits one; other writers may) weaves root nulls into every column
+    through the ancestor chain — equal to the row-path reference
+    ``read_stripe_columns``, dotted projections included."""
+    from orc_spark import orctypes
+    p = _write_wide_strided(tmp_path / "wide.orc", "zlib", n=3000)
+    planted = np.random.default_rng(3).random(3000) < 0.7
+    orig = ORCFile._present
+
+    def present(self, col, n):
+        if col == 0:
+            return planted[:n], int(planted[:n].sum())
+        return orig(self, col, n)
+
+    monkeypatch.setattr(ORCFile, "_present", present)
+    root = orctypes.type_from_file(p)
+    st = root.children[root.field_names.index("st")]
+    proj = orctypes.OrcType("struct", root.children + st.children[:1],
+                            root.field_names + ["st.a"])
+    batch = orcscan._ScanContext(proj, [], False).decode_stripe(
+        ORCFile(p), 0)
+    f = ORCFile(p)
+    ref, n = f.read_stripe_columns(0)
+    ref["st.a"] = f.read_path(f.resolve_path("st.a"), n)
+    assert batch.num_rows == n == 3000
+    for fn, node in zip(proj.field_names, proj.children):
+        want = [orcscan._conv(node, v) for v in ref[fn]]
+        assert batch.column(fn).to_pylist() == want, fn
+        assert batch.column(fn).null_count >= int((~planted).sum()), fn
 
 
 def test_stride_keep_bloom_intersection(spark, tmp_path):
@@ -1282,9 +1402,9 @@ def _planted_utf8_orc(path):
 
 def _scan_first_stripe(path):
     from orc_spark import orctypes
-    ctx = orcscan._ScanContext(orctypes.type_from_file(path), [], None,
+    ctx = orcscan._ScanContext(orctypes.type_from_file(path), [],
                                ts_nanos=False)
-    return ctx.decode_stripe(ctx.open(path), 0)
+    return ctx.decode_stripe(ORCFile(path), 0)
 
 
 def test_malformed_utf8_reads_through_row_path(tmp_path):

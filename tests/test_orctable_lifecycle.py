@@ -128,7 +128,7 @@ def test_delete_rewrite_is_exact_for_ns_timestamps(spark, tmp_path):
     from orc_spark import orctypes
     from orc_spark.sources.orcscan import _ScanContext
     ctx = _ScanContext(orctypes.type_from_file(
-        os.path.join(t, e[0]["path"])), [], None, True)
+        os.path.join(t, e[0]["path"])), [], True)
     out = []
     for si in range(len(f.stripes)):
         out.extend(ctx.decode_stripe(f, si).column("ts")

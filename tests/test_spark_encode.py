@@ -97,6 +97,38 @@ def test_partial_then_resume(spark, token_df, tmp_path):
     assert enc_ops.decode(enc).count() == 500
 
 
+def test_checkpoint_leaves_session_conf_alone(spark, token_df, tmp_path):
+    """Dynamic partition overwrite is a per-write option: neither the
+    checkpointed encode nor a streaming micro-batch may change the
+    caller's session-global partitionOverwriteMode."""
+    from orc_spark.streaming import encode_stream
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    try:
+        checkpoint.encode_dataset(spark, token_df, str(tmp_path / "enc"),
+                                  n_parts=2)
+        assert spark.conf.get(key) == "STATIC"
+        inp = str(tmp_path / "in")
+        token_df.limit(50).write.parquet(inp)
+        encode_stream.encode_stream(spark, inp, str(tmp_path / "out")) \
+            .awaitTermination(120)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.unset(key)
+
+
+def test_checkpoint_corrupt_audit_raises(spark, token_df, tmp_path):
+    """Only a MISSING audit table means "nothing done yet": a corrupt
+    audit file must raise, not silently re-encode every part."""
+    out = str(tmp_path / "enc")
+    checkpoint.encode_dataset(spark, token_df, out, n_parts=2)
+    with open(f"{out}/audit/part-99999-corrupt.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception) as ei:
+        checkpoint.encode_dataset(spark, token_df, out, n_parts=2)
+    assert "corrupt" in str(ei.value)
+
+
 def test_synthetic_generator_roundtrip(spark):
     df = token_src.synthetic_token_table(spark, n_docs=300, seed=42)
     res = verify.roundtrip_check(df).collect()[0]

@@ -35,6 +35,23 @@ def test_stream_encode_available_now(spark, tmp_path):
     assert enc2.agg(F.sum("n_rows")).collect()[0][0] == 500
 
 
+def test_stream_corrupt_audit_raises(spark, tmp_path):
+    """The replay check reads a MISSING audit table as "batch not yet
+    done"; a corrupt audit file fails the query instead."""
+    inp = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    tok = token_src.token_table(spark, SF_DIR).limit(50)
+    tok.write.parquet(inp)
+    encode_stream.encode_stream(spark, inp, out).awaitTermination(120)
+    with open(f"{out}/stream_audit/part-99999-corrupt.parquet",
+              "wb") as fh:
+        fh.write(b"not a parquet file")
+    tok.write.mode("append").parquet(inp)  # one more micro-batch
+    q = encode_stream.encode_stream(spark, inp, out)
+    with pytest.raises(Exception, match="corrupt"):
+        q.awaitTermination(120)
+
+
 def test_token_rate_metrics_batch_semantics(spark):
     events = spark.read.parquet(f"{SF_DIR}/events.parquet")
     m = encode_stream.token_rate_metrics(events, window="10 minutes")

@@ -108,38 +108,10 @@ def encoded_arrow_schema(specs: list[ColumnSpec],
     return pa.schema(fields)
 
 
-_SPARK_SCALARS = {
-    "tinyint": T.ByteType(), "smallint": T.ShortType(),
-    "int": T.IntegerType(), "bigint": T.LongType(),
-    "float": T.FloatType(), "double": T.DoubleType(),
-    "boolean": T.BooleanType(), "string": T.StringType(),
-    "binary": T.BinaryType(), "date": T.DateType(),
-    "timestamp": T.TimestampType()}
-
-
-def _spark_type_of(node) -> T.DataType:
-    kind = node[0]
-    if kind == "scalar":
-        t = node[1]
-        if t.startswith("decimal"):
-            p, s = t[8:-1].split(",")
-            return T.DecimalType(int(p), int(s))
-        return _SPARK_SCALARS[t]
-    if kind == "list":
-        return T.ArrayType(_spark_type_of(node[1]))
-    if kind == "struct":
-        return T.StructType([T.StructField(n, _spark_type_of(c), True)
-                             for n, c in node[1]])
-    return T.MapType(_spark_type_of(node[1]), _spark_type_of(node[2]))
-
-
-def _spark_type(spec: ColumnSpec) -> T.DataType:
-    return _spark_type_of(stripe_mod.parse_type(spec.typ))
-
-
 def decoded_spark_schema(specs: list[ColumnSpec]) -> T.StructType:
     return T.StructType(
-        [T.StructField(s.name, _spark_type(s), True) for s in specs])
+        [T.StructField(s.name, s.orc_type.to_spark(), True)
+         for s in specs])
 
 
 def plan_partitions(df: DataFrame, n_partitions: int | None = None,
@@ -421,7 +393,7 @@ def decode(enc_df: DataFrame, specs: list[ColumnSpec] = TOKEN_SCHEMA,
         stream_columns(present_specs)
     out_schema = decoded_spark_schema(specs)
     arrow_out = pa.schema(
-        [pa.field(s.name, stripe_mod.arrow_type_of(s.typ)) for s in specs])
+        [pa.field(s.name, s.orc_type.to_arrow()) for s in specs])
     if stride_filter is None:
         stride_filters = []
     elif isinstance(stride_filter, tuple):
@@ -470,8 +442,7 @@ def decode(enc_df: DataFrame, specs: list[ColumnSpec] = TOKEN_SCHEMA,
                 for ms in missing_specs:
                     table = table.append_column(
                         ms.name, pa.nulls(
-                            table.num_rows,
-                            stripe_mod.arrow_type_of(ms.typ)))
+                            table.num_rows, ms.orc_type.to_arrow()))
                 table = table.select([s.name for s in specs]) \
                     .cast(arrow_out)
                 for out in table.to_batches():

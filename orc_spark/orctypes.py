@@ -32,6 +32,9 @@ _KIND_TO_NAME = {
     "map": "map", "struct": "struct", "union": "uniontype",
 }
 _NAME_TO_KIND = {v: k for k, v in _KIND_TO_NAME.items()}
+# ``list<t>`` is accepted as an alias of ``array<t>`` (the stripe
+# table's spelling); ``orc_string`` always prints ``array<t>``
+_NAME_TO_KIND["list"] = "list"
 
 
 @dataclass
@@ -43,6 +46,23 @@ class OrcType:
     precision: int = 0
     scale: int = 0
     max_length: int = 0
+    # pre-order column id, set by ``number()`` on the enclosing root
+    col_id: int = field(default=-1, compare=False, repr=False)
+
+    def number(self) -> list["OrcType"]:
+        """Assign pre-order column ids to this tree (this node is 0,
+        typedescription.go:506-516) and return its nodes in id order
+        -- the one numbering ``to_json``, the ``.orc`` writer's
+        streams and footer, and orc_merge share."""
+        nodes: list[OrcType] = []
+
+        def visit(node: OrcType) -> None:
+            node.col_id = len(nodes)
+            nodes.append(node)
+            for c in node.children:
+                visit(c)
+        visit(self)
+        return nodes
 
     # -- formatting (typedescription.go:520-560) --------------------
     def orc_string(self) -> str:
@@ -64,25 +84,23 @@ class OrcType:
     def to_json(self) -> dict:
         """JSON shape of typedescription.go ``ToJSON`` (ids pre-order,
         ``max`` = largest id in the subtree)."""
-        def walk(node: OrcType, next_id: list[int]) -> dict:
+        def walk(node: OrcType) -> dict:
             out: dict = {"category": _KIND_TO_NAME[node.kind],
-                         "id": next_id[0]}
-            next_id[0] += 1
+                         "id": node.col_id}
             if node.kind == "decimal":
                 out["precision"] = node.precision
                 out["scale"] = node.scale
             if node.kind in ("char", "varchar"):
                 out["maxLength"] = node.max_length
+            kids = [walk(c) for c in node.children]
             if node.kind == "struct":
-                out["fields"] = {
-                    fn: walk(c, next_id)
-                    for fn, c in zip(node.field_names, node.children)}
-            elif node.children:
-                out["children"] = [walk(c, next_id)
-                                   for c in node.children]
-            out["max"] = next_id[0] - 1
+                out["fields"] = dict(zip(node.field_names, kids))
+            elif kids:
+                out["children"] = kids
+            out["max"] = kids[-1]["max"] if kids else node.col_id
             return out
-        return walk(self, [0])
+        self.number()
+        return walk(self)
 
     # -- conversions ------------------------------------------------
     def to_arrow(self):
@@ -121,7 +139,7 @@ class OrcType:
         """pyspark DataType (root struct -> StructType usable as a
         createDataFrame / read schema).  ``uniontype`` has no Spark
         representation — write unions through the Arrow path
-        (orcwriter handles pa.dense_union)."""
+        (the .orc writer accepts pa.dense_union)."""
         from pyspark.sql import types as T
         k = self.kind
         prim = {"boolean": T.BooleanType(), "byte": T.ByteType(),
@@ -284,25 +302,35 @@ def parse_orc_type(s: str) -> OrcType:
 
 
 def from_arrow(typ) -> OrcType:
-    """pyarrow DataType/Schema -> OrcType (reuses the writer's type
-    mapping so the string always matches what the file sink emits)."""
+    """pyarrow DataType/Schema -> OrcType (a Schema becomes a root
+    struct) -- the type tree the ``.orc`` writer encodes and whose
+    footer it writes.  ValueError for Arrow types ORC cannot hold."""
     import pyarrow as pa
-    from .sources.orcwriter import _TypeNode, _node_from_arrow
-
-    if isinstance(typ, pa.Schema):
-        root = _TypeNode("struct")
-        for f in typ:
-            root.children.append(_node_from_arrow(f.type))
-            root.field_names.append(f.name)
-    else:
-        root = _node_from_arrow(typ)
-
-    def conv(n) -> OrcType:
-        out = OrcType(n.kind, [conv(c) for c in n.children],
-                      list(n.field_names), n.precision, n.scale,
-                      n.max_length)
-        return out
-    return conv(root)
+    t = pa.types
+    if isinstance(typ, pa.Schema) or t.is_struct(typ):
+        return OrcType("struct", [from_arrow(f.type) for f in typ],
+                       [f.name for f in typ])
+    scalars = ((t.is_boolean, "boolean"), (t.is_int8, "byte"),
+               (t.is_int16, "short"), (t.is_int32, "int"),
+               (t.is_int64, "long"), (t.is_float32, "float"),
+               (t.is_float64, "double"), (t.is_string, "string"),
+               (t.is_large_string, "string"), (t.is_binary, "binary"),
+               (t.is_large_binary, "binary"), (t.is_date32, "date"),
+               (t.is_timestamp, "timestamp"))
+    for test, kind in scalars:
+        if test(typ):
+            return OrcType(kind)
+    if t.is_decimal(typ):
+        return OrcType("decimal", precision=typ.precision,
+                       scale=typ.scale)
+    if t.is_map(typ):
+        return OrcType("map", [from_arrow(typ.key_type),
+                               from_arrow(typ.item_type)])
+    if t.is_list(typ) or t.is_large_list(typ):
+        return OrcType("list", [from_arrow(typ.value_type)])
+    if t.is_union(typ):
+        return OrcType("union", [from_arrow(f.type) for f in typ])
+    raise ValueError(f"unsupported arrow type for ORC writer: {typ}")
 
 
 def orc_string_from_spark(df_or_schema) -> str:

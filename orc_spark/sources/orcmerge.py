@@ -199,28 +199,7 @@ def merge_orc_files(inputs: list[str], out_path: str,
                              for i, v in enumerate(info)
                              if v or i + 1 == 5])
             _bytes_field(footer, 3, body)
-        from .orcwriter import _TypeNode
-
-        def to_writer_node(node):
-            n = _TypeNode.__new__(_TypeNode)
-            n.kind = {"int": "int"}.get(node.kind, node.kind)
-            n.children = [to_writer_node(c) for c in node.children]
-            n.field_names = list(node.field_names)
-            n.max_length = getattr(node, "max_length", 0) or 0
-            n.precision = getattr(node, "precision", 0) or 0
-            n.scale = getattr(node, "scale", 0) or 0
-            return n
-
-        tree = to_writer_node(root)
-        ids = [0]
-
-        def assign(n):
-            n.col_id = ids[0]
-            ids[0] += 1
-            for c in n.children:
-                assign(c)
-        assign(tree)
-        for tm in _type_messages(tree):
+        for tm in _type_messages(root):
             _bytes_field(footer, 4, tm)
         _varint_field(footer, 6, n_total)
         _varint_field(footer, 8, stride)

@@ -55,6 +55,7 @@ import pyarrow.compute as pc
 from .. import stripe as stripe_mod
 from ..codecs import byterle, compression, dictionary, rle2
 from ..codecs.bits import write_vulong
+from ..orctypes import OrcType, from_arrow
 from .orcfile import KINDS, STREAM_KINDS, ENCODINGS, TIMESTAMP_BASE_SECONDS
 
 MAGIC = b"ORC"
@@ -112,102 +113,14 @@ def _message(fields: list[tuple[int, str, object]]) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# type tree (pre-order column ids, typedescription.go:506-516)
+# footer type list (orctypes.OrcType, pre-order column ids)
 # ---------------------------------------------------------------------------
 
 
-class _TypeNode:
-    __slots__ = ("kind", "col_id", "children", "field_names", "arrow_type",
-                 "precision", "scale", "max_length")
-
-    def __init__(self, kind: str, arrow_type=None):
-        self.kind = kind
-        self.col_id = -1
-        self.children: list[_TypeNode] = []
-        self.field_names: list[str] = []
-        self.arrow_type = arrow_type
-        self.precision = 0
-        self.scale = 0
-        self.max_length = 0
-
-
-def _node_from_arrow(typ: pa.DataType) -> _TypeNode:
-    if pa.types.is_boolean(typ):
-        return _TypeNode("boolean", typ)
-    if pa.types.is_int8(typ):
-        return _TypeNode("byte", typ)
-    if pa.types.is_int16(typ):
-        return _TypeNode("short", typ)
-    if pa.types.is_int32(typ):
-        return _TypeNode("int", typ)
-    if pa.types.is_int64(typ):
-        return _TypeNode("long", typ)
-    if pa.types.is_float32(typ):
-        return _TypeNode("float", typ)
-    if pa.types.is_float64(typ):
-        return _TypeNode("double", typ)
-    if pa.types.is_string(typ) or pa.types.is_large_string(typ):
-        return _TypeNode("string", pa.string())
-    if pa.types.is_binary(typ) or pa.types.is_large_binary(typ):
-        return _TypeNode("binary", pa.binary())
-    if pa.types.is_date32(typ):
-        return _TypeNode("date", typ)
-    if pa.types.is_timestamp(typ):
-        return _TypeNode("timestamp", typ)
-    if pa.types.is_decimal(typ):
-        n = _TypeNode("decimal", typ)
-        n.precision, n.scale = typ.precision, typ.scale
-        return n
-    if pa.types.is_map(typ):
-        n = _TypeNode("map", typ)
-        n.children = [_node_from_arrow(typ.key_type),
-                      _node_from_arrow(typ.item_type)]
-        return n
-    if pa.types.is_list(typ) or pa.types.is_large_list(typ):
-        n = _TypeNode("list", typ)
-        n.children = [_node_from_arrow(typ.value_type)]
-        return n
-    if pa.types.is_struct(typ):
-        n = _TypeNode("struct", typ)
-        for i in range(typ.num_fields):
-            f = typ.field(i)
-            n.children.append(_node_from_arrow(f.type))
-            n.field_names.append(f.name)
-        return n
-    if pa.types.is_union(typ):
-        n = _TypeNode("union", typ)
-        for i in range(typ.num_fields):
-            n.children.append(_node_from_arrow(typ.field(i).type))
-        return n
-    raise ValueError(f"unsupported arrow type for ORC writer: {typ}")
-
-
-def _build_tree(schema: pa.Schema) -> _TypeNode:
-    root = _TypeNode("struct")
-    for f in schema:
-        root.children.append(_node_from_arrow(f.type))
-        root.field_names.append(f.name)
-    next_id = [0]
-
-    def assign(node: _TypeNode) -> None:
-        node.col_id = next_id[0]
-        next_id[0] += 1
-        for c in node.children:
-            assign(c)
-
-    assign(root)
-    return root
-
-
-def _walk(node: _TypeNode):
-    yield node
-    for c in node.children:
-        yield from _walk(c)
-
-
-def _type_messages(root: _TypeNode) -> list[bytes]:
+def _type_messages(root: OrcType) -> list[bytes]:
+    """Footer Type messages, one per column in pre-order id order."""
     msgs = []
-    for node in _walk(root):
+    for node in root.number():
         m = bytearray()
         _varint_field(m, 1, _KIND_CODE[node.kind])
         if node.children:
@@ -336,7 +249,7 @@ class _Stream:
 
 
 class _ColOut:
-    def __init__(self, node: _TypeNode):
+    def __init__(self, node: OrcType):
         self.node = node
         self.encoding = "DIRECT"
         self.dict_size = 0
@@ -407,7 +320,7 @@ def _slice_pieces(encode_fn, vals, bounds) -> list[bytes]:
             for t in range(len(bounds) - 1)]
 
 
-def _encode_node(node: _TypeNode, arr: pa.Array, bounds: np.ndarray,
+def _encode_node(node: OrcType, arr: pa.Array, bounds: np.ndarray,
                  sink: dict) -> None:
     """Encode one column's stripe data, restarting codecs at the given
     stride boundaries (``bounds``: row offsets in THIS node's row
@@ -710,7 +623,7 @@ class ORCFileWriter:
         self.path = path
         self.f = None
         self.offset = 0
-        self.tree: _TypeNode | None = None
+        self.tree: OrcType | None = None
         self.n_cols = 0
         self.stripe_infos: list[tuple] = []
         self.stripe_stats_msgs: list[list[bytes]] = []
@@ -727,7 +640,7 @@ class ORCFileWriter:
 
     def write_batch(self, batch: pa.RecordBatch) -> None:
         if self.tree is None:
-            self.tree = _build_tree(batch.schema)
+            self.tree = from_arrow(batch.schema)
             for name, (kind, maxlen) in self.orc_types.items():
                 i = self.tree.field_names.index(name)
                 node = self.tree.children[i]
@@ -737,7 +650,7 @@ class ORCFileWriter:
                         f"string column")
                 node.kind = kind
                 node.max_length = maxlen
-            self.n_cols = sum(1 for _ in _walk(self.tree))
+            self.n_cols = len(self.tree.number())
         self._buf.append(batch)
         self._buf_rows += batch.num_rows
         while self._buf_rows >= self.stripe_rows:

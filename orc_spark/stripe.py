@@ -27,6 +27,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from .codecs import bits, byterle, compression, dictionary, fsst, rle2
+from .orctypes import OrcType, parse_orc_type
 
 TIMESTAMP_BASE_SECONDS = 1420070400  # 2015-01-01 (treereader.go:128-131)
 
@@ -40,6 +41,8 @@ DEFAULT_CODEC = "zstd"
 # supported logical types
 INT_TYPES = {"tinyint": np.int8, "smallint": np.int16, "int": np.int32,
              "bigint": np.int64}
+# the same four as OrcType kinds (the token fast-path list elements)
+_INT_KINDS = ("byte", "short", "int", "long")
 
 
 class ColumnSpec:
@@ -61,41 +64,44 @@ class ColumnSpec:
     def __init__(self, name: str, typ: str):
         self.name = name
         self.typ = typ
+        # parsed once; every predicate below reads this tree
+        self.orc_type = parse_orc_type(typ)
 
     @property
     def is_list(self) -> bool:
-        return self.typ.startswith("list<")
+        return self.orc_type.kind == "list"
 
     @property
     def child_typ(self) -> str:
-        return self.typ[5:-1]
+        return self.orc_type.children[0].orc_string()
 
     @property
     def is_decimal(self) -> bool:
-        return self.typ.startswith("decimal")
+        return self.orc_type.kind == "decimal"
 
     @property
     def is_nested(self) -> bool:
         """True for struct/map columns and lists whose element type is
         not the integer token fast path."""
-        if self.typ.startswith(("struct<", "map<")):
+        t = self.orc_type
+        if t.kind in ("struct", "map"):
             return True
-        return self.is_list and self.child_typ not in INT_TYPES
+        return t.kind == "list" and t.children[0].kind not in _INT_KINDS
 
     def decimal_params(self) -> tuple[int, int]:
-        p, s = self.typ[8:-1].split(",")
-        return int(p), int(s)
+        return self.orc_type.precision, self.orc_type.scale
 
     def stream_kinds(self) -> list[str]:
         if self.is_nested:
             return ["DATA"]
-        if self.is_list:
+        kind = self.orc_type.kind
+        if kind == "list":
             return ["PRESENT", "LENGTH", "DATA", "DICTIONARY_DATA"]
-        if self.typ in INT_TYPES:
+        if kind in _INT_KINDS:
             return ["PRESENT", "DATA", "DICTIONARY_DATA"]
-        if self.typ in ("string", "binary"):
+        if kind in ("string", "binary"):
             return ["PRESENT", "DATA", "LENGTH", "DICTIONARY_DATA"]
-        if self.typ == "timestamp" or self.is_decimal:
+        if kind in ("timestamp", "decimal"):
             return ["PRESENT", "DATA", "SECONDARY"]
         return ["PRESENT", "DATA"]
 
@@ -107,31 +113,16 @@ def parse_schema(schema: dict[str, str] | list[tuple[str, str]]) -> list[ColumnS
 
 def parse_schema_string(s: str) -> list[ColumnSpec]:
     """Parse a Hive-style schema string — the ParseSchema equivalent
-    (typedescription.go:709-711, grammar 215-335) restricted to one
-    struct level of supported types, e.g.
+    (typedescription.go:709-711, grammar 215-335) — into one spec per
+    top-level field of its root struct, e.g.
     ``struct<doc_id:string,tokens:array<int>,n_tok:int,source:string>``.
-    ``array<T>`` maps to our ``list<T>`` spec type."""
-    s = s.strip()
-    if not (s.startswith("struct<") and s.endswith(">")):
-        raise ValueError(f"expected struct<...>, got: {s[:40]}")
-    body = s[7:-1]
-    cols: list[tuple[str, str]] = []
-    depth = 0
-    field = ""
-    for ch in body + ",":
-        if ch == "," and depth == 0:
-            if field.strip():
-                name, typ = field.split(":", 1)
-                typ = typ.strip().replace("array<", "list<")
-                cols.append((name.strip(), typ))
-            field = ""
-            continue
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        field += ch
-    return parse_schema(cols)
+    ``array<T>`` maps to our ``list<T>`` spec type.  Malformed strings
+    raise ValueError here."""
+    root = parse_orc_type(s)
+    if root.kind != "struct":
+        raise ValueError(f"expected struct<...>, got: {s.strip()[:40]}")
+    return [ColumnSpec(n, c.orc_string().replace("array<", "list<"))
+            for n, c in zip(root.field_names, root.children)]
 
 
 def schema_string(specs: list[ColumnSpec]) -> str:
@@ -156,72 +147,14 @@ def stream_columns(specs: list[ColumnSpec]) -> list[str]:
 # Nested type trees (struct / map / list<T>)
 # ---------------------------------------------------------------------------
 
-
-def _split_top(body: str) -> list[str]:
-    """Split on top-level commas only (nested <...> / (...) kept)."""
-    out: list[str] = []
-    depth = 0
-    cur = ""
-    for ch in body + ",":
-        if ch == "," and depth == 0:
-            if cur.strip():
-                out.append(cur.strip())
-            cur = ""
-            continue
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        cur += ch
-    return out
-
-
-def parse_type(t: str):
-    """Type string -> node tree: ("scalar", typ) | ("list", child) |
-    ("struct", [(name, child), ...]) | ("map", key, value).  The
-    typedescription.go grammar restricted to supported types; array<>
-    is accepted as an alias of list<>."""
-    t = t.strip()
-    if t.startswith("struct<") and t.endswith(">"):
-        fields = []
-        for f in _split_top(t[7:-1]):
-            name, ft = f.split(":", 1)
-            fields.append((name.strip(), parse_type(ft)))
-        return ("struct", fields)
-    if t.startswith("map<") and t.endswith(">"):
-        k, v = _split_top(t[4:-1])
-        return ("map", parse_type(k), parse_type(v))
-    if (t.startswith("list<") or t.startswith("array<")) and t.endswith(">"):
-        return ("list", parse_type(t[t.index("<") + 1:-1]))
-    return ("scalar", t)
-
-
-_ARROW_SCALARS = {
-    "tinyint": pa.int8(), "smallint": pa.int16(), "int": pa.int32(),
-    "bigint": pa.int64(), "float": pa.float32(), "double": pa.float64(),
-    "boolean": pa.bool_(), "string": pa.string(), "binary": pa.binary(),
-    "date": pa.date32(), "timestamp": pa.timestamp("us"),
-}
-
-
-def _arrow_of(node) -> pa.DataType:
-    kind = node[0]
-    if kind == "scalar":
-        t = node[1]
-        if t.startswith("decimal"):
-            p, s = t[8:-1].split(",")
-            return pa.decimal128(int(p), int(s))
-        return _ARROW_SCALARS[t]
-    if kind == "list":
-        return pa.list_(_arrow_of(node[1]))
-    if kind == "struct":
-        return pa.struct([pa.field(n, _arrow_of(c)) for n, c in node[1]])
-    return pa.map_(_arrow_of(node[1]), _arrow_of(node[2]))
+# inner OrcType kinds of a nested column; every other node is a leaf
+# encoded by encode_column
+_TREE_KINDS = ("struct", "list", "map")
 
 
 def arrow_type_of(typ: str) -> pa.DataType:
     """Arrow type for a spec type string (nested types included)."""
-    return _arrow_of(parse_type(typ))
+    return parse_orc_type(typ).to_arrow()
 
 
 def _encode_nested(arr: pa.Array, spec: ColumnSpec,
@@ -248,15 +181,15 @@ def _encode_nested(arr: pa.Array, spec: ColumnSpec,
         rec["s"][kind] = len(parts)
         parts.append(bytes(data))
 
-    def walk(node, a):
+    def walk(node: OrcType, a):
         if isinstance(a, pa.ChunkedArray):
             a = a.combine_chunks()
-        kind = node[0]
+        kind = node.kind
         rec: dict = {"n": len(a), "s": {}}
         nodes.append(rec)
-        if kind == "scalar":
-            enc, streams, _ = encode_column(a, ColumnSpec("v", node[1]),
-                                            use_fsst)
+        if kind not in _TREE_KINDS:
+            enc, streams, _ = encode_column(
+                a, ColumnSpec("v", node.orc_string()), use_fsst)
             rec["e"] = enc
             for sk in ("PRESENT", "DATA", "LENGTH", "DICTIONARY_DATA",
                        "SECONDARY"):
@@ -267,7 +200,7 @@ def _encode_nested(arr: pa.Array, spec: ColumnSpec,
             valid = np.asarray(a.is_valid())
             add_stream(rec, "PRESENT", byterle.encode_bools(valid))
         if kind == "struct":
-            for i, (_, child) in enumerate(node[1]):
+            for i, child in enumerate(node.children):
                 carr = a.field(i)
                 if valid is not None:
                     carr = carr.filter(pa.array(valid))
@@ -283,12 +216,12 @@ def _encode_nested(arr: pa.Array, spec: ColumnSpec,
         lo = int(offsets[0]) if nn else 0
         hi = int(offsets[-1]) if nn else 0
         if kind == "list":
-            walk(node[1], data.values[lo:hi])
+            walk(node.children[0], data.values[lo:hi])
         else:
-            walk(node[1], data.keys[lo:hi])
-            walk(node[2], data.items[lo:hi])
+            walk(node.children[0], data.keys[lo:hi])
+            walk(node.children[1], data.items[lo:hi])
 
-    walk(parse_type(spec.typ), arr)
+    walk(spec.orc_type, arr)
     header = json.dumps({"nodes": nodes,
                          "lens": [len(p) for p in parts]}).encode()
     blob = len(header).to_bytes(4, "little") + header + b"".join(parts)
@@ -304,7 +237,7 @@ def _decode_nested(streams: dict, spec: ColumnSpec,
     re-expanded on decode)."""
     blob = streams.get("DATA")
     if blob is None:
-        return pa.nulls(n_rows, arrow_type_of(spec.typ))
+        return pa.nulls(n_rows, spec.orc_type.to_arrow())
     blob = bytes(blob)
     hlen = int.from_bytes(blob[:4], "little")
     header = json.loads(blob[4:4 + hlen].decode())
@@ -325,23 +258,23 @@ def _decode_nested(streams: dict, spec: ColumnSpec,
         return child.take(pa.array(
             np.where(idx < 0, None, idx), type=pa.int64()))
 
-    def walk(node):
+    def walk(node: OrcType):
         rec = nodes[pos["i"]]
         pos["i"] += 1
         n = rec["n"]
         st = {k: parts[v] for k, v in rec["s"].items()}
-        kind = node[0]
-        if kind == "scalar":
+        kind = node.kind
+        if kind not in _TREE_KINDS:
             return decode_column(st, rec.get("e", "DIRECT"),
-                                 ColumnSpec("v", node[1]), n)
+                                 ColumnSpec("v", node.orc_string()), n)
         pres = st.get("PRESENT")
         valid = byterle.decode_bools(pres, n) if pres is not None else None
         n_valid = int(valid.sum()) if valid is not None else n
         if kind == "struct":
-            children = [expand(walk(c), valid, n) for _, c in node[1]]
+            children = [expand(walk(c), valid, n) for c in node.children]
             mask = pa.array(~valid) if valid is not None else None
             return pa.StructArray.from_arrays(
-                children, names=[nm for nm, _ in node[1]], mask=mask)
+                children, names=list(node.field_names), mask=mask)
         lengths = rle2.decode(st.get("LENGTH", b""), n_valid, signed=False)
         if valid is None:
             offsets = np.zeros(n + 1, dtype=np.int32)
@@ -355,10 +288,10 @@ def _decode_nested(streams: dict, spec: ColumnSpec,
             mask = pa.array(~valid)
         off_arr = pa.array(offsets, pa.int32())
         if kind == "list":
-            values = walk(node[1])
+            values = walk(node.children[0])
             return pa.ListArray.from_arrays(off_arr, values, mask=mask)
-        keys = walk(node[1])
-        items = walk(node[2])
+        keys = walk(node.children[0])
+        items = walk(node.children[1])
         if mask is None:
             return pa.MapArray.from_arrays(off_arr, keys, items)
         # MapArray.from_arrays has no mask param; a null OFFSET at
@@ -370,7 +303,7 @@ def _decode_nested(streams: dict, spec: ColumnSpec,
         return pa.MapArray.from_arrays(pa.array(off_list, pa.int32()),
                                        keys, items)
 
-    return walk(parse_type(spec.typ))
+    return walk(spec.orc_type)
 
 
 # ---------------------------------------------------------------------------
@@ -677,12 +610,9 @@ def decode_column(streams: dict, encoding: str, spec: ColumnSpec,
         total = int(lengths.sum())
         sfx = "DICT_INT" if encoding.startswith("DICTIONARY_INT") else ""
         child = _decode_int_stream(streams, sfx, total)
-        child_t = {"int": pa.int32(), "bigint": pa.int64()}.get(
-            spec.child_typ, pa.int64())
         offsets = np.zeros(n_valid + 1, dtype=np.int32)
         np.cumsum(lengths, out=offsets[1:])
-        values = pa.array(child.astype(
-            np.int32 if child_t == pa.int32() else np.int64))
+        values = pa.array(child.astype(INT_TYPES[spec.child_typ]))
         if valid is None:
             return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
                                             values)
@@ -915,7 +845,7 @@ def decode_stripe_strides(row: dict, specs: list[ColumnSpec],
     if not tables:
         # spec-TYPED empty schema: a null-typed empty table would make
         # pa.concat_tables fail against sibling stripes' real types
-        return pa.table({s.name: pa.array([], arrow_type_of(s.typ))
+        return pa.table({s.name: pa.array([], s.orc_type.to_arrow())
                          for s in specs})
     return pa.concat_tables(tables)
 
@@ -954,7 +884,7 @@ def decode_stripe(row: dict, specs: list[ColumnSpec],
             # schema evolution on MIXED tables: this stripe predates
             # the column (its encodings JSON has no entry) — decode it
             # as all-null of the requested type
-            arrays.append(pa.nulls(n_rows, arrow_type_of(spec.typ)))
+            arrays.append(pa.nulls(n_rows, spec.orc_type.to_arrow()))
             names.append(spec.name)
             continue
         streams = {}

@@ -181,6 +181,119 @@ def test_random_type_trees_roundtrip():
         check_ids(td.to_json())
 
 
+def test_list_alias_and_ids_outside_equality():
+    # list<t> is a grammar alias of array<t>; orc_string prints array
+    td = orctypes.parse_orc_type(
+        "struct<a:list<int>,b:map<string,list<bigint>>>")
+    assert td.orc_string() == \
+        "struct<a:array<int>,b:map<string,array<bigint>>>"
+    assert td == orctypes.parse_orc_type(td.orc_string())
+    # column ids come from one pre-order walk and never affect equality
+    nodes = td.number()
+    assert [n.col_id for n in nodes] == list(range(7))
+    assert [n.kind for n in nodes] == ["struct", "list", "int", "map",
+                                       "string", "list", "long"]
+    assert td.children[1] == orctypes.parse_orc_type(
+        "map<string,array<bigint>>")
+
+
+# one type string per kind; each also appears nested below a struct,
+# a list and a map value
+KIND_STRINGS = [
+    "boolean", "tinyint", "smallint", "int", "bigint", "float",
+    "double", "string", "date", "timestamp", "binary",
+    "decimal(20,4)", "char(5)", "varchar(12)", "array<int>",
+    "map<string,bigint>", "struct<p:int,q:string>",
+    "uniontype<int,string>",
+]
+SWEEP = [f"struct<c:{k}>" for k in KIND_STRINGS] + \
+    [f"struct<a:{k},b:array<map<string,{k}>>>" for k in KIND_STRINGS]
+
+
+def _relaxed(t, keep_top=False):
+    """``t`` with char/varchar relaxed to string -- below the root's
+    own fields when ``keep_top`` (the only ones ``orc_types`` can
+    override in a file)."""
+    def go(n, depth):
+        if n.kind in ("char", "varchar") and not (keep_top and depth == 1):
+            return orctypes.OrcType("string")
+        return orctypes.OrcType(n.kind, [go(c, depth + 1) for c in n.children],
+                                list(n.field_names), n.precision, n.scale,
+                                n.max_length)
+    return go(t, 0)
+
+
+def _arrow_values(t, n):
+    """An n-row Arrow array of OrcType ``t`` (no nulls)."""
+    import datetime
+    from decimal import Decimal
+    import pyarrow as pa
+    k = t.kind
+    if k == "list":
+        child = _arrow_values(t.children[0], 2 * n)
+        return pa.ListArray.from_arrays(
+            pa.array(range(0, 2 * n + 1, 2), pa.int32()), child)
+    if k == "map":
+        return pa.MapArray.from_arrays(
+            pa.array(range(n + 1), pa.int32()),
+            _arrow_values(t.children[0], n), _arrow_values(t.children[1], n))
+    if k == "struct":
+        return pa.StructArray.from_arrays(
+            [_arrow_values(c, n) for c in t.children], list(t.field_names))
+    if k == "union":
+        m = len(t.children)
+        return pa.UnionArray.from_dense(
+            pa.array([i % m for i in range(n)], pa.int8()),
+            pa.array(range(n), pa.int32()),
+            [_arrow_values(c, n) for c in t.children],
+            [f"_union_{i}" for i in range(m)])
+    vals = {
+        "boolean": lambda i: i % 2 == 0, "float": lambda i: i * 0.5,
+        "double": lambda i: i * 0.25, "binary": lambda i: b"b%d" % i,
+        "date": lambda i: datetime.date(2020, 1, 1 + i % 28),
+        "timestamp": lambda i: datetime.datetime(2021, 3, 4, 5, 6, i % 60),
+        "decimal": lambda i: Decimal(i * 7).scaleb(-t.scale),
+    }.get(k)
+    if vals is None:
+        vals = (lambda i: f"v{i}") if k in ("string", "char", "varchar") \
+            else (lambda i: i % 100)
+    return pa.array([vals(i) for i in range(n)], t.to_arrow())
+
+
+@pytest.mark.parametrize("s", SWEEP)
+def test_one_type_tree_sweep(s, tmp_path):
+    """The writer's tree IS the parsed OrcType: from_arrow inverts
+    to_arrow, and a written file's footer carries the same pre-order
+    column ids and type string."""
+    import pyarrow as pa
+    from orc_spark.sources.orcfile import ORCFile
+    from orc_spark.sources.orcwriter import ORCFileWriter
+    t = orctypes.parse_orc_type(s)
+    assert orctypes.from_arrow(t.to_arrow()) == _relaxed(t)
+    table = pa.Table.from_batches([pa.RecordBatch.from_struct_array(
+        _arrow_values(t, 20))])
+    path = str(tmp_path / "t.orc")
+    w = ORCFileWriter(path, codec="none", row_index_stride=8,
+                      orc_types=t.orc_overrides())
+    w.write_table(table)
+    w.close()
+    want = _relaxed(t, keep_top=True)
+
+    def ids(j):
+        kids = list(j.get("fields", {}).values()) + j.get("children", [])
+        out = [(j["id"], j["category"], [c["id"] for c in kids])]
+        for c in kids:
+            out += ids(c)
+        return out
+    types = ORCFile(path).types
+    got = [(i, orctypes._KIND_TO_NAME[n.kind], list(n.children))
+           for i, n in enumerate(types)]
+    assert got == sorted(ids(want.to_json()))
+    assert orctypes.orc_string_from_file(path) == want.orc_string()
+    if want == t:
+        assert orctypes.orc_string_from_file(path) == s
+
+
 def test_golden_file_type_strings():
     """Reader-side: canonical strings for the Apache ORC example
     corpus footers."""

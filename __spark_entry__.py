@@ -794,7 +794,7 @@ def _q_orc_scan_nested_proj(spark, sf_dir):
 # corpus orc_test.go:14-131 checks against) — NOT from our reader — so
 # they are an independent end-to-end check of codecs the driver
 # oracles couldn't otherwise reach: RLE v1 + dictionary v1 + v0.11
-# layout (orc-file-11-format), pure-Python snappy chunk decode
+# layout (orc-file-11-format), snappy chunk decode
 # (testSnappy), and uniontype (testUnionAndTimestamp — a file Spark's
 # own JVM reader refuses to open).
 _GOLDEN_DIR = "/root/reference/examples"
@@ -819,8 +819,8 @@ def _q_orc_scan_golden_v11(spark, sf_dir):
 
 
 def _q_orc_scan_golden_snappy(spark, sf_dir):
-    """Snappy-compressed file through orc_scan (pure-Python snappy
-    chunk decode — the reference reads these; its writer and Spark's
+    """Snappy-compressed file through orc_scan (snappy chunk decode
+    through compression.decompress — the reference reads these; its writer and Spark's
     planner never exercise ours end-to-end otherwise)."""
     from orc_spark.sources.orcscan import orc_scan
     df = orc_scan(spark, f"{_GOLDEN_DIR}/TestOrcFile.testSnappy.orc")
@@ -891,7 +891,7 @@ def _long_metrics(df, tag: str):
 def _q_orc_scan_golden(spark, sf_dir):
     """All five golden-corpus scans in one long-format result (r5
     consolidation — every codec keeps its own oracle constants):
-    v0.11 RLE-v1/dict-v1/decimal, pure-Python snappy, uniontype
+    v0.11 RLE-v1/dict-v1/decimal, snappy, uniontype
     (a file Spark's JVM reader rejects), lz4 and lzo blocks."""
     return (
         _long_metrics(_q_orc_scan_golden_v11(spark, sf_dir), "v11")

@@ -23,6 +23,7 @@ SNAPPY = "snappy"  # r5: read AND write (the reference is decode-only)
 ZSTD = "zstd"
 
 _ZSTD_CODEC = None
+_SNAPPY_CODEC = None
 
 
 def _zstd_codec():
@@ -37,6 +38,47 @@ def _zstd_codec():
         import pyarrow as pa
         _ZSTD_CODEC = pa.Codec("zstd", compression_level=3)
     return _ZSTD_CODEC
+
+
+def _snappy_codec():
+    """pyarrow's BUNDLED snappy, the only snappy decoder (writes stay
+    on ``snappy_pure.compress``, see its docstring for why)."""
+    global _SNAPPY_CODEC
+    if _SNAPPY_CODEC is None:
+        import pyarrow as pa
+        _SNAPPY_CODEC = pa.Codec("snappy")
+    return _SNAPPY_CODEC
+
+
+# a snappy element expands at most 64/3x (a 3-byte copy of 64 bytes):
+# a header length past this bound is corrupt, and must not size Arrow's
+# output buffer
+_SNAPPY_MAX_EXPANSION = 22
+
+
+def _snappy_decompress(data) -> bytes:
+    """One snappy block -> bytes; its varint header is the exact
+    decompressed length.  Malformed input raises ValueError, never
+    Arrow's OSError: ValueError is what sends a column fast path to
+    its per-row reference decode."""
+    ulen = shift = pos = 0
+    while True:
+        if pos == len(data) or pos == 5:   # 32-bit: <= 5 varint bytes
+            raise ValueError("corrupt snappy: bad length varint")
+        b = data[pos]
+        pos += 1
+        ulen |= (b & 0x7F) << shift
+        if not b & 0x80:
+            break
+        shift += 7
+    if ulen > _SNAPPY_MAX_EXPANSION * len(data):
+        raise ValueError(f"corrupt snappy: length {ulen} for a "
+                         f"{len(data)}-byte block")
+    try:
+        return _snappy_codec().decompress(data, decompressed_size=ulen,
+                                          asbytes=True)
+    except OSError as e:
+        raise ValueError(f"corrupt snappy: {e}") from None
 
 
 def _header(length: int, original: bool) -> bytes:
@@ -91,8 +133,7 @@ def _decompress_chunk(data: bytes, kind: str) -> bytes:
     if kind == ZLIB:
         return zlib.decompress(data, -15)
     if kind == SNAPPY:
-        from . import snappy_pure
-        return snappy_pure.decompress(data)
+        return _snappy_decompress(data)
     if kind == "lz4":
         from . import lz4_pure
         return lz4_pure.decompress(data)
@@ -152,12 +193,13 @@ def decompress(data, kind: str = ZLIB) -> bytes:
         return data if isinstance(data, (bytes, bytearray)) else bytes(data)
     if not isinstance(data, (bytes, bytearray)):
         data = memoryview(data)
-    out = bytearray()
+    parts = []
     pos = 0
     n = len(data)
     while pos < n:
         length, original, pos = parse_header(data, pos)
         chunk = data[pos:pos + length]
         pos += length
-        out.extend(chunk if original else _decompress_chunk(chunk, kind))
-    return bytes(out)
+        parts.append(chunk if original else _decompress_chunk(chunk, kind))
+    # one copy; a lone decompressed chunk comes back as the same object
+    return b"".join(parts)

@@ -1,18 +1,21 @@
-"""Pure-Python Snappy block codec.
+"""Pure-Python Snappy block encoder (encoder only).
 
-The reference reads ORC-framed snappy chunks but cannot write them
-(compressioncodec.go:222-300; the encoder errors at 290-300).  r5
-goes beyond: ``compress`` emits real snappy blocks (greedy 4-byte
-hash matching, literal + 1/2-byte-offset copy emission per the
-public format spec), so the engine can WRITE snappy .orc files that
-Java/C++ snappy readers — including Spark's own JVM ORC reader —
-consume (pinned by test_orcwriter_snappy_jvm_interop).
+``compress`` emits real snappy blocks (greedy 4-byte hash matching,
+literal + copy elements per the public format spec: a varint
+uncompressed length, then literals and back-references with 1/2/4-byte
+offsets).  Java/C++ snappy readers, Spark's JVM ORC reader included,
+consume them (test_orcwriter_snappy_lz4_write_jvm_interop); the
+reference's snappy encoder errors out (compressioncodec.go:290-300).
+Every read path decodes with pyarrow's bundled snappy
+(``compression._snappy_decompress``).
 
-Format (public Snappy spec): a varint uncompressed length followed by
-tagged elements — literals and back-references with 1/2/4-byte offsets.
-Python-loop speed (~5-20 MB/s decode, similar encode) is fine for its
-uses here: golden tests, legacy-file ingest, and compatibility writes;
-zlib/zstd remain the recommended write codecs for throughput.
+The encoder stays pure-Python because it frames smaller: Google snappy
+compresses independent 64 KiB fragments and never matches across
+them, while this encoder matches across the whole ORC chunk (256 KiB).
+On the benchmark's own ``.orc`` streams Arrow snappy framed 2,864,796 B
+against 2,820,103 B here on ``tokens_real`` (+1.6%) and 1,559,163 B
+against 1,513,778 B on ``tokens_synthetic`` (+3.0%), all of it in
+streams longer than 64 KiB.
 """
 
 from __future__ import annotations
@@ -115,59 +118,3 @@ def compress(data: bytes) -> bytes:
     _emit_literal(out, data, anchor, n)
     return bytes(out)
 
-
-def decompress(data: bytes) -> bytes:
-    data = bytes(data)
-    pos = 0
-    # uncompressed length varint
-    ulen = 0
-    shift = 0
-    while True:
-        b = data[pos]
-        pos += 1
-        ulen |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    out = bytearray()
-    n = len(data)
-    while pos < n:
-        tag = data[pos]
-        pos += 1
-        t = tag & 3
-        if t == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                extra = ln - 59
-                ln = int.from_bytes(data[pos:pos + extra], "little")
-                pos += extra
-            ln += 1
-            out += data[pos:pos + ln]
-            pos += ln
-            continue
-        if t == 1:  # copy, 1-byte offset
-            ln = ((tag >> 2) & 0x7) + 4
-            offset = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif t == 2:  # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            offset = int.from_bytes(data[pos:pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            offset = int.from_bytes(data[pos:pos + 4], "little")
-            pos += 4
-        if offset == 0:
-            raise ValueError("corrupt snappy: zero offset")
-        start = len(out) - offset
-        if start < 0:
-            raise ValueError("corrupt snappy: offset before start")
-        if offset >= ln:
-            out += out[start:start + ln]
-        else:
-            # overlapping copy: byte-by-byte run extension
-            for i in range(ln):
-                out.append(out[start + i])
-    if len(out) != ulen:
-        raise ValueError(f"snappy length mismatch: {len(out)} != {ulen}")
-    return bytes(out)

@@ -145,14 +145,38 @@ def test_compression_header():
 def test_compression_roundtrip():
     rng = np.random.default_rng(42)
     data = rng.integers(0, 4, 300_000, dtype=np.uint8).tobytes()
-    for kind in (compression.NONE, compression.ZLIB):
+    rnd = rng.integers(0, 256, 1000, dtype=np.uint8).tobytes()
+    for kind in (compression.NONE, compression.ZLIB, compression.SNAPPY,
+                 compression.ZSTD, "lz4", "lzo"):
         framed = compression.compress(data, kind)
         assert compression.decompress(framed, kind) == data
-    # incompressible data falls back to original chunks
-    rnd = rng.integers(0, 256, 1000, dtype=np.uint8).tobytes()
-    framed = compression.compress(rnd, compression.ZLIB)
-    assert compression.decompress(framed, compression.ZLIB) == rnd
-    assert len(framed) == len(rnd) + 3  # single original chunk + header
+        if kind == compression.NONE:
+            continue
+        assert len(framed) < len(data)  # two compressed chunks
+        # incompressible data falls back to original chunks
+        framed = compression.compress(rnd, kind)
+        assert compression.decompress(framed, kind) == rnd
+        assert len(framed) == len(rnd) + 3  # one original chunk + header
+
+
+@pytest.mark.parametrize("size", [1000, 64 * 1024 - 1, 200_000])
+def test_snappy_arrow_framed_chunks_decode(size):
+    """ORC chunks whose bodies come from Google snappy (Arrow's codec,
+    the 64 KiB-fragment output Java and C++ writers produce) decode
+    through compression.decompress, below and above 64 KiB."""
+    rng = np.random.default_rng(size)
+    data = (rng.integers(0, 8, size, dtype=np.uint8) + ord("a")).tobytes()
+    codec = pa.Codec("snappy")
+    framed = b""
+    for off in range(0, size, 96 * 1024):
+        chunk = data[off:off + 96 * 1024]
+        body = codec.compress(chunk, asbytes=True)
+        assert len(body) < len(chunk)
+        framed += compression._header(len(body), False) + body
+    assert compression.decompress(framed, compression.SNAPPY) == data
+    # a buffer-protocol view (an Arrow buffer of a mapped file) too
+    assert compression.decompress(pa.py_buffer(framed),
+                                  compression.SNAPPY) == data
 
 
 def _dictionary_roundtrip(vals):

@@ -3,10 +3,12 @@ stripes — the long-tail behaviors the north rule calls out."""
 
 import numpy as np
 import pyarrow as pa
+import pytest
 
 from pyspark.sql import functions as F, types as T
 
 from orc_spark import stripe
+from orc_spark.codecs import snappy_pure
 from orc_spark.operators import encode as enc_ops
 
 
@@ -163,6 +165,71 @@ def test_lz4_lzo_truncation_raises():
     assert good(frame) == b"wxyz"
     with pytest.raises(ValueError):
         lz4_pure.decompress(frame, max_out=2)
+
+
+_LIT_AB = bytes([(2 - 1) << 2]) + b"ab"         # snappy literal "ab"
+_COPY6 = 0x01 | ((6 - 4) << 2)                 # 1-byte-offset copy of 6
+
+
+@pytest.mark.parametrize("body", [
+    snappy_pure.compress(b"abcdefgh" * 64)[:-3],
+    b"\x80" * 5 + b"\x00" + _LIT_AB,
+    b"\x80\x80",
+    b"\xff\xff\xff\xff\x0f" + _LIT_AB,
+    bytes([10]) + _LIT_AB,
+    bytes([1]) + _LIT_AB,
+    bytes([8]) + _LIT_AB + bytes([_COPY6, 5]),
+    bytes([8]) + _LIT_AB + bytes([_COPY6, 0]),
+], ids=["truncated", "overlong_varint", "varint_past_end",
+        "huge_header_length", "header_above_elements",
+        "header_below_elements", "offset_before_start", "zero_offset"])
+def test_snappy_malformed_raises(body):
+    """Malformed snappy chunks raise ValueError (never Arrow's OSError):
+    ValueError is the one type that sends a column fast path to its
+    per-row reference decode, and a damaged read must fail loud."""
+    from orc_spark.codecs import compression
+    with pytest.raises(ValueError):
+        compression.decompress(
+            compression._header(len(body), False) + body, "snappy")
+
+
+def test_snappy_corrupt_chunk_skip_and_audit(spark, tmp_path):
+    """A two-stripe snappy .orc file with one planted corrupt snappy
+    chunk: the default scan raises, on_error='skip' returns the intact
+    stripe, and orc_scan_errors reports the bad one."""
+    import pytest
+
+    from orc_spark.codecs import compression
+    from orc_spark.sources import orcscan, orcwriter
+    from orc_spark.sources.orcfile import ORCFile
+    n = 2000
+    tbl = pa.table({"v": pa.array(np.arange(n)),
+                    "s": pa.array([f"payload-{i % 7}-" * 6
+                                   for i in range(n)])})
+    p = str(tmp_path / "bad.orc")
+    orcwriter.write_orc(tbl, p, codec="snappy", stripe_rows=1000)
+    f = ORCFile(p)
+    assert f.compression == "snappy" and len(f.stripes) == 2
+    st = f.stripes[1]
+    pos = st[1][0] + st[2][0]                   # stripe 1's data
+    end = pos + st[3][0]
+    d = bytearray(open(p, "rb").read())
+    while True:                                 # first snappy chunk
+        assert pos < end, "no compressed chunk to corrupt"
+        length, original, body = compression.parse_header(d, pos)
+        if not original and length >= 6:
+            break
+        pos = body + length
+    d[body:body + 6] = b"\xff" * 6               # overlong varint
+    open(p, "wb").write(bytes(d))
+    with pytest.raises(Exception):
+        orcscan.orc_scan(spark, p).count()
+    got = orcscan.orc_scan(spark, p, on_error="skip")
+    assert got.count() == 1000
+    assert got.agg(F.min("v"), F.max("v")).first() == (0, 999)
+    errs = orcscan.orc_scan_errors(spark, p).collect()
+    assert [r["stripe"] for r in errs] == [1]
+    assert "snappy" in errs[0]["error"]
 
 
 def test_byterle_partial_decode_clamps():

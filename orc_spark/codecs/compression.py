@@ -26,6 +26,12 @@ _ZSTD_CODEC = None
 _SNAPPY_CODEC = None
 
 
+class CorruptChunk(ValueError):
+    """A compressed chunk that does not decompress.  Unlike malformed
+    VALUES (bad UTF-8), re-reading the same bytes cannot succeed, so a
+    column fast path re-raises it instead of retrying the row path."""
+
+
 def _zstd_codec():
     """pyarrow's BUNDLED zstd (r4): Spark 4 writes ORC with zstd by
     DEFAULT, so reading Spark-default lakes requires this even though
@@ -59,8 +65,7 @@ _SNAPPY_MAX_EXPANSION = 22
 def _snappy_decompress(data) -> bytes:
     """One snappy block -> bytes; its varint header is the exact
     decompressed length.  Malformed input raises ValueError, never
-    Arrow's OSError: ValueError is what sends a column fast path to
-    its per-row reference decode."""
+    Arrow's OSError (``decompress`` turns it into ``CorruptChunk``)."""
     ulen = shift = pos = 0
     while True:
         if pos == len(data) or pos == 5:   # 32-bit: <= 5 varint bytes
@@ -200,6 +205,11 @@ def decompress(data, kind: str = ZLIB) -> bytes:
         length, original, pos = parse_header(data, pos)
         chunk = data[pos:pos + length]
         pos += length
-        parts.append(chunk if original else _decompress_chunk(chunk, kind))
+        if not original:
+            try:
+                chunk = _decompress_chunk(chunk, kind)
+            except ValueError as e:
+                raise CorruptChunk(str(e)) from e
+        parts.append(chunk)
     # one copy; a lone decompressed chunk comes back as the same object
     return b"".join(parts)

@@ -249,7 +249,9 @@ def merge_orc_dir(spark, path: str, out_dir: str,
     for part-file naming), merge each group in one executor task.
     Returns the number of output files.  Zero re-encoding: each task
     is a footer parse + byte copy."""
-    from .orcscan import orc_files
+    import pyarrow as pa
+
+    from .orcscan import orc_files, tasks_df
     files = orc_files(path, "orc_merge")
     groups: list[list[str]] = []
     cur: list[str] = []
@@ -264,9 +266,10 @@ def merge_orc_dir(spark, path: str, out_dir: str,
     if cur:
         groups.append(cur)
     os.makedirs(out_dir, exist_ok=True)
-    gdf = spark.createDataFrame(
-        [(i, g) for i, g in enumerate(groups)],
-        "gid int, files array<string>").repartition(len(groups))
+    gdf = tasks_df(
+        spark, {"gid": pa.array(range(len(groups)), pa.int32()),
+                "files": pa.array(groups, pa.list_(pa.string()))},
+        len(groups))
 
     def kern(it):
         import pandas as pd

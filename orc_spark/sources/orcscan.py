@@ -44,6 +44,7 @@ from datetime import date, datetime
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import orctypes
+from ..codecs.compression import CorruptChunk
 from .orcfile import ORCFile
 
 _OPS = (">=", ">", "<=", "<", "==", "between", "in", "prefix")
@@ -649,13 +650,17 @@ def _column_arrow(f: ORCFile, ids: list[int], n: int,
     stripe (whole or stride-sliced): ancestor PRESENT chain (the root
     struct's included), ``_fast_arrow`` at the surviving count, then
     take-expansion back to ``n`` rows.  Only when ``_fast_arrow``
-    declines (None) or rejects malformed bytes (ValueError) does THIS
+    declines (None) or rejects malformed values (ValueError) does THIS
     column take the generic row path (``read_path`` + ``_conv``),
-    which replace-decodes."""
+    which replace-decodes.  A chunk that does not decompress
+    (``CorruptChunk``) propagates: the row path would decompress the
+    same bytes and fail the same way."""
     import pyarrow as pa
     valids, cnt = f.path_present_chain(ids, n)
     try:
         arr = _fast_arrow(f, ids[-1], cnt, ft)
+    except CorruptChunk:
+        raise
     except ValueError:
         arr = None
     if arr is not None:
@@ -714,6 +719,28 @@ def stride_keep(f: ORCFile, si: int, preds: list[tuple],
     return sorted(keep), n_strides
 
 
+def tasks_df(spark, columns: dict, n_parts: int) -> DataFrame:
+    """A driver-built task list as a DataFrame of ``n_parts``
+    partitions; ``columns`` maps each task column name to a typed
+    Arrow array (``pa.string()`` paths, ``pa.int32()`` ids,
+    ``pa.list_(pa.string())`` file groups).  An Arrow table enters
+    Spark as a JVM-only LocalTableScan of min(rows,
+    defaultParallelism) contiguous slices — no Python pass (a Python
+    list goes through ``parallelize`` plus an identity map) and no
+    shuffle when that is already the wanted count.  The partition
+    count depends only on the input size: a larger count
+    repartitions, a smaller one coalesces."""
+    import pyarrow as pa
+    table = pa.table(columns)
+    natural = min(table.num_rows, spark.sparkContext.defaultParallelism)
+    df = spark.createDataFrame(table)
+    if n_parts == natural:
+        return df
+    # more tasks than slices: round-robin shuffle; fewer: merge slices
+    return df.repartition(n_parts) if n_parts > natural \
+        else df.coalesce(n_parts)
+
+
 def _plan_distributed(spark, files: list[str], predicate,
                       expect_type: str | None,
                       strict_cols: bool = True,
@@ -731,8 +758,8 @@ def _plan_distributed(spark, files: list[str], predicate,
     result schema must not depend on which stripes a predicate
     kept)."""
     import pyarrow as pa
-    fdf = spark.createDataFrame([(f,) for f in files], "path string") \
-        .repartition(min(len(files), 256))
+    fdf = tasks_df(spark, {"path": pa.array(files, pa.string())},
+                   min(len(files), 256))
 
     def kern(batches):
         for b in batches:
@@ -1031,10 +1058,11 @@ def orc_scan(spark, path: str | list[str],
         # kept-stripe rows ride along from the SAME footer pass (no
         # second ORCFile open per file — r4 review fix)
         total_rows = sum(r for _, _, r in tasks)
-        tdf = spark.createDataFrame(
-            [(p, si) for p, si, _ in tasks],
-            "path string, stripe int") \
-            .repartition(n_parts(len(tasks), total_rows))
+        tdf = tasks_df(
+            spark,
+            {"path": pa.array([p for p, _, _ in tasks], pa.string()),
+             "stripe": pa.array([si for _, si, _ in tasks], pa.int32())},
+            n_parts(len(tasks), total_rows))
 
     ctx = _ScanContext(root, preds, timestamp_nanos)
 
@@ -1100,11 +1128,11 @@ def orc_scan_errors(spark, path: str,
     the quarantine report to pair with ``orc_scan(on_error='skip')``
     before deleting or re-ingesting objects."""
     import pandas as pd
+    import pyarrow as pa
 
     files = orc_files(path, "orc_scan_errors")
-    fdf = spark.createDataFrame([(f,) for f in files],
-                                "path string") \
-        .repartition(min(len(files), 256))
+    fdf = tasks_df(spark, {"path": pa.array(files, pa.string())},
+                   min(len(files), 256))
     ts_nanos = timestamp_nanos
 
     def kern(batches):

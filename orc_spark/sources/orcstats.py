@@ -114,9 +114,11 @@ def footer_aggregate(spark, path: str,
     if len(files) <= _DRIVER_STATS_MAX_FILES:
         per_file = ((p, _file_stats(p, columns)) for p in files)
     else:
-        fdf = spark.createDataFrame([(p,) for p in files],
-                                    "path string") \
-            .repartition(min(len(files), 256))
+        import pyarrow as pa
+
+        from .orcscan import tasks_df
+        fdf = tasks_df(spark, {"path": pa.array(files, pa.string())},
+                       min(len(files), 256))
         cols = list(columns)
 
         def kern(it):
@@ -177,13 +179,15 @@ def orc_count(spark, path: str, predicate=None) -> int:
     boundary stripes instead of every byte."""
     if predicate is None:
         return footer_aggregate(spark, path, [])["rows"]
-    from .orcscan import _pred_list
+    import pyarrow as pa
+
+    from .orcscan import _pred_list, tasks_df
     preds = _pred_list(predicate)
     files = _files_of(path)
     if len(files) <= _DRIVER_STATS_MAX_FILES:
         return sum(_count_file(p, preds) for p in files)
-    fdf = spark.createDataFrame([(p,) for p in files], "path string") \
-        .repartition(min(len(files), 256))
+    fdf = tasks_df(spark, {"path": pa.array(files, pa.string())},
+                   min(len(files), 256))
 
     def kern(it):
         import pandas as pd

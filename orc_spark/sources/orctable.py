@@ -841,6 +841,14 @@ def _require_migrated(snap: dict, entries: list[dict],
             f"first to normalize the layout")
 
 
+def _idx_paths(paths: list[str]) -> dict:
+    """``(idx, path)`` task columns of the per-file kernels
+    (``orcscan.tasks_df``); ``idx`` is the position in ``paths``."""
+    import pyarrow as pa
+    return {"idx": pa.array(range(len(paths)), pa.int32()),
+            "path": pa.array(paths, pa.string())}
+
+
 def _scan_entries(spark, table: str, snap: dict, entries: list[dict],
                   columns: list[str] | None = None, predicate=None,
                   timestamp_nanos: bool = False,
@@ -1096,7 +1104,10 @@ def compact_table(spark, table: str,
     untouched — time travel to any pre-compaction version still
     reads the original small files.  Returns the new snapshot (a
     no-op returns the current one)."""
+    import pyarrow as pa
+
     from .orcmerge import merge_orc_files
+    from .orcscan import tasks_df
     base = load_snapshot(table)
     entries = manifest_entries(table, base)
     by_key: dict[tuple, list[dict]] = {}
@@ -1131,10 +1142,12 @@ def compact_table(spark, table: str,
     if not groups:
         return base
     job = uuid.uuid4().hex[:12]
-    tasks = [(i, [os.path.join(table, e["path"]) for e in g])
-             for i, g in enumerate(groups)]
-    gdf = spark.createDataFrame(
-        tasks, "gid int, files array<string>").repartition(len(tasks))
+    gdf = tasks_df(
+        spark, {"gid": pa.array(range(len(groups)), pa.int32()),
+                "files": pa.array([[os.path.join(table, e["path"])
+                                    for e in g] for g in groups],
+                                  pa.list_(pa.string()))},
+        len(groups))
     data_dir = os.path.join(table, _DATA)
 
     def kern(it):
@@ -1601,7 +1614,7 @@ def delete_from(spark, table: str, predicate) -> dict:
     snapshots still read every pre-delete row; run
     ``expire_snapshots`` to reclaim the space.  Returns the new
     snapshot."""
-    from .orcscan import _pred_list
+    from .orcscan import _pred_list, tasks_df
     preds = _pred_list(predicate)
     if not preds:
         raise ValueError(
@@ -1621,9 +1634,7 @@ def delete_from(spark, table: str, predicate) -> dict:
     if len(cands) <= _DRIVER_CLASSIFY_MAX_FILES:
         classes = [_classify_delete_file(p, preds) for p in paths]
     else:
-        cdf = spark.createDataFrame(
-            list(enumerate(paths)), "idx int, path string") \
-            .repartition(min(len(paths), 256))
+        cdf = tasks_df(spark, _idx_paths(paths), min(len(paths), 256))
         pr = list(preds)
 
         def ckern(it):
@@ -1655,9 +1666,7 @@ def delete_from(spark, table: str, predicate) -> dict:
     if rewrites:
         job = uuid.uuid4().hex[:12]
         data_dir = os.path.join(table, _DATA)
-        rdf = spark.createDataFrame(
-            list(enumerate(rewrites)), "idx int, path string") \
-            .repartition(len(rewrites))
+        rdf = tasks_df(spark, _idx_paths(rewrites), len(rewrites))
         pr = list(preds)
 
         def rkern(it):
@@ -1717,7 +1726,7 @@ def update_table(spark, table: str, set: dict, predicate=None) -> dict:
     rewritten file keeps its manifest partition tuple, which would
     lie).  Commits with replace semantics; old snapshots still read
     pre-update values (time travel)."""
-    from .orcscan import _pred_list
+    from .orcscan import _pred_list, tasks_df
     if not set or not isinstance(set, dict):
         raise ValueError("orc_table: update_table requires a "
                          "non-empty set={col: value} dict")
@@ -1754,9 +1763,8 @@ def update_table(spark, table: str, set: dict, predicate=None) -> dict:
             classes = [_classify_delete_file(p, preds)
                        for p in paths]
         else:
-            cdf = spark.createDataFrame(
-                list(enumerate(paths)), "idx int, path string") \
-                .repartition(min(len(paths), 256))
+            cdf = tasks_df(spark, _idx_paths(paths),
+                           min(len(paths), 256))
             pr = list(preds)
 
             def ckern(it):
@@ -1784,9 +1792,7 @@ def update_table(spark, table: str, set: dict, predicate=None) -> dict:
         return base  # statistics proved nothing matched anywhere
     job = uuid.uuid4().hex[:12]
     data_dir = os.path.join(table, _DATA)
-    rdf = spark.createDataFrame(
-        list(enumerate(rewrites)), "idx int, path string") \
-        .repartition(len(rewrites))
+    rdf = tasks_df(spark, _idx_paths(rewrites), len(rewrites))
     pr, ss = list(preds), dict(set)
     # declared ORC type per SET column, for null-filling files whose
     # footer type predates an ADD COLUMN (backfill UPDATE)
@@ -1973,6 +1979,8 @@ def merge_table(spark, table: str, source_df, on: str,
     file-set rewrite is not safe)."""
     from pyspark.sql import functions as F
 
+    from .orcscan import tasks_df
+
     if when_matched not in ("replace", "delete"):
         raise ValueError(
             f"orc_table: when_matched must be replace|delete, got "
@@ -2036,9 +2044,7 @@ def merge_table(spark, table: str, source_df, on: str,
             job = uuid.uuid4().hex[:12]
             data_dir = os.path.join(table, _DATA)
             paths = [os.path.join(table, e["path"]) for e in cands]
-            rdf = spark.createDataFrame(
-                list(enumerate(paths)), "idx int, path string") \
-                .repartition(len(paths))
+            rdf = tasks_df(spark, _idx_paths(paths), len(paths))
             bkeys = spark.sparkContext.broadcast(keys)
             kcol = on
 
@@ -2296,7 +2302,10 @@ def rewrite_migrate(spark, table: str) -> dict:
     travel to the old layout still works.  After this, every
     per-file operation (DELETE/UPDATE/MERGE, hybrid COUNT) works
     again."""
+    import pyarrow as pa
+
     from .orcmerge import merge_orc_files
+    from .orcscan import tasks_df
     base = load_snapshot(table)
     entries = manifest_entries(table, base)
     cols, _ = _columns_meta(base)
@@ -2311,12 +2320,12 @@ def rewrite_migrate(spark, table: str) -> dict:
 
     job = uuid.uuid4().hex[:12]
     data_dir = os.path.join(table, _DATA)
-    tasks = [(i, os.path.join(table, e["path"]),
-              json.dumps(_ren_of(e)))
-             for i, e in enumerate(legacy)]
-    tdf = spark.createDataFrame(
-        tasks, "idx int, path string, ren string") \
-        .repartition(min(len(tasks), 256))
+    tdf = tasks_df(
+        spark, {**_idx_paths([os.path.join(table, e["path"])
+                              for e in legacy]),
+                "ren": pa.array([json.dumps(_ren_of(e)) for e in legacy],
+                                pa.string())},
+        min(len(legacy), 256))
 
     def kern(it):
         import pandas as pd
@@ -2378,7 +2387,9 @@ def table_count(spark, table: str, predicate=None,
     entries = manifest_entries(table, snap)
     if predicate is None:
         return sum(e["n_rows"] for e in entries)
-    from .orcscan import _pred_list
+    import pyarrow as pa
+
+    from .orcscan import _pred_list, tasks_df
     from .orcstats import _DRIVER_STATS_MAX_FILES, _count_file
     _require_migrated(snap, entries, "predicated table_count")
     preds = _pred_list(predicate)
@@ -2388,9 +2399,8 @@ def table_count(spark, table: str, predicate=None,
              if _entry_survives(e, preds, spec)]
     if len(files) <= _DRIVER_STATS_MAX_FILES:
         return sum(_count_file(p, preds) for p in files)
-    fdf = spark.createDataFrame([(p,) for p in files],
-                                "path string") \
-        .repartition(min(len(files), 256))
+    fdf = tasks_df(spark, {"path": pa.array(files, pa.string())},
+                   min(len(files), 256))
 
     def kern(it):
         import pandas as pd

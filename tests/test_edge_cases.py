@@ -193,14 +193,11 @@ def test_snappy_malformed_raises(body):
             compression._header(len(body), False) + body, "snappy")
 
 
-def test_snappy_corrupt_chunk_skip_and_audit(spark, tmp_path):
-    """A two-stripe snappy .orc file with one planted corrupt snappy
-    chunk: the default scan raises, on_error='skip' returns the intact
-    stripe, and orc_scan_errors reports the bad one."""
-    import pytest
-
+def _planted_corrupt_snappy(tmp_path) -> str:
+    """A two-stripe snappy .orc file whose stripe 1 holds one corrupt
+    snappy chunk (overlong length varint)."""
     from orc_spark.codecs import compression
-    from orc_spark.sources import orcscan, orcwriter
+    from orc_spark.sources import orcwriter
     from orc_spark.sources.orcfile import ORCFile
     n = 2000
     tbl = pa.table({"v": pa.array(np.arange(n)),
@@ -222,6 +219,15 @@ def test_snappy_corrupt_chunk_skip_and_audit(spark, tmp_path):
         pos = body + length
     d[body:body + 6] = b"\xff" * 6               # overlong varint
     open(p, "wb").write(bytes(d))
+    return p
+
+
+def test_snappy_corrupt_chunk_skip_and_audit(spark, tmp_path):
+    """A two-stripe snappy .orc file with one planted corrupt snappy
+    chunk: the default scan raises, on_error='skip' returns the intact
+    stripe, and orc_scan_errors reports the bad one."""
+    from orc_spark.sources import orcscan
+    p = _planted_corrupt_snappy(tmp_path)
     with pytest.raises(Exception):
         orcscan.orc_scan(spark, p).count()
     got = orcscan.orc_scan(spark, p, on_error="skip")
@@ -230,6 +236,37 @@ def test_snappy_corrupt_chunk_skip_and_audit(spark, tmp_path):
     errs = orcscan.orc_scan_errors(spark, p).collect()
     assert [r["stripe"] for r in errs] == [1]
     assert "snappy" in errs[0]["error"]
+
+
+def test_corrupt_chunk_decompressed_once(tmp_path, monkeypatch):
+    """A chunk that does not decompress fails its stripe after ONE
+    decompression attempt: the column fast path re-raises
+    CorruptChunk instead of sending the column to the row path, which
+    would decompress the same bytes and fail the same way."""
+    from orc_spark import orctypes
+    from orc_spark.codecs import compression
+    from orc_spark.sources import orcscan
+    from orc_spark.sources.orcfile import ORCFile
+    p = _planted_corrupt_snappy(tmp_path)
+    real = compression._snappy_decompress
+    failed = []
+
+    def counting(data):
+        try:
+            return real(data)
+        except ValueError:
+            failed.append(bytes(data[:6]))
+            raise
+
+    monkeypatch.setattr(compression, "_snappy_decompress", counting)
+    f = ORCFile(p)
+    ctx = orcscan._ScanContext(orctypes.type_from_types(f.types), [],
+                               False)
+    assert ctx.decode_stripe(f, 0).num_rows == 1000
+    assert failed == []
+    with pytest.raises(compression.CorruptChunk, match="snappy"):
+        ctx.decode_stripe(f, 1)
+    assert failed == [b"\xff" * 6]
 
 
 def test_byterle_partial_decode_clamps():

@@ -27,9 +27,11 @@ _SNAPPY_CODEC = None
 
 
 class CorruptChunk(ValueError):
-    """A compressed chunk that does not decompress.  Unlike malformed
-    VALUES (bad UTF-8), re-reading the same bytes cannot succeed, so a
-    column fast path re-raises it instead of retrying the row path."""
+    """A compressed chunk that does not decompress, under any codec,
+    or a chunk header that runs past the end of its stream.  Unlike
+    malformed VALUES (bad UTF-8), re-reading the same bytes cannot
+    succeed, so a column fast path re-raises it instead of retrying
+    the row path."""
 
 
 def _zstd_codec():
@@ -193,7 +195,10 @@ def compress(data: bytes, kind: str = ZLIB,
 def decompress(data, kind: str = ZLIB) -> bytes:
     """Accepts any buffer-protocol object (bytes, memoryview, Arrow
     buffer) — framed chunks are sliced zero-copy; only the decompressed
-    output is materialized."""
+    output is materialized.  Every codec's failure on a chunk (zlib's
+    ``zlib.error``, Arrow's ``OSError``, a pure codec's ValueError)
+    and a header length past the end of the stream raise
+    ``CorruptChunk``."""
     if kind == NONE:
         return data if isinstance(data, (bytes, bytearray)) else bytes(data)
     if not isinstance(data, (bytes, bytearray)):
@@ -203,13 +208,16 @@ def decompress(data, kind: str = ZLIB) -> bytes:
     n = len(data)
     while pos < n:
         length, original, pos = parse_header(data, pos)
+        if pos + length > n:
+            raise CorruptChunk(f"{kind} chunk of {length} bytes runs "
+                               f"{pos + length - n} bytes past its stream")
         chunk = data[pos:pos + length]
         pos += length
         if not original:
             try:
                 chunk = _decompress_chunk(chunk, kind)
-            except ValueError as e:
-                raise CorruptChunk(str(e)) from e
+            except (ValueError, OSError, zlib.error) as e:
+                raise CorruptChunk(f"corrupt {kind} chunk: {e}") from e
         parts.append(chunk)
     # one copy; a lone decompressed chunk comes back as the same object
     return b"".join(parts)

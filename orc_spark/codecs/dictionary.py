@@ -32,6 +32,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from . import leaves
+
 DICTIONARY_THRESHOLD = 0.49
 
 DICT_V2 = "DICTIONARY_V2"
@@ -104,13 +106,6 @@ def encode(data: pa.Array, allow_dictionary: bool = True) -> StringParts:
     return StringParts(None, lengths, blob)
 
 
-def _scatter(vals: np.ndarray, valid: np.ndarray) -> np.ndarray:
-    """Spread the non-null entries over the rows (zeros at nulls)."""
-    full = np.zeros(len(valid), dtype=vals.dtype)
-    full[valid] = vals
-    return full
-
-
 def to_arrow(lengths, blob, indexes=None, valid=None,
              binary: bool = False) -> pa.Array:
     """Build a ``string`` (or ``binary``) Arrow array from decoded
@@ -125,7 +120,7 @@ def to_arrow(lengths, blob, indexes=None, valid=None,
         n_bytes = int(lengths[indexes].sum())
     else:
         if valid is not None:
-            lengths = _scatter(lengths, valid)
+            lengths = leaves.scatter(lengths, valid)
         n_bytes = int(lengths.sum())
     if n_bytes > np.iinfo(np.int32).max:
         raise ValueError("string column exceeds int32 Arrow offsets")
@@ -133,13 +128,13 @@ def to_arrow(lengths, blob, indexes=None, valid=None,
     np.cumsum(lengths, out=offsets[1:])
     if len(blob) < int(offsets[-1]):
         raise ValueError("string blob shorter than its lengths")
-    validity, nulls = None, 0
-    if indexes is None and valid is not None:
-        validity = pa.py_buffer(np.packbits(valid, bitorder="little"))
-        nulls = len(valid) - int(np.count_nonzero(valid))
+    row_valid = valid if indexes is None else None
+    nulls = 0 if row_valid is None else \
+        len(valid) - int(np.count_nonzero(valid))
     arr = pa.Array.from_buffers(
         pa.binary() if binary else pa.string(), len(lengths),
-        [validity, pa.py_buffer(offsets), pa.py_buffer(blob)],
+        [leaves.validity(row_valid), pa.py_buffer(offsets),
+         pa.py_buffer(blob)],
         null_count=nulls)
     arr.validate(full=True)
     if indexes is None:
@@ -147,4 +142,4 @@ def to_arrow(lengths, blob, indexes=None, valid=None,
     if valid is None:
         return arr.take(pa.array(indexes))
     # null rows take index 0 under a null mask
-    return arr.take(pa.array(_scatter(indexes, valid), mask=~valid))
+    return arr.take(pa.array(leaves.scatter(indexes, valid), mask=~valid))

@@ -84,6 +84,8 @@ def decompress(data: bytes, max_out: int | None = None) -> bytes:
         lit_len = token >> 4
         if lit_len == 15:
             while True:
+                if pos >= n:
+                    raise ValueError("corrupt lz4: truncated length")
                 b = data[pos]
                 pos += 1
                 lit_len += b
@@ -97,6 +99,8 @@ def decompress(data: bytes, max_out: int | None = None) -> bytes:
             raise ValueError("lz4 output exceeds max_out")
         if pos >= n:
             break  # last sequence is literals-only
+        if pos + 2 > n:
+            raise ValueError("corrupt lz4: truncated offset")
         offset = int.from_bytes(data[pos:pos + 2], "little")
         pos += 2
         if offset == 0:
@@ -104,6 +108,8 @@ def decompress(data: bytes, max_out: int | None = None) -> bytes:
         match_len = (token & 0xF) + 4
         if (token & 0xF) == 15:
             while True:
+                if pos >= n:
+                    raise ValueError("corrupt lz4: truncated length")
                 b = data[pos]
                 pos += 1
                 match_len += b

@@ -332,38 +332,6 @@ def orc_files(path: str, what: str = "orc_scan") -> list[str]:
 # -------------------------------------------------------------------
 
 
-def _offsets(lengths, valid):
-    """LENGTH stream (non-null entries) -> int32 Arrow offsets array,
-    nulls marked at parent-null slots (a null at offsets position i
-    makes list/map i null)."""
-    import numpy as np
-    import pyarrow as pa
-    if valid is not None:
-        lengths = _scatter(np.asarray(lengths), valid)
-    offs = np.concatenate(([0], np.cumsum(lengths))).astype(np.int32)
-    if valid is None:
-        return pa.array(offs, pa.int32())
-    return pa.array(offs, pa.int32(),
-                    mask=np.concatenate((~valid, [False])))
-
-
-def _ancestor_expand(arr, valids):
-    """Expand a decoded subtree Arrow array outward through its
-    ancestor-struct validity chain (deepest first): take() with null
-    indices re-inserts the rows where an ancestor struct was null —
-    whole-array, no per-row Python."""
-    import numpy as np
-    import pyarrow as pa
-    for valid in reversed(valids):
-        if valid is None:
-            continue
-        idx = np.zeros(len(valid), np.int64)
-        idx[np.flatnonzero(valid)] = np.arange(len(arr))
-        arr = arr.take(pa.array(idx, pa.int64(),
-                                mask=~np.asarray(valid)))
-    return arr
-
-
 def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
     """pa.Array of Arrow type ``ft`` for column ``cid`` over ``n``
     rows, built WHOLE-ARRAY — validity bitmaps from PRESENT streams,
@@ -372,15 +340,16 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
     (r4; reference treereader.go:29-63 / cursor.go:89-176 walk these
     per row — we don't).  Recurses over the full type tree:
     list<struct<...>>, map<string,struct>, arbitrarily deep.
-    Returns None when any part of the subtree is unsupported
-    (timestamp: writer-tz wall-clock math; decimal: per-value
-    mantissa varints; union) — the caller then takes the generic
-    row path for THIS root column only.  String branches raise
-    ValueError on malformed UTF-8 or past int32 offsets; callers
-    then take the row path, which replace-decodes."""
+    Returns None when a part of the subtree is unsupported (unknown
+    writer zone or int64 range of a timestamp, null map keys, lists
+    past int32 offsets) — the caller then takes the generic row path
+    for THIS root column only.  Malformed values (bad UTF-8, a decimal
+    past its scale or precision) raise ValueError; callers then take
+    the row path, which replace-decodes.  ``CorruptChunk`` propagates."""
     import numpy as np
     import pyarrow as pa
-    from ..codecs import byterle, dictionary
+    from ..codecs import byterle, dictionary, leaves
+    from ..codecs import decimal as dec_codec
     t = f.types[cid]
     k = t.kind
     valid, n_valid = f._present(cid, n)
@@ -389,32 +358,21 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
         vals = f._ints(cid, "DATA", n_valid, signed=True)
         if pa.types.is_date32(ft):
             vals = vals.astype(np.int32)  # int64 can't cast to date32
-        if valid is None:
-            return pa.array(vals).cast(ft)
-        return pa.array(_scatter(vals, valid), mask=~valid).cast(ft)
+        return leaves.with_nulls(vals, valid, ft)
     if k == "byte":
         raw = f._stream(cid, "DATA") or b""
         vals = byterle.decode(raw, n_valid).astype(np.int8)
-        if valid is None:
-            return pa.array(vals).cast(ft)
-        return pa.array(_scatter(vals, valid), mask=~valid).cast(ft)
+        return leaves.with_nulls(vals, valid, ft)
     if k == "boolean":
         raw = f._stream(cid, "DATA") or b""
-        vals = byterle.decode_bools(raw, n_valid)
-        if valid is None:
-            return pa.array(vals)
-        return pa.array(_scatter(vals, valid), mask=~valid)
+        return leaves.with_nulls(byterle.decode_bools(raw, n_valid), valid)
     if k in ("float", "double"):
         raw = f._stream(cid, "DATA") or b""
         vals = np.frombuffer(raw, dtype="<f4" if k == "float"
                              else "<f8")[:n_valid]
-        if valid is None:
-            arr = pa.array(vals)
-        else:
-            arr = pa.array(_scatter(vals, valid), mask=~valid)
         # evolve widening: a float file read under a double union
         # schema casts exactly (every float32 is a float64)
-        return arr if arr.type == ft else arr.cast(ft)
+        return leaves.with_nulls(vals, valid, ft)
     if k in ("string", "varchar", "char", "binary"):
         indexes = None
         if f.encodings[cid].startswith("DICTIONARY"):
@@ -435,7 +393,8 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
         child = _fast_arrow(f, t.children[0], total, ft.value_type)
         if child is None:
             return None
-        return pa.ListArray.from_arrays(_offsets(lengths, valid), child)
+        return pa.ListArray.from_arrays(leaves.list_offsets(lengths, valid),
+                                        child)
     if k == "map":
         lengths = f._ints(cid, "LENGTH", n_valid, signed=False)
         total = int(lengths.sum())
@@ -445,7 +404,7 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
         items = _fast_arrow(f, t.children[1], total, ft.item_type)
         if keys is None or items is None or keys.null_count:
             return None  # Arrow map keys must be non-null
-        return pa.MapArray.from_arrays(_offsets(lengths, valid),
+        return pa.MapArray.from_arrays(leaves.list_offsets(lengths, valid),
                                        keys, items)
     if k == "struct":
         # children map BY NAME against the target struct type (r5):
@@ -464,16 +423,11 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
             if ch is None:
                 return None
             children.append(ch)
-        if valid is None:
-            return pa.StructArray.from_arrays(children, fields=fields)
         # children hold n_valid entries (ORC elides rows where the
         # parent is null): take-expand to n slots with null indices
-        idx = np.zeros(n, np.int64)
-        idx[np.flatnonzero(valid)] = np.arange(n_valid)
-        take_idx = pa.array(idx, mask=~valid)
-        children = [ch.take(take_idx) for ch in children]
-        return pa.StructArray.from_arrays(children, fields=fields,
-                                          mask=pa.array(~valid))
+        return pa.StructArray.from_arrays(
+            [leaves.expand(ch, valid) for ch in children], fields=fields,
+            mask=None if valid is None else pa.array(~valid))
     if k == "timestamp":
         # whole-array timestamps (r4).  UTC/absent writer zones are
         # pure arithmetic; ZONED files (Java lakes commonly stamp
@@ -491,13 +445,8 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
                 return None  # unknown zone name: generic path
         secs = f._ints(cid, "DATA", n_valid, signed=True) \
             .astype(np.int64)
-        raw = f._ints(cid, "SECONDARY", n_valid, signed=False) \
-            .astype(np.uint64)
-        zeros = (raw & np.uint64(7)).astype(np.int64)
-        base = (raw >> np.uint64(3)).astype(np.int64)
-        tbl = np.array([1, 100, 1000, 10**4, 10**5, 10**6, 10**7,
-                        10**8], np.int64)
-        nanos = base * tbl[zeros]
+        nanos = leaves.parse_nanos(
+            f._ints(cid, "SECONDARY", n_valid, signed=False))
         if flat:
             instant = secs + 1420070400  # 2015-01-01 base (UTC)
             if wtz:
@@ -547,50 +496,13 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
             if len(instant) and int(np.abs(instant).max()) > 9 * 10**12:
                 return None
             vals = instant * 1_000_000 + nanos // 1000
-        if valid is not None:
-            vals = _scatter(vals, valid)
-            return pa.array(vals, mask=~valid).cast(ft)
-        return pa.array(vals).cast(ft)
+        return leaves.with_nulls(vals, valid, ft)
     if k == "decimal":
-        # whole-array decimal128 (r4): numpy zigzag-varint mantissas
-        # + RLE v2 scales -> 16-byte little-endian decimal buffer
-        # (lo limb = int64 value, hi limb = sign extension).  Falls
-        # back to the exact generic path when a mantissa exceeds
-        # int64 or rescaling to the declared scale would overflow —
-        # correctness never depends on this branch.
-        from ..codecs import decimal as dec_codec
-        try:
-            mants = dec_codec.decode_mantissas_fast(
-                f._stream(cid, "DATA") or b"", n_valid)
-        except (OverflowError, ValueError):
-            return None
+        # evolve widening casts to the union schema's decimal
         scales = f._ints(cid, "SECONDARY", n_valid, signed=True)
-        shift = int(t.scale) - scales
-        if len(shift) and (shift.min() < 0 or shift.max() > 18):
-            return None  # per-value scale above declared: generic
-        if len(mants):
-            pow10 = np.power(10.0, shift.astype(np.float64))
-            # conservative overflow guard in float space
-            if np.max(np.abs(mants.astype(np.float64)) * pow10) \
-                    >= 2**62:
-                return None
-        unscaled = mants * (10 ** shift.astype(np.int64)) \
-            if len(mants) else mants
-        if valid is not None:
-            unscaled = _scatter(unscaled, valid)
-        n_out = len(valid) if valid is not None else n_valid
-        buf = np.empty((n_out, 2), "<i8")
-        buf[:, 0] = unscaled
-        buf[:, 1] = unscaled >> 63  # sign extension
-        vb = None if valid is None else _validity(valid)
-        nulls = 0 if valid is None else int(n_out - valid.sum())
-        out = pa.Array.from_buffers(
-            pa.decimal128(t.precision, t.scale), n_out,
-            [vb, pa.py_buffer(buf.tobytes())], null_count=nulls)
-        out.validate(full=True)
-        if not ft.equals(out.type):
-            out = out.cast(ft)
-        return out
+        out = dec_codec.to_arrow(f._stream(cid, "DATA") or b"", scales,
+                                 t.precision, t.scale, valid)
+        return out if ft.equals(out.type) else out.cast(ft)
     if k == "union":
         # whole-array union -> sparse tag/_u* struct (r4): byte-RLE
         # tags, each variant's child decoded densely (ORC stores only
@@ -598,8 +510,7 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
         # the slots where its tag matches; all other slots null
         raw = f._stream(cid, "DATA") or b""
         tags = byterle.decode(raw, n_valid).astype(np.int8)
-        children = [pa.array(_scatter(tags, valid), mask=~valid)
-                    if valid is not None else pa.array(tags)]
+        children = [leaves.with_nulls(tags, valid)]
         fields = [ft.field(0)]  # "tag"
         for vi, ccid in enumerate(t.children):
             cft = ft.field(vi + 1).type
@@ -610,37 +521,14 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
                 return None
             # expand: rows of THIS variant draw consecutive child
             # values; every other row is null
-            idx = np.zeros(n_valid, np.int64)
-            idx[sel] = np.arange(cnt)
             if valid is not None:
-                full_sel = _scatter(sel, valid)
-                idx = _scatter(idx, valid)
-            else:
-                full_sel = sel
-            ch = ch.take(pa.array(idx, mask=~full_sel))
-            children.append(ch)
+                sel = leaves.scatter(sel, valid)
+            children.append(leaves.expand(ch, sel))
             fields.append(ft.field(vi + 1))
-        if valid is None:
-            return pa.StructArray.from_arrays(children, fields=fields)
-        return pa.StructArray.from_arrays(children, fields=fields,
-                                          mask=pa.array(~valid))
+        return pa.StructArray.from_arrays(
+            children, fields=fields,
+            mask=None if valid is None else pa.array(~valid))
     return None  # zoned timestamps: generic row path
-
-
-def _validity(valid):
-    """np.bool_ PRESENT array -> Arrow validity bitmap buffer."""
-    import numpy as np
-    import pyarrow as pa
-    return pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
-
-
-def _scatter(vals, valid):
-    """Spread n_valid decoded values into n row slots (zeros where
-    null — masked off by the validity bitmap)."""
-    import numpy as np
-    full = np.zeros(len(valid), dtype=vals.dtype)
-    full[np.flatnonzero(valid)] = vals
-    return full
 
 
 def _column_arrow(f: ORCFile, ids: list[int], n: int,
@@ -656,6 +544,7 @@ def _column_arrow(f: ORCFile, ids: list[int], n: int,
     (``CorruptChunk``) propagates: the row path would decompress the
     same bytes and fail the same way."""
     import pyarrow as pa
+    from ..codecs import leaves
     valids, cnt = f.path_present_chain(ids, n)
     try:
         arr = _fast_arrow(f, ids[-1], cnt, ft)
@@ -664,7 +553,10 @@ def _column_arrow(f: ORCFile, ids: list[int], n: int,
     except ValueError:
         arr = None
     if arr is not None:
-        return _ancestor_expand(arr, valids)
+        # out through the ancestor-struct validity chain, deepest first
+        for valid in reversed(valids):
+            arr = leaves.expand(arr, valid)
+        return arr
     vals = f.read_path(ids, n)
     if _needs_conv(node):
         vals = [_conv(node, v, ts_nanos) for v in vals]

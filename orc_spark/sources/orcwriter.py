@@ -52,8 +52,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .. import stripe as stripe_mod
-from ..codecs import byterle, compression, dictionary, rle2
+from ..codecs import byterle, compression, dictionary, leaves, rle2
+from ..codecs import decimal as dec_codec
 from ..codecs.bits import write_vulong
 from ..orctypes import OrcType, from_arrow
 from .orcfile import KINDS, STREAM_KINDS, ENCODINGS, TIMESTAMP_BASE_SECONDS
@@ -282,37 +282,24 @@ class _ColOut:
 # ---------------------------------------------------------------------------
 
 
-def _np_stride_stats(co, kind, vals, bounds, has_null_per_stride,
-                     sum_ok=True):
-    """Append per-stride min/max/sum stats for a numeric value array
-    (``bounds`` index the non-null value space; n = non-null count)."""
+def _add_stride_stats(co, bounds, null_per_stride, extra=None) -> None:
+    """Append one stats record per stride (value count, null flag and
+    the kind's own fields ``extra[t]``) and roll it into the stripe
+    stats; ``bounds`` index this column's non-null values."""
     for t in range(len(bounds) - 1):
-        st = _new_stats(kind)
-        seg = vals[bounds[t]:bounds[t + 1]]
-        st["n"] = len(seg)
-        st["has_null"] = bool(has_null_per_stride[t]) \
-            if has_null_per_stride is not None else False
-        if len(seg):
-            if np.issubdtype(seg.dtype, np.floating):
-                # NaN must not poison min/max (ORC-541 semantics: Java
-                # ORC excludes NaN from statistics) — an external
-                # reader doing stats-based pruning would evaluate
-                # `x > NaN` as false and silently skip matching strides
-                if not np.all(np.isnan(seg)):
-                    st["min"] = float(np.nanmin(seg))
-                    st["max"] = float(np.nanmax(seg))
-                if sum_ok:
-                    # a NaN sum is kept here and dropped at
-                    # serialization AND merge time (it would otherwise
-                    # poison the stripe/file rollup)
-                    st["sum"] = float(seg.sum())
-            else:
-                st["min"] = seg.min().item()
-                st["max"] = seg.max().item()
-                if sum_ok:
-                    st["sum"] = int(seg.sum())
+        st = _new_stats(co.node.kind)
+        st["n"] = int(bounds[t + 1] - bounds[t])
+        st["has_null"] = bool(null_per_stride[t])
+        if extra is not None:
+            st.update(extra[t])
         co.stride_stats.append(st)
         _merge_stats(co.stripe_stats, st)
+
+
+def _min_max(stats: list[dict]) -> list[dict]:
+    """Stride stats without the sum (ORC date/timestamp stats carry
+    none)."""
+    return [{k: v for k, v in st.items() if k != "sum"} for st in stats]
 
 
 def _slice_pieces(encode_fn, vals, bounds) -> list[bytes]:
@@ -330,7 +317,6 @@ def _encode_node(node: OrcType, arr: pa.Array, bounds: np.ndarray,
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)
-    n_strides = len(bounds) - 1
 
     if node.kind != "union" and arr.null_count:
         validity = np.asarray(arr.is_valid())
@@ -338,14 +324,12 @@ def _encode_node(node: OrcType, arr: pa.Array, bounds: np.ndarray,
         vc = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(validity, out=vc[1:])
         data_bounds = vc[bounds]
-        null_per_stride = [bool(np.any(~validity[bounds[t]:bounds[t + 1]]))
-                           for t in range(n_strides)]
         data = arr.drop_null()
     else:
         data_bounds = bounds.copy()
-        null_per_stride = [False] * n_strides
         data = arr
         validity = None
+    null_per_stride = np.diff(data_bounds) < np.diff(bounds)
     k = node.kind
 
     if k in ("short", "int", "long"):
@@ -353,53 +337,41 @@ def _encode_node(node: OrcType, arr: pa.Array, bounds: np.ndarray,
         co.add_value_stream("DATA", _slice_pieces(
             lambda v: rle2.encode(v, signed=True), vals, data_bounds), 1)
         co.encoding = "DIRECT_V2"
-        _np_stride_stats(co, k, vals, data_bounds, null_per_stride)
+        _add_stride_stats(co, data_bounds, null_per_stride,
+                          leaves.numeric_stats(vals, data_bounds))
     elif k == "byte":
         vals = np.asarray(data).astype(np.int8)
         co.add_value_stream("DATA", _slice_pieces(
             lambda v: byterle.encode(v.view(np.uint8)), vals, data_bounds), 1)
-        _np_stride_stats(co, k, vals, data_bounds, null_per_stride)
+        _add_stride_stats(co, data_bounds, null_per_stride,
+                          leaves.numeric_stats(vals, data_bounds))
     elif k == "date":
         vals = np.asarray(data.cast(pa.int32())).astype(np.int64)
         co.add_value_stream("DATA", _slice_pieces(
             lambda v: rle2.encode(v, signed=True), vals, data_bounds), 1)
         co.encoding = "DIRECT_V2"
-        _np_stride_stats(co, k, vals, data_bounds, null_per_stride,
-                         sum_ok=False)
+        _add_stride_stats(co, data_bounds, null_per_stride,
+                          _min_max(leaves.numeric_stats(vals, data_bounds)))
     elif k in ("float", "double"):
         dt = "<f4" if k == "float" else "<f8"
         vals = np.asarray(data).astype(np.float64)
         raw = vals.astype(dt)
         co.add_value_stream("DATA", _slice_pieces(
             lambda v: v.tobytes(), raw, data_bounds), 0)
-        _np_stride_stats(co, k, vals, data_bounds, null_per_stride)
+        _add_stride_stats(co, data_bounds, null_per_stride,
+                          leaves.numeric_stats(vals, data_bounds))
     elif k == "boolean":
         vals = np.asarray(data)
         co.add_bit_stream("DATA", vals, data_bounds)
-        for t in range(n_strides):
-            seg = vals[data_bounds[t]:data_bounds[t + 1]]
-            st = _new_stats(k)
-            st["n"] = int(data_bounds[t + 1] - data_bounds[t])
-            st["has_null"] = null_per_stride[t]
-            st["true_count"] = int(seg.sum())
-            co.stride_stats.append(st)
-            _merge_stats(co.stripe_stats, st)
+        _add_stride_stats(co, data_bounds, null_per_stride, [
+            {"true_count": int(vals[lo:hi].sum())}
+            for lo, hi in zip(data_bounds[:-1], data_bounds[1:])])
     elif k == "timestamp":
-        if pa.types.is_timestamp(data.type) and data.type.unit == "ns":
-            # write-side lossless nanos (r5): a ns-unit Arrow column
-            # (orc_scan(timestamp_nanos=True) output, e.g. a
-            # delete-rewrite of an existing file) keeps its full
-            # nanosecond fraction — the us cast below would TRUNCATE
-            ns = np.asarray(data.cast(pa.int64()))
-            secs = np.floor_divide(ns, 1_000_000_000)
-            nanos = ns - secs * 1_000_000_000
-        else:
-            us = np.asarray(
-                data.cast(pa.timestamp("us")).cast(pa.int64()))
-            secs = np.floor_divide(us, 1_000_000)
-            nanos = (us - secs * 1_000_000) * 1000
+        # any Arrow unit, ns included: a ns-unit column
+        # (orc_scan(timestamp_nanos=True) output, e.g. a delete-rewrite
+        # of an existing file) keeps its full nanosecond fraction
+        secs, nanos = leaves.timestamp_split(data)
         # stats use epoch millis of the FLOOR second + fraction
-        # (identical to the old floor_divide(us, 1000) for us input)
         millis = secs * 1000 + np.floor_divide(nanos, 1_000_000)
         # Java convention (r4 fix): pre-1970 seconds are stored
         # TRUNCATED TOWARD ZERO while nanos stay the positive
@@ -409,72 +381,47 @@ def _encode_node(node: OrcType, arr: pa.Array, bounds: np.ndarray,
         # timestamp back one second on the round trip
         secs = secs + ((secs < 0) & (nanos > 0)).astype(np.int64)
         rel = secs - TIMESTAMP_BASE_SECONDS
-        fmt = stripe_mod._format_nanos(nanos)
+        fmt = leaves.format_nanos(nanos)
         co.add_value_stream("DATA", _slice_pieces(
             lambda v: rle2.encode(v, signed=True), rel, data_bounds), 1)
         co.add_value_stream("SECONDARY", _slice_pieces(
             lambda v: rle2.encode(v, signed=False), fmt, data_bounds), 1)
         co.encoding = "DIRECT_V2"
-        _np_stride_stats(co, k, millis, data_bounds, null_per_stride,
-                         sum_ok=False)
+        _add_stride_stats(co, data_bounds, null_per_stride,
+                          _min_max(leaves.numeric_stats(millis, data_bounds)))
     elif k in ("string", "varchar", "char", "binary"):
-        _encode_string_node(co, k, data, data_bounds, bounds,
-                            null_per_stride)
+        _encode_string_node(co, k, data, data_bounds, null_per_stride)
     elif k == "decimal":
-        _encode_decimal_node(co, node, data, data_bounds, bounds,
-                             null_per_stride)
+        _encode_decimal_node(co, node, data, data_bounds, null_per_stride)
     elif k == "struct":
-        for t in range(n_strides):
-            st = _new_stats(k)
-            st["n"] = int(data_bounds[t + 1] - data_bounds[t])
-            st["has_null"] = null_per_stride[t]
-            co.stride_stats.append(st)
-            _merge_stats(co.stripe_stats, st)
+        _add_stride_stats(co, data_bounds, null_per_stride)
         for i, child in enumerate(node.children):
             carr = arr.field(i)
             if validity is not None:
                 carr = carr.filter(pa.array(validity))
             _encode_node(child, carr, data_bounds, sink)
     elif k in ("list", "map"):
-        nn = len(data)
-        off_buf = data.offsets if hasattr(data, "offsets") else None
-        offsets = np.asarray(data.offsets)[: nn + 1] if off_buf is not None \
-            else np.zeros(nn + 1, dtype=np.int64)
-        lengths = np.diff(offsets).astype(np.int64)
+        lengths, child = leaves.list_parts(data)
         co.add_value_stream("LENGTH", _slice_pieces(
             lambda v: rle2.encode(v, signed=False), lengths, data_bounds), 1)
         co.encoding = "DIRECT_V2"
-        for t in range(n_strides):
-            st = _new_stats(k)
-            st["n"] = int(data_bounds[t + 1] - data_bounds[t])
-            st["has_null"] = null_per_stride[t]
-            co.stride_stats.append(st)
-            _merge_stats(co.stripe_stats, st)
+        _add_stride_stats(co, data_bounds, null_per_stride)
         # child boundaries: element offsets at stride starts
-        ec = np.zeros(nn + 1, dtype=np.int64)
+        ec = np.zeros(len(lengths) + 1, dtype=np.int64)
         np.cumsum(lengths, out=ec[1:])
         child_bounds = ec[data_bounds]
-        first = int(offsets[0]) if nn else 0
-        last = int(offsets[-1]) if nn else 0
         if k == "list":
-            child_vals = data.values.slice(first, last - first)
-            _encode_node(node.children[0], child_vals, child_bounds, sink)
+            _encode_node(node.children[0], child, child_bounds, sink)
         else:
-            keys = data.keys.slice(first, last - first)
-            items = data.items.slice(first, last - first)
-            _encode_node(node.children[0], keys, child_bounds, sink)
-            _encode_node(node.children[1], items, child_bounds, sink)
+            _encode_node(node.children[0], child.field(0), child_bounds, sink)
+            _encode_node(node.children[1], child.field(1), child_bounds, sink)
     elif k == "union":
         buffers = arr.buffers()
         tags = np.frombuffer(buffers[1], dtype=np.int8, count=n,
                              offset=arr.offset).astype(np.uint8)
         co.add_value_stream("DATA", _slice_pieces(
             lambda v: byterle.encode(v), tags, bounds), 1)
-        for t in range(n_strides):
-            st = _new_stats(k)
-            st["n"] = int(bounds[t + 1] - bounds[t])
-            co.stride_stats.append(st)
-            _merge_stats(co.stripe_stats, st)
+        _add_stride_stats(co, bounds, null_per_stride)
         dense = pa.types.is_union(arr.type) and arr.type.mode == "dense"
         for vi, child in enumerate(node.children):
             mask = tags == vi
@@ -494,31 +441,26 @@ def _encode_node(node: OrcType, arr: pa.Array, bounds: np.ndarray,
         raise ValueError(f"unsupported ORC column kind: {k}")
 
 
-def _encode_string_node(co, kind, data, data_bounds, bounds,
+def _encode_string_node(co, kind, data, data_bounds,
                         null_per_stride) -> None:
-    n_strides = len(bounds) - 1
+    n_strides = len(data_bounds) - 1
     if data.type not in (pa.string(), pa.binary()):
         data = data.cast(pa.string() if kind != "binary" else pa.binary())
     value_lengths = np.asarray(pc.binary_length(data), dtype=np.int64)
 
-    # per-stride stats (min/max bytes + total length)
-    for t in range(n_strides):
-        st = _new_stats(kind)
-        lo, hi = int(data_bounds[t]), int(data_bounds[t + 1])
-        st["n"] = hi - lo
-        st["has_null"] = null_per_stride[t]
+    # per-stride stats: min/max bytes (not for binary) + total length
+    extra = []
+    for lo, hi in zip(data_bounds[:-1].tolist(), data_bounds[1:].tolist()):
+        st: dict = {}
         if hi > lo:
-            seg = data.slice(lo, hi - lo)
-            mm = pc.min_max(seg)
-            mn, mx = mm["min"].as_py(), mm["max"].as_py()
-            st["min"] = mn.encode() if isinstance(mn, str) else mn
-            st["max"] = mx.encode() if isinstance(mx, str) else mx
+            if kind != "binary":
+                mm = pc.min_max(data.slice(lo, hi - lo))
+                mn, mx = mm["min"].as_py(), mm["max"].as_py()
+                st["min"] = mn.encode() if isinstance(mn, str) else mn
+                st["max"] = mx.encode() if isinstance(mx, str) else mx
             st["sum"] = int(value_lengths[lo:hi].sum())
-        if kind == "binary":
-            st.pop("min", None)
-            st.pop("max", None)
-        co.stride_stats.append(st)
-        _merge_stats(co.stripe_stats, st)
+        extra.append(st)
+    _add_stride_stats(co, data_bounds, null_per_stride, extra)
 
     parts = dictionary.encode(data, allow_dictionary=kind != "binary")
     co.encoding = parts.encoding
@@ -545,36 +487,18 @@ def _encode_string_node(co, kind, data, data_bounds, bounds,
         data_bounds), 1)
 
 
-def _encode_decimal_node(co, node, data, data_bounds, bounds,
+def _encode_decimal_node(co, node, data, data_bounds,
                          null_per_stride) -> None:
-    from decimal import localcontext
-    from ..codecs import decimal as dec_codec
-    scale = node.scale
-    vals = data.to_pylist()
-    mants = [dec_codec.exact_mantissa(v, scale) for v in vals]
-    n_strides = len(bounds) - 1
-    data_pieces, sec_pieces = [], []
-    for t in range(n_strides):
-        lo, hi = int(data_bounds[t]), int(data_bounds[t + 1])
-        s = dec_codec.encode_decimals(mants[lo:hi], [scale] * (hi - lo))
-        data_pieces.append(s["DATA"])
-        sec_pieces.append(s["SECONDARY"])
-        st = _new_stats("decimal")
-        st["n"] = hi - lo
-        st["has_null"] = null_per_stride[t]
-        if hi > lo:
-            st["min"] = min(vals[lo:hi])
-            st["max"] = max(vals[lo:hi])
-            with localcontext() as _ctx:
-                # the default 28-digit context would ROUND sums of
-                # decimal(38) values; 80 digits keeps them exact
-                _ctx.prec = 80
-                st["sum"] = sum(vals[lo:hi])
-        co.stride_stats.append(st)
-        _merge_stats(co.stripe_stats, st)
-    co.add_value_stream("DATA", data_pieces, 0)
-    co.add_value_stream("SECONDARY", sec_pieces, 1)
+    # whole-array over the decimal128 buffer, one piece per stride;
+    # the stride stats are exact Decimals (codecs/decimal.stride_stats)
+    data = dec_codec.as_decimal128(data, node.scale)
+    pieces = [dec_codec.encode(data.slice(lo, hi - lo)) for lo, hi in
+              zip(data_bounds[:-1].tolist(), data_bounds[1:].tolist())]
+    co.add_value_stream("DATA", [p["DATA"] for p in pieces], 0)
+    co.add_value_stream("SECONDARY", [p["SECONDARY"] for p in pieces], 1)
     co.encoding = "DIRECT_V2"
+    _add_stride_stats(co, data_bounds, null_per_stride,
+                      dec_codec.stride_stats(data, data_bounds))
 
 
 # ---------------------------------------------------------------------------
@@ -726,11 +650,7 @@ class ORCFileWriter:
         # root struct column
         root_co = _ColOut(self.tree)
         sink[0] = root_co
-        for t in range(n_strides):
-            st = _new_stats("struct")
-            st["n"] = int(bounds[t + 1] - bounds[t])
-            root_co.stride_stats.append(st)
-            _merge_stats(root_co.stripe_stats, st)
+        _add_stride_stats(root_co, bounds, [False] * n_strides)
         for i, child in enumerate(self.tree.children):
             arr = table.column(i)
             if isinstance(arr, pa.ChunkedArray):

@@ -21,12 +21,14 @@ layer invokes it from mapInPandas kernels.
 from __future__ import annotations
 
 import json
+import math
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from .codecs import bits, byterle, compression, dictionary, fsst, rle2
+from .codecs import bits, byterle, compression, dictionary, fsst, leaves, rle2
+from .codecs import decimal as dec_codec
 from .orctypes import OrcType, parse_orc_type
 
 TIMESTAMP_BASE_SECONDS = 1420070400  # 2015-01-01 (treereader.go:128-131)
@@ -207,19 +209,15 @@ def _encode_nested(arr: pa.Array, spec: ColumnSpec,
                 walk(child, carr)
             return
         # list / map: drop_null (the filter kernel compacts offsets
-        # AND values), LENGTH stream, recurse into flattened children
-        data = a.drop_null() if a.null_count else a
-        nn = len(data)
-        offsets = np.asarray(data.offsets)[:nn + 1].astype(np.int64)
-        lengths = np.diff(offsets) if nn else np.zeros(0, np.int64)
+        # AND values), LENGTH stream, recurse into the used children
+        lengths, child = leaves.list_parts(
+            a.drop_null() if a.null_count else a)
         add_stream(rec, "LENGTH", rle2.encode(lengths, signed=False))
-        lo = int(offsets[0]) if nn else 0
-        hi = int(offsets[-1]) if nn else 0
         if kind == "list":
-            walk(node.children[0], data.values[lo:hi])
+            walk(node.children[0], child)
         else:
-            walk(node.children[0], data.keys[lo:hi])
-            walk(node.children[1], data.items[lo:hi])
+            walk(node.children[0], child.field(0))
+            walk(node.children[1], child.field(1))
 
     walk(spec.orc_type, arr)
     header = json.dumps({"nodes": nodes,
@@ -250,14 +248,6 @@ def _decode_nested(streams: dict, spec: ColumnSpec,
     nodes = header["nodes"]
     pos = {"i": 0}
 
-    def expand(child: pa.Array, valid, n):
-        if valid is None:
-            return child
-        idx = np.full(n, -1, dtype=np.int64)
-        idx[valid] = np.arange(len(child))
-        return child.take(pa.array(
-            np.where(idx < 0, None, idx), type=pa.int64()))
-
     def walk(node: OrcType):
         rec = nodes[pos["i"]]
         pos["i"] += 1
@@ -271,37 +261,18 @@ def _decode_nested(streams: dict, spec: ColumnSpec,
         valid = byterle.decode_bools(pres, n) if pres is not None else None
         n_valid = int(valid.sum()) if valid is not None else n
         if kind == "struct":
-            children = [expand(walk(c), valid, n) for c in node.children]
+            children = [leaves.expand(walk(c), valid)
+                        for c in node.children]
             mask = pa.array(~valid) if valid is not None else None
             return pa.StructArray.from_arrays(
                 children, names=list(node.field_names), mask=mask)
         lengths = rle2.decode(st.get("LENGTH", b""), n_valid, signed=False)
-        if valid is None:
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            np.cumsum(lengths, out=offsets[1:])
-            mask = None
-        else:
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            exp = np.zeros(n, dtype=np.int64)
-            exp[valid] = lengths
-            np.cumsum(exp, out=offsets[1:])
-            mask = pa.array(~valid)
-        off_arr = pa.array(offsets, pa.int32())
+        offsets = leaves.list_offsets(lengths, valid)
         if kind == "list":
-            values = walk(node.children[0])
-            return pa.ListArray.from_arrays(off_arr, values, mask=mask)
+            return pa.ListArray.from_arrays(offsets, walk(node.children[0]))
         keys = walk(node.children[0])
-        items = walk(node.children[1])
-        if mask is None:
-            return pa.MapArray.from_arrays(off_arr, keys, items)
-        # MapArray.from_arrays has no mask param; a null OFFSET at
-        # slot i marks entry i null (null slots have length 0 here,
-        # so surrounding spans are unaffected)
-        off_list: list = offsets.tolist()
-        for i in np.flatnonzero(~valid):
-            off_list[i] = None
-        return pa.MapArray.from_arrays(pa.array(off_list, pa.int32()),
-                                       keys, items)
+        return pa.MapArray.from_arrays(offsets, keys,
+                                       walk(node.children[1]))
 
     return walk(spec.orc_type)
 
@@ -318,13 +289,6 @@ def _present_stream(arr: pa.Array) -> bytes | None:
         return None
     valid = np.asarray(arr.is_valid())
     return byterle.encode_bools(valid)
-
-
-def _int_values(arr: pa.Array) -> np.ndarray:
-    """Non-null values of an integer array as int64."""
-    if arr.null_count:
-        arr = arr.drop_null()
-    return np.asarray(arr).astype(np.int64)
 
 
 # Integer dictionary encoding (engine extension, mirrors the string
@@ -386,8 +350,8 @@ def _decode_int_stream(streams: dict, encoding_suffix: str,
     return rle2.decode(streams.get("DATA", b""), n, signed=True)
 
 
-def _encode_string_like(arr: pa.Array, use_fsst: bool) -> tuple[str, dict, dict]:
-    data = arr.drop_null() if arr.null_count else arr
+def _encode_string_like(data: pa.Array,
+                        use_fsst: bool) -> tuple[str, dict, dict]:
     parts = dictionary.encode(data)
     stats = {"count": len(data),
              "sum_len": int(pc.sum(pc.binary_length(data)).as_py() or 0)}
@@ -430,76 +394,47 @@ def encode_column(arr: pa.Array, spec: ColumnSpec,
     if present is not None:
         streams["PRESENT"] = present
     n_valid = len(arr) - arr.null_count
+    data = arr.drop_null() if arr.null_count else arr
     typ = spec.typ
 
     if typ in INT_TYPES or typ == "date":
-        vals = _int_values(arr)
+        vals = np.asarray(data).astype(np.int64)
         if typ == "date" or len(vals) == 0:
             streams["DATA"] = rle2.encode(vals, signed=True)
             suffix = "DIRECT"
         else:
             suffix, s = _encode_int_stream(vals)
             streams.update(s)
-        stats = {"count": n_valid}
-        if len(vals):
-            stats.update(min=int(vals.min()), max=int(vals.max()),
-                         sum=int(vals.sum()))
+        stats = {"count": n_valid, **_whole_stats(vals)}
         enc_name = "DICTIONARY_INT_V2" if suffix == "DICT_INT" else "DIRECT_V2"
         return enc_name, streams, stats
     if typ in ("float", "double"):
-        data = arr.drop_null() if arr.null_count else arr
         vals = np.asarray(data)
         dt = "<f4" if typ == "float" else "<f8"
         streams["DATA"] = vals.astype(dt).tobytes()
-        stats = {"count": n_valid}
-        if len(vals):
-            # NaN is excluded from min/max (ORC-541 semantics) and an
-            # NaN sum is omitted — stats-based stripe pruning must
-            # never compare against NaN (it would prune live stripes)
-            if not np.all(np.isnan(vals)):
-                stats.update(min=float(np.nanmin(vals)),
-                             max=float(np.nanmax(vals)))
-            s = float(vals.sum())
-            if not np.isnan(s):
-                stats["sum"] = s
-        return "DIRECT", streams, stats
+        return "DIRECT", streams, {"count": n_valid, **_whole_stats(vals)}
     if typ == "boolean":
-        data = arr.drop_null() if arr.null_count else arr
         vals = np.asarray(data)
         streams["DATA"] = byterle.encode_bools(vals)
         return "DIRECT", streams, {"count": n_valid,
                                    "true_count": int(vals.sum())}
     if typ == "timestamp":
-        data = arr.drop_null() if arr.null_count else arr
-        us = np.asarray(data.cast(pa.int64()))  # microseconds since epoch
-        secs = np.floor_divide(us, 1_000_000)
-        nanos = (us - secs * 1_000_000) * 1000
+        # floor seconds + the nanos of that second, any Arrow unit
+        secs, nanos = leaves.timestamp_split(data)
         streams["DATA"] = rle2.encode(secs - TIMESTAMP_BASE_SECONDS, signed=True)
-        streams["SECONDARY"] = rle2.encode(_format_nanos(nanos), signed=False)
+        streams["SECONDARY"] = rle2.encode(leaves.format_nanos(nanos),
+                                           signed=False)
         return "DIRECT_V2", streams, {"count": n_valid}
     if typ in ("string", "binary"):
-        encoding, s, stats = _encode_string_like(arr, use_fsst)
+        encoding, s, stats = _encode_string_like(data, use_fsst)
         streams.update(s)
         return encoding, streams, stats
     if spec.is_decimal:
-        from .codecs import decimal as dec_codec
-        data = arr.drop_null() if arr.null_count else arr
         _, scale = spec.decimal_params()
-        mants = [dec_codec.exact_mantissa(v, scale)
-                 for v in data.to_pylist()]
-        streams.update(dec_codec.encode_decimals(mants, [scale] * len(mants)))
+        streams.update(dec_codec.encode(dec_codec.as_decimal128(data, scale)))
         return "DIRECT_V2", streams, {"count": n_valid}
     if spec.is_list:
-        data = arr.drop_null() if arr.null_count else arr
-        n = len(data)
-        if n == 0:
-            streams["LENGTH"] = b""
-            streams["DATA"] = b""
-            return "DIRECT_V2", streams, {"count": 0, "total_elems": 0}
-        offsets = np.frombuffer(data.buffers()[1], dtype=np.int32,
-                                count=n + 1, offset=data.offset * 4)
-        lengths = np.diff(offsets).astype(np.int64)
-        child = data.values[offsets[0]:offsets[-1]]
+        lengths, child = leaves.list_parts(data)
         child_vals = np.asarray(child).astype(np.int64)
         streams["LENGTH"] = rle2.encode(lengths, signed=False)
         if len(child_vals):
@@ -508,42 +443,23 @@ def encode_column(arr: pa.Array, spec: ColumnSpec,
         else:
             streams["DATA"] = b""
             suffix = "DIRECT"
-        stats = {"count": n_valid, "total_elems": int(lengths.sum())}
-        if len(child_vals):
-            stats.update(min=int(child_vals.min()), max=int(child_vals.max()),
-                         sum=int(child_vals.sum()))
+        stats = {"count": n_valid, "total_elems": int(lengths.sum()),
+                 **_whole_stats(child_vals)}
         enc_name = "DICTIONARY_INT_V2" if suffix == "DICT_INT" else "DIRECT_V2"
         return enc_name, streams, stats
     raise ValueError(f"unsupported column type: {typ}")
 
 
-def _format_nanos(nanos: np.ndarray) -> np.ndarray:
-    """formatNanos trailing-zero compaction (utils.go:1206-1220),
-    numpy whole-array: the trailing-zero count is bounded (<=7), so a
-    7-step masked loop replaces the per-row Python of r2."""
-    nv = nanos.astype(np.int64)
-    out = nv << 3  # default: nv % 100 != 0
-    mask = (nv % 100 == 0) & (nv != 0)
-    if mask.any():
-        base = nv[mask] // 100
-        tz = np.ones(len(base), dtype=np.int64)
-        for _ in range(6):  # tz grows 1..7, bounded
-            m2 = (base % 10 == 0) & (tz < 7)
-            if not m2.any():
-                break
-            base[m2] //= 10
-            tz[m2] += 1
-        out[mask] = (base << 3) | tz
-    out[nv == 0] = 0
-    return out
+def _whole_stats(vals: np.ndarray) -> dict:
+    """min/max/sum of a whole stripe: one stride of the leaf kernel."""
+    return leaves.numeric_stats(vals, [0, len(vals)])[0]
 
 
-def _parse_nanos(v: np.ndarray) -> np.ndarray:
-    tz = (v & 7).astype(np.int64)
-    base = (v >> np.uint64(3)).astype(np.int64) if v.dtype == np.uint64 \
-        else (v >> 3)
-    scale = np.where(tz == 0, 1, 10 ** (tz + 1))
-    return base * scale
+def _drop_nan_sum(st: dict) -> dict:
+    """ORC-541: a NaN sum (also a rolled-up one) stays out of the JSON."""
+    if isinstance(st.get("sum"), float) and math.isnan(st["sum"]):
+        del st["sum"]
+    return st
 
 
 # ---------------------------------------------------------------------------
@@ -569,61 +485,39 @@ def decode_column(streams: dict, encoding: str, spec: ColumnSpec,
         sfx = "DICT_INT" if encoding.startswith("DICTIONARY_INT") else ""
         vals = _decode_int_stream(streams, sfx, n_valid)
         if typ == "date":
-            return _with_nulls(vals.astype(np.int32), valid, pa.date32())
-        return _with_nulls(vals.astype(INT_TYPES[typ]), valid, None)
+            return leaves.with_nulls(vals.astype(np.int32), valid,
+                                     pa.date32())
+        return leaves.with_nulls(vals.astype(INT_TYPES[typ]), valid)
     if typ in ("float", "double"):
         dt = "<f4" if typ == "float" else "<f8"
         vals = np.frombuffer(streams.get("DATA", b""), dtype=dt)
-        return _with_nulls(vals, valid, None)
+        return leaves.with_nulls(vals, valid)
     if typ == "boolean":
         vals = byterle.decode_bools(streams.get("DATA", b""), n_valid)
-        return _with_nulls(vals, valid, None)
+        return leaves.with_nulls(vals, valid)
     if typ == "timestamp":
         secs = rle2.decode(streams.get("DATA", b""), n_valid, signed=True) + \
             TIMESTAMP_BASE_SECONDS
-        nanos = _parse_nanos(
+        nanos = leaves.parse_nanos(
             rle2.decode(streams.get("SECONDARY", b""), n_valid, signed=False))
-        us = secs * 1_000_000 + nanos // 1000
-        return _with_nulls(us, valid, pa.timestamp("us"))
+        return leaves.with_nulls(secs * 1_000_000 + nanos // 1000, valid,
+                                 pa.timestamp("us"))
     if typ in ("string", "binary"):
         return _decode_string_like(streams, encoding, typ, n_valid, valid)
     if spec.is_decimal:
-        from decimal import Decimal
-        from .codecs import decimal as dec_codec
         prec, scale = spec.decimal_params()
-        mants, scales = dec_codec.decode_decimals(streams, n_valid)
-        # string construction is context-exempt (scaleb would round
-        # >28-digit mantissas under the default context)
-        # E{-s}, not E-{s}: signed scale stream (see orcfile.py)
-        vals = [Decimal(f"{m}E{-int(s)}")
-                for m, s in zip(mants, scales.tolist())]
-        out_t = pa.decimal128(prec, scale)
-        if valid is None:
-            return pa.array(vals, out_t)
-        full = [None] * n_rows
-        for i, j in enumerate(np.flatnonzero(valid)):
-            full[j] = vals[i]
-        return pa.array(full, out_t)
+        scales = rle2.decode(streams.get("SECONDARY", b""), n_valid,
+                             signed=True)
+        return dec_codec.to_arrow(streams.get("DATA", b""), scales, prec,
+                                  scale, valid)
     if spec.is_list:
         lengths = rle2.decode(streams.get("LENGTH", b""), n_valid,
                               signed=False)
-        total = int(lengths.sum())
         sfx = "DICT_INT" if encoding.startswith("DICTIONARY_INT") else ""
-        child = _decode_int_stream(streams, sfx, total)
-        offsets = np.zeros(n_valid + 1, dtype=np.int32)
-        np.cumsum(lengths, out=offsets[1:])
-        values = pa.array(child.astype(INT_TYPES[spec.child_typ]))
-        if valid is None:
-            return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
-                                            values)
-        # re-expand offsets over null slots
-        full_offsets = np.zeros(n_rows + 1, dtype=np.int32)
-        exp = np.zeros(n_rows, dtype=np.int64)
-        exp[valid] = lengths
-        np.cumsum(exp, out=full_offsets[1:])
-        mask = pa.array(~valid)
+        child = _decode_int_stream(streams, sfx, int(lengths.sum()))
         return pa.ListArray.from_arrays(
-            pa.array(full_offsets, pa.int32()), values, mask=mask)
+            leaves.list_offsets(lengths, valid),
+            pa.array(child.astype(INT_TYPES[spec.child_typ])))
     raise ValueError(f"unsupported column type: {typ}")
 
 
@@ -642,18 +536,6 @@ def _decode_string_like(streams, encoding, typ, n_valid, valid):
                           signed=False)
     return dictionary.to_arrow(lengths, blob, indexes, valid,
                                binary=typ == "binary")
-
-
-def _with_nulls(vals: np.ndarray, valid, cast_to):
-    if valid is None:
-        arr = pa.array(vals)
-    else:
-        full = np.zeros(len(valid), dtype=vals.dtype)
-        full[valid] = vals
-        arr = pa.array(full, mask=~valid)
-    if cast_to is not None and arr.type != cast_to:
-        arr = arr.cast(cast_to)
-    return arr
 
 
 # ---------------------------------------------------------------------------
@@ -708,6 +590,7 @@ def encode_stripe(batch: pa.Table | pa.RecordBatch, specs: list[ColumnSpec],
             arr = arr.combine_chunks()
         encoding, streams, cstats = encode_column(arr, spec, use_fsst)
         encodings[spec.name] = encoding
+        _drop_nan_sum(cstats)
         # per-stream byte sizes: the positions/row-index analog
         # (positionrecorder.go / writer.go:337-384) for seek & audit
         cstats["stream_bytes"] = {}
@@ -755,10 +638,10 @@ def _encode_stripe_strided(batch, specs, codec, use_fsst,
                 arr = arr.combine_chunks()
             encoding, streams, cstats = encode_column(arr, spec, use_fsst)
             encs[spec.name] = encoding
-            sts[spec.name] = {k: v for k, v in cstats.items()
-                              if k in ("count", "min", "max", "sum",
-                                       "true_count", "total_elems",
-                                       "sum_len")}
+            sts[spec.name] = _drop_nan_sum(
+                {k: v for k, v in cstats.items()
+                 if k in ("count", "min", "max", "sum", "true_count",
+                          "total_elems", "sum_len")})
             merged[spec.name] = _merge_col_stats(merged[spec.name], cstats)
             for kind in spec.stream_kinds():
                 data = streams.get(kind)
@@ -783,7 +666,8 @@ def _encode_stripe_strided(batch, specs, codec, use_fsst,
         row[key] = blob
         offsets[key] = offs
         enc_bytes += len(blob)
-    for name, st in merged.items():
+    for st in merged.values():
+        _drop_nan_sum(st)
         st["stream_bytes"] = {}
     stats = dict(merged)
     stats["_strides"] = {"rows": rows_per,

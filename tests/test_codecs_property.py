@@ -203,20 +203,23 @@ def test_percentile_bits_basics():
 
 
 def test_decimal_mantissa_fast_matches_reference():
-    """r4: whole-array zigzag-varint decode == scalar reference for
-    int64-range mantissas; >int64 mantissas raise OverflowError (the
-    scan falls back to the exact generic path)."""
+    """Whole-array zigzag-varint decode (128-bit limbs) == scalar
+    reference, decimal(38) mantissas above int64 included; a mantissa
+    past 128 bits or a short stream raises ValueError."""
     import random
     import pytest
     from orc_spark.codecs import decimal as dc
     random.seed(7)
     vals = ([random.randrange(-10**18, 10**18) for _ in range(4000)]
+            + [random.randrange(-10**38 + 1, 10**38) for _ in range(500)]
             + [0, 1, -1, 127, -128, 2**62, -(2**62),
-               2**63 - 1, -(2**63)])
+               2**63 - 1, -(2**63), 2**64, -(2**64), 2**127 - 1,
+               -(2**127), 10**38 - 1, -(10**38 - 1)])
     data = dc.encode_mantissas(vals)
-    fast = dc.decode_mantissas_fast(data, len(vals))
-    assert fast.tolist() == dc.decode_mantissas(data, len(vals))
-    with pytest.raises(OverflowError):
-        dc.decode_mantissas_fast(dc.encode_mantissas([2**70]), 1)
+    lo, hi = dc.decode_limbs(data, len(vals))
+    got = [int(a) + (int(b) << 64) for a, b in zip(lo.tolist(), hi.tolist())]
+    assert got == dc.decode_mantissas(data, len(vals))
     with pytest.raises(ValueError):
-        dc.decode_mantissas_fast(data[:3], len(vals))
+        dc.decode_limbs(dc.encode_mantissas([2**128]), 1)
+    with pytest.raises(ValueError):
+        dc.decode_limbs(data[:3], len(vals))

@@ -193,16 +193,40 @@ def test_snappy_malformed_raises(body):
             compression._header(len(body), False) + body, "snappy")
 
 
-def _planted_corrupt_snappy(tmp_path) -> str:
+@pytest.mark.parametrize("kind", ["zlib", "snappy", "zstd", "lz4", "lzo",
+                                  "truncated"])
+def test_corrupt_chunk_raises(kind):
+    """Every codec reports a chunk that does not decompress as
+    CorruptChunk, and so does a chunk header whose length runs past
+    the end of the stream (a 100-byte original chunk holding 10)."""
+    from orc_spark.codecs import compression
+    if kind == "truncated":
+        framed = compression._header(100, True) + b"y" * 10
+        codec = "zlib"
+    else:
+        framed = compression._header(8, False) + b"\xff" * 8
+        codec = kind
+    with pytest.raises(compression.CorruptChunk):
+        compression.decompress(framed, codec)
+
+
+def _planted_corrupt_snappy(tmp_path, column: str = "ints") -> str:
     """A two-stripe snappy .orc file whose stripe 1 holds one corrupt
-    snappy chunk (overlong length varint)."""
+    snappy chunk (overlong length varint): ``ints`` holds an int and a
+    string column, ``decimal`` one decimal(10,2) column."""
+    from decimal import Decimal
     from orc_spark.codecs import compression
     from orc_spark.sources import orcwriter
     from orc_spark.sources.orcfile import ORCFile
     n = 2000
-    tbl = pa.table({"v": pa.array(np.arange(n)),
-                    "s": pa.array([f"payload-{i % 7}-" * 6
-                                   for i in range(n)])})
+    if column == "decimal":
+        tbl = pa.table({"d": pa.array(
+            [Decimal(f"{i % 7}2345678.{i % 100:02d}") for i in range(n)],
+            pa.decimal128(10, 2))})
+    else:
+        tbl = pa.table({"v": pa.array(np.arange(n)),
+                        "s": pa.array([f"payload-{i % 7}-" * 6
+                                       for i in range(n)])})
     p = str(tmp_path / "bad.orc")
     orcwriter.write_orc(tbl, p, codec="snappy", stripe_rows=1000)
     f = ORCFile(p)
@@ -238,16 +262,18 @@ def test_snappy_corrupt_chunk_skip_and_audit(spark, tmp_path):
     assert "snappy" in errs[0]["error"]
 
 
-def test_corrupt_chunk_decompressed_once(tmp_path, monkeypatch):
+@pytest.mark.parametrize("column", ["ints", "decimal"])
+def test_corrupt_chunk_decompressed_once(tmp_path, monkeypatch, column):
     """A chunk that does not decompress fails its stripe after ONE
-    decompression attempt: the column fast path re-raises
-    CorruptChunk instead of sending the column to the row path, which
-    would decompress the same bytes and fail the same way."""
+    decompression attempt: the column fast path (the decimal build
+    too) re-raises CorruptChunk instead of sending the column to the
+    row path, which would decompress the same bytes and fail the same
+    way."""
     from orc_spark import orctypes
     from orc_spark.codecs import compression
     from orc_spark.sources import orcscan
     from orc_spark.sources.orcfile import ORCFile
-    p = _planted_corrupt_snappy(tmp_path)
+    p = _planted_corrupt_snappy(tmp_path, column)
     real = compression._snappy_decompress
     failed = []
 

@@ -42,24 +42,56 @@ def test_write_read_own_reader(token_table, tmp_path, codec):
         assert rows[i]["doc_id"] == f"doc-{i:012d}"
 
 
-@pytest.mark.parametrize("values", [
-    pytest.param([["cc", "wiki", "books"][i % 3] for i in range(3000)],
-                 id="dictionary"),
-    pytest.param([f"doc-{i:012d}" for i in range(3000)], id="direct"),
-])
-def test_string_streams_match_stripe_table(tmp_path, values):
-    # one string codec: the stripe table and a one-stride .orc file
-    # carry byte-identical uncompressed string streams
-    arr = pa.array([None if i % 13 == 0 else v
-                    for i, v in enumerate(values)])
+def _leaf(typ: str):
+    """(spec type, Arrow array) for one leaf kind of the parity test:
+    3000 rows with a null every 13th, one stride of a .orc file."""
+    from decimal import Decimal
+    n = 3000
+    rng = np.random.default_rng(5)
+    nul = lambda vals: [None if i % 13 == 0 else v  # noqa: E731
+                        for i, v in enumerate(vals)]
+    if typ == "bigint":     # below INT_DICT_MIN_VALUES: plain RLE v2
+        vals = rng.integers(-2**40, 2**40, n).tolist()
+        return typ, pa.array(nul(vals), pa.int64())
+    if typ == "double":
+        vals = rng.normal(size=n).tolist()
+        vals[5] = float("nan")
+        return typ, pa.array(nul(vals), pa.float64())
+    if typ == "boolean":
+        return typ, pa.array(nul((rng.random(n) < 0.3).tolist()))
+    if typ == "date":
+        return typ, pa.array(nul(rng.integers(-9000, 30000, n).tolist()),
+                             pa.int32()).cast(pa.date32())
+    if typ == "decimal(10,2)":
+        vals = [Decimal(f"{m}E-2") for m in
+                rng.integers(-10**10 + 1, 10**10, n).tolist()]
+        return typ, pa.array(nul(vals), pa.decimal128(10, 2))
+    if typ == "decimal(38,6)":      # mantissas above 2^63
+        vals = [Decimal(f"{int(m) * 10**20 + 7}E-6") for m in
+                rng.integers(-10**17, 10**17, n).tolist()]
+        return typ, pa.array(nul(vals), pa.decimal128(38, 6))
+    words = (["cc", "wiki", "books"][i % 3] for i in range(n))
+    if typ == "string-direct":
+        words = (f"doc-{i:012d}" for i in range(n))
+    return "string", pa.array(nul(list(words)))
+
+
+@pytest.mark.parametrize("leaf", [
+    "bigint", "double", "boolean", "date", "decimal(10,2)",
+    "decimal(38,6)", "string-dictionary", "string-direct"])
+def test_leaf_streams_match_stripe_table(tmp_path, leaf):
+    # one leaf kernel per type: the stripe table and a one-stride .orc
+    # file carry byte-identical uncompressed streams and encodings
+    typ, arr = _leaf(leaf)
     encoding, streams, _ = stripe.encode_column(
-        arr, stripe.ColumnSpec("s", "string"))
-    path = str(tmp_path / "s.orc")
-    orcwriter.write_orc(pa.table({"s": arr}), path, codec="none")
+        arr, stripe.ColumnSpec("c", typ))
+    path = str(tmp_path / "c.orc")
+    orcwriter.write_orc(pa.table({"c": arr}), path, codec="none")
     f = orcfile.ORCFile(path)
     f._load_stripe_directory(0)
     assert f.encodings[1] == encoding
-    for kind in ("PRESENT", "DATA", "LENGTH", "DICTIONARY_DATA"):
+    for kind in ("PRESENT", "DATA", "LENGTH", "DICTIONARY_DATA",
+                 "SECONDARY"):
         assert f._stream(1, kind) == streams.get(kind), kind
 
 

@@ -444,12 +444,50 @@ def test_decimal_negative_scale_renders_exactly():
     InvalidOperation from a malformed 'E--2' literal."""
     from decimal import Decimal
     from orc_spark.codecs import decimal as dec_codec
-    streams = dec_codec.encode_decimals([15, -3], [-2, -1])
-    from orc_spark.sources.orcfile import ORCFile  # noqa: F401
-    # replicate the reader's rendering directly
-    mants = dec_codec.decode_mantissas(streams["DATA"], 2)
     from orc_spark.codecs import rle2
-    scales = rle2.decode(streams["SECONDARY"], 2, signed=True)
+    data = dec_codec.encode_mantissas([15, -3])
+    secondary = rle2.encode(np.array([-2, -1]), signed=True)
+    # replicate the reader's rendering directly
+    mants = dec_codec.decode_mantissas(data, 2)
+    scales = rle2.decode(secondary, 2, signed=True)
     vals = [Decimal(f"{m}E{-int(s)}")
             for m, s in zip(mants, scales.tolist())]
     assert vals == [Decimal(1500), Decimal(-30)]
+    # the whole-array build rescales them to the declared scale
+    got = dec_codec.to_arrow(data, scales, 10, 0).to_pylist()
+    assert got == [Decimal(1500), Decimal(-30)]
+
+
+@pytest.mark.parametrize("unit", ["s", "ms", "us", "ns"])
+def test_timestamp_units_roundtrip(unit):
+    """A timestamp column of any Arrow unit round-trips through the
+    stripe table, floored to microseconds (its decode unit); values
+    straddle 1970 so the floor is exercised on both sides."""
+    specs = stripe.parse_schema([("ts", "timestamp")])
+    mul, div = {"s": (10**6, 1), "ms": (10**3, 1), "us": (1, 1),
+                "ns": (1, 1000)}[unit]
+    base = {"s": 1577934245, "ms": 1577934245123,
+            "us": 1577934245123456, "ns": 1577934245123456789}[unit]
+    raw = [base, -base, 0, -1, 1, None]
+    batch = pa.table({"ts": pa.array(raw, pa.timestamp(unit))})
+    row = stripe.encode_stripe(batch, specs)
+    got = stripe.decode_stripe(row, specs).column("ts")
+    assert got.type == pa.timestamp("us")
+    want = [None if v is None else v * mul // div for v in raw]
+    assert got.cast(pa.int64()).to_pylist() == want
+
+
+def test_strided_nan_sum_absent():
+    """ORC-541: a NaN keeps the double sum out of the stats of its
+    stride AND of the stripe rollup, whole or strided."""
+    specs = stripe.parse_schema([("x", "double")])
+    vals = [1.0] * 16 + [float("nan")] + [2.0] * 15
+    batch = pa.table({"x": pa.array(vals)})
+    whole = json.loads(stripe.encode_stripe(batch, specs)["stats"])["x"]
+    strided = json.loads(stripe.encode_stripe(
+        batch, specs, stride_rows=16)["stats"])
+    assert "sum" not in whole
+    assert "sum" not in strided["x"]
+    per_stride = [s["x"] for s in strided["_strides"]["stats"]]
+    assert per_stride[0]["sum"] == 16.0 and "sum" not in per_stride[1]
+    assert (strided["x"]["min"], strided["x"]["max"]) == (1.0, 2.0)

@@ -200,6 +200,9 @@ class ORCFile:
         self.row_index_stride = footer.get(8, [0])[0]
         self.file_statistics = [parse_stats(parse_message(b))
                                 for b in footer.get(7, [])]
+        # per stripe, per column: the raw ColumnStatistics messages
+        # (a stripe copy carries them verbatim) and their parse
+        self.raw_stripe_statistics: list[list[bytes]] = []
         self.stripe_statistics: list[list[dict]] = []
         if meta_len:
             meta = parse_message(self._decomp(
@@ -207,6 +210,7 @@ class ORCFile:
                           foot_end - footer_len]))
             for ss in meta.get(1, []):
                 cols = parse_message(ss).get(1, [])
+                self.raw_stripe_statistics.append(cols)
                 self.stripe_statistics.append(
                     [parse_stats(parse_message(c)) for c in cols])
 

@@ -1079,21 +1079,6 @@ def table_history(spark, table: str):
 # ------------------------------------------------------------------
 
 
-def _merge_stats(group: list[dict]) -> dict:
-    out: dict = {}
-    for e in group:
-        for col, st in (e.get("stats") or {}).items():
-            a = out.setdefault(col, {"n": 0, "has_null": False})
-            a["n"] += st.get("n", 0)
-            a["has_null"] = a["has_null"] or st.get("has_null", False)
-            if "min" in st:
-                a["min"] = st["min"] if "min" not in a \
-                    else min(a["min"], st["min"])
-                a["max"] = st["max"] if "max" not in a \
-                    else max(a["max"], st["max"])
-    return out
-
-
 def compact_table(spark, table: str,
                   target_bytes: int = 256 << 20) -> dict:
     """Zero-recode compaction as a ``replace`` snapshot: current
@@ -1152,22 +1137,25 @@ def compact_table(spark, table: str,
 
     def kern(it):
         import pandas as pd
+
+        from .orcfile import ORCFile
         for pdf in it:
-            gids, names, nbytes = [], [], []
+            gids, names, nbytes, stats = [], [], [], []
             for gid, grp in zip(pdf["gid"], pdf["files"]):
                 name = f"compact-{job}-{int(gid):05d}.orc"
-                merge_orc_files(list(grp),
-                                os.path.join(data_dir, name))
+                path = os.path.join(data_dir, name)
+                merge_orc_files(list(grp), path)
                 gids.append(int(gid))
                 names.append(name)
-                nbytes.append(os.path.getsize(
-                    os.path.join(data_dir, name)))
+                nbytes.append(os.path.getsize(path))
+                # the manifest states what the merged footer states
+                stats.append(json.dumps(_entry_stats(ORCFile(path))))
             yield pd.DataFrame({"gid": gids, "name": names,
-                                "bytes": nbytes})
+                                "bytes": nbytes, "stats": stats})
 
-    got = {r["gid"]: r for r in
-           gdf.mapInPandas(kern, "gid int, name string, bytes long")
-           .collect()}
+    got = {r["gid"]: r for r in gdf.mapInPandas(
+        kern, "gid int, name string, bytes long, stats string")
+        .collect()}
     merged_entries = []
     for i, g in enumerate(groups):
         r = got[i]
@@ -1175,7 +1163,7 @@ def compact_table(spark, table: str,
               "n_rows": sum(e["n_rows"] for e in g),
               "bytes": r["bytes"],
               "type": g[0]["type"], "codec": g[0]["codec"],
-              "stats": _merge_stats(g)}
+              "stats": json.loads(r["stats"])}
         if g[0].get("partition") is not None:
             me["partition"] = g[0]["partition"]
         merged_entries.append(me)
@@ -1360,27 +1348,18 @@ def rewrite_zorder(spark, table: str, by: list[str],
 def _bloom_columns_of(f) -> list[str]:
     """Top-level columns carrying BLOOM_FILTER_UTF8 streams in the
     first stripe (writer emits blooms uniformly, so one stripe's
-    directory is representative) — a delete rewrite preserves them."""
-    from .orcfile import STREAM_KINDS, parse_message
-    if not f.stripes:
-        return []
+    directory is representative) — a copy-on-write rewrite keeps
+    them."""
     root = f.types[0]
-    if root.kind != "struct":
+    if not f.stripes or root.kind != "struct":
         return []
-    names = {cid: fn for fn, cid in zip(root.field_names,
-                                        root.children)}
-    info = f.stripes[0]
-    sf_start = info.get(1, [0])[0] + info.get(2, [0])[0] + \
-        info.get(3, [0])[0]
-    sfooter = parse_message(f._decomp(
-        f.data[sf_start:sf_start + info.get(4, [0])[0]]))
+    names = dict(zip(root.children, root.field_names))
     out = []
-    for s in sfooter.get(1, []):
-        sm = parse_message(s)
-        if STREAM_KINDS[sm.get(1, [0])[0]] == "BLOOM_FILTER_UTF8":
-            fn = names.get(sm.get(2, [0])[0])
-            if fn is not None and fn not in out:
-                out.append(fn)
+    for kind, cid, _, _ in f._stripe_footer(0)[3]:
+        fn = names.get(cid)
+        if kind == "BLOOM_FILTER_UTF8" and fn is not None \
+                and fn not in out:
+            out.append(fn)
     return out
 
 
@@ -1407,69 +1386,6 @@ def _classify_delete_file(path: str, preds: list[tuple]) -> str:
     if classes <= {"all"}:
         return "drop"
     return "rewrite"
-
-
-def _rewrite_delete_file(path: str, preds: list[tuple],
-                         data_dir: str, job: str, idx: int) -> dict:
-    """Copy-on-write rewrite of one boundary file: survivors (rows
-    where the predicate is FALSE or NULL — SQL DELETE semantics)
-    re-encode into a new file through the same kernels the scan
-    uses, exact for every type we write (ns timestamps via the r5
-    write-side nanos path, decimals, nested); codec, row-index
-    stride, char/varchar footer types and bloom columns are
-    preserved.  All-match stripes skip without decoding; no-match
-    stripes byte-decode once and re-encode unmasked."""
-    import pyarrow.compute as pc
-
-    from .. import orctypes
-    from .orcfile import ORCFile
-    from .orcscan import _ScanContext
-    from .orcstats import _file_pred_state, _stripe_disposition
-    from .orcwriter import DEFAULT_ROW_INDEX_STRIDE, ORCFileWriter
-    f = ORCFile(path)
-    state = _file_pred_state(f, preds)
-    assert state is not None  # classifier said rewrite
-    norm, paths, nodes = state
-    root = orctypes.type_from_types(f.types)
-    if root.kind != "struct":
-        raise ValueError(
-            f"orc_table: delete rewrite requires struct-root files, "
-            f"got {root.orc_string()!r} in {path}")
-    ctx = _ScanContext(root, [], ts_nanos=True)
-    name = f"delete-{job}-{idx:05d}.orc"
-    new_path = os.path.join(data_dir, name)
-    writer = None
-    n_out = 0
-    for si in range(len(f.stripes)):
-        kind, v = _stripe_disposition(f, si, norm, paths, nodes)
-        if kind == "all":
-            continue  # every row deleted: skip the whole stripe
-        batch = ctx.decode_stripe(f, si)
-        if kind == "mask":
-            # DELETE WHERE p removes rows where p is TRUE; NULL
-            # predicate rows survive (fill_null after invert)
-            keep = pc.fill_null(pc.invert(v), True)
-            batch = batch.filter(keep)
-        if batch.num_rows == 0:
-            continue
-        if writer is None:
-            writer = ORCFileWriter(
-                new_path, codec=f.compression,
-                row_index_stride=(f.row_index_stride or
-                                  DEFAULT_ROW_INDEX_STRIDE),
-                orc_types=root.orc_overrides(),
-                bloom_columns=_bloom_columns_of(f))
-        writer.write_batch(batch)
-        n_out += batch.num_rows
-    if writer is None:
-        return {"action": "drop"}  # boundary stripes had 0 survivors
-    writer.close()
-    nf = ORCFile(new_path)
-    return {"action": "rewrite", "name": name, "n_rows": n_out,
-            "bytes": os.path.getsize(new_path),
-            "type": orctypes.type_from_types(nf.types).orc_string(),
-            "codec": f.compression,
-            "stats": _entry_stats(nf)}
 
 
 def _apply_set(batch, mask, set_spec):
@@ -1507,89 +1423,295 @@ def _apply_set(batch, mask, set_spec):
     return batch
 
 
-def _rewrite_update_file(path: str, preds: list[tuple], set_spec,
-                         data_dir: str, job: str, idx: int,
-                         declared: dict | None = None) -> dict:
-    """Copy-on-write UPDATE of one data file: rows where the
-    predicate is TRUE take the new values (SQL semantics — NULL
-    predicate rows do NOT update); everything re-encodes through the
-    same exact kernels as the delete rewrite (ns timestamps,
-    decimals, preserved codec / stride / char overrides / blooms).
-    All-match stripes update whole-column (no mask materialized);
-    no-match stripes re-encode unchanged."""
-    import pyarrow.compute as pc
+# ------------------------------------------------------------------
+# copy-on-write DML: per-stripe plans, one kernel, one driver flow
+# ------------------------------------------------------------------
+#
+# An operation supplies ``plan(f) -> (actions, counts)`` for an open
+# ORCFile ``f``: one action per stripe — ("copy", None) keeps its
+# rows, ("drop", None) removes them, ("filter", keep_mask) keeps the
+# masked rows, ("set", mask) applies the UPDATE assignments to the
+# masked rows (None = every row).  ``counts["n_matched"]`` is the
+# number of rows the operation hit.
 
-    from .. import orctypes
+
+def _ns_type(t):
+    """``t`` with every timestamp typed timestamp[ns]: the writer's
+    type for the scan's ``ts_nanos`` wall-clock nanos, which keeps
+    the full fraction and the column's ORC kind."""
+    import pyarrow as pa
+    if pa.types.is_timestamp(t):
+        return pa.timestamp("ns")
+    if pa.types.is_list(t):
+        return pa.list_(_ns_type(t.value_type))
+    if pa.types.is_map(t):
+        return pa.map_(_ns_type(t.key_type), _ns_type(t.item_type))
+    if pa.types.is_struct(t):
+        return pa.struct([(fl.name, _ns_type(fl.type)) for fl in t])
+    return t
+
+
+def _pred_plan(preds: list[tuple], update: bool):
+    """DELETE (``update`` False) or UPDATE plan from each stripe's
+    disposition against ``preds`` (empty: every row matches).  Stats
+    decide no-match stripes (copy) and all-match stripes (drop / set
+    whole-column) without a decode; boundary stripes decode only the
+    predicate columns for their mask.  SQL semantics: a NULL
+    predicate neither deletes nor updates its row."""
+    def plan(f):
+        import pyarrow.compute as pc
+
+        from .orcstats import _file_pred_state, _stripe_disposition
+        state = _file_pred_state(f, preds) if preds else None
+        acts, n_matched = [], 0
+        for si, info in enumerate(f.stripes):
+            if not preds:
+                kind, v = "all", None
+            elif state is None:
+                # exact int rewrite proved no row can match
+                kind, v = "none", None
+            else:
+                kind, v = _stripe_disposition(f, si, *state)
+            if kind == "none":
+                acts.append(("copy", None))
+                continue
+            if kind == "all":
+                mask = None
+                n_matched += info.get(5, [0])[0]
+            else:
+                mask = pc.fill_null(v, False)
+                n_matched += pc.sum(mask).as_py() or 0
+            if update:
+                acts.append(("set", mask))
+            else:
+                acts.append(("drop", None) if mask is None
+                            else ("filter", pc.invert(mask)))
+        return acts, {"n_matched": n_matched}
+    return plan
+
+
+def _merge_plan(key: str, keys):
+    """MERGE plan: a key-column-only pre-pass (sibling streams never
+    decompress) matches each stripe's keys against the broadcast
+    keyset ``keys``.  A stripe with no match copies, an all-match
+    stripe drops, the rest filter.  NULL target keys never match; a
+    file that predates the key column matches nothing."""
+    def plan(f):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from .orcscan import _column_arrow, orc_arrow
+        root = orctypes.type_from_types(f.types)
+        if root.kind != "struct" or key not in root.field_names:
+            return [("copy", None)] * len(f.stripes), {"n_matched": 0}
+        ki = root.field_names.index(key)
+        node, cid = root.children[ki], f.types[0].children[ki]
+        ft = _ns_type(orc_arrow(node))
+        value_set = pa.array(keys.value).cast(ft)
+        acts, n_matched = [], 0
+        for si in range(len(f.stripes)):
+            n_rows = f._load_stripe_directory(si)
+            col = _column_arrow(f, [cid], n_rows, node,
+                                orc_arrow(node, True), True).cast(ft)
+            m = pc.fill_null(pc.is_in(col, value_set=value_set), False)
+            n = pc.sum(m).as_py() or 0
+            n_matched += n
+            acts.append(("copy", None) if n == 0 else
+                        ("drop", None) if n == n_rows else
+                        ("filter", pc.invert(m)))
+        return acts, {"n_matched": n_matched}
+    return plan
+
+
+def _cow_rewrite(path: str, plan, name: str, data_dir: str,
+                 set_spec: dict | None = None,
+                 declared: dict | None = None) -> dict:
+    """The one copy-on-write kernel: rewrite the data file at
+    ``path`` into ``data_dir/name`` by ``plan`` (see above).
+
+    A "copy" stripe moves byte for byte
+    (``ORCFileWriter.append_stripe``) when the writer's output type
+    tree, codec and row-index stride equal the source's; otherwise —
+    an UPDATE that null-fills an ADDed column, a union column (it
+    decodes as a struct), a source without a row index — it decodes
+    and re-encodes unchanged.  Re-encoded stripes share the writer's
+    stripe buffer.  Codec, stride, char/varchar footer types (SET
+    columns the file predates take their declared type) and bloom
+    columns carry over.  Returns the new entry's fields, or action
+    ``keep`` (every stripe copies: nothing to rewrite) / ``drop`` (no
+    row survives), each with the plan's counts."""
+    import pyarrow as pa
+
     from .orcfile import ORCFile
-    from .orcscan import _ScanContext
-    from .orcstats import _file_pred_state, _stripe_disposition
-    from .orcwriter import DEFAULT_ROW_INDEX_STRIDE, ORCFileWriter
+    from .orcscan import _ScanContext, orc_arrow
+    from .orcwriter import (DEFAULT_ROW_INDEX_STRIDE, ORCFileWriter,
+                            output_tree)
     f = ORCFile(path)
-    state = _file_pred_state(f, preds) if preds else None
-    if preds and state is None:
-        # exact int-rewrite proved no row matches: nothing to update
-        return {"action": "keep"}
+    acts, counts = plan(f)
+    kinds = {k for k, _ in acts}
+    if kinds <= {"copy"}:
+        return {"action": "keep", **counts}
+    if kinds <= {"drop"}:
+        return {"action": "drop", **counts}
     root = orctypes.type_from_types(f.types)
     if root.kind != "struct":
         raise ValueError(
-            f"orc_table: update rewrite requires struct-root files, "
-            f"got {root.orc_string()!r} in {path}")
-    ctx = _ScanContext(root, [], ts_nanos=True)
-    # SET columns physically absent from this file's footer type (the
-    # column was ADDed after the file was written): null-fill them
-    # into every decoded batch under their DECLARED type before
-    # _apply_set — the backfill-after-ADD-COLUMN case.  Without this,
-    # _apply_set's get_field_index returned -1 and set_column raised
-    # ArrowInvalid mid-executor (ADVICE r5 finding #1).
-    import pyarrow as pa
-    fill_types = {}
-    for c in set_spec:
+            f"orc_table: copy-on-write rewrite requires struct-root "
+            f"files, got {root.orc_string()!r} in {path}")
+    fill = {}
+    for c in set_spec or {}:
         if c not in root.field_names:
-            if not declared or c not in declared:
+            if c not in (declared or {}):
                 raise ValueError(
                     f"orc_table: update column {c!r} missing from "
                     f"data file {path} and no declared type given")
-            fill_types[c] = \
-                orctypes.parse_orc_type(declared[c]).to_arrow()
-    name = f"update-{job}-{idx:05d}.orc"
+            fill[c] = orctypes.parse_orc_type(declared[c])
+    out = orctypes.OrcType("struct", root.children + list(fill.values()),
+                           root.field_names + list(fill))
+    schema = pa.schema([(fn, _ns_type(orc_arrow(c)))
+                        for fn, c in zip(out.field_names, out.children)])
+    overrides = out.orc_overrides()
+    stride = f.row_index_stride or DEFAULT_ROW_INDEX_STRIDE
+    copyable = (output_tree(schema, overrides).orc_string() ==
+                root.orc_string() and stride == f.row_index_stride
+                and len(f.raw_stripe_statistics) == len(f.stripes))
+    ctx = _ScanContext(root, [], ts_nanos=True)
     new_path = os.path.join(data_dir, name)
-    writer = ORCFileWriter(
-        new_path, codec=f.compression,
-        row_index_stride=(f.row_index_stride or
-                          DEFAULT_ROW_INDEX_STRIDE),
-        orc_types=root.orc_overrides(),
-        bloom_columns=_bloom_columns_of(f))
-    n_upd = 0
-    for si in range(len(f.stripes)):
-        if preds:
-            norm, paths, nodes = state
-            kind, v = _stripe_disposition(f, si, norm, paths, nodes)
-        else:
-            kind, v = "all", None  # unpredicated UPDATE: every row
-        batch = ctx.decode_stripe(f, si)
-        for c, at in fill_types.items():
-            batch = batch.append_column(c, pa.nulls(batch.num_rows, at))
-        if kind == "all":
-            batch = _apply_set(batch, None, set_spec)
-            n_upd += batch.num_rows
-        elif kind == "mask":
-            mask = pc.fill_null(v, False)
-            batch = _apply_set(batch, mask, set_spec)
-            n_upd += pc.sum(mask).as_py() or 0
-        # kind == "none": write through unchanged
-        if batch.num_rows:
-            writer.write_batch(batch)
-    writer.close()
+    with ORCFileWriter(new_path, codec=f.compression,
+                       row_index_stride=stride, orc_types=overrides,
+                       bloom_columns=_bloom_columns_of(f)) as w:
+        for si, (kind, mask) in enumerate(acts):
+            if kind == "drop":
+                continue
+            if kind == "copy" and copyable:
+                w.append_stripe(f, si)
+                continue
+            batch = ctx.decode_stripe(f, si)
+            for c in fill:
+                batch = batch.append_column(
+                    c, pa.nulls(batch.num_rows, schema.field(c).type))
+            batch = batch.cast(schema)
+            if kind == "filter":
+                batch = batch.filter(mask)
+            elif kind == "set":
+                batch = _apply_set(batch, mask, set_spec)
+            if batch.num_rows:
+                w.write_batch(batch)
+    if w.tree is None:
+        return {"action": "drop", **counts}
     nf = ORCFile(new_path)
-    return {"action": "rewrite", "name": name,
-            "n_rows": nf.n_rows, "n_updated": n_upd,
+    return {"action": "rewrite", "name": name, "n_rows": nf.n_rows,
             "bytes": os.path.getsize(new_path),
             "type": orctypes.type_from_types(nf.types).orc_string(),
-            "codec": f.compression, "stats": _entry_stats(nf)}
+            "codec": f.compression, "stats": _entry_stats(nf),
+            **counts}
 
 
 # above this many candidate files, classification itself distributes
 _DRIVER_CLASSIFY_MAX_FILES = 64
+
+
+def _classify(spark, paths: list[str], preds: list[tuple]) -> list[str]:
+    """``_classify_delete_file`` of every candidate path: on the
+    driver up to ``_DRIVER_CLASSIFY_MAX_FILES`` files, in executor
+    tasks above that."""
+    if len(paths) <= _DRIVER_CLASSIFY_MAX_FILES:
+        return [_classify_delete_file(p, preds) for p in paths]
+    from .orcscan import tasks_df
+    cdf = tasks_df(spark, _idx_paths(paths), min(len(paths), 256))
+    pr = list(preds)
+
+    def ckern(it):
+        import pandas as pd
+        for pdf in it:
+            yield pd.DataFrame(
+                [(int(i), _classify_delete_file(p, pr))
+                 for i, p in zip(pdf["idx"], pdf["path"])],
+                columns=["idx", "cls"])
+
+    got = {r["idx"]: r["cls"] for r in cdf.mapInPandas(
+        ckern, "idx int, cls string").collect()}
+    return [got[i] for i in range(len(paths))]
+
+
+def _cow_dml(spark, table: str, base: dict, operation: str,
+             untouched: list[dict], cands: list[dict], plan, summary,
+             preds: list[tuple] = (),
+             drop_matched: bool = False, set_spec: dict | None = None,
+             declared: dict | None = None, added: list[dict] = (),
+             schema: str | None = None) -> dict:
+    """The one driver flow of DELETE, UPDATE and broadcast MERGE:
+
+    1. with ``preds``, candidate files classify from statistics alone
+       (``_classify``): no-match files stay, and all-match files
+       leave the manifest without a task when ``drop_matched``;
+    2. every other candidate rewrites in one task of ONE job
+       (``_cow_rewrite`` under ``plan``);
+    3. rewritten entries keep their source file's partition tuple;
+    4. ``summary(n_matched, dropped, rewritten, entries)`` gives the
+       snapshot's summary counts, or None for a no-op (the base
+       snapshot returns); ``added`` entries join and the new file
+       set commits as ``operation`` (replace semantics: a concurrent
+       commit raises CommitConflict)."""
+    from .orcscan import tasks_df
+    paths = [os.path.join(table, e["path"]) for e in cands]
+    classes = _classify(spark, paths, preds) if preds \
+        else ["rewrite"] * len(cands)
+    new_entries = list(untouched)
+    todo: list[tuple[dict, str]] = []
+    dropped = 0
+    for e, p, cls in zip(cands, paths, classes):
+        if cls == "keep":
+            new_entries.append(e)
+        elif cls == "drop" and drop_matched:
+            dropped += 1
+        else:
+            todo.append((e, p))
+    results = []
+    if todo:
+        prefix = {"merge": "merge-cow"}.get(operation, operation)
+        job = uuid.uuid4().hex[:12]
+        data_dir = os.path.join(table, _DATA)
+        rdf = tasks_df(spark, _idx_paths([p for _, p in todo]),
+                       len(todo))
+
+        def rkern(it):
+            import pandas as pd
+            for pdf in it:
+                yield pd.DataFrame(
+                    [(int(i), json.dumps(_cow_rewrite(
+                        p, plan, f"{prefix}-{job}-{int(i):05d}.orc",
+                        data_dir, set_spec, declared)))
+                     for i, p in zip(pdf["idx"], pdf["path"])],
+                    columns=["idx", "res"])
+
+        got = {r["idx"]: json.loads(r["res"]) for r in rdf.mapInPandas(
+            rkern, "idx int, res string").collect()}
+        results = [got[i] for i in range(len(todo))]
+    rewritten = 0
+    for (src, _), res in zip(todo, results):
+        if res["action"] == "keep":
+            new_entries.append(src)
+        elif res["action"] == "drop":
+            dropped += 1
+        else:
+            rewritten += 1
+            ne = {"path": f"{_DATA}/{res['name']}",
+                  **{k: res[k] for k in ("n_rows", "bytes", "type",
+                                         "codec", "stats")}}
+            if src.get("partition") is not None:
+                ne["partition"] = src["partition"]
+            new_entries.append(ne)
+    extra = summary(sum(r["n_matched"] for r in results), dropped,
+                    rewritten, new_entries)
+    if extra is None:
+        return base
+    new_entries.extend(added)
+    manifest = _write_manifest(table, new_entries) if new_entries \
+        else None
+    return _commit_retrying(table, base, operation, manifest,
+                            new_entries, schema or base["schema"],
+                            extra=extra)
 
 
 def delete_from(spark, table: str, predicate) -> dict:
@@ -1605,7 +1727,8 @@ def delete_from(spark, table: str, predicate) -> dict:
        manifest without decoding — a partition-aligned delete is
        metadata-only and never launches a rewrite;
     3. only true boundary files rewrite, one executor task each —
-       decoding predicate columns for the mask and re-encoding
+       stripes the predicate cannot touch copy byte for byte, and
+       only boundary stripes decode for the mask and re-encode their
        survivors exactly (SQL semantics: NULL-predicate rows
        survive).
 
@@ -1614,7 +1737,7 @@ def delete_from(spark, table: str, predicate) -> dict:
     snapshots still read every pre-delete row; run
     ``expire_snapshots`` to reclaim the space.  Returns the new
     snapshot."""
-    from .orcscan import _pred_list, tasks_df
+    from .orcscan import _pred_list
     preds = _pred_list(predicate)
     if not preds:
         raise ValueError(
@@ -1628,81 +1751,17 @@ def delete_from(spark, table: str, predicate) -> dict:
     untouched = [e for e in entries
                  if not _entry_survives(e, preds, spec)]
     cands = [e for e in entries if _entry_survives(e, preds, spec)]
-    if not cands:
-        return base  # no file can contain a matching row: no-op
-    paths = [os.path.join(table, e["path"]) for e in cands]
-    if len(cands) <= _DRIVER_CLASSIFY_MAX_FILES:
-        classes = [_classify_delete_file(p, preds) for p in paths]
-    else:
-        cdf = tasks_df(spark, _idx_paths(paths), min(len(paths), 256))
-        pr = list(preds)
 
-        def ckern(it):
-            import pandas as pd
-            for pdf in it:
-                yield pd.DataFrame(
-                    [(int(i), _classify_delete_file(p, pr))
-                     for i, p in zip(pdf["idx"], pdf["path"])],
-                    columns=["idx", "cls"])
+    def summary(n_matched, dropped, rewritten, new_entries):
+        if not (dropped or rewritten):
+            return None  # statistics proved nothing matched anywhere
+        return {"deleted_rows": base["summary"]["n_rows"] -
+                sum(e["n_rows"] for e in new_entries),
+                "dropped_files": dropped, "rewritten_files": rewritten}
 
-        got = {r["idx"]: r["cls"] for r in cdf.mapInPandas(
-            ckern, "idx int, cls string").collect()}
-        classes = [got[i] for i in range(len(paths))]
-    new_entries = list(untouched)
-    rewrites = []
-    rewrite_src = []  # original entries, aligned with `rewrites`
-    dropped = 0
-    for e, p, cls in zip(cands, paths, classes):
-        if cls == "keep":
-            new_entries.append(e)
-        elif cls == "drop":
-            dropped += 1
-        else:
-            rewrites.append(p)
-            rewrite_src.append(e)
-    if not dropped and not rewrites:
-        return base  # statistics proved nothing matched anywhere
-    rewritten = 0
-    if rewrites:
-        job = uuid.uuid4().hex[:12]
-        data_dir = os.path.join(table, _DATA)
-        rdf = tasks_df(spark, _idx_paths(rewrites), len(rewrites))
-        pr = list(preds)
-
-        def rkern(it):
-            import pandas as pd
-            for pdf in it:
-                out = []
-                for idx, p in zip(pdf["idx"], pdf["path"]):
-                    r = _rewrite_delete_file(p, pr, data_dir, job,
-                                             int(idx))
-                    out.append((int(idx), json.dumps(r)))
-                yield pd.DataFrame(out, columns=["idx", "res"])
-
-        for r in rdf.mapInPandas(rkern, "idx int, res string") \
-                .collect():
-            res = json.loads(r["res"])
-            if res["action"] == "drop":
-                dropped += 1
-                continue
-            rewritten += 1
-            ne = {"path": f"{_DATA}/{res['name']}",
-                  "n_rows": res["n_rows"], "bytes": res["bytes"],
-                  "type": res["type"], "codec": res["codec"],
-                  "stats": res["stats"]}
-            src = rewrite_src[r["idx"]]
-            if src.get("partition") is not None:
-                # survivors keep the original file's partition tuple
-                ne["partition"] = src["partition"]
-            new_entries.append(ne)
-    deleted = base["summary"]["n_rows"] - \
-        sum(e["n_rows"] for e in new_entries)
-    manifest = _write_manifest(table, new_entries) if new_entries \
-        else None
-    return _commit_retrying(
-        table, base, "delete", manifest, new_entries, base["schema"],
-        extra={"deleted_rows": deleted, "dropped_files": dropped,
-               "rewritten_files": rewritten})
+    return _cow_dml(spark, table, base, "delete", untouched, cands,
+                    _pred_plan(list(preds), update=False), summary,
+                    preds=preds, drop_matched=True)
 
 
 def update_table(spark, table: str, set: dict, predicate=None) -> dict:
@@ -1711,10 +1770,11 @@ def update_table(spark, table: str, set: dict, predicate=None) -> dict:
     UPDATE): manifest stats drop files that cannot contain a
     matching row driver-side, footer/stripe statistics classify the
     survivors without decoding, and only files that may contain a
-    matching row rewrite (one executor task each).  Unlike DELETE
-    there is no metadata-only fast path for all-match files — values
-    change, so an all-match file still rewrites, but whole-column
-    (no row mask is ever materialized for it).
+    matching row rewrite (one executor task each; their unmatched
+    stripes copy byte for byte).  Unlike DELETE there is no
+    metadata-only fast path for all-match files — values change, so
+    an all-match file still rewrites, but whole-column (no row mask
+    is ever materialized for it).
 
     ``set`` maps top-level column name → new value: a Python literal
     (constructed against the column's exact Arrow type — a bad
@@ -1726,7 +1786,7 @@ def update_table(spark, table: str, set: dict, predicate=None) -> dict:
     rewritten file keeps its manifest partition tuple, which would
     lie).  Commits with replace semantics; old snapshots still read
     pre-update values (time travel)."""
-    from .orcscan import _pred_list, tasks_df
+    from .orcscan import _pred_list
     if not set or not isinstance(set, dict):
         raise ValueError("orc_table: update_table requires a "
                          "non-empty set={col: value} dict")
@@ -1755,147 +1815,24 @@ def update_table(spark, table: str, set: dict, predicate=None) -> dict:
                  if _entry_survives(e, preds, spec)]
     else:
         untouched, cands = [], list(entries)
-    if not cands:
-        return base  # no file can contain a matching row: no-op
-    paths = [os.path.join(table, e["path"]) for e in cands]
-    if preds:
-        if len(cands) <= _DRIVER_CLASSIFY_MAX_FILES:
-            classes = [_classify_delete_file(p, preds)
-                       for p in paths]
-        else:
-            cdf = tasks_df(spark, _idx_paths(paths),
-                           min(len(paths), 256))
-            pr = list(preds)
-
-            def ckern(it):
-                import pandas as pd
-                for pdf in it:
-                    yield pd.DataFrame(
-                        [(int(i), _classify_delete_file(p, pr))
-                         for i, p in zip(pdf["idx"], pdf["path"])],
-                        columns=["idx", "cls"])
-
-            got = {r["idx"]: r["cls"] for r in cdf.mapInPandas(
-                ckern, "idx int, cls string").collect()}
-            classes = [got[i] for i in range(len(paths))]
-    else:
-        classes = ["rewrite"] * len(paths)
-    new_entries = list(untouched)
-    rewrites, rewrite_src = [], []
-    for e, p, cls in zip(cands, paths, classes):
-        if cls == "keep":
-            new_entries.append(e)
-        else:  # "drop" (all rows match) and "rewrite" both rewrite
-            rewrites.append(p)
-            rewrite_src.append(e)
-    if not rewrites:
-        return base  # statistics proved nothing matched anywhere
-    job = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(table, _DATA)
-    rdf = tasks_df(spark, _idx_paths(rewrites), len(rewrites))
-    pr, ss = list(preds), dict(set)
     # declared ORC type per SET column, for null-filling files whose
     # footer type predates an ADD COLUMN (backfill UPDATE)
     decl = {c: root.children[root.field_names.index(c)].orc_string()
             for c in set}
 
-    def rkern(it):
-        import pandas as pd
-        for pdf in it:
-            out = []
-            for idx, p in zip(pdf["idx"], pdf["path"]):
-                r = _rewrite_update_file(p, pr, ss, data_dir, job,
-                                         int(idx), declared=decl)
-                out.append((int(idx), json.dumps(r)))
-            yield pd.DataFrame(out, columns=["idx", "res"])
+    def summary(n_matched, dropped, rewritten, new_entries):
+        if not rewritten:
+            return None  # statistics proved nothing matched anywhere
+        return {"updated_rows": n_matched, "rewritten_files": rewritten}
 
-    updated = 0
-    rewritten = 0
-    for r in rdf.mapInPandas(rkern, "idx int, res string").collect():
-        res = json.loads(r["res"])
-        src = rewrite_src[r["idx"]]
-        if res["action"] == "keep":
-            new_entries.append(src)
-            continue
-        rewritten += 1
-        updated += res["n_updated"]
-        ne = {"path": f"{_DATA}/{res['name']}",
-              "n_rows": res["n_rows"], "bytes": res["bytes"],
-              "type": res["type"], "codec": res["codec"],
-              "stats": res["stats"]}
-        if src.get("partition") is not None:
-            ne["partition"] = src["partition"]
-        new_entries.append(ne)
-    if not rewritten:
-        return base
-    manifest = _write_manifest(table, new_entries)
-    return _commit_retrying(
-        table, base, "update", manifest, new_entries, base["schema"],
-        extra={"updated_rows": updated,
-               "rewritten_files": rewritten})
+    return _cow_dml(spark, table, base, "update", untouched, cands,
+                    _pred_plan(list(preds), update=True), summary,
+                    preds=preds, set_spec=dict(set), declared=decl)
 
 
 # above this many distinct source keys, MERGE switches from the
 # broadcast-keyset copy-on-write path to a full shuffle rewrite
 _MERGE_MAX_KEYS = 4_000_000
-
-
-def _rewrite_merge_file(path: str, key: str, keys, data_dir: str,
-                        job: str, idx: int) -> dict:
-    """Two-pass copy-on-write rewrite for MERGE.  Pass 1 decodes
-    ONLY the key column (projected scan context — sibling streams
-    never decompress) and computes per-stripe match masks: a file
-    whose stats overlapped the key range but contains no actual key
-    keeps without any rewrite, and an all-match file drops from the
-    manifest.  Pass 2 re-encodes survivors through the same exact
-    kernels as the delete rewrite.  NULL target keys never match."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from .. import orctypes
-    from .orcfile import ORCFile
-    from .orcscan import _ScanContext
-    from .orcwriter import DEFAULT_ROW_INDEX_STRIDE, ORCFileWriter
-    f = ORCFile(path)
-    root = orctypes.type_from_types(f.types)
-    if root.kind != "struct" or key not in root.field_names:
-        return {"action": "keep"}  # evolved file without the key col
-    ki = root.field_names.index(key)
-    kroot = orctypes.OrcType("struct", [root.children[ki]], [key])
-    kctx = _ScanContext(kroot, [], ts_nanos=True)
-    kast = pa.array(keys).cast(kctx.arrow_schema.field(0).type)
-    masks, matched = [], 0
-    for si in range(len(f.stripes)):
-        col = kctx.decode_stripe(f, si).column(0)
-        m = pc.fill_null(pc.is_in(col, value_set=kast), False)
-        n = pc.sum(m).as_py() or 0
-        masks.append(m if n else None)
-        matched += n
-    if matched == 0:
-        return {"action": "keep"}
-    if matched == f.n_rows:
-        return {"action": "drop", "n_matched": matched}
-    ctx = _ScanContext(root, [], ts_nanos=True)
-    name = f"merge-cow-{job}-{idx:05d}.orc"
-    new_path = os.path.join(data_dir, name)
-    writer = ORCFileWriter(
-        new_path, codec=f.compression,
-        row_index_stride=(f.row_index_stride or
-                          DEFAULT_ROW_INDEX_STRIDE),
-        orc_types=root.orc_overrides(),
-        bloom_columns=_bloom_columns_of(f))
-    for si, m in enumerate(masks):
-        batch = ctx.decode_stripe(f, si)
-        if m is not None:
-            batch = batch.filter(pc.invert(m))
-        if batch.num_rows:
-            writer.write_batch(batch)
-    writer.close()
-    nf = ORCFile(new_path)
-    return {"action": "rewrite", "name": name, "n_matched": matched,
-            "n_rows": nf.n_rows, "bytes": os.path.getsize(new_path),
-            "type": orctypes.type_from_types(nf.types).orc_string(),
-            "codec": f.compression, "stats": _entry_stats(nf)}
 
 
 def _merge_candidates(entries: list[dict], key: str, keys: list,
@@ -1979,8 +1916,6 @@ def merge_table(spark, table: str, source_df, on: str,
     file-set rewrite is not safe)."""
     from pyspark.sql import functions as F
 
-    from .orcscan import tasks_df
-
     if when_matched not in ("replace", "delete"):
         raise ValueError(
             f"orc_table: when_matched must be replace|delete, got "
@@ -2034,73 +1969,37 @@ def merge_table(spark, table: str, source_df, on: str,
     # broadcast COW rewrites files in place (physical names);
     # the shuffle plan above is rename-safe (reads via read_table)
     _require_migrated(base, entries, "merge_table (broadcast COW)")
-    matched = dropped = rewritten = 0
-    new_entries = []
-    if n_keys:
-        keys = [r[0] for r in keys_df.collect()]
-        untouched, cands = _merge_candidates(entries, on, keys, spec)
-        new_entries.extend(untouched)
-        if cands:
-            job = uuid.uuid4().hex[:12]
-            data_dir = os.path.join(table, _DATA)
-            paths = [os.path.join(table, e["path"]) for e in cands]
-            rdf = tasks_df(spark, _idx_paths(paths), len(paths))
-            bkeys = spark.sparkContext.broadcast(keys)
-            kcol = on
-
-            def rkern(it):
-                import pandas as pd
-                for pdf in it:
-                    out = []
-                    for idx, p in zip(pdf["idx"], pdf["path"]):
-                        r = _rewrite_merge_file(
-                            p, kcol, bkeys.value, data_dir, job,
-                            int(idx))
-                        out.append((int(idx), json.dumps(r)))
-                    yield pd.DataFrame(out, columns=["idx", "res"])
-
-            for r in rdf.mapInPandas(rkern, "idx int, res string") \
-                    .collect():
-                res = json.loads(r["res"])
-                src = cands[r["idx"]]
-                matched += res.get("n_matched", 0)
-                if res["action"] == "keep":
-                    new_entries.append(src)
-                elif res["action"] == "drop":
-                    dropped += 1
-                else:
-                    rewritten += 1
-                    ne = {"path": f"{_DATA}/{res['name']}",
-                          "n_rows": res["n_rows"],
-                          "bytes": res["bytes"], "type": res["type"],
-                          "codec": res["codec"],
-                          "stats": res["stats"]}
-                    if src.get("partition") is not None:
-                        ne["partition"] = src["partition"]
-                    new_entries.append(ne)
-            bkeys.unpersist()
-    else:
-        new_entries.extend(entries)
     write_schema = base["schema"]
-    inserted = 0
+    inserted, added = 0, []
     if when_matched == "replace":
-        ins_entries, ins_schema = _write_data_files(
+        added, ins_schema = _write_data_files(
             source_df, table, spec, codec=codec,
             stripe_rows=stripe_rows, bloom_columns=bloom_columns,
             prefix="merge")
-        inserted = sum(e["n_rows"] for e in ins_entries)
-        new_entries.extend(ins_entries)
+        inserted = sum(e["n_rows"] for e in added)
         write_schema = orctypes.widen(
             root, orctypes.parse_orc_type(ins_schema)).orc_string()
-    if not (matched or dropped or rewritten or inserted):
-        return base  # delete-mode merge with no matching key: no-op
-    manifest = _write_manifest(table, new_entries) if new_entries \
-        else None
-    return _commit_retrying(
-        table, base, "merge", manifest, new_entries, write_schema,
-        extra={"matched_rows": matched, "inserted_rows": inserted,
-               "dropped_files": dropped,
-               "rewritten_files": rewritten, "plan": "broadcast"})
+    untouched, cands = entries, []
+    bkeys = None
+    if n_keys:
+        keys = [r[0] for r in keys_df.collect()]
+        untouched, cands = _merge_candidates(entries, on, keys, spec)
+        bkeys = spark.sparkContext.broadcast(keys)
+
+    def summary(n_matched, dropped, rewritten, new_entries):
+        if not (n_matched or dropped or rewritten or inserted):
+            return None  # delete-mode merge with no matching key: no-op
+        return {"matched_rows": n_matched, "inserted_rows": inserted,
+                "dropped_files": dropped, "rewritten_files": rewritten,
+                "plan": "broadcast"}
+
+    try:
+        return _cow_dml(spark, table, base, "merge", untouched, cands,
+                        _merge_plan(on, bkeys), summary, added=added,
+                        schema=write_schema)
+    finally:
+        if bkeys is not None:
+            bkeys.unpersist()
 
 
 def rollback_table(table: str, to_version: int) -> dict:

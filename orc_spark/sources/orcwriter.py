@@ -155,21 +155,39 @@ def _new_stats(kind: str) -> dict:
 
 
 def _merge_stats(acc: dict, st: dict) -> None:
+    """Roll one part's statistics ``st`` into ``acc`` -- the one merge
+    for stride -> stripe, stripe -> file and copied stripe -> file
+    (columnstatistics.go Merge).  Counts add and null flags OR.  Bounds
+    never get invented: a part with values but no min leaves the
+    merged min/max absent, except for doubles, where such a part is
+    all NaN and adds no bounds (ORC-541).  A part with values but no
+    sum leaves the merged sum absent.  Strings compare bytewise (ORC's
+    order); decimal sums add exactly under an 80-digit context."""
     from decimal import localcontext
-    acc["n"] += st["n"]
-    acc["has_null"] = acc["has_null"] or st["has_null"]
-    with localcontext() as _ctx:
-        # decimal sums stay exact under merge (default 28-digit
-        # context would round; ints/floats are unaffected)
-        _ctx.prec = 80
-        for k in ("sum", "true_count"):
-            if k in st:
-                acc[k] = acc.get(k, 0) + st[k]
+    has_values = st.get("n", 0) > 0
+    acc["n"] += st.get("n", 0)
+    acc["has_null"] = acc["has_null"] or st.get("has_null", False)
+    if "true_count" in st:
+        acc["true_count"] = acc.get("true_count", 0) + st["true_count"]
     if "min" in st:
-        acc["min"] = st["min"] if "min" not in acc else min(acc["min"],
-                                                            st["min"])
-        acc["max"] = st["max"] if "max" not in acc else max(acc["max"],
-                                                            st["max"])
+        if not acc.get("no_bounds"):
+            mn, mx = st["min"], st["max"]
+            if isinstance(mn, str):
+                mn, mx = mn.encode(), mx.encode()
+            acc["min"] = mn if "min" not in acc else min(acc["min"], mn)
+            acc["max"] = mx if "max" not in acc else max(acc["max"], mx)
+    elif has_values and acc["g"] != "double":
+        acc["no_bounds"] = True
+        acc.pop("min", None)
+        acc.pop("max", None)
+    if "sum" in st:
+        if not acc.get("no_sum"):
+            with localcontext() as ctx:
+                ctx.prec = 80
+                acc["sum"] = acc.get("sum", 0) + st["sum"]
+    elif has_values:
+        acc["no_sum"] = True
+        acc.pop("sum", None)
 
 
 def _stats_message(st: dict) -> bytes:
@@ -506,11 +524,29 @@ def _encode_decimal_node(co, node, data, data_bounds,
 # ---------------------------------------------------------------------------
 
 
+def output_tree(schema: pa.Schema, orc_types: dict) -> OrcType:
+    """The type tree ``ORCFileWriter`` encodes batches of ``schema``
+    under: ``from_arrow`` plus the top-level char/varchar overrides."""
+    tree = from_arrow(schema)
+    for name, (kind, maxlen) in orc_types.items():
+        node = tree.children[tree.field_names.index(name)]
+        if node.kind != "string" or kind not in ("char", "varchar"):
+            raise ValueError(
+                f"orc_types override {name}: {kind} requires a "
+                f"string column")
+        node.kind = kind
+        node.max_length = maxlen
+    return tree
+
+
 class ORCFileWriter:
     """Streaming ORC file writer: feed Arrow batches, stripes flush to
     disk as ``stripe_rows`` accumulate; ``close()`` writes metadata
     (stripe statistics), footer (file statistics) and postscript.
     Per-call memory is bounded by one stripe, never the input size.
+    ``append_stripe`` copies a stripe of an existing file verbatim, so
+    this class is the only code that lays out an ORC file: merges and
+    copy-on-write rewrites go through it too.
 
     ``orc_types`` optionally overrides a top-level string column's ORC
     type to char/varchar (treewriter.go:543-720), e.g.
@@ -523,8 +559,6 @@ class ORCFileWriter:
                  orc_types: dict | None = None,
                  bloom_columns: list[str] | None = None,
                  bloom_fpp: float = 0.05):
-        if row_index_stride % 8:
-            raise ValueError("row_index_stride must be a multiple of 8")
         self.orc_types = orc_types or {}
         # BLOOM_FILTER_UTF8 index streams for these top-level
         # string-family columns (beyond the reference, which only
@@ -564,17 +598,7 @@ class ORCFileWriter:
 
     def write_batch(self, batch: pa.RecordBatch) -> None:
         if self.tree is None:
-            self.tree = from_arrow(batch.schema)
-            for name, (kind, maxlen) in self.orc_types.items():
-                i = self.tree.field_names.index(name)
-                node = self.tree.children[i]
-                if node.kind != "string" or kind not in ("char", "varchar"):
-                    raise ValueError(
-                        f"orc_types override {name}: {kind} requires a "
-                        f"string column")
-                node.kind = kind
-                node.max_length = maxlen
-            self.n_cols = len(self.tree.number())
+            self._set_tree(output_tree(batch.schema, self.orc_types))
         self._buf.append(batch)
         self._buf_rows += batch.num_rows
         while self._buf_rows >= self.stripe_rows:
@@ -584,12 +608,45 @@ class ORCFileWriter:
             self._buf = rest.to_batches() if rest.num_rows else []
             self._buf_rows = rest.num_rows
 
+    def append_stripe(self, f, si: int) -> None:
+        """Copy stripe ``si`` of the open ``ORCFile`` ``f`` unchanged:
+        its index, data and footer bytes hold no absolute offsets, so
+        the byte range moves as is.  Buffered rows flush first as their
+        own stripe, keeping stripe order.  The stripe keeps its raw
+        per-column statistics; their parse rolls into the file stats.
+        The caller guarantees ``f``'s type tree equals this writer's
+        (a writer without a tree takes ``f``'s)."""
+        if (f.compression, f.row_index_stride) != (self.codec,
+                                                   self.stride):
+            raise ValueError(
+                f"append_stripe: {f.path} is {f.compression} with "
+                f"stride {f.row_index_stride}, the writer "
+                f"{self.codec} with stride {self.stride}")
+        if si >= len(f.raw_stripe_statistics):
+            raise ValueError(f"append_stripe: {f.path} has no "
+                             f"statistics for stripe {si}")
+        if self.tree is None:
+            from ..orctypes import type_from_types
+            self._set_tree(type_from_types(f.types))
+        self._flush_buffer()
+        self._ensure_open()
+        info = f.stripes[si]
+        offset, idx_len, data_len, foot_len, n_rows = (
+            info.get(k, [0])[0] for k in range(1, 6))
+        total = idx_len + data_len + foot_len
+        self.f.write(f.data[offset:offset + total])
+        self.stripe_infos.append(
+            (self.offset, idx_len, data_len, foot_len, n_rows))
+        self.offset += total
+        self.n_total += n_rows
+        self.stripe_stats_msgs.append(list(f.raw_stripe_statistics[si]))
+        self._add_file_stats(
+            [{"g": _STAT_GROUP[node.kind], **st} for node, st in
+             zip(self.tree.number(), f.stripe_statistics[si])])
+
     def close(self) -> dict:
         try:
-            if self._buf_rows:
-                self._flush_stripe(pa.Table.from_batches(self._buf))
-                self._buf = []
-                self._buf_rows = 0
+            self._flush_buffer()
             if self.tree is None:
                 raise ValueError("no data written")
             self._write_tail()
@@ -632,6 +689,23 @@ class ORCFileWriter:
 
     # -- internals ---------------------------------------------------------
 
+    def _set_tree(self, tree: OrcType) -> None:
+        self.tree = tree
+        self.n_cols = len(tree.number())
+
+    def _flush_buffer(self) -> None:
+        if self._buf_rows:
+            self._flush_stripe(pa.Table.from_batches(self._buf))
+            self._buf = []
+            self._buf_rows = 0
+
+    def _add_file_stats(self, stripe_stats: list[dict]) -> None:
+        if self.file_stats is None:
+            self.file_stats = [_new_stats(node.kind)
+                               for node in self.tree.number()]
+        for acc, st in zip(self.file_stats, stripe_stats):
+            _merge_stats(acc, st)
+
     def _frame(self, blob: bytes) -> bytes:
         return compression.compress(blob, self.codec) \
             if self.codec != "none" else bytes(blob)
@@ -640,6 +714,9 @@ class ORCFileWriter:
         n_rows = table.num_rows
         if n_rows == 0:
             return
+        if self.stride <= 0 or self.stride % 8:
+            raise ValueError("row_index_stride must be a positive "
+                             "multiple of 8")
         self._ensure_open()
         self.n_total += n_rows
         bounds = np.arange(0, n_rows, self.stride, dtype=np.int64)
@@ -778,12 +855,8 @@ class ORCFileWriter:
         self.stripe_stats_msgs.append(
             [_stats_message(sink[c].stripe_stats)
              for c in range(self.n_cols)])
-        if self.file_stats is None:
-            self.file_stats = [sink[c].stripe_stats
-                               for c in range(self.n_cols)]
-        else:
-            for c in range(self.n_cols):
-                _merge_stats(self.file_stats[c], sink[c].stripe_stats)
+        self._add_file_stats([sink[c].stripe_stats
+                              for c in range(self.n_cols)])
 
     def _write_tail(self) -> None:
         # zero-row close (schema seen, no rows): a valid empty .orc

@@ -435,6 +435,14 @@ def encode_column(arr: pa.Array, spec: ColumnSpec,
         return "DIRECT_V2", streams, {"count": n_valid}
     if spec.is_list:
         lengths, child = leaves.list_parts(data)
+        if child.null_count:
+            # null elements need a child PRESENT stream, which only the
+            # nested tree carries; the stats stay the token path's
+            _, streams, _ = _encode_nested(arr, spec, use_fsst)
+            return "NESTED", streams, {
+                "count": n_valid, "total_elems": int(lengths.sum()),
+                **_whole_stats(np.asarray(child.drop_null())
+                               .astype(np.int64))}
         child_vals = np.asarray(child).astype(np.int64)
         streams["LENGTH"] = rle2.encode(lengths, signed=False)
         if len(child_vals):
@@ -470,7 +478,7 @@ def _drop_nan_sum(st: dict) -> dict:
 def decode_column(streams: dict, encoding: str, spec: ColumnSpec,
                   n_rows: int) -> pa.Array:
     """Decode one column of one stripe back to an Arrow array."""
-    if spec.is_nested:
+    if spec.is_nested or encoding == "NESTED":
         return _decode_nested(streams, spec, n_rows)
     present = streams.get("PRESENT")
     if present is not None:

@@ -21,7 +21,7 @@ import sys
 
 
 def gather(path: str) -> dict:
-    from ..sources.orcfile import ORCFile, STREAM_KINDS, parse_message
+    from ..sources.orcfile import ORCFile
     from ..orctypes import type_from_types
 
     f = ORCFile(path)
@@ -44,13 +44,8 @@ def gather(path: str) -> dict:
         data_len = info.get(3, [0])[0]
         footer_len = info.get(4, [0])[0]
         n_rows = info.get(5, [0])[0]
-        sf_start = offset + index_len + data_len
-        sfooter = parse_message(f._decomp(
-            f.data[sf_start:sf_start + footer_len]))
-        for s in sfooter.get(1, []):
-            sm = parse_message(s)
-            if STREAM_KINDS[sm.get(1, [0])[0]] == "BLOOM_FILTER_UTF8":
-                cid = sm.get(2, [0])[0]
+        for kind, cid, _, _ in f._stripe_footer(si)[3]:
+            if kind == "BLOOM_FILTER_UTF8":
                 bloom_cols.add(names.get(cid, f"col{cid}"))
         stripes.append({"rows": n_rows, "offset": offset,
                         "index_bytes": index_len,

@@ -89,8 +89,10 @@ def test_merge_sum_overflow_propagates_absence(spark, tmp_path):
                 "sum": 20}]
     stats_b = [{"n": 3, "has_null": False},
                {"n": 3, "has_null": True, "min": -4, "max": 2}]
-    merged = orcmerge._merge_file_stats([stats_a, stats_b],
-                                        ["struct", "long"])
+    merged = [orcwriter._new_stats(k) for k in ("struct", "long")]
+    for stats in (stats_a, stats_b):
+        for acc, st in zip(merged, stats):
+            orcwriter._merge_stats(acc, st)
     assert merged[1]["n"] == 8 and merged[1]["has_null"] is True
     assert merged[1]["min"] == -4 and merged[1]["max"] == 9
     assert "sum" not in merged[1]

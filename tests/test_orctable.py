@@ -159,6 +159,25 @@ def test_compact_table_replace_snapshot(spark, tmp_path):
         spark, t, predicate=("v", ">", 5000)).count() == 0
 
 
+def test_compact_manifest_stats_are_the_merged_footer(spark, tmp_path):
+    """A compacted entry's manifest stats are the merged file's own
+    footer stats.  With one file's double column all NaN, that file
+    adds no bounds, so both keep the other file's range."""
+    from orc_spark.sources.orcfile import ORCFile
+    t = str(tmp_path / "tnan")
+    orctable.create_table(t, "struct<v:int,x:double>")
+    orctable.write_table(spark.range(0, 100, 1, 1).selectExpr(
+        "CAST(id AS INT) AS v", "CAST('NaN' AS DOUBLE) AS x"), t)
+    orctable.write_table(spark.range(100, 200, 1, 1).selectExpr(
+        "CAST(id AS INT) AS v", "CAST(id AS DOUBLE) AS x"), t)
+    snap = orctable.compact_table(spark, t, target_bytes=1 << 40)
+    [e] = orctable.manifest_entries(t, snap)
+    assert e["stats"] == orctable._entry_stats(
+        ORCFile(os.path.join(t, e["path"])))
+    assert (e["stats"]["x"]["min"], e["stats"]["x"]["max"]) == \
+        (100.0, 199.0)
+
+
 def test_compact_skips_mixed_schemas(spark, tmp_path):
     """Files written under different (evolved) types never merge —
     each type group compacts internally."""

@@ -358,3 +358,195 @@ def test_merge_validation(spark, tmp_path):
         orctable.merge_table(spark, t, src, on="nope")
     with pytest.raises(ValueError, match="not in source frame"):
         orctable.merge_table(spark, t, src.select("v"), on="tag")
+
+
+# ------------------------------------------------------------------
+# one copy-on-write kernel: untouched stripes copy byte for byte
+# ------------------------------------------------------------------
+
+
+def _stripe_ranges(path):
+    """The raw bytes of each stripe of the ``.orc`` file at path."""
+    f = ORCFile(path)
+    out = []
+    for s in f.stripes:
+        off = s.get(1, [0])[0]
+        n = sum(s.get(k, [0])[0] for k in (2, 3, 4))
+        out.append(bytes(f.data[off:off + n]))
+    return out
+
+
+def _one_file_table(spark, tmp_path, n_stripes=8, per=400):
+    """A table holding ONE data file of ``n_stripes`` stripes of
+    ``per`` sorted rows each; returns (table, data file path)."""
+    t = str(tmp_path / "tstripes")
+    orctable.create_table(t, "struct<v:int,tag:string>")
+    orctable.write_table(_df(spark, 0, n_stripes * per, parts=1), t,
+                         stripe_rows=per)
+    [e] = orctable.manifest_entries(t, orctable.load_snapshot(t))
+    return t, os.path.join(t, e["path"])
+
+
+def _count_decodes(monkeypatch):
+    from orc_spark.sources.orcscan import _ScanContext
+    calls = []
+    real = _ScanContext.decode_stripe
+
+    def spy(self, f, si):
+        calls.append(si)
+        return real(self, f, si)
+
+    monkeypatch.setattr(_ScanContext, "decode_stripe", spy)
+    return calls
+
+
+HIT = (1300, 1310)   # rows of stripe 3 only (400 rows per stripe)
+
+
+@pytest.mark.parametrize("op", ["delete", "update", "merge"])
+def test_cow_copies_untouched_stripes(spark, tmp_path, monkeypatch, op):
+    """A DELETE / UPDATE / MERGE whose predicate or keys hit one
+    stripe of eight decodes that stripe only; the other seven are
+    byte-equal copies of their source ranges.  The table reads the
+    expected rows, Spark's own ORC reader reads the new file, and
+    time travel still reads the old one."""
+    import types
+
+    t, src_path = _one_file_table(spark, tmp_path)
+    pre = orctable.load_snapshot(t)
+    src = _stripe_ranges(src_path)
+    hit = list(range(HIT[0], HIT[1] + 1))
+    want = {v: str(v) for v in range(3200)}
+    if op == "delete":
+        plan = orctable._pred_plan([("v", "between", HIT)], False)
+        set_spec = None
+        orctable.delete_from(spark, t, ("v", "between", HIT))
+        for v in hit:
+            del want[v]
+    elif op == "update":
+        plan = orctable._pred_plan([("v", "between", HIT)], True)
+        set_spec = {"tag": "x"}
+        orctable.update_table(spark, t, set={"tag": "x"},
+                              predicate=("v", "between", HIT))
+        want.update({v: "x" for v in hit})
+    else:
+        plan = orctable._merge_plan("v", types.SimpleNamespace(value=hit))
+        set_spec = None
+        orctable.merge_table(spark, t, _src(spark, [(v, "m") for v in hit]),
+                             on="v")
+        want.update({v: "m" for v in hit})
+
+    # the kernel itself, in this process, counts its stripe decodes
+    calls = _count_decodes(monkeypatch)
+    res = orctable._cow_rewrite(src_path, plan, "probe.orc",
+                                str(tmp_path), set_spec)
+    assert calls == [3]
+    got = _stripe_ranges(str(tmp_path / "probe.orc"))
+    assert len(got) == 8 and res["action"] == "rewrite"
+    assert [g == s for g, s in zip(got, src)] == [True] * 3 + [False] + \
+        [True] * 4
+
+    # the committed rewrite has the same layout
+    snap = orctable.load_snapshot(t)
+    prefix = {"merge": "merge-cow"}.get(op, op)
+    [new] = [e for e in orctable.manifest_entries(t, snap)
+             if e["path"].startswith(f"data/{prefix}-")]
+    new_path = os.path.join(t, new["path"])
+    assert _stripe_ranges(new_path)[:3] == src[:3]
+    assert _stripe_ranges(new_path)[4:] == src[4:]
+    rows = {r["v"]: r["tag"]
+            for r in orctable.read_table(spark, t).collect()}
+    assert rows == want
+    jvm = spark.read.orc(new_path)
+    assert jvm.count() == new["n_rows"]
+    assert jvm.where("v = 3199").collect()[0]["tag"] == "3199"
+    old = orctable.read_table(spark, t, snapshot=pre["version"])
+    assert sorted(r["v"] for r in old.collect()) == list(range(3200))
+
+
+@pytest.mark.parametrize("source", ["added_column", "union"])
+def test_cow_reencodes_when_tree_differs(spark, tmp_path, monkeypatch,
+                                         source):
+    """No stripe copies when the writer's output tree differs from the
+    source's: an UPDATE null-filling a column ADDed after the file
+    was written, or a union column (it decodes as a struct).  Every
+    stripe decodes and re-encodes, as before stripes could copy."""
+    import pyarrow as pa
+
+    from orc_spark.sources import orcwriter
+    if source == "added_column":
+        t, path = _one_file_table(spark, tmp_path)
+        orctable.add_column(t, "c", "string")
+        plan = orctable._pred_plan([("v", "between", HIT)], True)
+        args = ({"c": "z"}, {"c": "string"})
+    else:
+        path = str(tmp_path / "union.orc")
+        tags = pa.array([0, 1] * 1600, pa.int8())
+        u = pa.UnionArray.from_sparse(tags, [
+            pa.array(range(3200), pa.int64()),
+            pa.array([str(i) for i in range(3200)])])
+        orcwriter.write_orc(pa.table({"v": pa.array(range(3200),
+                                                    pa.int32()),
+                                      "u": u}),
+                            path, stripe_rows=400)
+        plan = orctable._pred_plan([("v", "between", HIT)], False)
+        args = ()
+    src = _stripe_ranges(path)
+    calls = _count_decodes(monkeypatch)
+    res = orctable._cow_rewrite(path, plan, "probe.orc", str(tmp_path),
+                                *args)
+    assert sorted(calls) == list(range(8))
+    got = _stripe_ranges(str(tmp_path / "probe.orc"))
+    assert not set(got) & set(src)
+    assert res["n_rows"] == 3200 - (11 if source == "union" else 0)
+
+
+@pytest.mark.parametrize("typ", ["char(4)", "varchar(8)"])
+def test_update_backfill_keeps_char_varchar(spark, tmp_path, typ):
+    """A backfill UPDATE of a char/varchar column ADDed after the
+    file was written keeps the declared kind in the rewritten footer
+    and the manifest entry (it used to say string)."""
+    from orc_spark import orctypes
+    t, _ = _sorted_table(spark, tmp_path, n=100, files=1)
+    orctable.add_column(t, "c", typ)
+    snap = orctable.update_table(spark, t, set={"c": "ab"})
+    [e] = orctable.manifest_entries(t, snap)
+    assert e["type"] == f"struct<v:int,tag:string,c:{typ}>"
+    assert orctypes.orc_string_from_file(
+        os.path.join(t, e["path"])) == e["type"]
+    assert {r["c"] for r in orctable.read_table(spark, t).collect()} \
+        == {"ab"}
+
+
+def test_dml_rewrite_keeps_timestamps(spark, tmp_path):
+    """Rewritten files keep a timestamp column's kind and value, in
+    re-encoded and in copied stripes (they used to become bigint
+    nanos that read back as year-51969 timestamps), and a MERGE
+    matches on a timestamp key."""
+    import datetime as dt
+    t = str(tmp_path / "tts")
+    orctable.create_table(t, "struct<v:int,ts:timestamp>")
+    orctable.write_table(spark.range(0, 100, 1, 1).selectExpr(
+        "CAST(id AS INT) AS v",
+        "TIMESTAMP_NTZ'2020-01-01 00:00:00' + "
+        "make_interval(0, 0, 0, 0, 0, 0, id + 0.25) AS ts"), t,
+        stripe_rows=50)
+    want = {r["v"]: r["ts"] for r in orctable.read_table(spark, t)
+            .collect()}
+    assert want[3] == dt.datetime(2020, 1, 1, 0, 0, 3, 250000)
+    orctable.delete_from(spark, t, ("v", "==", 3))
+    orctable.update_table(spark, t, set={"ts": dt.datetime(2021, 1, 1)},
+                          predicate=("v", "==", 60))
+    key = dt.datetime(2020, 1, 1, 0, 0, 10, 250000)
+    snap = orctable.merge_table(spark, t, spark.createDataFrame(
+        [(-1, key)], "v int, ts timestamp_ntz"), on="ts")
+    assert snap["summary"]["matched_rows"] == 1  # the keys used to miss
+    del want[3], want[10]
+    want[60] = dt.datetime(2021, 1, 1)
+    want[-1] = key
+    snap = orctable.load_snapshot(t)
+    assert {e["type"] for e in orctable.manifest_entries(t, snap)} == \
+        {"struct<v:int,ts:timestamp>"}
+    got = {r["v"]: r["ts"] for r in orctable.read_table(spark, t)
+           .collect()}
+    assert got == want

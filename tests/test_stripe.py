@@ -243,6 +243,29 @@ def test_int_list_decodes_to_declared_type(elem):
     assert stripe.decode_stripe_strides(row, specs).equals(t)
 
 
+@pytest.mark.parametrize("stride_rows", [None, 8])
+def test_int_list_null_elements_roundtrip(stride_rows):
+    """A null list ELEMENT survives the stripe table (it used to
+    decode as 0): the path follows the data, so a stride holding one
+    takes the nested tree with its child PRESENT stream, while a
+    null-free token column keeps the token fast path's streams."""
+    specs = stripe.parse_schema([("c", "list<int>")])
+    t = pa.table({"c": pa.array(
+        [[1, None, 3], [4], None, [], [None, None]] * 4 + [[5, 6]] * 12,
+        pa.list_(pa.int32()))})
+    row = stripe.encode_stripe(t, specs, stride_rows=stride_rows)
+    got = stripe.decode_stripe_strides(row, specs) if stride_rows \
+        else stripe.decode_stripe(row, specs)
+    assert got.equals(t)
+    st = json.loads(row["stats"])["c"]
+    assert (st["total_elems"], st["min"], st["max"]) == (48, 1, 6)
+    clean = pa.table({"c": pa.array([[1, 2, 3], [4], None] * 8,
+                                    pa.list_(pa.int32()))})
+    a = stripe.encode_stripe(clean, specs, stride_rows=stride_rows)
+    assert "NESTED" not in a["encodings"]
+    assert stripe.decode_stripe_strides(a, specs).equals(clean)
+
+
 def test_nested_stripe_roundtrip_kernel():
     """struct/map/list<string>/deep nesting round-trip through the
     stripe-table tree encoder (r3: treewriter analog in the stripe

@@ -13,8 +13,11 @@ pyarrow deliberately STAYS on its default jemalloc pool — switching to
 the system allocator measured ~4x WORSE at 32 workers (see the NOTE in
 tune_worker and CLAUDE.md); do not "restore" a set_memory_pool call.
 
-Called at the top of every mapInArrow/mapInPandas kernel (idempotent,
-best-effort); safe and beneficial on real clusters too.
+Called at the top of the executor kernels that allocate per batch:
+stripe encode/decode, the ``.orc`` scan, write and DataSource
+readers, ``orcscan.run_tasks`` (every driver-planned collect-style
+job) and the text, dedup, packing and media functions.  Idempotent
+and best-effort; safe and beneficial on real clusters too.
 """
 
 from __future__ import annotations

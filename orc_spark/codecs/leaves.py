@@ -131,10 +131,18 @@ def parse_nanos(raw) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+# a sum outside [-INT64_LIMIT, INT64_LIMIT) does not fit ORC's sint64
+INT64_LIMIT = 1 << 63
+
+
 def numeric_stats(vals: np.ndarray, bounds) -> list[dict]:
     """Per-stride ``min``/``max``/``sum`` of a non-null numeric array;
     stride t is ``vals[bounds[t]:bounds[t + 1]]`` and an empty stride
     gets ``{}``.  Integers give Python ints; floats give floats.
+
+    An integer stride whose exact sum leaves int64 has no sum, as in
+    Java ORC: a part with values but no sum keeps the sum out of every
+    rollup that contains it.
 
     NaN follows ORC-541 (Java ORC): it never enters min or max (a
     reader pruning on ``x > NaN`` would skip live strides), and an
@@ -155,6 +163,18 @@ def numeric_stats(vals: np.ndarray, bounds) -> list[dict]:
         elif len(seg):
             st["min"] = seg.min().item()
             st["max"] = seg.max().item()
-            st["sum"] = int(seg.sum())
+            total = _exact_sum(seg, max(-st["min"], st["max"]))
+            if -INT64_LIMIT <= total < INT64_LIMIT:
+                st["sum"] = total
         out.append(st)
     return out
+
+
+def _exact_sum(seg: np.ndarray, mag: int) -> int:
+    """The exact sum of a non-empty integer array whose largest
+    magnitude is ``mag``.  numpy's int64 sum wraps, so when
+    ``len * mag`` may pass int64 the values sum as high and low 32-bit
+    halves, neither of which can wrap below 2**31 values."""
+    if len(seg) * mag < INT64_LIMIT:
+        return int(seg.sum())
+    return (int((seg >> 32).sum()) << 32) + int((seg & 0xFFFFFFFF).sum())

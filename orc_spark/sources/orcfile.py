@@ -10,7 +10,7 @@ Purpose: end-to-end golden parity — decode the reference's example
 ``.orc`` files with OUR RLE v1/v2, byte-RLE, boolean, dictionary,
 decimal and timestamp kernels and compare row-by-row against
 ``examples/expected/*.jsn.gz`` (orc_test.go:14-131).  It also lets a
-Spark pipeline ingest legacy ORC files through ``mapInPandas`` without
+Spark pipeline ingest legacy ORC files (``orcscan.orc_scan``) without
 the JVM ORC reader, though parquet/Iceberg remains the primary source.
 
 Reads NONE/ZLIB/SNAPPY/LZO/LZ4/ZSTD compression (the reference
@@ -773,11 +773,16 @@ _TZ_CACHE: dict = {}
 
 
 def _tzinfo(name: str):
+    """The writer zone a file names, or None when the name is empty or
+    no zone: unknown (ZoneInfoNotFoundError), malformed (ValueError) or
+    a tzdata directory such as ``America`` (IsADirectoryError).  Any
+    other error is a bug and propagates."""
     if name not in _TZ_CACHE:
+        import zoneinfo
         try:
-            from zoneinfo import ZoneInfo
-            _TZ_CACHE[name] = ZoneInfo(name) if name else None
-        except Exception:
+            _TZ_CACHE[name] = zoneinfo.ZoneInfo(name) if name else None
+        except (zoneinfo.ZoneInfoNotFoundError, ValueError,
+                IsADirectoryError):
             _TZ_CACHE[name] = None
     return _TZ_CACHE[name]
 

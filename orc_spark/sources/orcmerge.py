@@ -94,9 +94,7 @@ def merge_orc_dir(spark, path: str, out_dir: str,
     for part-file naming), merge each group in one executor task.
     Returns the number of output files.  Zero re-encoding: each task
     is a footer parse + byte copy."""
-    import pyarrow as pa
-
-    from .orcscan import orc_files, tasks_df
+    from .orcscan import orc_files, run_tasks
     files = orc_files(path, "orc_merge")
     groups: list[list[str]] = []
     cur: list[str] = []
@@ -111,21 +109,10 @@ def merge_orc_dir(spark, path: str, out_dir: str,
     if cur:
         groups.append(cur)
     os.makedirs(out_dir, exist_ok=True)
-    gdf = tasks_df(
-        spark, {"gid": pa.array(range(len(groups)), pa.int32()),
-                "files": pa.array(groups, pa.list_(pa.string()))},
-        len(groups))
 
-    def kern(it):
-        import pandas as pd
-        for pdf in it:
-            done = []
-            for gid, grp in zip(pdf["gid"], pdf["files"]):
-                out = os.path.join(out_dir, f"merged-{gid:05d}.orc")
-                merge_orc_files(list(grp), out)
-                done.append(int(gid))
-            yield pd.DataFrame({"gid": done})
+    def merge(task):
+        gid, grp = task
+        return merge_orc_files(
+            grp, os.path.join(out_dir, f"merged-{gid:05d}.orc"))
 
-    n = gdf.mapInPandas(kern, "gid int").count()
-    assert n == len(groups)
-    return len(groups)
+    return len(run_tasks(spark, list(enumerate(groups)), merge))

@@ -614,9 +614,9 @@ def stride_keep(f: ORCFile, si: int, preds: list[tuple],
 def tasks_df(spark, columns: dict, n_parts: int) -> DataFrame:
     """A driver-built task list as a DataFrame of ``n_parts``
     partitions; ``columns`` maps each task column name to a typed
-    Arrow array (``pa.string()`` paths, ``pa.int32()`` ids,
-    ``pa.list_(pa.string())`` file groups).  An Arrow table enters
-    Spark as a JVM-only LocalTableScan of min(rows,
+    Arrow array (``pa.string()`` paths, ``pa.int32()`` ids and
+    positions, ``pa.binary()`` pickled ``run_tasks`` tasks).  An
+    Arrow table enters Spark as a JVM-only LocalTableScan of min(rows,
     defaultParallelism) contiguous slices — no Python pass (a Python
     list goes through ``parallelize`` plus an identity map) and no
     shuffle when that is already the wanted count.  The partition
@@ -631,6 +631,58 @@ def tasks_df(spark, columns: dict, n_parts: int) -> DataFrame:
     # more tasks than slices: round-robin shuffle; fewer: merge slices
     return df.repartition(n_parts) if n_parts > natural \
         else df.coalesce(n_parts)
+
+
+# footer-only jobs (stats, COUNT, classify) over at most this many
+# tasks run on the driver; above it, and for every job that writes
+# files, the tasks run on executors
+DRIVER_FOOTER_MAX_FILES = 64
+# a file task list spreads over at most this many partitions
+_MAX_TASK_PARTS = 256
+
+
+def run_tasks(spark, tasks: list, fn, footer_only: bool = False) -> list:
+    """``[fn(t) for t in tasks]``, computed in Spark tasks.  Each task
+    object is pickled into one ``binary`` row of a ``tasks_df`` table
+    next to its int32 position; one mapInArrow kernel applies ``fn``
+    and yields (position, pickled result) rows, and the driver returns
+    the results in task order.  Any picklable task or result
+    round-trips unchanged (Decimal, date, nested containers), and an
+    exception raised by ``fn`` fails the call.  ``footer_only`` jobs
+    (they read file tails and write nothing) run on the driver up to
+    DRIVER_FOOTER_MAX_FILES tasks, below the cost of a Spark job."""
+    import pickle
+
+    import pyarrow as pa
+    if footer_only and len(tasks) <= DRIVER_FOOTER_MAX_FILES:
+        return [fn(t) for t in tasks]
+    if not tasks:
+        return []
+    tdf = tasks_df(
+        spark, {"pos": pa.array(range(len(tasks)), pa.int32()),
+                "task": pa.array([pickle.dumps(t) for t in tasks],
+                                 pa.binary())},
+        min(len(tasks), _MAX_TASK_PARTS))
+
+    def kern(batches):
+        from orc_spark._alloc import tune_worker
+        tune_worker()
+        for b in batches:
+            out = [pickle.dumps(fn(pickle.loads(t)))
+                   for t in b.column("task").to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [b.column("pos"), pa.array(out, pa.binary())],
+                names=["pos", "result"])
+
+    got = tdf.mapInArrow(kern, "pos int, result binary").toArrow()
+    if got.num_rows != len(tasks):
+        raise RuntimeError(f"run_tasks: {got.num_rows} results for "
+                           f"{len(tasks)} tasks")
+    out: list = [None] * len(tasks)
+    for i, r in zip(got.column("pos").to_pylist(),
+                    got.column("result").to_pylist()):
+        out[i] = pickle.loads(r)
+    return out
 
 
 def _plan_distributed(spark, files: list[str], predicate,
@@ -651,7 +703,7 @@ def _plan_distributed(spark, files: list[str], predicate,
     kept)."""
     import pyarrow as pa
     fdf = tasks_df(spark, {"path": pa.array(files, pa.string())},
-                   min(len(files), 256))
+                   min(len(files), _MAX_TASK_PARTS))
 
     def kern(batches):
         for b in batches:
@@ -1013,53 +1065,41 @@ def orc_scan(spark, path: str | list[str],
 def orc_scan_errors(spark, path: str,
                     timestamp_nanos: bool = False) -> DataFrame:
     """Corruption audit over a ``.orc`` lake (r5): attempt a full
-    decode of EVERY stripe of every file and emit one row per
+    decode of EVERY stripe of every file and report one row per
     failure — ``(path, stripe, error)``; stripe -1 means the file's
     footer/schema itself failed to open.  An empty result proves the
-    lake decodes end to end.  Distributed one task per file batch;
-    the quarantine report to pair with ``orc_scan(on_error='skip')``
-    before deleting or re-ingesting objects."""
-    import pandas as pd
-    import pyarrow as pa
-
+    lake decodes end to end.  The audit runs when called (one
+    ``run_tasks`` task per file) and the report is a small local
+    DataFrame — the quarantine list to pair with
+    ``orc_scan(on_error='skip')`` before deleting or re-ingesting
+    objects."""
     files = orc_files(path, "orc_scan_errors")
-    fdf = tasks_df(spark, {"path": pa.array(files, pa.string())},
-                   min(len(files), 256))
-    ts_nanos = timestamp_nanos
+    rows = [r for rs in run_tasks(
+        spark, files, lambda p: _stripe_errors(p, timestamp_nanos))
+        for r in rs]
+    return spark.createDataFrame(rows,
+                                 "path string, stripe int, error string")
 
-    def kern(batches):
-        from orc_spark._alloc import tune_worker
-        tune_worker()
-        for pdf in batches:
-            paths, stripes, errors = [], [], []
-            for p in pdf["path"]:
-                try:
-                    f = ORCFile(p)
-                    root = orctypes.type_from_types(f.types)
-                    if root.kind != "struct":
-                        root = orctypes.OrcType("struct", [root],
-                                                ["value"])
-                    ctx = _ScanContext(root, [], ts_nanos)
-                except Exception as e:
-                    paths.append(p)
-                    stripes.append(-1)
-                    errors.append(repr(e)[:500])
-                    continue
-                for si in range(len(f.stripes)):
-                    try:
-                        ctx.decode_stripe(f, si)
-                    except Exception as e:
-                        paths.append(p)
-                        stripes.append(si)
-                        errors.append(repr(e)[:500])
-            yield pd.DataFrame({"path": pd.Series(paths, dtype=object),
-                                "stripe": pd.Series(stripes,
-                                                    dtype="int32"),
-                                "error": pd.Series(errors,
-                                                   dtype=object)})
 
-    return fdf.mapInPandas(kern,
-                           "path string, stripe int, error string")
+def _stripe_errors(p: str, ts_nanos: bool) -> list[tuple]:
+    """``(path, stripe, error)`` of every stripe of ``p`` that fails
+    to decode; one ``(path, -1, error)`` when the file itself fails
+    to open."""
+    try:
+        f = ORCFile(p)
+        root = orctypes.type_from_types(f.types)
+        if root.kind != "struct":
+            root = orctypes.OrcType("struct", [root], ["value"])
+        ctx = _ScanContext(root, [], ts_nanos)
+    except Exception as e:
+        return [(p, -1, repr(e)[:500])]
+    errors = []
+    for si in range(len(f.stripes)):
+        try:
+            ctx.decode_stripe(f, si)
+        except Exception as e:
+            errors.append((p, si, repr(e)[:500]))
+    return errors
 
 
 def orc_arrow(node: orctypes.OrcType, ts_nanos: bool = False):

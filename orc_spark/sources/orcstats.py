@@ -32,9 +32,6 @@ from decimal import Decimal, localcontext
 
 from .orcfile import ORCFile
 
-# above this many files the footer pass itself runs on executors
-_DRIVER_STATS_MAX_FILES = 64
-
 
 def _files_of(path: str) -> list[str]:
     from .orcscan import orc_files
@@ -103,44 +100,18 @@ def _merge(agg: dict, st: dict, columns: list[str],
 def footer_aggregate(spark, path: str,
                      columns: list[str]) -> dict:
     """{rows, cols: {col: {n, n_nulls?, min, max, sum|sum_lengths}}}
-    from footers only.  Distributed above _DRIVER_STATS_MAX_FILES
-    (one executor task per file batch); raises if any file lacks a
-    requested statistic."""
+    from footers only, one ``run_tasks`` footer-only task per file;
+    raises if any file lacks a requested statistic."""
+    from .orcscan import run_tasks
     files = _files_of(path)
     agg = {"rows": 0,
            "cols": {c: {"n": 0, "has_null": False, "min": None,
                         "max": None, "sum": None, "missing": set()}
                     for c in columns}}
-    if len(files) <= _DRIVER_STATS_MAX_FILES:
-        per_file = ((p, _file_stats(p, columns)) for p in files)
-    else:
-        import pyarrow as pa
-
-        from .orcscan import tasks_df
-        fdf = tasks_df(spark, {"path": pa.array(files, pa.string())},
-                       min(len(files), 256))
-        cols = list(columns)
-
-        def kern(it):
-            # pickle keeps stat TYPES intact (Decimal/date/str mins
-            # must not collapse to strings before min/max merge)
-            import base64
-            import pickle
-            import pandas as pd
-            for pdf in it:
-                rows = [(p, base64.b64encode(pickle.dumps(
-                    _file_stats(p, cols))).decode())
-                        for p in pdf["path"]]
-                yield pd.DataFrame(rows, columns=["path", "st"])
-
-        import base64
-        import pickle
-        collected = fdf.mapInPandas(
-            kern, "path string, st string").collect()
-        per_file = ((r["path"],
-                     pickle.loads(base64.b64decode(r["st"])))
-                    for r in collected)
-    for p, st in per_file:
+    # results are pickled: stat TYPES (Decimal/date/str mins) survive
+    for p, st in zip(files, run_tasks(
+            spark, files, lambda p: _file_stats(p, columns),
+            footer_only=True)):
         _merge(agg, st, columns, p)
     for c in columns:
         a = agg["cols"][c]
@@ -179,25 +150,16 @@ def orc_count(spark, path: str, predicate=None) -> int:
     boundary stripes instead of every byte."""
     if predicate is None:
         return footer_aggregate(spark, path, [])["rows"]
-    import pyarrow as pa
+    from .orcscan import _pred_list
+    return count_files(spark, _files_of(path), _pred_list(predicate))
 
-    from .orcscan import _pred_list, tasks_df
-    preds = _pred_list(predicate)
-    files = _files_of(path)
-    if len(files) <= _DRIVER_STATS_MAX_FILES:
-        return sum(_count_file(p, preds) for p in files)
-    fdf = tasks_df(spark, {"path": pa.array(files, pa.string())},
-                   min(len(files), 256))
 
-    def kern(it):
-        import pandas as pd
-        for pdf in it:
-            yield pd.DataFrame(
-                {"n": [sum(_count_file(p, preds)
-                           for p in pdf["path"])]})
-
-    return sum(r["n"] for r in fdf.mapInPandas(
-        kern, "n long").collect())
+def count_files(spark, files: list[str], preds: list[tuple]) -> int:
+    """Exact predicated COUNT(*) over ``files``: ``_count_file`` of
+    each, as footer-only ``run_tasks`` tasks."""
+    from .orcscan import run_tasks
+    return sum(run_tasks(spark, files, lambda p: _count_file(p, preds),
+                         footer_only=True))
 
 
 def _full_match(st: dict, op: str, val) -> bool:

@@ -841,14 +841,6 @@ def _require_migrated(snap: dict, entries: list[dict],
             f"first to normalize the layout")
 
 
-def _idx_paths(paths: list[str]) -> dict:
-    """``(idx, path)`` task columns of the per-file kernels
-    (``orcscan.tasks_df``); ``idx`` is the position in ``paths``."""
-    import pyarrow as pa
-    return {"idx": pa.array(range(len(paths)), pa.int32()),
-            "path": pa.array(paths, pa.string())}
-
-
 def _scan_entries(spark, table: str, snap: dict, entries: list[dict],
                   columns: list[str] | None = None, predicate=None,
                   timestamp_nanos: bool = False,
@@ -1089,10 +1081,9 @@ def compact_table(spark, table: str,
     untouched — time travel to any pre-compaction version still
     reads the original small files.  Returns the new snapshot (a
     no-op returns the current one)."""
-    import pyarrow as pa
-
+    from .orcfile import ORCFile
     from .orcmerge import merge_orc_files
-    from .orcscan import tasks_df
+    from .orcscan import run_tasks
     base = load_snapshot(table)
     entries = manifest_entries(table, base)
     by_key: dict[tuple, list[dict]] = {}
@@ -1127,43 +1118,24 @@ def compact_table(spark, table: str,
     if not groups:
         return base
     job = uuid.uuid4().hex[:12]
-    gdf = tasks_df(
-        spark, {"gid": pa.array(range(len(groups)), pa.int32()),
-                "files": pa.array([[os.path.join(table, e["path"])
-                                    for e in g] for g in groups],
-                                  pa.list_(pa.string()))},
-        len(groups))
     data_dir = os.path.join(table, _DATA)
 
-    def kern(it):
-        import pandas as pd
+    def merge(task):
+        gid, files = task
+        name = f"compact-{job}-{gid:05d}.orc"
+        path = os.path.join(data_dir, name)
+        merge_orc_files(files, path)
+        # the manifest states what the merged footer states
+        return name, os.path.getsize(path), _entry_stats(ORCFile(path))
 
-        from .orcfile import ORCFile
-        for pdf in it:
-            gids, names, nbytes, stats = [], [], [], []
-            for gid, grp in zip(pdf["gid"], pdf["files"]):
-                name = f"compact-{job}-{int(gid):05d}.orc"
-                path = os.path.join(data_dir, name)
-                merge_orc_files(list(grp), path)
-                gids.append(int(gid))
-                names.append(name)
-                nbytes.append(os.path.getsize(path))
-                # the manifest states what the merged footer states
-                stats.append(json.dumps(_entry_stats(ORCFile(path))))
-            yield pd.DataFrame({"gid": gids, "name": names,
-                                "bytes": nbytes, "stats": stats})
-
-    got = {r["gid"]: r for r in gdf.mapInPandas(
-        kern, "gid int, name string, bytes long, stats string")
-        .collect()}
     merged_entries = []
-    for i, g in enumerate(groups):
-        r = got[i]
-        me = {"path": f"{_DATA}/{r['name']}",
-              "n_rows": sum(e["n_rows"] for e in g),
-              "bytes": r["bytes"],
+    for g, (name, nbytes, stats) in zip(groups, run_tasks(
+            spark, [(i, [os.path.join(table, e["path"]) for e in g])
+                    for i, g in enumerate(groups)], merge)):
+        me = {"path": f"{_DATA}/{name}",
+              "n_rows": sum(e["n_rows"] for e in g), "bytes": nbytes,
               "type": g[0]["type"], "codec": g[0]["codec"],
-              "stats": json.loads(r["stats"])}
+              "stats": stats}
         if g[0].get("partition") is not None:
             me["partition"] = g[0]["partition"]
         merged_entries.append(me)
@@ -1607,31 +1579,13 @@ def _cow_rewrite(path: str, plan, name: str, data_dir: str,
             **counts}
 
 
-# above this many candidate files, classification itself distributes
-_DRIVER_CLASSIFY_MAX_FILES = 64
-
-
 def _classify(spark, paths: list[str], preds: list[tuple]) -> list[str]:
-    """``_classify_delete_file`` of every candidate path: on the
-    driver up to ``_DRIVER_CLASSIFY_MAX_FILES`` files, in executor
-    tasks above that."""
-    if len(paths) <= _DRIVER_CLASSIFY_MAX_FILES:
-        return [_classify_delete_file(p, preds) for p in paths]
-    from .orcscan import tasks_df
-    cdf = tasks_df(spark, _idx_paths(paths), min(len(paths), 256))
-    pr = list(preds)
-
-    def ckern(it):
-        import pandas as pd
-        for pdf in it:
-            yield pd.DataFrame(
-                [(int(i), _classify_delete_file(p, pr))
-                 for i, p in zip(pdf["idx"], pdf["path"])],
-                columns=["idx", "cls"])
-
-    got = {r["idx"]: r["cls"] for r in cdf.mapInPandas(
-        ckern, "idx int, cls string").collect()}
-    return [got[i] for i in range(len(paths))]
+    """``_classify_delete_file`` of every candidate path, as
+    footer-only ``run_tasks`` tasks."""
+    from .orcscan import run_tasks
+    return run_tasks(spark, paths,
+                     lambda p: _classify_delete_file(p, preds),
+                     footer_only=True)
 
 
 def _cow_dml(spark, table: str, base: dict, operation: str,
@@ -1653,7 +1607,7 @@ def _cow_dml(spark, table: str, base: dict, operation: str,
        snapshot returns); ``added`` entries join and the new file
        set commits as ``operation`` (replace semantics: a concurrent
        commit raises CommitConflict)."""
-    from .orcscan import tasks_df
+    from .orcscan import run_tasks
     paths = [os.path.join(table, e["path"]) for e in cands]
     classes = _classify(spark, paths, preds) if preds \
         else ["rewrite"] * len(cands)
@@ -1667,27 +1621,17 @@ def _cow_dml(spark, table: str, base: dict, operation: str,
             dropped += 1
         else:
             todo.append((e, p))
-    results = []
-    if todo:
-        prefix = {"merge": "merge-cow"}.get(operation, operation)
-        job = uuid.uuid4().hex[:12]
-        data_dir = os.path.join(table, _DATA)
-        rdf = tasks_df(spark, _idx_paths([p for _, p in todo]),
-                       len(todo))
+    prefix = {"merge": "merge-cow"}.get(operation, operation)
+    job = uuid.uuid4().hex[:12]
+    data_dir = os.path.join(table, _DATA)
 
-        def rkern(it):
-            import pandas as pd
-            for pdf in it:
-                yield pd.DataFrame(
-                    [(int(i), json.dumps(_cow_rewrite(
-                        p, plan, f"{prefix}-{job}-{int(i):05d}.orc",
-                        data_dir, set_spec, declared)))
-                     for i, p in zip(pdf["idx"], pdf["path"])],
-                    columns=["idx", "res"])
+    def rewrite(task):
+        i, p = task
+        return _cow_rewrite(p, plan, f"{prefix}-{job}-{i:05d}.orc",
+                            data_dir, set_spec, declared)
 
-        got = {r["idx"]: json.loads(r["res"]) for r in rdf.mapInPandas(
-            rkern, "idx int, res string").collect()}
-        results = [got[i] for i in range(len(todo))]
+    results = run_tasks(spark, [(i, p) for i, (_, p) in enumerate(todo)],
+                        rewrite)
     rewritten = 0
     for (src, _), res in zip(todo, results):
         if res["action"] == "keep":
@@ -2201,10 +2145,8 @@ def rewrite_migrate(spark, table: str) -> dict:
     travel to the old layout still works.  After this, every
     per-file operation (DELETE/UPDATE/MERGE, hybrid COUNT) works
     again."""
-    import pyarrow as pa
-
     from .orcmerge import merge_orc_files
-    from .orcscan import tasks_df
+    from .orcscan import run_tasks
     base = load_snapshot(table)
     entries = manifest_entries(table, base)
     cols, _ = _columns_meta(base)
@@ -2219,37 +2161,18 @@ def rewrite_migrate(spark, table: str) -> dict:
 
     job = uuid.uuid4().hex[:12]
     data_dir = os.path.join(table, _DATA)
-    tdf = tasks_df(
-        spark, {**_idx_paths([os.path.join(table, e["path"])
-                              for e in legacy]),
-                "ren": pa.array([json.dumps(_ren_of(e)) for e in legacy],
-                                pa.string())},
-        min(len(legacy), 256))
 
-    def kern(it):
-        import pandas as pd
-        for pdf in it:
-            idxs, names, nb, nr = [], [], [], []
-            for idx, path, ren in zip(pdf["idx"], pdf["path"],
-                                      pdf["ren"]):
-                name = f"migrate-{job}-{int(idx):05d}.orc"
-                got = merge_orc_files(
-                    [path], os.path.join(data_dir, name),
-                    rename=json.loads(ren))
-                idxs.append(int(idx))
-                names.append(name)
-                nb.append(got["bytes"])
-                nr.append(got["n_rows"])
-            yield pd.DataFrame({"idx": idxs, "name": names,
-                                "bytes": nb, "n_rows": nr})
+    def migrate(task):
+        idx, path, ren = task
+        name = f"migrate-{job}-{idx:05d}.orc"
+        return name, merge_orc_files([path], os.path.join(data_dir, name),
+                                     rename=ren)
 
-    got = {r["idx"]: r for r in tdf.mapInPandas(
-        kern, "idx int, name string, bytes long, n_rows long")
-        .collect()}
+    got = run_tasks(spark, [(i, os.path.join(table, e["path"]), _ren_of(e))
+                            for i, e in enumerate(legacy)], migrate)
     new_entries = []
-    for i, e in enumerate(legacy):
-        r = got[i]
-        if int(r["n_rows"]) != e["n_rows"]:
+    for e, (name, r) in zip(legacy, got):
+        if r["n_rows"] != e["n_rows"]:
             raise RuntimeError(
                 f"orc_table: migrate row drift on {e['path']}: "
                 f"{r['n_rows']} != {e['n_rows']}")
@@ -2258,8 +2181,8 @@ def rewrite_migrate(spark, table: str) -> dict:
         new_type = orctypes.OrcType(
             "struct", list(et.children),
             [ren.get(n, n) for n in et.field_names]).orc_string()
-        ne = {"path": f"{_DATA}/{r['name']}",
-              "n_rows": e["n_rows"], "bytes": int(r["bytes"]),
+        ne = {"path": f"{_DATA}/{name}",
+              "n_rows": e["n_rows"], "bytes": r["bytes"],
               "type": new_type, "codec": e.get("codec", ""),
               "stats": {ren.get(k, k): v
                         for k, v in (e.get("stats") or {}).items()}}
@@ -2286,30 +2209,15 @@ def table_count(spark, table: str, predicate=None,
     entries = manifest_entries(table, snap)
     if predicate is None:
         return sum(e["n_rows"] for e in entries)
-    import pyarrow as pa
-
-    from .orcscan import _pred_list, tasks_df
-    from .orcstats import _DRIVER_STATS_MAX_FILES, _count_file
+    from .orcscan import _pred_list
+    from .orcstats import count_files
     _require_migrated(snap, entries, "predicated table_count")
     preds = _pred_list(predicate)
     _check_pred_cols(snap, preds, "table_count")
     spec = _parse_spec(snap.get("spec", []))
-    files = [os.path.join(table, e["path"]) for e in entries
-             if _entry_survives(e, preds, spec)]
-    if len(files) <= _DRIVER_STATS_MAX_FILES:
-        return sum(_count_file(p, preds) for p in files)
-    fdf = tasks_df(spark, {"path": pa.array(files, pa.string())},
-                   min(len(files), 256))
-
-    def kern(it):
-        import pandas as pd
-        for pdf in it:
-            yield pd.DataFrame(
-                {"n": [sum(_count_file(p, preds)
-                           for p in pdf["path"])]})
-
-    return sum(r["n"] for r in fdf.mapInPandas(
-        kern, "n long").collect())
+    return count_files(spark, [os.path.join(table, e["path"])
+                               for e in entries
+                               if _entry_survives(e, preds, spec)], preds)
 
 
 def expire_snapshots(table: str, keep_last: int = 2) -> dict:

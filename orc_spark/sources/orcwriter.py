@@ -162,7 +162,9 @@ def _merge_stats(acc: dict, st: dict) -> None:
     merged min/max absent, except for doubles, where such a part is
     all NaN and adds no bounds (ORC-541).  A part with values but no
     sum leaves the merged sum absent.  Strings compare bytewise (ORC's
-    order); decimal sums add exactly under an 80-digit context."""
+    order); decimal sums add exactly under an 80-digit context.  An
+    ``int`` sum that leaves int64 is dropped like a missing one, as in
+    Java ORC."""
     from decimal import localcontext
     has_values = st.get("n", 0) > 0
     acc["n"] += st.get("n", 0)
@@ -185,6 +187,10 @@ def _merge_stats(acc: dict, st: dict) -> None:
             with localcontext() as ctx:
                 ctx.prec = 80
                 acc["sum"] = acc.get("sum", 0) + st["sum"]
+            if acc["g"] == "int" and not \
+                    -leaves.INT64_LIMIT <= acc["sum"] < leaves.INT64_LIMIT:
+                acc["no_sum"] = True
+                del acc["sum"]
     elif has_values:
         acc["no_sum"] = True
         acc.pop("sum", None)

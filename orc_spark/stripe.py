@@ -459,14 +459,21 @@ def encode_column(arr: pa.Array, spec: ColumnSpec,
 
 
 def _whole_stats(vals: np.ndarray) -> dict:
-    """min/max/sum of a whole stripe: one stride of the leaf kernel."""
-    return leaves.numeric_stats(vals, [0, len(vals)])[0]
+    """min/max/sum of a whole stripe: one stride of the leaf kernel.
+    A sum the kernel leaves out (an integer sum past int64) reads
+    None, so that ``_merge_col_stats`` keeps it out of every rollup."""
+    st = leaves.numeric_stats(vals, [0, len(vals)])[0]
+    if len(vals) and "sum" not in st:
+        st["sum"] = None
+    return st
 
 
-def _drop_nan_sum(st: dict) -> dict:
-    """ORC-541: a NaN sum (also a rolled-up one) stays out of the JSON."""
-    if isinstance(st.get("sum"), float) and math.isnan(st["sum"]):
-        del st["sum"]
+def _drop_unknown_sum(st: dict) -> dict:
+    """A None sum, or a NaN one (ORC-541), rolled up or not, stays out
+    of the JSON."""
+    if st.get("sum") is None or (isinstance(st["sum"], float)
+                                 and math.isnan(st["sum"])):
+        st.pop("sum", None)
     return st
 
 
@@ -558,9 +565,18 @@ def _merge_col_stats(acc: dict, st: dict) -> dict:
         out = dict(st)
         out.pop("dict_size", None)
         return out
-    for k in ("count", "sum", "true_count", "total_elems", "sum_len"):
+    for k in ("count", "true_count", "total_elems", "sum_len"):
         if k in st:
             acc[k] = acc.get(k, 0) + st[k]
+    if "sum" in st:
+        # a part without a sum, or an integer total past int64, leaves
+        # the rollup without one
+        a, b = acc.get("sum", 0), st["sum"]
+        total = None if a is None or b is None else a + b
+        if isinstance(total, int) and \
+                not -leaves.INT64_LIMIT <= total < leaves.INT64_LIMIT:
+            total = None
+        acc["sum"] = total
     if "min" in st:
         acc["min"] = st["min"] if "min" not in acc else min(acc["min"],
                                                             st["min"])
@@ -598,7 +614,7 @@ def encode_stripe(batch: pa.Table | pa.RecordBatch, specs: list[ColumnSpec],
             arr = arr.combine_chunks()
         encoding, streams, cstats = encode_column(arr, spec, use_fsst)
         encodings[spec.name] = encoding
-        _drop_nan_sum(cstats)
+        _drop_unknown_sum(cstats)
         # per-stream byte sizes: the positions/row-index analog
         # (positionrecorder.go / writer.go:337-384) for seek & audit
         cstats["stream_bytes"] = {}
@@ -646,7 +662,7 @@ def _encode_stripe_strided(batch, specs, codec, use_fsst,
                 arr = arr.combine_chunks()
             encoding, streams, cstats = encode_column(arr, spec, use_fsst)
             encs[spec.name] = encoding
-            sts[spec.name] = _drop_nan_sum(
+            sts[spec.name] = _drop_unknown_sum(
                 {k: v for k, v in cstats.items()
                  if k in ("count", "min", "max", "sum", "true_count",
                           "total_elems", "sum_len")})
@@ -675,7 +691,7 @@ def _encode_stripe_strided(batch, specs, codec, use_fsst,
         offsets[key] = offs
         enc_bytes += len(blob)
     for st in merged.values():
-        _drop_nan_sum(st)
+        _drop_unknown_sum(st)
         st["stream_bytes"] = {}
     stats = dict(merged)
     stats["_strides"] = {"rows": rows_per,

@@ -304,3 +304,26 @@ def test_byterle_partial_decode_clamps():
     assert byterle.decode(lit, 3).tolist() == [1, 2, 3]
     rep = byterle.encode(np.array([7] * 10, np.uint8))
     assert byterle.decode(rep, 5).tolist() == [7] * 5
+
+
+def test_tzinfo_bad_zone_name_is_none_other_errors_propagate(
+        monkeypatch):
+    """A writer zone name read from a file that names no zone (unknown,
+    malformed, a tzdata directory, empty) reads as no zone; any other
+    failure of the lookup is a bug and propagates instead of reading
+    as "unknown zone"."""
+    import zoneinfo
+
+    from orc_spark.sources import orcfile
+    monkeypatch.setattr(orcfile, "_TZ_CACHE", {})
+    for bad in ["Nope/Zone", "../etc/passwd", "/abs", "Europe/Berlin/",
+                "a\x00b", "America", ""]:
+        assert orcfile._tzinfo(bad) is None, bad
+    assert orcfile._tzinfo("UTC") == zoneinfo.ZoneInfo("UTC")
+
+    def broken(name):
+        raise RuntimeError("zone lookup bug")
+
+    monkeypatch.setattr(zoneinfo, "ZoneInfo", broken)
+    with pytest.raises(RuntimeError, match="zone lookup bug"):
+        orcfile._tzinfo("Europe/Paris")

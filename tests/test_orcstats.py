@@ -4,7 +4,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from orc_spark.sources import orcstats, orcwriter
+from orc_spark.sources import orcscan, orcstats, orcwriter
 
 EX = "/root/reference/examples"
 
@@ -91,7 +91,7 @@ def test_stats_agg_distributed_path_matches_driver(spark, tmp_path,
                                                    monkeypatch):
     d = _write_dir(tmp_path)
     a = orcstats.footer_aggregate(spark, d, ["v"])
-    monkeypatch.setattr(orcstats, "_DRIVER_STATS_MAX_FILES", 1)
+    monkeypatch.setattr(orcscan, "DRIVER_FOOTER_MAX_FILES", 1)
     b = orcstats.footer_aggregate(spark, d, ["v"])
     assert a == b
 

@@ -12,7 +12,7 @@ import time
 
 import pytest
 
-from orc_spark.sources import orctable
+from orc_spark.sources import orcscan, orctable
 from orc_spark.sources.orcfile import ORCFile
 
 
@@ -276,7 +276,7 @@ def test_delete_distributed_classification_same_result(
         spark, tmp_path, monkeypatch):
     """Forcing the >64-candidate path (classification runs in
     executor tasks) must produce the identical snapshot outcome."""
-    monkeypatch.setattr(orctable, "_DRIVER_CLASSIFY_MAX_FILES", 0)
+    monkeypatch.setattr(orcscan, "DRIVER_FOOTER_MAX_FILES", 0)
     t, per = _sorted_table(spark, tmp_path, n=300, files=3)
     snap = orctable.delete_from(spark, t, ("v", "between", (50, 149)))
     assert snap["summary"]["deleted_rows"] == 100

@@ -2,6 +2,8 @@
 independent implementations (pyarrow C++ ORC, Spark JVM ORC) read back
 content-identical."""
 
+import os
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -475,6 +477,41 @@ def test_nan_excluded_from_double_statistics(tmp_path):
     assert np.isnan(got[5]) and np.isnan(got[40])
     assert np.allclose(np.delete(got, [5, 40]),
                        np.delete(vals, [5, 40]))
+
+
+def test_int_sum_past_int64_omitted(spark, tmp_path):
+    """Java ORC omits an integer sum that leaves int64.  One stride of
+    three 2**62 values has no sum anywhere; three strides of one 2**62
+    each keep their stride sums, while the stripe and file rollups,
+    which pass int64, have none.  Min/max and counts stay, and
+    footer_aggregate reports the sum missing instead of adding a
+    wrapped value (the footer used to read -2**62)."""
+    from orc_spark.sources import orcstats
+    big = 2 ** 62
+    one = str(tmp_path / "one" / "one.orc")
+    os.makedirs(os.path.dirname(one))
+    orcwriter.write_orc(pa.table({"v": pa.array([big] * 3, pa.int64())}),
+                        one, codec="zlib")
+    f = orcfile.ORCFile(one)
+    for st in (f.file_statistics[1], f.stripe_statistics[0][1]):
+        assert (st["n"], st["min"], st["max"]) == (3, big, big)
+        assert "sum" not in st
+    with pytest.raises(ValueError, match="sum"):
+        orcstats.footer_aggregate(spark, os.path.dirname(one), ["v"])
+    three = str(tmp_path / "three" / "three.orc")
+    os.makedirs(os.path.dirname(three))
+    vals = ([big] + [0] * 7) * 3
+    orcwriter.write_orc(pa.table({"v": pa.array(vals, pa.int64())}),
+                        three, codec="zlib", row_index_stride=8)
+    f = orcfile.ORCFile(three)
+    assert [e["stats"].get("sum") for e in f.row_index(0, 1)] == \
+        [big] * 3
+    for st in (f.file_statistics[1], f.stripe_statistics[0][1]):
+        assert (st["n"], st["min"], st["max"]) == (24, 0, big)
+        assert "sum" not in st
+    with pytest.raises(ValueError, match="sum"):
+        orcstats.footer_aggregate(spark, os.path.dirname(three), ["v"])
+    assert [r["v"] for r in f.read_all()] == vals
 
 
 def test_writer_abort_and_context_manager(tmp_path):

@@ -500,6 +500,36 @@ def test_timestamp_units_roundtrip(unit):
     assert got.cast(pa.int64()).to_pylist() == want
 
 
+def test_int_sum_past_int64_absent():
+    """An integer sum that leaves int64 is absent, as in Java ORC, in a
+    whole stripe and in every rollup that contains it; a rollup of
+    stride sums that each fit but together leave int64 is absent too.
+    numpy's int64 sum used to wrap to -2**62 here."""
+    big = 2 ** 62
+    st = stripe._whole_stats(np.array([big] * 3))
+    assert (st["min"], st["max"], st["sum"]) == (big, big, None)
+    specs = stripe.parse_schema([("x", "bigint")])
+    whole = stripe.encode_stripe(pa.table({"x": pa.array([big] * 3)}),
+                                 specs)
+    assert "sum" not in json.loads(whole["stats"])["x"]
+    # strides 0 and 2 sum to 2**62 each; stride 1 overflows on its own
+    vals = [big] + [0] * 7 + [big] * 2 + [1] * 6 + [big] + [0] * 7
+    batch = pa.table({"x": pa.array(vals, pa.int64())})
+    row = stripe.encode_stripe(batch, specs, stride_rows=8)
+    strided = json.loads(row["stats"])
+    per_stride = [s["x"] for s in strided["_strides"]["stats"]]
+    assert [s.get("sum") for s in per_stride] == [big, None, big]
+    assert "sum" not in strided["x"]
+    assert (strided["x"]["min"], strided["x"]["max"]) == (0, big)
+    assert stripe.decode_stripe(row, specs).column("x").to_pylist() == vals
+    # two fitting strides whose rollup leaves int64
+    row = stripe.encode_stripe(
+        pa.table({"x": pa.array([big] + [0] * 7 + [big] * 1 + [0] * 7
+                                + [big] + [0] * 7, pa.int64())}),
+        specs, stride_rows=8)
+    assert "sum" not in json.loads(row["stats"])["x"]
+
+
 def test_strided_nan_sum_absent():
     """ORC-541: a NaN keeps the double sum out of the stats of its
     stride AND of the stripe rollup, whole or strided."""

@@ -2,13 +2,18 @@
 enters Spark as a LocalTableScan with no Python pass, and every
 planning site gets exactly the partition count it asks for — on both
 sides of ``defaultParallelism``, where the helper either keeps the
-scan's own slices or repartitions."""
+scan's own slices or repartitions.  Collect-style jobs over such a
+list run through ``orcscan.run_tasks``."""
 
 import glob
 import os
+import uuid
+from datetime import date
+from decimal import Decimal
 
 import numpy as np
 import pyarrow as pa
+import pytest
 
 from orc_spark.sources import orcmerge, orcscan, orcstats, orctable
 from orc_spark.sources import orcwriter
@@ -102,7 +107,7 @@ def test_file_tasks_above_parallelism(spark, tmp_path, monkeypatch):
     n_files = dp + 2
     d = _orc_dir(str(tmp_path / "d"), n_files=n_files)
     n = 100 * n_files
-    monkeypatch.setattr(orcstats, "_DRIVER_STATS_MAX_FILES", 1)
+    monkeypatch.setattr(orcscan, "DRIVER_FOOTER_MAX_FILES", 1)
     agg = orcstats.footer_aggregate(spark, d, ["v"])
     assert agg["rows"] == n
     assert agg["cols"]["v"]["sum"] == n * (n - 1) // 2
@@ -139,8 +144,7 @@ def test_table_file_ops_above_parallelism(spark, tmp_path, monkeypatch):
     task list has one row per file."""
     dp = spark.sparkContext.defaultParallelism
     n_files, per = dp + 2, 100
-    monkeypatch.setattr(orctable, "_DRIVER_CLASSIFY_MAX_FILES", 0)
-    monkeypatch.setattr(orcstats, "_DRIVER_STATS_MAX_FILES", 1)
+    monkeypatch.setattr(orcscan, "DRIVER_FOOTER_MAX_FILES", 0)
     t = str(tmp_path / "t")
     orctable.create_table(t, "struct<v:int,tag:string>")
     for i in range(n_files):
@@ -179,3 +183,116 @@ def test_table_file_ops_above_parallelism(spark, tmp_path, monkeypatch):
     assert got == want
     assert orctable.table_count(spark, t, ("v", ">=", 0)) == len(want)
 
+
+def test_run_tasks_results_in_task_order(spark):
+    """Results come back in task order when the task list keeps the
+    scan's own slices (fewer tasks than defaultParallelism) and when
+    it is round-robin repartitioned (more), and ``fn`` runs in Spark's
+    Python workers, not on the driver."""
+    dp = spark.sparkContext.defaultParallelism
+    for n in sorted({1, max(1, dp - 1), dp + 3, 5 * dp + 1}):
+        got = orcscan.run_tasks(spark, list(range(n)),
+                                lambda t: (t, t * t, os.getpid()))
+        assert [(t, sq) for t, sq, _ in got] == \
+            [(t, t * t) for t in range(n)], n
+        assert os.getpid() not in {pid for _, _, pid in got}
+    assert orcscan.run_tasks(spark, [], lambda t: t) == []
+
+
+def test_run_tasks_round_trips_python_objects(spark):
+    """Tasks and results are pickled, not stringified: Decimal (with
+    its exponent), date, bytes, None and nested containers keep their
+    types both ways."""
+    tasks = [Decimal("1.10"), date(1969, 12, 31), b"\x00\xff", None,
+             {"a": {"b": [Decimal("-3E+2"), date(2024, 2, 29)]},
+              "k": (1, "x"), 7: {8, 9}}]
+    got = orcscan.run_tasks(spark, tasks,
+                            lambda t: {"in": t, "nested": [t, (t,)]})
+    assert got == [{"in": t, "nested": [t, (t,)]} for t in tasks]
+    assert str(got[0]["in"]) == "1.10"
+    assert type(got[1]["nested"][1][0]) is date
+    assert got[4]["in"]["k"] == (1, "x") and 7 in got[4]["in"]
+
+
+def test_run_tasks_fn_error_fails_the_call(spark):
+    """An exception raised by ``fn`` fails the job; the caller never
+    gets a short result list."""
+    def fn(t):
+        if t == 3:
+            raise ValueError(f"planted failure on task {t}")
+        return t
+
+    with pytest.raises(Exception, match="planted failure on task 3"):
+        orcscan.run_tasks(spark, list(range(6)), fn)
+
+
+def _typed_dir(d: str, n_files: int) -> str:
+    """``n_files`` files of 100 rows each: consecutive longs, a
+    decimal and a string, so footer statistics carry int, Decimal and
+    str values."""
+    os.makedirs(d, exist_ok=True)
+    for i in range(n_files):
+        v = np.arange(i * 100, (i + 1) * 100, dtype=np.int64)
+        w = orcwriter.ORCFileWriter(os.path.join(d, f"p{i:02d}.orc"),
+                                    codec="zlib", stripe_rows=50)
+        w.write_batch(pa.RecordBatch.from_arrays(
+            [pa.array(v),
+             pa.array([Decimal(int(x)).scaleb(-2) for x in v],
+                      pa.decimal128(12, 2)),
+             pa.array([f"s{x:05d}" for x in v])],
+            names=["v", "dec", "s"]))
+        w.close()
+    return d
+
+
+def _spark_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"run-tasks-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_footer_only_jobs_driver_equals_distributed(spark, tmp_path,
+                                                    monkeypatch):
+    """Stats, COUNT and classify give the same answer on the driver
+    (at most DRIVER_FOOTER_MAX_FILES files, no Spark job) and in
+    Spark tasks (above it)."""
+    dp = spark.sparkContext.defaultParallelism
+    d = _typed_dir(str(tmp_path / "d"), n_files=dp + 2)
+    paths = sorted(glob.glob(d + "/*.orc"))
+    preds = [("v", ">=", 150)]
+
+    def jobs():
+        return (orcstats.footer_aggregate(spark, d, ["v", "dec", "s"]),
+                orcstats.orc_count(spark, d, preds),
+                orctable._classify(spark, paths, preds))
+
+    driver, n_driver = _spark_jobs(spark, jobs)
+    monkeypatch.setattr(orcscan, "DRIVER_FOOTER_MAX_FILES", 0)
+    spread, n_spread = _spark_jobs(spark, jobs)
+    assert n_driver == 0 and n_spread >= 3    # one or more per call
+    assert spread == driver
+    agg, count, classes = driver
+    assert count == 100 * (dp + 2) - 150
+    assert classes == ["keep", "rewrite"] + ["drop"] * dp
+    assert agg["cols"]["dec"]["max"] == \
+        Decimal(100 * (dp + 2) - 1).scaleb(-2)
+    assert agg["cols"]["s"]["min"] == "s00000"
+
+
+def test_no_map_in_pandas_in_sources():
+    """Driver-planned jobs run through ``orcscan.run_tasks``
+    (mapInArrow); no hand-written pandas kernel is left in
+    ``orc_spark/sources``."""
+    root = os.path.dirname(orcscan.__file__)
+    hits = [f"{os.path.relpath(p, root)}:{i}"
+            for p in glob.glob(os.path.join(root, "**", "*.py"),
+                               recursive=True)
+            for i, line in enumerate(open(p), 1)
+            if ".mapInPandas(" in line]
+    assert hits == []

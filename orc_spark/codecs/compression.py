@@ -28,10 +28,8 @@ _SNAPPY_CODEC = None
 
 class CorruptChunk(ValueError):
     """A compressed chunk that does not decompress, under any codec,
-    or a chunk header that runs past the end of its stream.  Unlike
-    malformed VALUES (bad UTF-8), re-reading the same bytes cannot
-    succeed, so a column fast path re-raises it instead of retrying
-    the row path."""
+    or a chunk header that runs past the end of its stream; it fails
+    the stripe that holds it."""
 
 
 def _zstd_codec():

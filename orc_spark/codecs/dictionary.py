@@ -112,8 +112,10 @@ def to_arrow(lengths, blob, indexes=None, valid=None,
     parts: ``lengths``/``blob`` of the values (direct) or of the keys
     (``indexes`` given, one per non-null row), plus an optional PRESENT
     ``valid`` mask over the rows.  Zero-copy over ``blob`` and
-    validated in C++: malformed UTF-8, a short blob or a column past
-    int32 offsets raise ValueError (``pyarrow.ArrowInvalid`` is one)."""
+    validated in C++: a short blob or a column past int32 offsets
+    raises ValueError.  A value (for a dictionary column, a key) that
+    is not valid UTF-8 reads as ``bytes.decode("utf-8", "replace")``
+    renders it; only those values are decoded in Python."""
     lengths = np.asarray(lengths, dtype=np.int64)
     if indexes is not None:
         indexes = np.asarray(indexes, dtype=np.int64)
@@ -132,14 +134,44 @@ def to_arrow(lengths, blob, indexes=None, valid=None,
     nulls = 0 if row_valid is None else \
         len(valid) - int(np.count_nonzero(valid))
     arr = pa.Array.from_buffers(
-        pa.binary() if binary else pa.string(), len(lengths),
+        pa.binary(), len(lengths),
         [leaves.validity(row_valid), pa.py_buffer(offsets),
          pa.py_buffer(blob)],
         null_count=nulls)
     arr.validate(full=True)
+    if not binary:
+        arr = _utf8(arr)
     if indexes is None:
         return arr
     if valid is None:
         return arr.take(pa.array(indexes))
     # null rows take index 0 under a null mask
     return arr.take(pa.array(leaves.scatter(indexes, valid), mask=~valid))
+
+
+def _invalid_utf8(arr: pa.Array, lo: int, hi: int) -> list[int]:
+    """Positions in ``[lo, hi)`` of the binary array ``arr`` whose
+    value is not valid UTF-8, found by bisection over validating
+    casts (a clean half costs one C++ pass)."""
+    try:
+        arr.slice(lo, hi - lo).cast(pa.string())
+        return []
+    except pa.ArrowInvalid:
+        if hi - lo == 1:
+            return [lo]
+        mid = (lo + hi) // 2
+        return _invalid_utf8(arr, lo, mid) + _invalid_utf8(arr, mid, hi)
+
+
+def _utf8(arr: pa.Array) -> pa.Array:
+    """The binary array ``arr`` as ``string``, each value that is not
+    valid UTF-8 replace-decoded (U+FFFD per bad sequence)."""
+    bad = _invalid_utf8(arr, 0, len(arr))
+    if bad:
+        mask = np.zeros(len(arr), dtype=bool)
+        mask[bad] = True
+        fixed = [arr[i].as_py().decode("utf-8", "replace").encode()
+                 for i in bad]
+        arr = pc.replace_with_mask(arr, pa.array(mask),
+                                   pa.array(fixed, pa.binary()))
+    return arr.view(pa.string())  # every value now checked

@@ -30,9 +30,9 @@ decimal.go:53-79); timestamps surface as TIMESTAMP_NTZ (ORC stores
 writer-zone wall clock — no instant is implied) truncated to
 microseconds, or as lossless LONG wall-clock nanos-since-epoch under
 ``timestamp_nanos=True``.  Whole and stride-pruned stripes decode
-column-major through ``_column_arrow``; per-row Python runs only for a
-column ``_fast_arrow`` declines.  The columnar stripe table remains the
-performance path.
+column-major through ``_column_arrow``, whose ``_fast_arrow`` reads
+every type tree; no column falls back to per-row Python.  The
+columnar stripe table remains the performance path.
 """
 
 from __future__ import annotations
@@ -44,7 +44,6 @@ from datetime import date, datetime
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .. import orctypes
-from ..codecs.compression import CorruptChunk
 from .orcfile import ORCFile
 
 _OPS = (">=", ">", "<=", "<", "==", "between", "in", "prefix")
@@ -108,18 +107,6 @@ def _spark_of(node: orctypes.OrcType, ts_nanos: bool = False):
                    for i, c in enumerate(node.children)]
         return T.StructType(fields)
     raise ValueError(f"orc_scan: unsupported ORC kind {k}")
-
-
-def _needs_conv(node: orctypes.OrcType) -> bool:
-    """True if values of this type require Python-side conversion
-    before pa.array() — identity kinds (bools/ints/floats/strings)
-    and containers of identity kinds skip ``_conv`` entirely."""
-    k = node.kind
-    if k in ("binary", "date", "timestamp", "map", "union"):
-        return True
-    if k in ("struct", "list"):
-        return any(_needs_conv(c) for c in node.children)
-    return False
 
 
 _EPOCH = datetime(1970, 1, 1)
@@ -332,6 +319,31 @@ def orc_files(path: str, what: str = "orc_scan") -> list[str]:
 # -------------------------------------------------------------------
 
 
+def _zone_offsets(instant, tz):
+    """int64 UTC offset (seconds) of zone ``tz`` at each UTC second of
+    ``instant``, exact, from one pair of ``zoneinfo`` probes per
+    distinct day: a zone's offset is constant within a day except on
+    its 1-2 DST transition days a year, whose values are probed one
+    by one.  Not Arrow's zone kernels: pyarrow 16's
+    ``local_timestamp`` ignores the TZif POSIX footer and is wrong for
+    DST zones from 2038 on."""
+    import numpy as np
+
+    def off(u: int) -> int:
+        return int(datetime.fromtimestamp(u, tz).utcoffset()
+                   .total_seconds())
+
+    days, inv = np.unique(np.floor_divide(instant, 86400),
+                          return_inverse=True)
+    first = np.array([off(d * 86400) for d in days.tolist()], np.int64)
+    last = np.array([off(d * 86400 + 86399) for d in days.tolist()],
+                    np.int64)
+    offset = first[inv]
+    for j in np.flatnonzero((first != last)[inv]).tolist():
+        offset[j] = off(int(instant[j]))
+    return offset
+
+
 def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
     """pa.Array of Arrow type ``ft`` for column ``cid`` over ``n``
     rows, built WHOLE-ARRAY — validity bitmaps from PRESENT streams,
@@ -340,14 +352,15 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
     (r4; reference treereader.go:29-63 / cursor.go:89-176 walk these
     per row — we don't).  Recurses over the full type tree:
     list<struct<...>>, map<string,struct>, arbitrarily deep.
-    Returns None when a part of the subtree is unsupported (unknown
-    writer zone or int64 range of a timestamp, null map keys, lists
-    past int32 offsets) — the caller then takes the generic row path
-    for THIS root column only.  Malformed values (bad UTF-8, a decimal
-    past its scale or precision) raise ValueError; callers then take
-    the row path, which replace-decodes.  ``CorruptChunk`` propagates."""
+    Total: every type tree either decodes or raises.  Values the
+    row reader replace-decodes (bad UTF-8) read the same way here;
+    null map keys, list/map offsets past int32, a decimal past its
+    scale or precision and timestamps past int64 raise, as they do
+    on the row path (``orcfile._read_column`` + ``_conv``, kept as
+    the test reference)."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
     from ..codecs import byterle, dictionary, leaves
     from ..codecs import decimal as dec_codec
     t = f.types[cid]
@@ -385,27 +398,24 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
             blob = f._stream(cid, "DATA") or b""
         return dictionary.to_arrow(lengths, blob, indexes, valid,
                                    binary=k == "binary")
-    if k == "list":
+    if k in ("list", "map"):
         lengths = f._ints(cid, "LENGTH", n_valid, signed=False)
         total = int(lengths.sum())
         if total > 2**31 - 1:
-            return None  # would overflow int32 ListArray offsets
-        child = _fast_arrow(f, t.children[0], total, ft.value_type)
-        if child is None:
-            return None
-        return pa.ListArray.from_arrays(leaves.list_offsets(lengths, valid),
-                                        child)
-    if k == "map":
-        lengths = f._ints(cid, "LENGTH", n_valid, signed=False)
-        total = int(lengths.sum())
-        if total > 2**31 - 1:
-            return None
+            raise ValueError(f"orc: {k} column {cid} holds {total} "
+                             f"entries, past int32 Arrow offsets")
+        offsets = leaves.list_offsets(lengths, valid)
+        if k == "list":
+            return pa.ListArray.from_arrays(
+                offsets, _fast_arrow(f, t.children[0], total,
+                                     ft.value_type))
         keys = _fast_arrow(f, t.children[0], total, ft.key_type)
-        items = _fast_arrow(f, t.children[1], total, ft.item_type)
-        if keys is None or items is None or keys.null_count:
-            return None  # Arrow map keys must be non-null
-        return pa.MapArray.from_arrays(leaves.list_offsets(lengths, valid),
-                                       keys, items)
+        if keys.null_count:
+            raise ValueError(f"orc: map column {cid} has null keys "
+                             f"(Arrow map keys must be non-null)")
+        return pa.MapArray.from_arrays(
+            offsets, keys,
+            _fast_arrow(f, t.children[1], total, ft.item_type))
     if k == "struct":
         # children map BY NAME against the target struct type (r5):
         # under an evolve-widened union schema a file's struct may
@@ -413,90 +423,43 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
         # by position would silently misalign values across fields
         fields = [ft.field(i) for i in range(ft.num_fields)]
         have = {fn: c for fn, c in zip(t.field_names, t.children)}
-        children = []
-        for fld in fields:
-            cc = have.get(fld.name)
-            if cc is None:
-                children.append(pa.nulls(n_valid, fld.type))
-                continue
-            ch = _fast_arrow(f, cc, n_valid, fld.type)
-            if ch is None:
-                return None
-            children.append(ch)
+        children = [pa.nulls(n_valid, fld.type) if fld.name not in have
+                    else _fast_arrow(f, have[fld.name], n_valid, fld.type)
+                    for fld in fields]
         # children hold n_valid entries (ORC elides rows where the
         # parent is null): take-expand to n slots with null indices
         return pa.StructArray.from_arrays(
             [leaves.expand(ch, valid) for ch in children], fields=fields,
             mask=None if valid is None else pa.array(~valid))
     if k == "timestamp":
-        # whole-array timestamps (r4).  UTC/absent writer zones are
-        # pure arithmetic; ZONED files (Java lakes commonly stamp
-        # America/Los_Angeles etc.) vectorize via per-DAY offset
-        # buckets — a zone's UTC offset is constant within a civil
-        # day except the 1-2 DST transition days a year, whose few
-        # values take the per-value scalar offset path
-        wtz = getattr(f, "writer_tz", "") or ""
-        flat = wtz in ("", "UTC", "GMT", "Etc/UTC")
-        tz = None
-        if not flat:
-            from .orcfile import _tzinfo
-            tz = _tzinfo(wtz)
-            if tz is None:
-                return None  # unknown zone name: generic path
+        # whole-array timestamps (r4).  The stored seconds count from
+        # 2015-01-01 in the writer's zone.  No zone, or one this
+        # machine does not know: the reference's flat UTC-base
+        # arithmetic.  A known zone adds Java's pre-1970 step and, if
+        # it is not UTC, its offset (``_zone_offsets``)
+        from .orcfile import TIMESTAMP_BASE_SECONDS, _tzinfo
+        tz = _tzinfo(f.writer_tz)
         secs = f._ints(cid, "DATA", n_valid, signed=True) \
             .astype(np.int64)
         nanos = leaves.parse_nanos(
             f._ints(cid, "SECONDARY", n_valid, signed=False))
-        if flat:
-            instant = secs + 1420070400  # 2015-01-01 base (UTC)
-            if wtz:
-                # Java truncates pre-1970 seconds toward zero while
-                # nanos stay positive (mirrors _format_ts's tz
-                # branch); the flat no-zone arithmetic does not
-                instant = instant - ((instant < 0) &
-                                     (nanos > 0)).astype(np.int64)
+        if tz is None:
+            instant = secs + TIMESTAMP_BASE_SECONDS
         else:
-            from datetime import datetime as _dt
-            epoch_local = int(_dt(2015, 1, 1, tzinfo=tz).timestamp())
-            instant = secs + epoch_local
+            instant = secs + int(datetime(2015, 1, 1,
+                                          tzinfo=tz).timestamp())
+            # Java truncates pre-1970 seconds toward zero while nanos
+            # stay positive (mirrors _format_ts's zone branch)
             instant = instant - ((instant < 0) &
                                  (nanos > 0)).astype(np.int64)
-
-            def _off(t: int) -> int:
-                d = _dt.fromtimestamp(int(t), tz)
-                return int(d.utcoffset().total_seconds())
-
-            try:
-                days = np.floor_divide(instant, 86400)
-                uniq, inv = np.unique(days, return_inverse=True)
-                if len(uniq) > max(4096, n_valid // 4):
-                    return None  # offset probing would dominate
-                offs = np.empty(len(uniq), np.int64)
-                mixed = []
-                for i, d in enumerate(uniq.tolist()):
-                    o0 = _off(d * 86400)
-                    if o0 == _off((d + 1) * 86400 - 1):
-                        offs[i] = o0
-                    else:
-                        offs[i] = 0
-                        mixed.append(i)
-                offset = offs[inv]
-                for i in mixed:  # DST-transition days: per value
-                    for j in np.flatnonzero(inv == i).tolist():
-                        offset[j] = _off(instant[j])
-            except (OverflowError, OSError, ValueError):
-                return None  # out-of-range for fromtimestamp
-            # wall clock = instant + zone offset at that instant
-            instant = instant + offset
-        if pa.types.is_int64(ft):  # timestamp_nanos surface
-            if len(instant) and int(np.abs(instant).max()) > 9 * 10**9:
-                return None  # would overflow int64 nanos (~year 2255)
-            vals = instant * 1_000_000_000 + nanos
-        else:
-            if len(instant) and int(np.abs(instant).max()) > 9 * 10**12:
-                return None
-            vals = instant * 1_000_000 + nanos // 1000
-        return leaves.with_nulls(vals, valid, ft)
+            if f.writer_tz not in ("UTC", "GMT", "Etc/UTC"):
+                instant = instant + _zone_offsets(instant, tz)
+        # int64 nanos (timestamp_nanos surface) or micros; checked,
+        # so a wall clock past int64 raises
+        per = 10**9 if pa.types.is_int64(ft) else 10**6
+        vals = pc.add_checked(pc.multiply_checked(instant, per),
+                              nanos // (10**9 // per))
+        return leaves.with_nulls(vals.to_numpy(), valid, ft)
     if k == "decimal":
         # evolve widening casts to the union schema's decimal
         scales = f._ints(cid, "SECONDARY", n_valid, signed=True)
@@ -513,12 +476,9 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
         children = [leaves.with_nulls(tags, valid)]
         fields = [ft.field(0)]  # "tag"
         for vi, ccid in enumerate(t.children):
-            cft = ft.field(vi + 1).type
             sel = tags == vi
-            cnt = int(sel.sum())
-            ch = _fast_arrow(f, ccid, cnt, cft)
-            if ch is None:
-                return None
+            ch = _fast_arrow(f, ccid, int(sel.sum()),
+                             ft.field(vi + 1).type)
             # expand: rows of THIS variant draw consecutive child
             # values; every other row is null
             if valid is not None:
@@ -528,39 +488,23 @@ def _fast_arrow(f: ORCFile, cid: int, n: int, ft):
         return pa.StructArray.from_arrays(
             children, fields=fields,
             mask=None if valid is None else pa.array(~valid))
-    return None  # zoned timestamps: generic row path
+    raise ValueError(f"orc: column {cid} has unsupported kind {k!r}")
 
 
-def _column_arrow(f: ORCFile, ids: list[int], n: int,
-                  node: orctypes.OrcType, ft, ts_nanos: bool = False):
+def _column_arrow(f: ORCFile, ids: list[int], n: int, ft):
     """pa.Array of Arrow type ``ft`` for the column at the end of the
     id chain ``ids`` over the ``n`` rows of the currently loaded
     stripe (whole or stride-sliced): ancestor PRESENT chain (the root
     struct's included), ``_fast_arrow`` at the surviving count, then
-    take-expansion back to ``n`` rows.  Only when ``_fast_arrow``
-    declines (None) or rejects malformed values (ValueError) does THIS
-    column take the generic row path (``read_path`` + ``_conv``),
-    which replace-decodes.  A chunk that does not decompress
-    (``CorruptChunk``) propagates: the row path would decompress the
-    same bytes and fail the same way."""
-    import pyarrow as pa
+    take-expansion back to ``n`` rows.  There is no second decoder:
+    whatever ``_fast_arrow`` raises fails the stripe."""
     from ..codecs import leaves
     valids, cnt = f.path_present_chain(ids, n)
-    try:
-        arr = _fast_arrow(f, ids[-1], cnt, ft)
-    except CorruptChunk:
-        raise
-    except ValueError:
-        arr = None
-    if arr is not None:
-        # out through the ancestor-struct validity chain, deepest first
-        for valid in reversed(valids):
-            arr = leaves.expand(arr, valid)
-        return arr
-    vals = f.read_path(ids, n)
-    if _needs_conv(node):
-        vals = [_conv(node, v, ts_nanos) for v in vals]
-    return pa.array(vals, type=ft)
+    arr = _fast_arrow(f, ids[-1], cnt, ft)
+    # out through the ancestor-struct validity chain, deepest first
+    for valid in reversed(valids):
+        arr = leaves.expand(arr, valid)
+    return arr
 
 
 def stride_keep(f: ORCFile, si: int, preds: list[tuple],
@@ -650,7 +594,11 @@ def run_tasks(spark, tasks: list, fn, footer_only: bool = False) -> list:
     round-trips unchanged (Decimal, date, nested containers), and an
     exception raised by ``fn`` fails the call.  ``footer_only`` jobs
     (they read file tails and write nothing) run on the driver up to
-    DRIVER_FOOTER_MAX_FILES tasks, below the cost of a Spark job."""
+    DRIVER_FOOTER_MAX_FILES tasks, below the cost of a Spark job;
+    above it they keep the task table's own min(tasks,
+    defaultParallelism) slices, one Spark job with no shuffle.  Jobs
+    that write files get one partition per task, up to
+    _MAX_TASK_PARTS."""
     import pickle
 
     import pyarrow as pa
@@ -658,11 +606,13 @@ def run_tasks(spark, tasks: list, fn, footer_only: bool = False) -> list:
         return [fn(t) for t in tasks]
     if not tasks:
         return []
+    cap = spark.sparkContext.defaultParallelism if footer_only \
+        else _MAX_TASK_PARTS
     tdf = tasks_df(
         spark, {"pos": pa.array(range(len(tasks)), pa.int32()),
                 "task": pa.array([pickle.dumps(t) for t in tasks],
                                  pa.binary())},
-        min(len(tasks), _MAX_TASK_PARTS))
+        min(len(tasks), cap))
 
     def kern(batches):
         from orc_spark._alloc import tune_worker
@@ -802,7 +752,7 @@ class _ScanContext:
             n_rows = f._load_stripe_directory(si)
         cids = _root_col_ids(f)
         arrays = []
-        for fn, node in zip(self.root_names, self.root_children):
+        for fn in self.root_names:
             ft = self.arrow_schema.field(fn).type
             try:
                 # a dotted name is a nested-field projection (r5):
@@ -813,8 +763,7 @@ class _ScanContext:
                 # null-fill (name-based, the Spark convention)
                 arrays.append(pa.nulls(n_rows, ft))
                 continue
-            arrays.append(_column_arrow(f, ids, n_rows, node, ft,
-                                        self.ts_nanos))
+            arrays.append(_column_arrow(f, ids, n_rows, ft))
         return pa.RecordBatch.from_arrays(arrays,
                                           schema=self.arrow_schema)
 

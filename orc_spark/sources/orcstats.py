@@ -321,9 +321,8 @@ def _stripe_disposition(f: ORCFile, si: int, preds: list[tuple],
     nr = f._load_stripe_directory(si)
     combined = None
     for c, op, val in preds:
-        node = nodes[c]
-        ft = orc_arrow(node)
-        arr = _column_arrow(f, paths[c], nr, node, ft)
+        ft = orc_arrow(nodes[c])
+        arr = _column_arrow(f, paths[c], nr, ft)
         if op == "between":
             m = pc.and_kleene(
                 pc.greater_equal(arr, pa.scalar(val[0], ft)),

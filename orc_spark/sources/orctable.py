@@ -1483,8 +1483,8 @@ def _merge_plan(key: str, keys):
         acts, n_matched = [], 0
         for si in range(len(f.stripes)):
             n_rows = f._load_stripe_directory(si)
-            col = _column_arrow(f, [cid], n_rows, node,
-                                orc_arrow(node, True), True).cast(ft)
+            col = _column_arrow(f, [cid], n_rows,
+                                orc_arrow(node, True)).cast(ft)
             m = pc.fill_null(pc.is_in(col, value_set=value_set), False)
             n = pc.sum(m).as_py() or 0
             n_matched += n

@@ -463,8 +463,8 @@ def test_orc_scan_fuzz_vs_pyarrow(spark, tmp_path):
                       / 10**4) for _ in range(n)],
                 pa.decimal128(18, 4))
         if k == 13 or (depth >= 1 and k == 10):
-            # decimal(38,10) with >int64 mantissas: exercises the
-            # OverflowError fallback to the exact generic path
+            # decimal(38,10) with >int64 mantissas: the 128-bit
+            # limb path
             from decimal import Decimal, localcontext
             with localcontext() as ctx:
                 ctx.prec = 50
@@ -729,8 +729,8 @@ def test_orc_scan_nullable_fast_path_values(spark, tmp_path):
 def test_orc_scan_nested_fast_path_engages_and_matches(spark, tmp_path):
     """r4: list<struct>, map, struct<list>, and null-bearing nested
     trees build whole-array through _fast_arrow (offsets + validity +
-    take-expansion — no per-row _conv), and values equal the generic
-    row path exactly."""
+    take-expansion — no per-row _conv), and values equal the row
+    reader's (``read_path`` + ``_conv``) exactly."""
     n = 3000
     rng = np.random.default_rng(11)
     lens = rng.integers(0, 5, n)
@@ -756,36 +756,33 @@ def test_orc_scan_nested_fast_path_engages_and_matches(spark, tmp_path):
     w = orcwriter.ORCFileWriter(p + "/a.orc", codec="zlib")
     w.write_batch(tbl.to_batches()[0])
     w.close()
-    # 1) engagement: every root column must come back non-None from
-    # _fast_arrow (a silent fallback would pass values but lose the
-    # whole-array property this test pins)
+    # 1) per column, the whole-array reader equals the row reader
     from orc_spark import orctypes
-    from orc_spark.sources.orcscan import _fast_arrow, orc_arrow
     f = ORCFile(p + "/a.orc")
-    nr = f._load_stripe_directory(0)
-    cids = dict(zip(f.types[0].field_names, f.types[0].children))
     root = orctypes.type_from_file(p + "/a.orc")
-    for fn, node in zip(root.field_names, root.children):
-        arr = _fast_arrow(f, cids[fn], nr, orc_arrow(node))
-        assert arr is not None, f"{fn} fell back to the row path"
-        arr.validate(full=True)
-    # 2) parity with the generic row path through the full scan
-    import orc_spark.sources.orcscan as m
-    fast = orcscan.orc_scan(spark, p).orderBy("id").collect()
-    orig = m._fast_arrow
-    m._fast_arrow = lambda *a, **k: None
-    try:
-        slow = orcscan.orc_scan(spark, p).orderBy("id").collect()
-    finally:
-        m._fast_arrow = orig
-    assert [r.asDict(True) for r in fast] == \
-        [r.asDict(True) for r in slow]
+    cids = dict(zip(f.types[0].field_names, f.types[0].children))
+    want = {fn: [] for fn in root.field_names}
+    for si in range(len(f.stripes)):
+        nr = f._load_stripe_directory(si)
+        for fn, node in zip(root.field_names, root.children):
+            arr = orcscan._fast_arrow(f, cids[fn], nr,
+                                      orcscan.orc_arrow(node))
+            arr.validate(full=True)
+            ref = f.read_path([cids[fn]], nr)
+            assert arr.equals(pa.array(
+                [orcscan._conv(node, v) for v in ref],
+                type=orcscan.orc_arrow(node))), (fn, si)
+            want[fn] += [orcscan._conv(node, v) for v in ref]
+    # 2) the full scan returns the row reader's values
+    got = orcscan.orc_scan(spark, p).orderBy("id").collect()
+    assert [r.asDict(True) for r in got] == \
+        [dict(zip(want, vs)) for vs in zip(*want.values())]
 
 
 def test_orc_scan_decimal_fast_path_with_nulls(spark, tmp_path):
     """r4: int64-range decimals (p<=18) decode whole-array into the
     decimal128 buffer (incl. PRESENT nulls); the golden decimal.orc
-    and >int64 mantissas are covered elsewhere (generic fallback)."""
+    and >int64 mantissas are covered elsewhere."""
     from decimal import Decimal
     from orc_spark import orctypes
     from orc_spark.sources.orcscan import _fast_arrow, orc_arrow
@@ -801,7 +798,6 @@ def test_orc_scan_decimal_fast_path_with_nulls(spark, tmp_path):
     root = orctypes.type_from_file(fpath)
     cids = dict(zip(f.types[0].field_names, f.types[0].children))
     arr = _fast_arrow(f, cids["v"], nr, orc_arrow(root.children[0]))
-    assert arr is not None, "decimal fast path fell back"
     assert str(arr.type) == "decimal128(18, 4)"
     got = orcscan.orc_scan(spark, p).orderBy("v").collect()
     exp = sorted((v for v in vals if v is not None))
@@ -813,9 +809,9 @@ def test_orc_scan_decimal_fast_path_with_nulls(spark, tmp_path):
 
 def test_orc_scan_timestamp_fast_path_utc_parity(spark, tmp_path):
     """r4: UTC-written timestamps decode whole-array (both us and
-    nanos surfaces) with values identical to the generic
-    _format_ts/_conv path, incl. pre-1970 truncation and nulls;
-    zoned files (US/Pacific goldens) keep the generic path."""
+    nanos surfaces) with values identical to the row reader's
+    _format_ts/_conv, incl. pre-1970 truncation and nulls; so do a
+    zoned golden file and an unknown zone name."""
     import datetime as dt
     from orc_spark import orctypes
     from orc_spark.sources.orcscan import _conv, _fast_arrow, orc_arrow
@@ -841,20 +837,22 @@ def test_orc_scan_timestamp_fast_path_utc_parity(spark, tmp_path):
     for ts_nanos in (False, True):
         ft = orc_arrow(node, ts_nanos)
         arr = _fast_arrow(f, cids["t"], nr, ft)
-        assert arr is not None, "timestamp fast path fell back"
         exp = pa.array([_conv(node, v, ts_nanos)
                         for v in f._read_column(cids["t"], nr)],
                        type=ft)
         assert arr.equals(exp)
-    # zoned golden file: handled too since the per-day offset-bucket
-    # path landed (see test_orc_scan_zoned_timestamp_fast_path_parity
-    # for its parity check); an UNKNOWN zone name must decline
+    # zoned golden file (see also
+    # test_orc_scan_zoned_timestamp_fast_path_parity) and an UNKNOWN
+    # zone name, which reads with the flat UTC-base arithmetic
     g = ORCFile(f"{EX}/TestOrcFile.testTimestamp.orc")
     gn = g._load_stripe_directory(0)
     assert g.writer_tz not in ("", "UTC")
-    assert _fast_arrow(g, 0, gn, pa.timestamp("us")) is not None
-    g.writer_tz = "Not/AZone"
-    assert _fast_arrow(g, 0, gn, pa.timestamp("us")) is None
+    gnode = orctypes.type_from_file(f"{EX}/TestOrcFile.testTimestamp.orc")
+    for zone in (g.writer_tz, "Not/AZone"):
+        g.writer_tz = zone
+        exp = pa.array([_conv(gnode, v) for v in g._read_column(0, gn)],
+                       type=pa.timestamp("us"))
+        assert _fast_arrow(g, 0, gn, pa.timestamp("us")).equals(exp)
     # end-to-end through the scan
     got = sorted(r["t"] for r in orcscan.orc_scan(spark, p).collect()
                  if r["t"] is not None)
@@ -876,7 +874,6 @@ def test_orc_scan_union_fast_path_parity(spark):
     for si in range(len(f.stripes)):
         nr = f._load_stripe_directory(si)
         arr = _fast_arrow(f, cids["union"], nr, orc_arrow(node))
-        assert arr is not None, f"union fell back (stripe {si})"
         exp = pa.array([_conv(node, v)
                         for v in f._read_column(cids["union"], nr)],
                        type=orc_arrow(node))
@@ -914,11 +911,10 @@ def test_orc_scan_zoned_timestamp_fast_path_parity(spark):
             nr = f._load_stripe_directory(0)
             ft = orc_arrow(node, ts_nanos)
             arr = _fast_arrow(f, cid, nr, ft)
-            assert arr is not None, (name, f.writer_tz)
             exp = pa.array([_conv(node, v, ts_nanos)
                             for v in f._read_column(cid, nr)],
                            type=ft)
-            assert arr.equals(exp), (name, ts_nanos)
+            assert arr.equals(exp), (name, f.writer_tz, ts_nanos)
 
 
 def test_orc_scan_reads_spark_default_zstd(spark, tmp_path):
@@ -1407,14 +1403,19 @@ def _scan_first_stripe(path):
     return ctx.decode_stripe(ORCFile(path), 0)
 
 
-def test_malformed_utf8_reads_through_row_path(tmp_path):
+def test_malformed_utf8_replace_decodes(tmp_path):
+    """A value that is not valid UTF-8 reads as the row reader's
+    ``decode("utf-8", "replace")`` renders it, in a direct column and
+    in a dictionary key; the other values read unchanged."""
+    from orc_spark import orctypes
     path = str(tmp_path / "bad.orc")
     _planted_utf8_orc(path)
     f = ORCFile(path)
     nr = f._load_stripe_directory(0)
+    node = orctypes.OrcType("string")
     for cid in (1, 2):
-        with pytest.raises(ValueError):
-            orcscan._fast_arrow(f, cid, nr, pa.string())
+        assert orcscan._fast_arrow(f, cid, nr, pa.string()).equals(
+            _row_reference(f, cid, nr, node))
     batch = _scan_first_stripe(path)
     assert batch.column(0)[7].as_py() == "doc-000\ufffd"
     assert batch.column(0)[8].as_py() == "doc-0008"
@@ -1422,8 +1423,8 @@ def test_malformed_utf8_reads_through_row_path(tmp_path):
 
 
 def test_fast_path_bug_propagates(tmp_path, monkeypatch):
-    # only ValueError (malformed bytes) may send a column to the row
-    # path; any other error from the fast path is a bug and surfaces
+    # an error inside the column reader fails the stripe: there is no
+    # second decoder to retry with
     from orc_spark.codecs import dictionary
 
     def broken(*args, **kwargs):
@@ -1436,3 +1437,213 @@ def test_fast_path_bug_propagates(tmp_path, monkeypatch):
     monkeypatch.setattr(dictionary, "to_arrow", broken)
     with pytest.raises(RuntimeError, match="builder bug"):
         _scan_first_stripe(path)
+
+
+def test_short_string_blob_fails_the_stripe(tmp_path, monkeypatch):
+    """A string DATA stream shorter than its LENGTH values fails the
+    stripe decode; it never reads as values sliced past the end."""
+    path = str(tmp_path / "short.orc")
+    orcwriter.write_orc(pa.table({"s": [f"value-{i:05d}-"
+                                        for i in range(3000)]}),
+                        path, codec="none")
+    assert ORCFile(path)._stripe_footer(0)[0][1] == "DIRECT_V2"
+    orig = ORCFile._stream
+
+    def cut(self, col, kind):
+        raw = orig(self, col, kind)
+        return raw[:-40] if (col, kind) == (1, "DATA") else raw
+
+    monkeypatch.setattr(ORCFile, "_stream", cut)
+    with pytest.raises(ValueError, match="shorter than its lengths"):
+        _scan_first_stripe(path)
+
+
+def _row_reference(f, cid, n, node, ts_nanos=False):
+    """The row reader's values of column ``cid`` as an Arrow array:
+    ``_read_column`` + ``_conv``, the reference the column reader is
+    held to."""
+    return pa.array([orcscan._conv(node, v, ts_nanos)
+                     for v in f._read_column(cid, n)],
+                    type=orcscan.orc_arrow(node, ts_nanos))
+
+
+@pytest.mark.parametrize("zone", ["America/Los_Angeles", "Europe/Dublin",
+                                  "Australia/Lord_Howe", "Asia/Kolkata",
+                                  "Not/AZone"])
+def test_zoned_timestamps_match_row_reference(tmp_path, zone):
+    """Timestamps read under a writer zone equal the row reader on
+    both surfaces: more than 4096 distinct days, pre-1970 values with
+    nanos, every quarter hour around DST changes before 1970, now and
+    after 2038, nulls, and an unknown zone name (flat UTC-base
+    arithmetic).  A wall clock past int64 nanos raises on both."""
+    import datetime as dt
+
+    from orc_spark import orctypes
+    rng = np.random.default_rng(7)
+    lo = np.datetime64("1900-01-01", "ns").astype(np.int64)
+    hi = np.datetime64("2261-12-31", "ns").astype(np.int64)
+    vals = rng.integers(lo, hi, 12000).tolist()
+    for day in ("1960-04-24", "1965-10-31", "2021-03-14", "2021-03-28",
+                "2021-04-04", "2021-10-03", "2021-10-31", "2021-11-07",
+                "2040-03-11", "2040-03-25", "2040-10-07", "2040-10-28"):
+        start = np.datetime64(day, "ns").astype(np.int64) - 86400 * 10**9
+        vals += range(start, start + 3 * 86400 * 10**9, 900 * 10**9 + 7)
+    mask = np.arange(len(vals)) % 11 == 0
+    tbl = pa.table({"t": pa.array(np.array(vals, "datetime64[ns]"),
+                                  pa.timestamp("ns"), mask=mask)})
+    path = str(tmp_path / "ts.orc")
+    orcwriter.write_orc(tbl, path, codec="zlib")
+    node = orctypes.type_from_file(path).children[0]
+    f = ORCFile(path)
+    nr = f._load_stripe_directory(0)
+    assert len(np.unique(np.array(vals) // (86400 * 10**9))) > 4096
+    f.writer_tz = zone
+    for ts_nanos in (False, True):
+        got = orcscan._fast_arrow(f, 1, nr, orcscan.orc_arrow(node,
+                                                              ts_nanos))
+        assert got.equals(_row_reference(f, 1, nr, node, ts_nanos)), \
+            ts_nanos
+    far = str(tmp_path / "far.orc")
+    orcwriter.write_orc(pa.table({"t": pa.array(
+        [dt.datetime(2000, 1, 1), dt.datetime(2300, 1, 1)],
+        pa.timestamp("us"))}), far, codec="zlib")
+    g = ORCFile(far)
+    gn = g._load_stripe_directory(0)
+    g.writer_tz = zone
+    want = _row_reference(g, 1, gn, node)
+    assert want.to_pylist()[1].year == 2300
+    assert orcscan._fast_arrow(g, 1, gn, want.type).equals(want)
+    with pytest.raises((OverflowError, ValueError)):
+        _row_reference(g, 1, gn, node, True)
+    with pytest.raises((OverflowError, ValueError)):
+        orcscan._fast_arrow(g, 1, gn, pa.int64())
+
+
+def _planted_row_free_orc(path):
+    """Uncompressed .orc over the trees the row reader used to catch:
+    list<struct>, map, struct<list>, a union, decimal(38,10) past
+    int64, timestamps, and direct and dictionary strings.  Its stripe
+    footers then name the writer zone ``CET`` (a DST zone) and one
+    byte of each string column becomes 0xff (row 7 of ``doc_id``, key
+    "wiki" of ``source``)."""
+    import datetime as dt
+    from decimal import Decimal
+    n = 3000
+    rng = np.random.default_rng(13)
+    u = pa.UnionArray.from_dense(
+        pa.array([i % 2 for i in range(n)], pa.int8()),
+        pa.array([i // 2 for i in range(n)], pa.int32()),
+        [pa.array([None if i % 5 == 0 else i * 10
+                   for i in range(n // 2)], pa.int64()),
+         pa.array([f"u{i}" for i in range(n // 2)])])
+    tbl = pa.table({
+        "id": pa.array(np.arange(n)),
+        "lst": pa.array(
+            [None if i % 7 == 0 else
+             [{"x": int(i + j), "y": f"s{j}"} for j in range(i % 4)]
+             for i in range(n)],
+            pa.list_(pa.struct([("x", pa.int32()), ("y", pa.utf8())]))),
+        "mp": pa.array([{f"k{i % 5}": float(i)} if i % 3 else None
+                        for i in range(n)],
+                       pa.map_(pa.utf8(), pa.float64())),
+        "st": pa.array([{"a": i, "b": [f"w{i % 9}"] * (i % 3)}
+                        if i % 4 else None for i in range(n)],
+                       pa.struct([("a", pa.int64()),
+                                  ("b", pa.list_(pa.utf8()))])),
+        "u": u,
+        "dec": pa.array([None if i % 6 == 0 else
+                         Decimal(int(m)).scaleb(-10) * 10**9
+                         for i, m in enumerate(
+                             rng.integers(-2**62, 2**62, n))],
+                        pa.decimal128(38, 10)),
+        "t": pa.array([None if i % 8 == 0 else
+                       dt.datetime(1930, 1, 1) + dt.timedelta(
+                           seconds=int(s), microseconds=int(s) % 10**6)
+                       for i, s in enumerate(
+                           rng.integers(0, 150 * 365 * 86400, n))],
+                      pa.timestamp("us")),
+        "doc_id": [f"doc-{i:04d}" for i in range(n)],
+        "source": [["cc", "wiki", "books"][i % 3] for i in range(n)],
+    })
+    orcwriter.write_orc(tbl, path, codec="none")
+    with open(path, "rb") as fh:
+        data = bytes(fh.read())
+    zone = b"\x1a\x03UTC"        # stripe footer field 3, writerTimezone
+    assert data.count(zone) == 1
+    data = bytearray(data.replace(zone, b"\x1a\x03CET"))
+    for blob, planted in ((b"doc-0006doc-0007", b"doc-0006doc-000\xff"),
+                          (b"booksccwiki", b"booksccwik\xff")):
+        at = data.find(blob)
+        assert at > 0 and data.find(blob, at + 1) < 0
+        data[at:at + len(blob)] = planted
+    with open(path, "wb") as fh:
+        fh.write(bytes(data))
+
+
+def test_column_reader_never_takes_row_path(spark, tmp_path, monkeypatch):
+    """With the row reader disabled (``read_path`` and
+    ``_read_column`` raise, in the driver and in the Python workers),
+    a stripe decode and ``orc_scan`` still read nested, union,
+    decimal(38), zoned-timestamp and bad-UTF-8 columns, equal to the
+    row reader's values, and a predicated ``orc_count`` whose
+    boundary stripe decodes a bad-UTF-8, a decimal(38) and a nested
+    column counts what the row reader's values say."""
+    from decimal import Decimal
+
+    import pyspark.cloudpickle as cloudpickle
+
+    from orc_spark import orctypes
+    from orc_spark.sources import orcfile, orcstats
+    d = tmp_path / "lake"
+    d.mkdir()
+    path = str(d / "a.orc")
+    _planted_row_free_orc(path)
+    root = orctypes.type_from_file(path)
+    ref_f = ORCFile(path)
+    nr = ref_f._load_stripe_directory(0)
+    assert ref_f.writer_tz == "CET"
+    cids = dict(zip(ref_f.types[0].field_names, ref_f.types[0].children))
+    ref = {ts_nanos: {fn: _row_reference(ref_f, cids[fn], nr, node,
+                                         ts_nanos)
+                      for fn, node in zip(root.field_names,
+                                          root.children)}
+           for ts_nanos in (False, True)}
+    assert ref[False]["doc_id"][7].as_py() == "doc-000\ufffd"
+    assert ref[False]["source"][1].as_py() == "wik\ufffd"
+    src = ref[False]["source"].to_pylist()
+    preds = [("source", "in", ["cc", "wik\ufffd"]),
+             ("dec", ">", Decimal(0)), ("st.a", ">=", 100)]
+    keep = [s in ("cc", "wik\ufffd") and dv is not None and dv > 0 and
+            st is not None and st["a"] >= 100
+            for s, dv, st in zip(src, ref[False]["dec"].to_pylist(),
+                                 ref[False]["st"].to_pylist())]
+    scans = {ts_nanos: orcscan.orc_scan(spark, str(d),
+                                        timestamp_nanos=ts_nanos)
+             .collect() for ts_nanos in (False, True)}
+
+    def no_rows(*a, **k):
+        raise AssertionError("row reader used")
+
+    monkeypatch.setattr(ORCFile, "read_path", no_rows)
+    monkeypatch.setattr(ORCFile, "_read_column", no_rows)
+    for ts_nanos in (False, True):
+        batch = orcscan._ScanContext(root, [], ts_nanos).decode_stripe(
+            ORCFile(path), 0)
+        for fn in root.field_names:
+            assert batch.column(fn).equals(ref[ts_nanos][fn]), \
+                (fn, ts_nanos)
+    assert orcstats.orc_count(spark, str(d), preds) == sum(keep) > 0
+    # the scan decodes in Python workers: ship the patched ORCFile
+    # class to them by value
+    cloudpickle.register_pickle_by_value(orcfile)
+    try:
+        for ts_nanos in (False, True):
+            got = orcscan.orc_scan(spark, str(d),
+                                   timestamp_nanos=ts_nanos).collect()
+            assert got == scans[ts_nanos]
+        # the patch does reach the workers
+        monkeypatch.setattr(ORCFile, "_present", no_rows)
+        with pytest.raises(Exception, match="row reader used"):
+            orcscan.orc_scan(spark, str(d)).collect()
+    finally:
+        cloudpickle.unregister_pickle_by_value(orcfile)

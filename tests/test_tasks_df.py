@@ -285,6 +285,19 @@ def test_footer_only_jobs_driver_equals_distributed(spark, tmp_path,
     assert agg["cols"]["s"]["min"] == "s00000"
 
 
+def test_footer_only_run_tasks_is_one_job(spark, monkeypatch):
+    """Footer-only tasks above DRIVER_FOOTER_MAX_FILES keep the task
+    table's own defaultParallelism slices: one Spark job, no
+    round-robin shuffle before the kernel."""
+    monkeypatch.setattr(orcscan, "DRIVER_FOOTER_MAX_FILES", 0)
+    got, n_jobs = _spark_jobs(spark, lambda: orcscan.run_tasks(
+        spark, list(range(40)), lambda t: (t, os.getpid()),
+        footer_only=True))
+    assert [t for t, _ in got] == list(range(40))
+    assert os.getpid() not in {pid for _, pid in got}
+    assert n_jobs == 1
+
+
 def test_no_map_in_pandas_in_sources():
     """Driver-planned jobs run through ``orcscan.run_tasks``
     (mapInArrow); no hand-written pandas kernel is left in

@@ -30,7 +30,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .. import stripe as stripe_mod
+from .. import predicates, stripe as stripe_mod
 from ..stripe import ColumnSpec, TOKEN_SCHEMA, stream_columns
 
 DEFAULT_STRIPE_ROWS = 1 << 20  # reference stripeTargetRowCount (writer.go:20)
@@ -284,40 +284,6 @@ def encode(df: DataFrame, specs: list[ColumnSpec] = TOKEN_SCHEMA,
         kernel, encoded_spark_schema(specs, bloom_columns))
 
 
-def _predicate_bounds(op: str, val) -> tuple:
-    """[lo, hi] stats window for a comparison predicate (conservative:
-    strict comparisons share the inclusive window; the residual row
-    filter restores exactness)."""
-    if op in (">=", ">"):
-        return val, None
-    if op in ("<=", "<"):
-        return None, val
-    if op in ("==", "="):
-        return val, val
-    if op == "between":
-        lo, hi = val
-        return lo, hi
-    if op == "in":       # conservative envelope; residual is exact
-        return min(val), max(val)
-    if op == "prefix":   # string range [p, prefix_upper(p)] —
-        from ..sources.orcscan import prefix_upper
-        return val, prefix_upper(val)    # inclusive hi stays safe
-    raise ValueError(f"unsupported predicate op: {op!r} "
-                     "(use >=, >, <=, <, ==, between, in, prefix)")
-
-
-def _predicate_expr(col: str, op: str, val):
-    c = F.col(col)
-    if op == "between":
-        return c.between(*val)
-    if op == "in":
-        return c.isin(list(val))
-    if op == "prefix":
-        return c.startswith(val)
-    return {">=": c >= val, ">": c > val, "<=": c <= val, "<": c < val,
-            "==": c == val, "=": c == val}[op]
-
-
 def decode(enc_df: DataFrame, specs: list[ColumnSpec] = TOKEN_SCHEMA,
            columns: list[str] | None = None,
            codec: str = DEFAULT_CODEC,
@@ -328,8 +294,9 @@ def decode(enc_df: DataFrame, specs: list[ColumnSpec] = TOKEN_SCHEMA,
     ``columns`` prunes the decode to a subset: only those columns'
     stream binaries are selected (and therefore read from Parquet).
 
-    ``predicate=(col, op, val)`` — op in {>=, >, <=, <, ==, between} —
-    is the one-call pruning path: stripes whose stats cannot match are
+    ``predicate=(col, op, val)`` — op in ``predicates.OPS`` (>=, >,
+    <=, <, ==, between, in, prefix; ``"="`` means ``"=="``) — is the
+    one-call pruning path: stripes whose stats cannot match are
     dropped (prune_stripes), qualifying stripes skip non-matching
     row-group strides (stride_filter), and the residual row filter is
     applied to the decoded rows, so the result is EXACT while only the
@@ -345,20 +312,11 @@ def decode(enc_df: DataFrame, specs: list[ColumnSpec] = TOKEN_SCHEMA,
     residual = None
     drop_after: list[str] = []
     if predicate is not None:
-        if isinstance(predicate, str):
-            # SQL conjunction: "n_tok >= 60 AND source = 'web'" —
-            # parsed to the same tuple grammar, so pruning happens
-            # from the syntax users actually write (r4)
-            from ..predicates import parse_predicate
-            preds = parse_predicate(predicate)
-        else:
-            preds = [predicate] if isinstance(predicate, tuple) else \
-                list(predicate)
         filters = []
-        for pcol, op, val in preds:
-            lo, hi = _predicate_bounds(op, val)
+        for pcol, op, val in predicates.normalize(predicate):
+            lo, hi = predicates.bounds(op, val)
             enc_df = prune_stripes(enc_df, pcol, lo, hi)
-            if op in ("==", "=") and isinstance(val, (str, bytes)):
+            if op == "==" and isinstance(val, (str, bytes)):
                 # bloom equality pruning when the table carries blobs
                 enc_df = prune_stripes_eq(enc_df, pcol, val)
             elif op == "in" and all(isinstance(v, (str, bytes))
@@ -367,7 +325,7 @@ def decode(enc_df: DataFrame, specs: list[ColumnSpec] = TOKEN_SCHEMA,
                 # NONE of the listed values (r5)
                 enc_df = prune_stripes_in(enc_df, pcol, val)
             filters.append((pcol, lo, hi))
-            expr = _predicate_expr(pcol, op, val)
+            expr = predicates.to_column(F.col(pcol), op, val)
             residual = expr if residual is None else residual & expr
             if columns is not None and pcol not in columns and \
                     pcol not in drop_after:

@@ -74,7 +74,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .. import orctypes
+from .. import orctypes, predicates
 
 _OP_OF = {EqualTo: "==", GreaterThan: ">", GreaterThanOrEqual: ">=",
           LessThan: "<", LessThanOrEqual: "<="}
@@ -312,7 +312,7 @@ def _scan_partition(partition: StripesPartition, pushed,
     and rides along on the partition as a type string (r5)."""
     from orc_spark._alloc import tune_worker
     from .orcfile import ORCFile
-    from .orcscan import _BATCH_ROWS, _ScanContext, _pred_list
+    from .orcscan import _BATCH_ROWS, _ScanContext
     tune_worker()
     if not partition.stripes:
         return
@@ -320,7 +320,7 @@ def _scan_partition(partition: StripesPartition, pushed,
     # filter runs post-scan on OUR output schema, which is exactly
     # the projected schema — predicates outside it were never pushed)
     root = orctypes.parse_orc_type(partition.root_str)
-    ctx = _ScanContext(root, _pred_list(pushed), ts_nanos)
+    ctx = _ScanContext(root, predicates.normalize(pushed), ts_nanos)
     f = ORCFile(partition.path)
     for si in partition.stripes:
         batch = ctx.decode_stripe(f, si)

@@ -231,7 +231,16 @@ class ORCFile:
         """Column-id chain for a dotted field path, root-first
         (reference GetField, typedescription.go:623-646: dots
         traverse STRUCT fields only).  ``"rec.x"`` -> [id(rec),
-        id(rec.x)]; a plain name gives a one-element chain."""
+        id(rec.x)]; a plain name gives a one-element chain.  A root
+        field's exact name wins over splitting at dots, and a bare
+        non-struct root answers to ``"value"`` (column id 0) — the
+        one column it surfaces as."""
+        root = self.types[0]
+        if root.kind != "struct":
+            if path == "value":
+                return [0]
+        elif path in root.field_names:
+            return [root.children[root.field_names.index(path)]]
         ids: list[int] = []
         col = 0
         for seg in path.split("."):

@@ -43,21 +43,9 @@ from datetime import date, datetime
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .. import orctypes
+from .. import orctypes, predicates
 from .orcfile import ORCFile
 
-_OPS = (">=", ">", "<=", "<", "==", "between", "in", "prefix")
-
-
-def prefix_upper(p: str) -> str | None:
-    """Smallest string greater than every string with prefix ``p``
-    (exclusive upper bound of the prefix range); None when no such
-    string exists (all characters at the maximum code point)."""
-    for i in range(len(p) - 1, -1, -1):
-        cp = ord(p[i])
-        if cp < 0x10FFFF:
-            return p[:i] + chr(cp + 1)
-    return None
 # max rows per Arrow batch yielded to the JVM (stripes are sliced
 # zero-copy; bounds per-batch bridge memory at ~tens of MB)
 _BATCH_ROWS = 65536
@@ -158,40 +146,6 @@ def _conv(node: orctypes.OrcType, v, ts_nanos: bool = False):
 # -------------------------------------------------------------------
 
 
-def _stats_can_match(st: dict, op: str, val) -> bool:
-    lo, hi = st.get("min"), st.get("max")
-    if lo is None or hi is None:
-        return True  # no stats recorded: cannot prune
-    if op == ">=":
-        return hi >= val
-    if op == ">":
-        return hi > val
-    if op == "<=":
-        return lo <= val
-    if op == "<":
-        return lo < val
-    if op == "==":
-        return lo <= val <= hi
-    if op == "between":
-        vlo, vhi = val
-        return hi >= vlo and lo <= vhi
-    if op == "in":       # finite disjunction: any value in range
-        return any(lo <= v <= hi for v in val)
-    if op == "prefix":   # string range [p, prefix_upper(p))
-        up = prefix_upper(val)
-        return hi >= val and (up is None or lo < up)
-    raise ValueError(f"orc_scan: unknown predicate op {op!r}")
-
-
-def _root_col_ids(f: ORCFile) -> dict[str, int]:
-    """{root field -> column id}; a bare non-struct root surfaces as
-    one synthetic column named "value" (column id 0)."""
-    root = f.types[0]
-    if root.kind != "struct":
-        return {"value": 0}
-    return dict(zip(root.field_names, root.children))
-
-
 def _subtree(root: orctypes.OrcType, path: str) -> orctypes.OrcType:
     """Resolve a dotted field path against an OrcType tree (structs
     only — reference GetField, typedescription.go:623-646).  Raises
@@ -216,38 +170,19 @@ def _pred_col_ids(f: ORCFile, preds: list[tuple],
     nested-leaf paths (r5: predicates like ``rec.x >= 5`` prune
     stripes/strides from the LEAF's statistics; rows under a null
     ancestor have a null leaf and can never match, so leaf-stats
-    pruning stays conservative)."""
-    ids = _root_col_ids(f)
+    pruning stays conservative).  A column the file lacks raises in
+    ``strict`` mode and is left out otherwise."""
+    ids = {}
     for col, _, _ in preds:
-        if col in ids:
-            continue
-        if "." in col:
-            try:
-                ids[col] = f.resolve_path(col)[-1]
-                continue
-            except ValueError:
-                pass
-        if strict:
-            raise ValueError(
-                f"orc_scan: predicate column {col!r} not in "
-                f"{sorted(ids)}")
+        try:
+            ids[col] = f.resolve_path(col)[-1]
+        except ValueError:
+            if strict:
+                raise ValueError(
+                    f"orc_scan: predicate column {col!r} not in "
+                    f"{sorted(f.types[0].field_names or ['value'])}"
+                ) from None
     return ids
-
-
-def _pred_list(predicate) -> list[tuple]:
-    if predicate is None:
-        return []
-    if isinstance(predicate, str):
-        # SQL conjunction string, e.g. "n_tok >= 60 AND source = 'web'"
-        from ..predicates import parse_predicate
-        preds = parse_predicate(predicate)
-    else:
-        preds = [predicate] if isinstance(predicate, tuple) \
-            else list(predicate)
-    for _, op, _ in preds:
-        if op not in _OPS:
-            raise ValueError(f"orc_scan: unknown op {op!r}")
-    return preds
 
 
 def plan_tasks(files: list[str], predicate=None,
@@ -268,7 +203,7 @@ def plan_tasks(files: list[str], predicate=None,
     (one per file, even fully-pruned ones) — evolve mode computes the
     widened union schema from the SAME footer pass (r5), never a
     second open."""
-    preds = _pred_list(predicate)
+    preds = predicates.normalize(predicate)
     tasks: list[tuple] = []
     total = 0
     for path in files:
@@ -292,8 +227,8 @@ def plan_tasks(files: list[str], predicate=None,
                     continue  # evolved-away column: cannot prune
                 ss = f.stripe_statistics
                 if si < len(ss) and col_ids[col] < len(ss[si]):
-                    if not _stats_can_match(ss[si][col_ids[col]],
-                                            op, val):
+                    if not predicates.may_match(
+                            ss[si][col_ids[col]], op, val):
                         keep = False
                         break
             if keep:
@@ -531,7 +466,7 @@ def stride_keep(f: ORCFile, si: int, preds: list[tuple],
         if len(entries) < n_strides:
             return None  # index missing/short: no stride pruning
         keep = {t for t in keep
-                if _stats_can_match(entries[t]["stats"], op, val)}
+                if predicates.may_match(entries[t]["stats"], op, val)}
         if op == "==" and isinstance(val, (str, bytes)) and \
                 f.types[cid].kind in ("string", "varchar", "char"):
             bs = f.bloom_strides(si, cid, val)
@@ -750,14 +685,13 @@ class _ScanContext:
                         pass  # positions carry codec state
         if n_rows is None:
             n_rows = f._load_stripe_directory(si)
-        cids = _root_col_ids(f)
         arrays = []
         for fn in self.root_names:
             ft = self.arrow_schema.field(fn).type
             try:
                 # a dotted name is a nested-field projection (r5):
                 # only its ancestor PRESENT chain and its subtree load
-                ids = [cids[fn]] if fn in cids else f.resolve_path(fn)
+                ids = f.resolve_path(fn)
             except ValueError:
                 # schema evolution: this file predates the column —
                 # null-fill (name-based, the Spark convention)
@@ -863,9 +797,9 @@ def orc_scan(spark, path: str | list[str],
     expect_type = None if lax else full_root.orc_string()
     if full_root.kind != "struct":
         # bare non-struct root: surface as one column named "value"
-        # (mirrors _root_col_ids, which maps "value" to column 0)
+        # (ORCFile.resolve_path maps "value" to column 0)
         full_root = orctypes.OrcType("struct", [full_root], ["value"])
-    preds = _pred_list(predicate)
+    preds = predicates.normalize(predicate)
     for col, _, _ in preds:
         if col not in full_root.field_names:
             # dotted nested-leaf predicates (r5) validate by
@@ -995,16 +929,7 @@ def orc_scan(spark, path: str | list[str],
         # the full schema is surfaced
         c = F.col(f"`{col}`") if "." in col and col in root_names \
             else F.col(col)
-        cond = {">=": c >= val, ">": c > val, "<=": c <= val,
-                "<": c < val, "==": c == val}.get(op)
-        if cond is None:
-            if op == "between":
-                cond = c.between(val[0], val[1])
-            elif op == "in":
-                cond = c.isin(list(val))
-            else:                        # prefix
-                cond = c.startswith(val)
-        out = out.where(cond)
+        out = out.where(predicates.to_column(c, op, val))
     if columns:
         out = out.select(*[F.col(f"`{c}`") if "." in c else F.col(c)
                            for c in columns])

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from decimal import Decimal, localcontext
 
+from .. import predicates
 from .orcfile import ORCFile
 
 
@@ -38,22 +39,15 @@ def _files_of(path: str) -> list[str]:
     return orc_files(path, "orc_stats")
 
 
-def _col_id(f: ORCFile, column: str) -> int:
-    root = f.types[0]
-    if root.kind != "struct":
-        if column == "value":
-            return 0
-        raise ValueError(f"orc_stats: bare-root file has only "
-                         f"'value', not {column!r}")
-    if "." in column:
-        # dotted nested leaf (r5): file statistics exist for every
-        # column id, so footer-only aggregates reach struct leaves too
-        return f.resolve_path(column)[-1]
+def _resolve(f: ORCFile, column: str) -> list[int]:
+    """``f.resolve_path(column)``; a miss raises naming the file's
+    columns."""
     try:
-        return dict(zip(root.field_names, root.children))[column]
-    except KeyError:
-        raise ValueError(f"orc_stats: no column {column!r}; file has "
-                         f"{root.field_names}") from None
+        return f.resolve_path(column)
+    except ValueError:
+        raise ValueError(
+            f"orc_stats: no column {column!r}; file has "
+            f"{f.types[0].field_names or ['value']}") from None
 
 
 def _file_stats(path: str, columns: list[str]) -> dict:
@@ -61,7 +55,9 @@ def _file_stats(path: str, columns: list[str]) -> dict:
     f = ORCFile(path)
     out = {"_rows": f.n_rows}
     for c in columns:
-        cid = _col_id(f, c)
+        # dotted nested leaves (r5) too: file statistics exist for
+        # every column id, so footer-only aggregates reach them
+        cid = _resolve(f, c)[-1]
         if cid >= len(f.file_statistics):
             raise ValueError(f"orc_stats: {path} has no file "
                              f"statistics for column {c!r}")
@@ -150,8 +146,8 @@ def orc_count(spark, path: str, predicate=None) -> int:
     boundary stripes instead of every byte."""
     if predicate is None:
         return footer_aggregate(spark, path, [])["rows"]
-    from .orcscan import _pred_list
-    return count_files(spark, _files_of(path), _pred_list(predicate))
+    from ..predicates import normalize
+    return count_files(spark, _files_of(path), normalize(predicate))
 
 
 def count_files(spark, files: list[str], preds: list[tuple]) -> int:
@@ -162,73 +158,7 @@ def count_files(spark, files: list[str], preds: list[tuple]) -> int:
                          footer_only=True))
 
 
-def _full_match(st: dict, op: str, val) -> bool:
-    """True if EVERY non-null row in a stripe/stride with stats
-    ``st`` satisfies the predicate (the dual of
-    orcscan._stats_can_match's any-row test)."""
-    lo, hi = st.get("min"), st.get("max")
-    if lo is None or hi is None:
-        return False
-    if op == ">=":
-        return lo >= val
-    if op == ">":
-        return lo > val
-    if op == "<=":
-        return hi <= val
-    if op == "<":
-        return hi < val
-    if op == "==":
-        return lo == hi == val
-    if op == "between":
-        vlo, vhi = val
-        return lo >= vlo and hi <= vhi
-    if op == "in":
-        # provable only when the stripe is single-valued (a row
-        # range can otherwise contain unlisted values)
-        return lo == hi and lo in val
-    if op == "prefix":
-        # [min,max] both prefixed -> every value in between is too
-        # (any non-prefixed s would sort outside [p, prefix_upper))
-        return isinstance(lo, str) and isinstance(hi, str) and \
-            lo.startswith(val) and hi.startswith(val)
-    raise ValueError(f"orc_stats: unknown predicate op {op!r}")
-
-
 _INT_KINDS = ("byte", "short", "int", "long", "date")
-
-
-def _int_exact(op: str, val):
-    """Rewrite a FLOAT literal against an INTEGER column into the
-    equivalent integer predicate (exact for all of int64 — casting
-    the literal with pa.scalar would silently TRUNCATE 1.5 to 1 and,
-    worse, differ from the stats classifier's Python comparison).
-    Returns None when no integer can satisfy the predicate."""
-    import math
-    if op == "between":
-        # handled FIRST: val is a (lo, hi) tuple, never a float
-        lo, hi = val
-        lo = math.ceil(lo) if isinstance(lo, float) else lo
-        hi = math.floor(hi) if isinstance(hi, float) else hi
-        return ("between", (lo, hi)) if lo <= hi else None
-    if op == "in":
-        # also before the float early-return: val is a tuple; only
-        # integer-valued members can match an integer column
-        ints = tuple(int(v) for v in val
-                     if not isinstance(v, float) or v.is_integer())
-        return ("in", ints) if ints else None
-    if not isinstance(val, float):
-        return op, val
-    if op == ">=":
-        return ">=", math.ceil(val)
-    if op == ">":
-        return ">=", math.floor(val) + 1
-    if op == "<=":
-        return "<=", math.floor(val)
-    if op == "<":
-        return "<=", math.ceil(val) - 1
-    if op == "==":
-        return ("==", int(val)) if val.is_integer() else None
-    raise ValueError(f"orc_stats: unknown predicate op {op!r}")
 
 
 def _file_pred_state(f: ORCFile, preds: list[tuple]):
@@ -239,36 +169,26 @@ def _file_pred_state(f: ORCFile, preds: list[tuple]):
     ``int_col == 1.5``).  Shared by the hybrid COUNT and the
     orctable DELETE classifier — both must agree bit-for-bit with
     the decode compare."""
-    from .orcscan import _subtree
-    root = f.types[0]
-    if root.kind != "struct":
-        names = {"value": 0}
-    else:
-        names = dict(zip(root.field_names, root.children))
     from .. import orctypes as _ot
+    from .orcscan import _subtree
     troot = _ot.type_from_types(f.types)
     if troot.kind != "struct":
         troot = _ot.OrcType("struct", [troot], ["value"])
-    nodes = dict(zip(troot.field_names, troot.children))
     # dotted nested-leaf predicates (r5): resolve the id chain once;
     # decode expands through ancestor PRESENT so row positions align
+    nodes = dict(zip(troot.field_names, troot.children))
     paths: dict[str, list[int]] = {}
     for c, _, _ in preds:
-        if c in names:
-            paths[c] = [names[c]]
-        elif "." in c:
-            paths[c] = f.resolve_path(c)   # raises on a miss
+        paths[c] = _resolve(f, c)
+        if c not in nodes:
             nodes[c] = _subtree(troot, c)
-        else:
-            raise ValueError(f"orc_stats: no column {c!r}; file has "
-                             f"{list(names)}")
     # float literals against integer columns rewrite to exact integer
     # predicates BEFORE both the stats classifier and the decode
     # compare, so the two paths agree bit-for-bit
     norm = []
     for c, op, val in preds:
         if f.types[paths[c][-1]].kind in _INT_KINDS:
-            rewritten = _int_exact(op, val)
+            rewritten = predicates.int_exact(op, val)
             if rewritten is None:
                 return None  # no row can satisfy (e.g. v == 1.5)
             op, val = rewritten
@@ -281,20 +201,19 @@ def _stripe_stats_class(f: ORCFile, si: int, preds: list[tuple],
     """Stats-only stripe classification (no decode, no decompress):
     ``("none", n)`` — no row can match; ``("all", n)`` — every row
     matches; ``("boundary", n)`` — statistics cannot decide."""
-    from .orcscan import _stats_can_match
     stripe = f.stripes[si]
     n_rows = stripe.get(5, [0])[0]
     sstats = f.stripe_statistics[si] \
         if si < len(f.stripe_statistics) else None
     if sstats is not None:
         per_col = [sstats[paths[c][-1]] for c, _, _ in preds]
-        if not all(_stats_can_match(st, op, val)
+        if not all(predicates.may_match(st, op, val)
                    for st, (_, op, val) in zip(per_col, preds)):
             return "none", n_rows  # no row can match: free skip
         # full-match needs every ROW to carry a matching value:
         # the leaf count must equal the stripe row count (an
         # ancestor-null row has a NULL leaf that stats don't see)
-        if all(_full_match(st, op, val) and
+        if all(predicates.all_match(st, op, val) and
                not st.get("has_null", True) and
                st.get("n", -1) == n_rows
                for st, (_, op, val) in zip(per_col, preds)):
@@ -310,7 +229,6 @@ def _stripe_disposition(f: ORCFile, si: int, preds: list[tuple],
     matches (zero decode); ``("mask", BooleanArray)`` — boundary
     stripe, per-row match mask (null = no match), decoding only the
     predicate columns."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     from .orcscan import _column_arrow, orc_arrow
@@ -323,27 +241,7 @@ def _stripe_disposition(f: ORCFile, si: int, preds: list[tuple],
     for c, op, val in preds:
         ft = orc_arrow(nodes[c])
         arr = _column_arrow(f, paths[c], nr, ft)
-        if op == "between":
-            m = pc.and_kleene(
-                pc.greater_equal(arr, pa.scalar(val[0], ft)),
-                pc.less_equal(arr, pa.scalar(val[1], ft)))
-        elif op == "in":
-            m = pc.is_in(arr,
-                         value_set=pa.array(list(val), type=ft))
-            # is_in yields null-in -> false already; align with
-            # kleene AND by keeping the boolean mask as-is
-        elif op == "prefix":
-            if not pa.types.is_string(ft) and \
-                    not pa.types.is_large_string(ft):
-                raise ValueError(
-                    f"orc_stats: prefix predicate on non-string "
-                    f"column {c!r}")
-            m = pc.starts_with(arr, pattern=val)
-        else:
-            fn = {">=": pc.greater_equal, ">": pc.greater,
-                  "<=": pc.less_equal, "<": pc.less,
-                  "==": pc.equal}[op]
-            m = fn(arr, pa.scalar(val, ft))
+        m = predicates.arrow_mask(arr, op, val)
         combined = m if combined is None else \
             pc.and_kleene(combined, m)
     return "mask", combined

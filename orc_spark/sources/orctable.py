@@ -64,7 +64,7 @@ import os
 import re
 import uuid
 
-from .. import orctypes
+from .. import orctypes, predicates
 
 _META = "_meta"
 _DATA = "data"
@@ -584,7 +584,6 @@ def _partition_survives(entry: dict, preds: list[tuple],
     statistics (min == max == value); bucket ids prune equality and
     IN (the literal's bucket must equal the file's).  Conservative:
     anything not provably non-matching survives."""
-    from .orcscan import _stats_can_match
     part = entry.get("partition")
     if not part:
         return True  # pre-spec or externally-added file
@@ -599,15 +598,9 @@ def _partition_survives(entry: dict, preds: list[tuple],
             if v is None:
                 return False  # comparisons with NULL never match
             st = {"min": v, "max": v, "n": 1, "has_null": False}
-            num = isinstance(v, (int, float)) and \
-                not isinstance(v, bool)
-            for op, val in cps:
-                probe = val[0] if isinstance(val, (list, tuple)) \
-                    and val else val
-                if num != isinstance(probe, (int, float)):
-                    continue  # mixed families: never compare
-                if not _stats_can_match(st, op, val):
-                    return False
+            if not all(predicates.may_match(st, op, val)
+                       for op, val in cps):
+                return False
         else:  # bucket
             for op, val in cps:
                 if op == "==" and _bucket_prunable(val):
@@ -637,16 +630,15 @@ def _type_top_names(type_str: str):
 
 def _entry_survives(entry: dict, preds: list[tuple],
                     spec: list[dict] | None = None) -> bool:
-    """Manifest-level pruning: conservative min/max checks, only when
-    the literal and the recorded stats share a comparison family
-    (numeric vs numeric, str vs str) — else keep.  On a partitioned
-    table the partition tuple prunes first (identity point-stats,
-    bucket-id equality).  A file whose recorded type LACKS a
-    predicate's top-level column is pruned outright: the column is
-    NULL for every row there (schema-evolution backfill) and every
-    supported op is NULL-rejecting — this also keeps per-file DML
-    classifiers away from files that predate an added column."""
-    from .orcscan import _stats_can_match
+    """Manifest-level pruning: conservative min/max checks
+    (``predicates.may_match`` — a literal of another comparison
+    family keeps the file).  On a partitioned table the partition
+    tuple prunes first (identity point-stats, bucket-id equality).
+    A file whose recorded type LACKS a predicate's top-level column
+    is pruned outright: the column is NULL for every row there
+    (schema-evolution backfill) and every supported op is
+    NULL-rejecting — this also keeps per-file DML classifiers away
+    from files that predate an added column."""
     if spec and not _partition_survives(entry, preds, spec):
         return False
     names = _type_top_names(entry.get("type", ""))
@@ -662,15 +654,7 @@ def _entry_survives(entry: dict, preds: list[tuple],
         if st.get("n", 1) == 0:
             # all-null file: no comparison predicate can match
             return False
-        mn = st.get("min")
-        if mn is None:
-            continue
-        probe = val[0] if isinstance(val, (list, tuple)) and val \
-            else val
-        num = isinstance(mn, (int, float)) and not isinstance(mn, bool)
-        if num != isinstance(probe, (int, float)):
-            continue  # mixed families: never compare, never prune
-        if not _stats_can_match(st, op, val):
+        if not predicates.may_match(st, op, val):
             return False
     return True
 
@@ -855,10 +839,10 @@ def _scan_entries(spark, table: str, snap: dict, entries: list[dict],
     physical names."""
     from pyspark.sql import functions as F
 
-    from .orcscan import _pred_list, _spark_of, orc_scan
+    from .orcscan import _spark_of, orc_scan
     cols_meta, _ = _columns_meta(snap)
     renamed = any(c.get("prev") for c in cols_meta)
-    preds = _pred_list(predicate)
+    preds = predicates.normalize(predicate)
     spec = _parse_spec(snap.get("spec", []))
     root = orctypes.parse_orc_type(snap["schema"])
     cache: dict = {}
@@ -1681,8 +1665,7 @@ def delete_from(spark, table: str, predicate) -> dict:
     snapshots still read every pre-delete row; run
     ``expire_snapshots`` to reclaim the space.  Returns the new
     snapshot."""
-    from .orcscan import _pred_list
-    preds = _pred_list(predicate)
+    preds = predicates.normalize(predicate)
     if not preds:
         raise ValueError(
             "orc_table: delete_from requires a predicate — to drop "
@@ -1730,11 +1713,10 @@ def update_table(spark, table: str, set: dict, predicate=None) -> dict:
     rewritten file keeps its manifest partition tuple, which would
     lie).  Commits with replace semantics; old snapshots still read
     pre-update values (time travel)."""
-    from .orcscan import _pred_list
     if not set or not isinstance(set, dict):
         raise ValueError("orc_table: update_table requires a "
                          "non-empty set={col: value} dict")
-    preds = _pred_list(predicate) if predicate is not None else []
+    preds = predicates.normalize(predicate)
     base = load_snapshot(table)
     root = orctypes.parse_orc_type(base["schema"])
     spec = _parse_spec(base.get("spec", []))
@@ -2209,10 +2191,9 @@ def table_count(spark, table: str, predicate=None,
     entries = manifest_entries(table, snap)
     if predicate is None:
         return sum(e["n_rows"] for e in entries)
-    from .orcscan import _pred_list
     from .orcstats import count_files
     _require_migrated(snap, entries, "predicated table_count")
-    preds = _pred_list(predicate)
+    preds = predicates.normalize(predicate)
     _check_pred_cols(snap, preds, "table_count")
     spec = _parse_spec(snap.get("spec", []))
     return count_files(spark, [os.path.join(table, e["path"])

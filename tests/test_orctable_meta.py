@@ -215,7 +215,7 @@ def test_rewrite_sorted_makes_pruning_selective(spark, tmp_path):
     rewrite_sorted the file ranges are disjoint and manifest stats
     prune to one file.  Rows, values and the changelog contract are
     preserved."""
-    from orc_spark.sources.orcscan import _pred_list
+    from orc_spark.predicates import normalize
     t = str(tmp_path / "ts")
     orctable.create_table(t, "struct<v:int,tag:string>")
     # interleaved writes: every file spans nearly the full v range
@@ -223,7 +223,7 @@ def test_rewrite_sorted_makes_pruning_selective(spark, tmp_path):
         df = spark.range(k, 1000, 4, 1).selectExpr(
             "CAST(id AS INT) AS v", "CAST(id AS STRING) AS tag")
         orctable.write_table(df, t)
-    preds = _pred_list(("v", "between", (100, 120)))
+    preds = normalize(("v", "between", (100, 120)))
     snap0 = orctable.load_snapshot(t)
     spec = orctable._parse_spec(snap0.get("spec", []))
     before = [e for e in orctable.manifest_entries(t, snap0)
@@ -274,8 +274,8 @@ def test_rewrite_sorted_partitioned_sorts_within_tuples(spark,
                  .collect())
     assert got == list(range(400))
     # equality lookup on the bucket key still prunes to one file
-    from orc_spark.sources.orcscan import _pred_list
-    preds = _pred_list(("tag", "==", "123"))
+    from orc_spark.predicates import normalize
+    preds = normalize(("tag", "==", "123"))
     spec = orctable._parse_spec(snap.get("spec", []))
     alive = [e for e in entries
              if orctable._entry_survives(e, preds, spec)]

@@ -179,6 +179,70 @@ def test_snappy_arrow_framed_chunks_decode(size):
                                   compression.SNAPPY) == data
 
 
+def test_snappy_four_byte_offset_copy_decodes():
+    """Snappy .orc files written by the former whole-chunk encoder hold
+    copies with 4-byte offsets (offset > 65535), which Google snappy
+    never emits; they still decode, bare and ORC-framed."""
+    lit = np.random.default_rng(7).integers(
+        0, 256, 100_000, dtype=np.uint8).tobytes()
+    ulen = len(lit) + 64
+    block = bytes([(ulen & 0x7F) | 0x80, (ulen >> 7 & 0x7F) | 0x80,
+                   ulen >> 14])
+    block += bytes([62 << 2]) + (len(lit) - 1).to_bytes(3, "little") + lit
+    block += bytes([(64 - 1) << 2 | 0x03]) + len(lit).to_bytes(4, "little")
+    assert compression._snappy_decompress(block) == lit + lit[:64]
+    framed = compression._header(len(block), False) + block
+    assert compression.decompress(framed, compression.SNAPPY) == \
+        lit + lit[:64]
+
+
+def test_snappy_write_framing():
+    """Every snappy chunk we write is Google snappy's block for that
+    256 KiB slice of the stream; an incompressible chunk is stored
+    with the isOriginal bit instead."""
+    rng = np.random.default_rng(3)
+    data = np.repeat(rng.integers(0, 4, 40_000, dtype=np.uint8),
+                     rng.integers(1, 30, 40_000)).tobytes()
+    assert len(data) > 2 * compression.DEFAULT_CHUNK_SIZE
+    framed = compression.compress(data, compression.SNAPPY)
+    codec = pa.Codec("snappy")
+    pos = off = 0
+    while pos < len(framed):
+        length, original, pos = compression.parse_header(framed, pos)
+        chunk = data[off:off + compression.DEFAULT_CHUNK_SIZE]
+        assert not original
+        assert framed[pos:pos + length] == codec.compress(chunk,
+                                                          asbytes=True)
+        pos += length
+        off += len(chunk)
+    assert off == len(data)
+    rnd = rng.integers(0, 256, 100_000, dtype=np.uint8).tobytes()
+    framed = compression.compress(rnd, compression.SNAPPY)
+    assert compression.parse_header(framed, 0) == (len(rnd), True, 3)
+    assert framed == framed[:3] + rnd and len(framed) == len(rnd) + 3
+
+
+def test_one_snappy_codec():
+    """Arrow's snappy is the one snappy codec: no module names a
+    second snappy module (``snappy_<name>``), and only
+    codecs/compression.py builds the codec."""
+    import glob
+    import os
+    import pathlib
+    import re
+    import orc_spark
+    root = os.path.dirname(orc_spark.__file__)
+    pat = re.compile(r"\bsnappy_\w+|Codec\(\s*[\"']snappy[\"']")
+    hits = [os.path.relpath(p, root)
+            for p in glob.glob(os.path.join(root, "**", "*.py"),
+                               recursive=True)
+            for line in pathlib.Path(p).read_text().splitlines()
+            if pat.search(line)]
+    assert hits == ["codecs/compression.py"]
+    assert glob.glob(os.path.join(root, "**", "*snappy*"),
+                     recursive=True) == []
+
+
 def _dictionary_roundtrip(vals):
     parts = dictionary.encode(pa.array(vals))
     back = dictionary.to_arrow(parts.lengths, parts.blob, parts.indexes)

@@ -58,13 +58,28 @@ _blob_piece = st.one_of(
 blobs = st.lists(_blob_piece, min_size=0, max_size=10).map(b"".join)
 
 
+# long blobs: drawn pieces and seeded noise, tiled past one snappy
+# fragment (64 KiB) or one ORC chunk (256 KiB), so a repeat can sit
+# in another fragment or another chunk
+_long_piece = st.one_of(
+    blobs,
+    st.tuples(st.integers(0, 2**32 - 1), st.integers(1, 100_000)).map(
+        lambda t: np.random.default_rng(t[0]).integers(
+            0, 256, t[1], dtype=np.uint8).tobytes()),
+)
+long_blobs = st.tuples(
+    st.lists(_long_piece, min_size=1, max_size=4).map(b"".join).filter(len),
+    st.sampled_from([64 * 1024 + 1, 100_000, 256 * 1024 + 1, 600_000]),
+).map(lambda t: (t[0] * (t[1] // len(t[0]) + 1))[:t[1]])
+
+
 @settings(max_examples=200, deadline=None)
-@given(data=blobs)
+@given(data=st.one_of(blobs, long_blobs))
 def test_snappy_compress_roundtrips(data):
-    # our encoder's blocks must decode in the real snappy library
-    from orc_spark.codecs import compression, snappy_pure
-    assert compression._decompress_chunk(snappy_pure.compress(data),
-                                         compression.SNAPPY) == data
+    # ORC-framed snappy streams, one or many chunks, read back exactly
+    from orc_spark.codecs import compression
+    framed = compression.compress(data, compression.SNAPPY)
+    assert compression.decompress(framed, compression.SNAPPY) == data
 
 
 @settings(max_examples=200, deadline=None)

@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from orc_spark import stripe
-from orc_spark.codecs import snappy_pure
 from orc_spark.operators import encode as enc_ops
 
 
@@ -172,7 +171,7 @@ _COPY6 = 0x01 | ((6 - 4) << 2)                 # 1-byte-offset copy of 6
 
 
 @pytest.mark.parametrize("body", [
-    snappy_pure.compress(b"abcdefgh" * 64)[:-3],
+    pa.Codec("snappy").compress(b"abcdefgh" * 64, asbytes=True)[:-3],
     b"\x80" * 5 + b"\x00" + _LIT_AB,
     b"\x80\x80",
     b"\xff\xff\xff\xff\x0f" + _LIT_AB,

@@ -685,12 +685,13 @@ def test_timestamp_pre1970_java_convention(spark, tmp_path):
 
 
 def test_orcwriter_snappy_lz4_write_jvm_interop(spark, tmp_path):
-    """r5: the engine WRITES snappy, lz4 AND lzo .orc files
-    (pure-Python block encoders — the reference's snappy encoder
-    errors out and it has no lzo/lz4 encoder; Spark never writes
-    lzo/lz4 ORC at all).  Spark's JVM ORC reader (independent
-    Java/aircompressor codec implementations) must read the
-    bitstreams back value-exact, and our own scan agrees."""
+    """The engine WRITES snappy, lz4 AND lzo .orc files (snappy
+    with Arrow's bundled codec, lz4 and lzo with pure-Python block
+    encoders — the reference's snappy encoder errors out and it has
+    no lzo/lz4 encoder; Spark never writes lzo/lz4 ORC at all).
+    Spark's JVM ORC reader (independent Java/aircompressor codec
+    implementations) must read the bitstreams back value-exact, and
+    our own scan agrees."""
     import numpy as np
     import pyarrow as pa
     from orc_spark.sources import orcfile, orcscan

@@ -488,9 +488,22 @@ def prune_stripes(enc_df: DataFrame, column: str,
     (casting them to double would nullify every comparison and
     silently prune live stripes); a stripe whose stats lack min/max
     for the column (all-null stride, count-only types like timestamp)
-    is conservatively KEPT — the residual row filter stays exact."""
-    is_str = isinstance(lo, str) or isinstance(hi, str)
+    is conservatively KEPT — the residual row filter stays exact.
+
+    A bound of another family than the zone column (a date or
+    datetime anywhere, a string on a numeric zone, a number on a
+    string zone; ``predicates.family``) prunes nothing: it keeps every
+    stripe and the residual row filter decides each row."""
     native = f"{column}__MIN" in enc_df.columns
+    fams = {"num", "str"}
+    if native:
+        fams = {"str" if isinstance(enc_df.schema[f"{column}__MIN"]
+                                    .dataType, T.StringType) else "num"}
+    if predicates.family(lo) not in fams:
+        lo = None
+    if predicates.family(hi) not in fams:
+        hi = None
+    is_str = isinstance(lo, str) or isinstance(hi, str)
 
     def stat(field):
         if native:

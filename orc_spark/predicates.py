@@ -206,15 +206,17 @@ def normalize(predicate) -> list[tuple]:
     return out
 
 
-def _family(v) -> str | None:
+def family(v) -> str | None:
+    """A literal's or statistic's comparison family: "num", "str" or
+    None (every other type, which compares with nothing)."""
     if isinstance(v, (int, float, Decimal)):
         return "num"
     return "str" if isinstance(v, str) else None
 
 
 def _comparable(stat, v) -> bool:
-    fam = _family(stat)
-    return fam is not None and fam == _family(v)
+    fam = family(stat)
+    return fam is not None and fam == family(v)
 
 
 def prefix_upper(p: str) -> str | None:
@@ -293,7 +295,7 @@ def int_exact(op: str, val):
         return "between", (lo, hi)
     if op == "in":
         # only integer-valued members can match an integer column
-        ints = tuple(int(v) if _family(v) == "num" else v for v in val
+        ints = tuple(int(v) if family(v) == "num" else v for v in val
                      if not isinstance(v, float) or v.is_integer())
         return ("in", ints) if ints else None
     if not isinstance(val, float):
@@ -343,7 +345,7 @@ def _arrow_literals(vals: list, ft):
     own type, so the compare kernels pick the common type (a date
     against timestamps widens to midnight, as in Spark)."""
     import pyarrow as pa
-    fams = {_family(v) for v in vals}
+    fams = {family(v) for v in vals}
     if fams == {"str"}:
         return pa.array(vals).cast(ft)
     numeric = pa.types.is_integer(ft) or pa.types.is_floating(ft) or \

@@ -14,24 +14,31 @@ DICTIONARY_DATA. All stream payloads are chunk-framed-compressed
 (compression.py). Statistics per column (count/hasNull/min/max/sum,
 columnstatistics.go:72-222) ride along as JSON for the footer rollup.
 
+Decode has no decoder of its own: ``_StripeColumn`` shows one column
+of one stripe as the ``.orc`` reader's stripe, and
+``orcscan._fast_arrow`` reads it, so both containers share one tree
+of per-type column decoders.
+
 Everything here is executor-side pure python/numpy/pyarrow — the Spark
-layer invokes it from mapInPandas kernels.
+layer invokes it from mapInArrow kernels.
 """
 
 from __future__ import annotations
 
 import json
 import math
+from types import SimpleNamespace
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from . import predicates
 from .codecs import bits, byterle, compression, dictionary, fsst, leaves, rle2
 from .codecs import decimal as dec_codec
 from .orctypes import OrcType, parse_orc_type
-
-TIMESTAMP_BASE_SECONDS = 1420070400  # 2015-01-01 (treereader.go:128-131)
+from .sources import orcscan
+from .sources.orcfile import TIMESTAMP_BASE_SECONDS, ORCFile
 
 # shared stripe-TABLE codec default (r6): zstd — every module that
 # encodes or decodes the stripe-table row format (operators/encode,
@@ -41,8 +48,7 @@ TIMESTAMP_BASE_SECONDS = 1420070400  # 2015-01-01 (treereader.go:128-131)
 DEFAULT_CODEC = "zstd"
 
 # supported logical types
-INT_TYPES = {"tinyint": np.int8, "smallint": np.int16, "int": np.int32,
-             "bigint": np.int64}
+INT_TYPES = ("tinyint", "smallint", "int", "bigint")
 # the same four as OrcType kinds (the token fast-path list elements)
 _INT_KINDS = ("byte", "short", "int", "long")
 
@@ -72,10 +78,6 @@ class ColumnSpec:
     @property
     def is_list(self) -> bool:
         return self.orc_type.kind == "list"
-
-    @property
-    def child_typ(self) -> str:
-        return self.orc_type.children[0].orc_string()
 
     @property
     def is_decimal(self) -> bool:
@@ -154,11 +156,6 @@ def stream_columns(specs: list[ColumnSpec]) -> list[str]:
 _TREE_KINDS = ("struct", "list", "map")
 
 
-def arrow_type_of(typ: str) -> pa.DataType:
-    """Arrow type for a spec type string (nested types included)."""
-    return parse_orc_type(typ).to_arrow()
-
-
 def _encode_nested(arr: pa.Array, spec: ColumnSpec,
                    use_fsst: bool) -> tuple[str, dict, dict]:
     """Encode a nested column's whole subtree into ONE self-describing
@@ -227,56 +224,6 @@ def _encode_nested(arr: pa.Array, spec: ColumnSpec,
     return "NESTED", {"DATA": blob}, {"count": n_valid}
 
 
-def _decode_nested(streams: dict, spec: ColumnSpec,
-                   n_rows: int) -> pa.Array:
-    """Inverse of _encode_nested: parse the blob header, slice each
-    node's streams, and rebuild the Arrow array tree (null-aware:
-    children were encoded on parent-present rows only and are
-    re-expanded on decode)."""
-    blob = streams.get("DATA")
-    if blob is None:
-        return pa.nulls(n_rows, spec.orc_type.to_arrow())
-    blob = bytes(blob)
-    hlen = int.from_bytes(blob[:4], "little")
-    header = json.loads(blob[4:4 + hlen].decode())
-    lens = header["lens"]
-    offs = np.zeros(len(lens) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    base = 4 + hlen
-    parts = [blob[base + offs[i]: base + offs[i + 1]]
-             for i in range(len(lens))]
-    nodes = header["nodes"]
-    pos = {"i": 0}
-
-    def walk(node: OrcType):
-        rec = nodes[pos["i"]]
-        pos["i"] += 1
-        n = rec["n"]
-        st = {k: parts[v] for k, v in rec["s"].items()}
-        kind = node.kind
-        if kind not in _TREE_KINDS:
-            return decode_column(st, rec.get("e", "DIRECT"),
-                                 ColumnSpec("v", node.orc_string()), n)
-        pres = st.get("PRESENT")
-        valid = byterle.decode_bools(pres, n) if pres is not None else None
-        n_valid = int(valid.sum()) if valid is not None else n
-        if kind == "struct":
-            children = [leaves.expand(walk(c), valid)
-                        for c in node.children]
-            mask = pa.array(~valid) if valid is not None else None
-            return pa.StructArray.from_arrays(
-                children, names=list(node.field_names), mask=mask)
-        lengths = rle2.decode(st.get("LENGTH", b""), n_valid, signed=False)
-        offsets = leaves.list_offsets(lengths, valid)
-        if kind == "list":
-            return pa.ListArray.from_arrays(offsets, walk(node.children[0]))
-        keys = walk(node.children[0])
-        return pa.MapArray.from_arrays(offsets, keys,
-                                       walk(node.children[1]))
-
-    return walk(spec.orc_type)
-
-
 # ---------------------------------------------------------------------------
 # Column encoders
 # ---------------------------------------------------------------------------
@@ -337,17 +284,6 @@ def _encode_int_stream(vals: np.ndarray) -> tuple[str, dict[str, bytes]]:
                     "DICTIONARY_DATA": bytes(dict_stream),
                 }
     return "DIRECT", {"DATA": rle2.encode(vals, signed=True)}
-
-
-def _decode_int_stream(streams: dict, encoding_suffix: str,
-                       n: int) -> np.ndarray:
-    if encoding_suffix == "DICT_INT":
-        dict_stream = streams["DICTIONARY_DATA"]
-        n_keys, pos = bits.read_vulong(dict_stream, 0)
-        keys = rle2.decode(dict_stream[pos:], int(n_keys), signed=True)
-        indexes = rle2.decode(streams["DATA"], n, signed=False)
-        return keys[indexes]
-    return rle2.decode(streams.get("DATA", b""), n, signed=True)
 
 
 def _encode_string_like(data: pa.Array,
@@ -475,82 +411,6 @@ def _drop_unknown_sum(st: dict) -> dict:
                                  and math.isnan(st["sum"])):
         st.pop("sum", None)
     return st
-
-
-# ---------------------------------------------------------------------------
-# Column decoders
-# ---------------------------------------------------------------------------
-
-
-def decode_column(streams: dict, encoding: str, spec: ColumnSpec,
-                  n_rows: int) -> pa.Array:
-    """Decode one column of one stripe back to an Arrow array."""
-    if spec.is_nested or encoding == "NESTED":
-        return _decode_nested(streams, spec, n_rows)
-    present = streams.get("PRESENT")
-    if present is not None:
-        valid = byterle.decode_bools(present, n_rows)
-        n_valid = int(valid.sum())
-    else:
-        valid = None
-        n_valid = n_rows
-    typ = spec.typ
-
-    if typ in INT_TYPES or typ == "date":
-        sfx = "DICT_INT" if encoding.startswith("DICTIONARY_INT") else ""
-        vals = _decode_int_stream(streams, sfx, n_valid)
-        if typ == "date":
-            return leaves.with_nulls(vals.astype(np.int32), valid,
-                                     pa.date32())
-        return leaves.with_nulls(vals.astype(INT_TYPES[typ]), valid)
-    if typ in ("float", "double"):
-        dt = "<f4" if typ == "float" else "<f8"
-        vals = np.frombuffer(streams.get("DATA", b""), dtype=dt)
-        return leaves.with_nulls(vals, valid)
-    if typ == "boolean":
-        vals = byterle.decode_bools(streams.get("DATA", b""), n_valid)
-        return leaves.with_nulls(vals, valid)
-    if typ == "timestamp":
-        secs = rle2.decode(streams.get("DATA", b""), n_valid, signed=True) + \
-            TIMESTAMP_BASE_SECONDS
-        nanos = leaves.parse_nanos(
-            rle2.decode(streams.get("SECONDARY", b""), n_valid, signed=False))
-        return leaves.with_nulls(secs * 1_000_000 + nanos // 1000, valid,
-                                 pa.timestamp("us"))
-    if typ in ("string", "binary"):
-        return _decode_string_like(streams, encoding, typ, n_valid, valid)
-    if spec.is_decimal:
-        prec, scale = spec.decimal_params()
-        scales = rle2.decode(streams.get("SECONDARY", b""), n_valid,
-                             signed=True)
-        return dec_codec.to_arrow(streams.get("DATA", b""), scales, prec,
-                                  scale, valid)
-    if spec.is_list:
-        lengths = rle2.decode(streams.get("LENGTH", b""), n_valid,
-                              signed=False)
-        sfx = "DICT_INT" if encoding.startswith("DICTIONARY_INT") else ""
-        child = _decode_int_stream(streams, sfx, int(lengths.sum()))
-        return pa.ListArray.from_arrays(
-            leaves.list_offsets(lengths, valid),
-            pa.array(child.astype(INT_TYPES[spec.child_typ])))
-    raise ValueError(f"unsupported column type: {typ}")
-
-
-def _decode_string_like(streams, encoding, typ, n_valid, valid):
-    dict_enc = encoding.startswith("DICTIONARY_V2")
-    blob = streams.get("DICTIONARY_DATA" if dict_enc else "DATA", b"")
-    if encoding.endswith("_FSST"):
-        blob = fsst.decode_blob(blob)
-    indexes = None
-    n_lengths = n_valid
-    if dict_enc:
-        indexes = rle2.decode(streams["DATA"], n_valid, signed=False)
-        # every key of a stripe dictionary is referenced
-        n_lengths = int(indexes.max()) + 1
-    lengths = rle2.decode(streams.get("LENGTH", b""), n_lengths,
-                          signed=False)
-    return dictionary.to_arrow(lengths, blob, indexes, valid,
-                               binary=typ == "binary")
 
 
 # ---------------------------------------------------------------------------
@@ -760,24 +620,106 @@ def decode_stripe_strides(row: dict, specs: list[ColumnSpec],
 
 def select_strides(row: dict, column: str, lo=None, hi=None) -> list[int]:
     """Stride ids whose recorded [min,max] for ``column`` can contain
-    values in [lo, hi] — the row-group skip predicate.  On a stripe
-    written without strides there is exactly one implicit row group;
-    it is always kept (no index to prune against)."""
+    values in [lo, hi] — the row-group skip predicate, asked of
+    ``predicates.may_match`` (a bound of another family than the stats
+    keeps the stride).  On a stripe written without strides there is
+    exactly one implicit row group; it is always kept (no index to
+    prune against)."""
     idx = stride_index(row)
     if idx is None:
         return [0]
     keep = []
     for t, sts in enumerate(idx["stats"]):
         st = sts.get(column, {})
-        if "min" not in st:
+        if (lo is None or predicates.may_match(st, ">=", lo)) and \
+                (hi is None or predicates.may_match(st, "<=", hi)):
             keep.append(t)
-            continue
-        if lo is not None and st["max"] < lo:
-            continue
-        if hi is not None and st["min"] > hi:
-            continue
-        keep.append(t)
     return keep
+
+
+class _StripeColumn:
+    """One column of one stripe table row, seen the way
+    ``orcscan._fast_arrow`` sees an ``.orc`` stripe: ``types``,
+    ``encodings``, ``dict_sizes``, ``writer_tz``, ``_present``,
+    ``_ints`` and ``_stream``.  Column ids are the pre-order ids of
+    the spec's type tree (``OrcType.number``).  It resolves the
+    layouts only the stripe table has:
+
+    * a flat column is node 0, holding all its streams;
+    * the ``list<int>`` token layout is two nodes: the list (PRESENT,
+      LENGTH) and its elements (DATA, DICTIONARY_DATA) under the
+      column's encoding;
+    * a NESTED column's DATA blob lists its nodes' streams and leaf
+      encodings in pre-order;
+    * DICTIONARY_INT_V2 DATA reads as ``keys[indexes]``;
+    * a ``*_FSST`` column's string blob reads FSST-decoded;
+    * every integer stream is RLE v2: tinyint reads as a ``long``
+      node, and ``_fast_arrow`` casts it to int8;
+    * a string dictionary's size is its largest index + 1 (every key
+      of a stripe dictionary is referenced), recorded when ``_ints``
+      reads the indexes, which ``_fast_arrow`` does first.
+    """
+
+    writer_tz = ""  # the flat UTC-base timestamp arithmetic
+    _present = ORCFile._present
+
+    def __init__(self, row: dict, spec: ColumnSpec, encoding: str,
+                 codec: str):
+        self.types = [SimpleNamespace(
+            kind="long" if t.kind == "byte" else t.kind,
+            children=[c.col_id for c in t.children],
+            field_names=t.field_names, precision=t.precision,
+            scale=t.scale) for t in spec.orc_type.number()]
+        streams = {}
+        for kind in spec.stream_kinds():
+            data = row.get(f"{spec.name}__{kind}")
+            if data is not None:
+                streams[kind] = compression.decompress(data, codec)
+        if encoding == "NESTED":
+            blob = streams["DATA"]
+            hlen = int.from_bytes(blob[:4], "little")
+            header = json.loads(blob[4:4 + hlen])
+            parts, pos = [], 4 + hlen
+            for ln in header["lens"]:
+                parts.append(blob[pos:pos + ln])
+                pos += ln
+            nodes = header["nodes"]
+            self.encodings = [rec.get("e", "DIRECT_V2") for rec in nodes]
+            self._streams = {(cid, kind): parts[i]
+                             for cid, rec in enumerate(nodes)
+                             for kind, i in rec["s"].items()}
+        elif spec.is_list:
+            self.encodings = ["DIRECT_V2", encoding]
+            self._streams = {
+                (0 if kind in ("PRESENT", "LENGTH") else 1, kind): data
+                for kind, data in streams.items()}
+        else:
+            self.encodings = [encoding]
+            self._streams = {(0, kind): data
+                             for kind, data in streams.items()}
+        for cid, enc in enumerate(self.encodings):
+            key = (cid, "DICTIONARY_DATA" if enc.startswith("DICTIONARY")
+                   else "DATA")
+            if enc.endswith("_FSST") and key in self._streams:
+                self._streams[key] = fsst.decode_blob(self._streams[key])
+        self.dict_sizes: dict[int, int] = {}
+
+    def _stream(self, cid: int, kind: str) -> bytes | None:
+        return self._streams.get((cid, kind))
+
+    def _ints(self, cid: int, kind: str, n: int,
+              signed: bool) -> np.ndarray:
+        data = self._streams.get((cid, kind), b"")
+        enc = self.encodings[cid]
+        if kind == "DATA" and enc == "DICTIONARY_INT_V2":
+            keys = self._streams[cid, "DICTIONARY_DATA"]
+            n_keys, pos = bits.read_vulong(keys, 0)
+            return rle2.decode(keys[pos:], n_keys, signed=True)[
+                rle2.decode(data, n, signed=False)]
+        vals = rle2.decode(data, n, signed)
+        if kind == "DATA" and enc.startswith("DICTIONARY_V2"):
+            self.dict_sizes[cid] = int(vals.max()) + 1 if n else 0
+        return vals
 
 
 def decode_stripe(row: dict, specs: list[ColumnSpec],
@@ -786,21 +728,14 @@ def decode_stripe(row: dict, specs: list[ColumnSpec],
     n_rows = int(row["n_rows"])
     encodings = json.loads(row["encodings"])
     arrays = []
-    names = []
     for spec in specs:
+        ft = spec.orc_type.to_arrow()
         if spec.name not in encodings:
             # schema evolution on MIXED tables: this stripe predates
             # the column (its encodings JSON has no entry) — decode it
             # as all-null of the requested type
-            arrays.append(pa.nulls(n_rows, spec.orc_type.to_arrow()))
-            names.append(spec.name)
+            arrays.append(pa.nulls(n_rows, ft))
             continue
-        streams = {}
-        for kind in spec.stream_kinds():
-            data = row.get(f"{spec.name}__{kind}")
-            if data is not None:
-                streams[kind] = compression.decompress(data, codec)
-        arrays.append(decode_column(streams, encodings[spec.name], spec,
-                                    n_rows))
-        names.append(spec.name)
-    return pa.table(dict(zip(names, arrays)))
+        col = _StripeColumn(row, spec, encodings[spec.name], codec)
+        arrays.append(orcscan._fast_arrow(col, 0, n_rows, ft))
+    return pa.table(dict(zip([s.name for s in specs], arrays)))

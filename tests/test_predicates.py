@@ -314,6 +314,32 @@ def test_other_family_literal_plans_and_counts(spark, tmp_path, pred):
     assert orctable._classify_delete_file(p, [pred]) == "rewrite"
 
 
+@pytest.mark.parametrize("pred", _family_preds(), ids=repr)
+def test_other_family_literal_decode_counts(spark, pred):
+    """The same literals on the stripe-table ``decode`` surface, whole
+    and strided: no stripe or stride pruning step raises, and the
+    count equals a Spark filter over the unpruned decode."""
+    import datetime
+    from pyspark.sql import functions as F
+    from orc_spark import stripe
+    from orc_spark.operators import encode as enc_ops
+    day = datetime.timedelta(days=40)
+    df = spark.createDataFrame(
+        [(datetime.datetime(2009, 6, 1, 12) + i * day,
+          datetime.date(2009, 6, 1) + i * day, i % 10) for i in range(64)],
+        "t timestamp, d date, n bigint").coalesce(1)
+    specs = stripe.parse_schema([("t", "timestamp"), ("d", "date"),
+                                 ("n", "bigint")])
+    col, op, val = pred
+    for stride_rows in (None, 8):
+        enc = enc_ops.encode(df, specs=specs, stripe_rows=32,
+                             stride_rows=stride_rows)
+        want = enc_ops.decode(enc, specs=specs).where(
+            predicates.to_column(F.col(col), op, val)).count()
+        assert enc_ops.decode(enc, specs=specs,
+                              predicate=pred).count() == want
+
+
 @pytest.mark.parametrize("surface", ["decode", "orc_scan", "orc_count",
                                      "delete_from"])
 def test_single_equals_op_everywhere(spark, tmp_path, surface):

@@ -2,13 +2,16 @@
 the writer_test.go edge patterns (FIXTURES.md §3) adapted to the token
 schema: nulls, empty arrays, all-null rows, alternating patterns."""
 
+import datetime
 import json
+from decimal import Decimal
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
 from orc_spark import stripe
+from orc_spark.orctypes import parse_orc_type
 
 RNG = np.random.default_rng(42)
 
@@ -196,7 +199,7 @@ def test_schema_string_roundtrip():
     nested = stripe.parse_schema_string(
         "struct<a:decimal(18,4),b:array<bigint>,c:timestamp>")
     assert nested[0].decimal_params() == (18, 4)
-    assert nested[1].child_typ == "bigint"
+    assert nested[1].orc_type.children[0].orc_string() == "bigint"
 
 
 def test_schema_string_malformed_raises_at_parse():
@@ -215,7 +218,7 @@ def test_top_level_array_spelling_roundtrip(elem):
     if elem == "string":
         values = [None if v is None else [f"w{x}" for x in v]
                   for v in values]
-    at = stripe.arrow_type_of(f"list<{elem}>")
+    at = parse_orc_type(f"list<{elem}>").to_arrow()
     t = pa.table({"c": pa.array(values, at)})
     rows = []
     for spelling in ("list", "array"):
@@ -234,8 +237,8 @@ def test_int_list_decodes_to_declared_type(elem):
     typ = f"list<{elem}>"
     specs = stripe.parse_schema([("c", typ)])
     t = pa.table({"c": pa.array([[1, -2, 3], None, [], [100]] * 10,
-                                stripe.arrow_type_of(typ))})
-    want = pa.schema([("c", stripe.arrow_type_of(typ))])
+                                parse_orc_type(typ).to_arrow())})
+    want = pa.schema([("c", parse_orc_type(typ).to_arrow())])
     row = stripe.encode_stripe(t, specs)
     assert stripe.decode_stripe(row, specs).schema == want
     row = stripe.encode_stripe(t, specs, stride_rows=8)
@@ -286,16 +289,16 @@ def test_nested_stripe_roundtrip_kernel():
     meta = pa.array([{"author": f"a{i % 7}", "score": i * 0.5,
                       "tags": [f"t{j}" for j in range(i % 4)]}
                      if i % 5 else None for i in range(n)],
-                    stripe.arrow_type_of(specs[0].typ))
+                    specs[0].orc_type.to_arrow())
     attrs = pa.array([[(f"k{j}", j * i) for j in range(i % 3)]
                       if i % 4 else None for i in range(n)],
-                     stripe.arrow_type_of(specs[1].typ))
+                     specs[1].orc_type.to_arrow())
     words = pa.array([[f"w{j % 11}" for j in range(i % 6)]
                       if i % 3 else None for i in range(n)],
-                     stripe.arrow_type_of(specs[2].typ))
+                     specs[2].orc_type.to_arrow())
     deep = pa.array([[{"a": j, "b": [j, j * 2]} for j in range(i % 3)]
                      if i % 6 else None for i in range(n)],
-                    stripe.arrow_type_of(specs[3].typ))
+                    specs[3].orc_type.to_arrow())
     t = pa.table({"meta": meta, "attrs": attrs, "words": words,
                   "deep": deep})
     for kwargs in ({}, {"stride_rows": 64}):
@@ -409,7 +412,7 @@ def test_nested_stripe_fuzz_random_schemas():
         if not spec.is_nested:
             continue
         node = spec.orc_type
-        at = stripe.arrow_type_of(typ)
+        at = parse_orc_type(typ).to_arrow()
         n = 120
         arr = pa.array([rand_value(node) for _ in range(n)], at)
         t = pa.table({"c": arr})
@@ -544,3 +547,132 @@ def test_strided_nan_sum_absent():
     per_stride = [s["x"] for s in strided["_strides"]["stats"]]
     assert per_stride[0]["sum"] == 16.0 and "sum" not in per_stride[1]
     assert (strided["x"]["min"], strided["x"]["max"]) == (1.0, 2.0)
+
+
+def test_timestamp_past_int64_micros_raises():
+    """A timestamp whose microseconds leave int64 fails the decode
+    (the reader's checked multiply-add) instead of reading wrapped;
+    the largest second that fits still round-trips."""
+    specs = stripe.parse_schema([("ts", "timestamp")])
+    for secs, fits in ((10**13, False), ((2**63 - 1) // 10**6, True)):
+        batch = pa.table({"ts": pa.array([secs], pa.timestamp("s"))})
+        row = stripe.encode_stripe(batch, specs)
+        if fits:
+            got = stripe.decode_stripe(row, specs).column("ts")
+            assert got.cast(pa.int64()).to_pylist() == [secs * 10**6]
+        else:
+            with pytest.raises(pa.ArrowInvalid):
+                stripe.decode_stripe(row, specs)
+
+
+# every stripe-table encoding label, planted: column -> (type, values
+# of row i, the label the column must carry)
+_N_ALL = 12000
+_ALL_ENCODINGS = {
+    "i8": ("tinyint", lambda i: (i * 37) % 256 - 128, "DIRECT_V2"),
+    "f": ("double", lambda i: i / 7, "DIRECT"),
+    "b": ("boolean", lambda i: i % 3 == 0, "DIRECT"),
+    "dec": ("decimal(10,2)",
+            lambda i: Decimal(i * 13 - 70000) / 100,
+            "DIRECT_V2"),
+    "ts": ("timestamp",
+           lambda i: datetime.datetime(1960, 1, 1)
+           + datetime.timedelta(days=i, microseconds=i * 77),
+           "DIRECT_V2"),
+    "dint": ("int", lambda i: (i % 16) * 100003, "DICTIONARY_INT_V2"),
+    "sd": ("string", lambda i: f"k{i % 9}", "DICTIONARY_V2"),
+    "sfd": ("string", lambda i: f"the quick brown fox {i % 1500} jumps",
+            "DICTIONARY_V2_FSST"),
+    "sfx": ("string", lambda i: f"lorem ipsum dolor sit amet {i}",
+            "DIRECT_V2_FSST"),
+    "tok": ("list<int>", lambda i: [(i + j) % 16 * 100003
+                                    for j in range(i % 5)],
+            "DICTIONARY_INT_V2"),
+    "nest": ("struct<k:int,w:string>",
+             lambda i: {"k": (i % 16) * 100003, "w": f"w{i % 5}"},
+             "NESTED"),
+    "lnull": ("list<int>", lambda i: [i % 100, None, -(i % 7)][:i % 4],
+              "NESTED"),
+}
+
+
+def _pieces(row):
+    """(encodings, row) per stride of a stripe row (one piece when it
+    has no stride index)."""
+    idx = stripe.stride_index(row)
+    if idx is None:
+        return [(json.loads(row["encodings"]), row)]
+    return [(encs, {k: row[k][o[t]:o[t + 1]]
+                    for k, o in idx["offsets"].items()})
+            for t, encs in enumerate(idx["encodings"])]
+
+
+def _leaf_encodings(data):
+    """Leaf encodings listed in a NESTED column's blob header."""
+    from orc_spark.codecs import compression
+    blob = compression.decompress(data, stripe.DEFAULT_CODEC)
+    hlen = int.from_bytes(blob[:4], "little")
+    return {rec["e"] for rec in json.loads(blob[4:4 + hlen])["nodes"]
+            if "e" in rec}
+
+
+@pytest.mark.parametrize("stride_rows", [None, 6000])
+@pytest.mark.parametrize("nulls", [False, True])
+def test_every_encoding_decodes_through_one_reader(monkeypatch, nulls,
+                                                   stride_rows):
+    """Every stripe-table encoding label — flat, token-child and
+    nested-leaf DICTIONARY_INT_V2, both FSST forms, NESTED with a null
+    list element, tinyint at -128 and 127 — decodes to its input, each
+    column through one ``orcscan._fast_arrow`` call."""
+    from orc_spark.sources import orcscan
+    specs = stripe.parse_schema([(c, typ) for c, (typ, _, _)
+                                 in _ALL_ENCODINGS.items()])
+    t = pa.table({
+        s.name: pa.array([None if nulls and i % 7 == 3 else gen(i)
+                          for i in range(_N_ALL)], s.orc_type.to_arrow())
+        for s, (_, gen, _) in zip(specs, _ALL_ENCODINGS.values())})
+    assert {-128, 127} <= set(t.column("i8").to_pylist())
+    row = stripe.encode_stripe(t, specs, use_fsst=True,
+                               stride_rows=stride_rows)
+    pieces = _pieces(row)
+    assert len(pieces) == (1 if stride_rows is None else 2)
+    for encs, piece in pieces:
+        assert encs == {c: label for c, (_, _, label)
+                        in _ALL_ENCODINGS.items()}
+        assert "DICTIONARY_INT_V2" in _leaf_encodings(piece["nest__DATA"])
+    calls = []
+    fast_arrow = orcscan._fast_arrow
+
+    def counted(f, cid, n, ft):
+        calls.append(cid)
+        return fast_arrow(f, cid, n, ft)
+
+    monkeypatch.setattr(orcscan, "_fast_arrow", counted)
+    got = stripe.decode_stripe_strides(row, specs)
+    assert calls.count(0) == len(specs) * len(pieces)
+    for name in t.column_names:
+        assert got.column(name).combine_chunks().equals(
+            t.column(name).combine_chunks()), name
+
+
+def test_one_tree_decoder():
+    """The stripe table has no column decoder of its own: the string
+    and decimal Arrow builders are called only from the ``.orc``
+    reader's ``_fast_arrow`` (sources/orcscan.py), which decodes both
+    containers."""
+    import glob
+    import os
+    import pathlib
+    import re
+    import orc_spark
+    root = os.path.dirname(orc_spark.__file__)
+    pat = re.compile(r"\b(dictionary|dec_codec)\.to_arrow\(")
+    hits = {os.path.relpath(p, root)
+            for p in glob.glob(os.path.join(root, "**", "*.py"),
+                               recursive=True)
+            for line in pathlib.Path(p).read_text().splitlines()
+            if pat.search(line)}
+    assert hits == {os.path.join("sources", "orcscan.py")}
+    for name in ("decode_column", "_decode_nested", "_decode_int_stream",
+                 "_decode_string_like"):
+        assert not hasattr(stripe, name), name
